@@ -202,26 +202,31 @@ BPE_MERGES = [
 ]
 
 
-def _curation_union(spark, sf_dir, shared_tokens: bool = False):
-    """ONE assembler for both curation variants (code-review r9: the
-    shared-tokenize twin previously duplicated ~70 lines of this body,
-    so an edit to a graded part could silently diverge the A/B).
-    ``shared_tokens=False`` is the GRADED assembly (each branch
-    tokenizes its own scan — measured faster, see scale_check's
-    curation_onepass_ab); ``shared_tokens=True`` tokenizes once into a
-    checkpointed (docs, __tk) frame and feeds the five token-consuming
-    branches via toks_col= — bitwise-equal rows by construction (same
-    expressions, one materialization)."""
+def q_curation(spark, sf_dir):
+    """Corpus-curation tier (functions/curation.py) as one tagged union:
+    deterministic stratified sampling (exactly-n per lang), md5-keyed
+    weighted domain mixing, and token-budget sharding via the two-phase
+    distributed prefix sum. All md5-keyed → the DuckDB twin reproduces
+    every draw exactly.
+
+    r9 widens to EIGHT parts: part='lines' grades C4 line-level dedup
+    (the last dedup family without a hash grade — VERDICT r8 Next #2),
+    with the rebuilt-text md5 as the graded key; part='describe' grades
+    the describe_corpus observability aggregation (metrics as exact
+    scaled longs; the approx-percentile sketch column is the documented
+    not-graded field).
+
+    r10 widens to NINE parts: part='split' grades the leakage-safe
+    train/val/test assignment (curation.train_val_test_split) — the
+    oracle replays both the 60-bit md5 draw and the cumulative
+    threshold labelling via the shared split_thresholds arithmetic.
+
+    r11 widens to TEN parts: part='split_grp' grades the group_col
+    LEAKAGE GUARD itself (draw keyed on `source`, the URL-domain
+    analog) — every row carries its group's draw, so the hash pins both
+    the per-group md5 arithmetic and the same-group-same-split
+    property."""
     docs = load_table(spark, sf_dir, "documents")
-    if shared_tokens:
-        src = (
-            docs.select("doc_id", "lang", "source", "n_chars", "text")
-            .withColumn("__tk", tx.tokens(F.col("text")))
-            .localCheckpoint(eager=True)
-        )
-        tk = "__tk"
-    else:
-        src, tk = docs, None
     # r14 OPT (guide §2.6 applied to the DRIVER): assembling this
     # ten-part union was ~2 s of single-threaded work per call — each
     # part's construction is py4j round trips + eager Catalyst analysis
@@ -249,9 +254,7 @@ def _curation_union(spark, sf_dir, shared_tokens: bool = False):
         )
 
     def _p_shard():
-        return cu.token_budget_shards(
-            src, CURATION_BUDGET, toks_col=tk
-        ).select(
+        return cu.token_budget_shards(docs, CURATION_BUDGET).select(
             F.lit("shard").alias("part"), "doc_id",
             F.col("shard").cast("string").alias("grp"),
             F.col("cum_tokens").cast("long").alias("v"),
@@ -259,7 +262,7 @@ def _curation_union(spark, sf_dir, shared_tokens: bool = False):
 
     def _p_chunk():
         size, ov = CURATION_CHUNK
-        return tx.chunk_tokens(src, size, ov, toks_col=tk).select(
+        return tx.chunk_tokens(docs, size, ov).select(
             F.lit("chunk").alias("part"), "doc_id",
             # grp carries the chunk CONTENT hash — the window slicing
             # itself is graded, not just the arithmetic
@@ -273,9 +276,7 @@ def _curation_union(spark, sf_dir, shared_tokens: bool = False):
     # the corpus side never shuffles (functions/dedup.py decontaminate).
     def _p_decon():
         bench = docs.where(F.col("doc_id") % 97 == 0)
-        return dd.decontaminate(
-            src, bench, n=CURATION_DECON_N, toks_col=tk
-        ).select(
+        return dd.decontaminate(docs, bench, n=CURATION_DECON_N).select(
             F.lit("decon").alias("part"), "doc_id",
             F.lit("eval").alias("grp"),
             F.col("n_hits").cast("long").alias("v"),
@@ -286,7 +287,7 @@ def _curation_union(spark, sf_dir, shared_tokens: bool = False):
     # duplicate_spans). grp carries the span extent so the slicing itself
     # is graded.
     def _p_dupspan():
-        return dd.duplicate_spans(src, CURATION_DUP_L, toks_col=tk).select(
+        return dd.duplicate_spans(docs, CURATION_DUP_L).select(
             F.lit("dupspan").alias("part"), "doc_id",
             F.concat_ws(":", F.col("span_start").cast("string"),
                         F.col("span_end").cast("string")).alias("grp"),
@@ -335,7 +336,7 @@ def _curation_union(spark, sf_dir, shared_tokens: bool = False):
     # NOT graded (t-digest internals are engine-specific by design;
     # documented in COVERAGE.md).
     def _p_desc():
-        return cu.describe_corpus(src, toks_col=tk).select(
+        return cu.describe_corpus(docs).select(
             F.lit("describe").alias("part"),
             F.concat_ws(":", "lang", "source").alias("grp"),
             F.posexplode(
@@ -390,49 +391,6 @@ def _curation_union(spark, sf_dir, shared_tokens: bool = False):
     for p in parts[1:]:
         out = out.unionByName(p)
     return out
-
-
-def q_curation(spark, sf_dir):
-    """Corpus-curation tier (functions/curation.py) as one tagged union:
-    deterministic stratified sampling (exactly-n per lang), md5-keyed
-    weighted domain mixing, and token-budget sharding via the two-phase
-    distributed prefix sum. All md5-keyed → the DuckDB twin reproduces
-    every draw exactly.
-
-    r9 widens to EIGHT parts: part='lines' grades C4 line-level dedup
-    (the last dedup family without a hash grade — VERDICT r8 Next #2),
-    with the rebuilt-text md5 as the graded key; part='describe' grades
-    the describe_corpus observability aggregation (metrics as exact
-    scaled longs; the approx-percentile sketch column is the documented
-    not-graded field).
-
-    r10 widens to NINE parts: part='split' grades the leakage-safe
-    train/val/test assignment (curation.train_val_test_split) — the
-    oracle replays both the 60-bit md5 draw and the cumulative
-    threshold labelling via the shared split_thresholds arithmetic.
-
-    r11 widens to TEN parts: part='split_grp' grades the group_col
-    LEAKAGE GUARD itself (draw keyed on `source`, the URL-domain
-    analog) — every row carries its group's draw, so the hash pins both
-    the per-group md5 arithmetic and the same-group-same-split
-    property."""
-    return _curation_union(spark, sf_dir)
-
-
-def q_curation_onepass(spark, sf_dir):
-    """SHARED-TOKENIZE variant of q_curation (VERDICT r8 Next #4 A/B):
-    the five token-consuming branches (shard/chunk/decon/dupspan/
-    describe) read ONE checkpointed (docs, __tk) frame via the r9
-    ``toks_col=`` pass-throughs instead of re-tokenizing `documents`
-    per branch. Same rows bit-for-bit BY CONSTRUCTION — both variants
-    are the same assembler (_curation_union), differing only in where
-    the token expression materializes. NOT the graded entry:
-    scale_check.py measures both at sf0.1 and the 10x tier
-    (`curation_onepass_ab`) and the graded assembly is whichever wins;
-    the r7 lesson (wide token-array checkpoints can LOSE to recompute)
-    is why this is measured, not assumed — and it LOSES (kept for
-    pipelines that already materialize tokens)."""
-    return _curation_union(spark, sf_dir, shared_tokens=True)
 
 
 def q_difference(spark, sf_dir):
@@ -2251,14 +2209,6 @@ def q_jaccard_pairs(spark, sf_dir):
     # "auto" lets the 2M-edge gate (dedup.py) pick packed vs the
     # distributed iterate fixpoint — the graded plan must not enshrine the
     # single-task packed stage at 100× (judge r4 weak item #2).
-    # r15: an edges_materialize="deferred" variant (skip the edge
-    # checkpoint, light pair-count gate, distinct folded into the packed
-    # consumer) was built and interleave-A/B'd at sf0.1: eager 2.556s
-    # clean-min vs deferred 2.714s — the saved driver action costs MORE
-    # than it saves here (the final job re-runs the distinct serially
-    # with the union's other branch). Kept the measured-faster eager
-    # default; the deferred mode remains on dedup_components for callers
-    # whose profile differs (test-pinned identical labels).
     comp = dd.dedup_components(verified, strategy="auto")
     return (
         jac.select(
@@ -2275,7 +2225,7 @@ def q_jaccard_pairs(spark, sf_dir):
     )
 
 
-def q_ann(spark, sf_dir, _share_e=True, _overlap=True):
+def q_ann(spark, sf_dir):
     """The similarity-search tier in one graded query: exact brute-force
     cosine top-k (the oracle tier), LSH-bucketed (deterministic md5
     hyperplanes), IVF-flat (take-based centroids, nprobe=4), and — r6 —
@@ -2316,15 +2266,13 @@ def q_ann(spark, sf_dir, _share_e=True, _overlap=True):
     ivf result."""
     from wingfoil_spark.functions import selection as sel
 
-    e = load_table(spark, sf_dir, "embeddings")
-    if _share_e:
-        # r14 OPT (guide §2.3/§6): scan+decode the corpus ONCE — the
-        # nine-branch union previously re-read embeddings.parquet ten
-        # times (plan audit: 10 scan nodes); the checkpointed frame is
-        # ~3 MB at sf0.1 and every branch (and both probe filters) now
-        # reads the in-memory copy. At data scale this checkpoint is the
-        # working set a vector-search service keeps resident anyway.
-        e = e.localCheckpoint(eager=True)
+    # r14 OPT (guide §2.3/§6): scan+decode the corpus ONCE — the
+    # nine-branch union previously re-read embeddings.parquet ten times
+    # (plan audit: 10 scan nodes); the checkpointed frame is ~3 MB at
+    # sf0.1 and every branch (and both probe filters) now reads the
+    # in-memory copy. At data scale this checkpoint is the working set a
+    # vector-search service keeps resident anyway.
+    e = load_table(spark, sf_dir, "embeddings").localCheckpoint(eager=True)
     probes = e.where(F.col("vec_id") % 50 == 0)
 
     import os as _os
@@ -2404,20 +2352,15 @@ def q_ann(spark, sf_dir, _share_e=True, _overlap=True):
             )
         ).select("vec_id", "embedding").localCheckpoint(eager=True)
 
-    if _overlap:
-        from concurrent.futures import ThreadPoolExecutor
+    from concurrent.futures import ThreadPoolExecutor
 
-        with ThreadPoolExecutor(max_workers=3) as _pool:
-            _f_codes = _pool.submit(_codes_chain)
-            _f_cents = _pool.submit(_cents_chain)
-            _f_q8 = _pool.submit(_q8_chain)
-            books, codes = _f_codes.result()
-            cents, asg = _f_cents.result()
-            q8 = _f_q8.result()
-    else:
-        books, codes = _codes_chain()
-        cents, asg = _cents_chain()
-        q8 = _q8_chain()
+    with ThreadPoolExecutor(max_workers=3) as _pool:
+        _f_codes = _pool.submit(_codes_chain)
+        _f_cents = _pool.submit(_cents_chain)
+        _f_q8 = _pool.submit(_q8_chain)
+        books, codes = _f_codes.result()
+        cents, asg = _f_cents.result()
+        q8 = _f_q8.result()
 
     pq = sim.pq_topk(codes, probes, books, k=5).select(
         "probe_id", "neighbor_id",

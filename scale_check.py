@@ -296,26 +296,6 @@ def selection_onepass_ab(spark, qs):
     return out
 
 
-def curation_onepass_ab(spark, qs):
-    """A/B the graded per-branch-tokenize curation union against the
-    shared-tokenize variant (VERDICT r8 Next #4): q_curation_onepass
-    tokenizes ONCE into a checkpointed (doc_id, text, __tk) frame and
-    feeds shard/chunk/decon/dupspan/describe via toks_col=. Rows are
-    bitwise-equal (verified by collect-set compare at sf0.001); only
-    cost differs. The r7 lesson predicted the wide token-array
-    checkpoint LOSES to recompute — measured here at both tiers so the
-    graded assembly is evidence-based either way."""
-    out = {}
-    for name, fn in [("graded_rescan", qs["curation"]),
-                     ("onepass_ckpt", entry.q_curation_onepass)]:
-        t_small = timed(fn, spark, SMALL)
-        t_big = timed(fn, spark, BIG)
-        out[name] = {"t_small": round(t_small, 3), "t_big": round(t_big, 3)}
-        print(f"# curation_ab[{name}]: {t_small:.2f}s small, "
-              f"{t_big:.2f}s @10x", file=sys.stderr)
-    return out
-
-
 def semdedup_cap_10x(spark):
     """The ENFORCED semdedup cap exercised at the 10x tier with the
     PRODUCTION cap (VERDICT r7 Next #5): sf1-eq embeddings (20k vectors
@@ -967,16 +947,6 @@ def main() -> None:
         "superlinear": superlinear,
         "selection_branches": selection_branches(spark),
         "selection_onepass_ab": selection_onepass_ab(spark, qs),
-        "curation_onepass_ab": curation_onepass_ab(spark, qs),
-        "curation_note_r9": (
-            "VERDICT r8 Next #4 verdict: the shared-tokenize checkpoint "
-            "LOSES at both tiers (the r7 wide-intermediate lesson holds "
-            "for token arrays too - materializing ~corpus-sized string "
-            "arrays costs more than 4 re-tokenizes of a columnar text "
-            "scan), so the graded q_curation keeps per-branch tokenize; "
-            "q_curation_onepass + the toks_col= APIs remain for "
-            "pipelines that already materialize tokens."
-        ),
         "semdedup_cap_10x": semdedup_cap_10x(spark),
         "decon_stream_10x": decon_stream_scale(spark),
         "decon_stream_part_walls": decon_stream_part_walls(spark),

@@ -299,48 +299,3 @@ def test_decontaminate_invariant_under_doc_order(spark):
             assert 0 in flagged1, "the benchmark doc itself always flags"
 
     prop()
-
-
-def test_components_deferred_edges_identical_and_gate_conservative(spark):
-    """r15 (guide §2.6): edges_materialize='deferred' — for callers whose
-    pair frame is already materialized — must produce IDENTICAL labels to
-    the eager default on every strategy, keep the packed plan shape
-    (distinct folded into the one consumer action), and keep the auto
-    gate's scale-safety: the 2×pairs upper bound can only route MORE
-    tables to iterate, never an over-cap table to packed."""
-    import pytest
-
-    from wingfoil_spark.functions.dedup import dedup_components
-
-    pairs = spark.createDataFrame(
-        [(5, 9), (9, 1), (3, 7), (7, 3), (100, 42)], "a long, b long"
-    ).localCheckpoint(eager=True)
-    expected = {1: 1, 5: 1, 9: 1, 3: 3, 7: 3, 42: 42, 100: 42}
-    for strategy in ("packed", "iterate", "auto"):
-        got = {
-            r.id: r.component
-            for r in dedup_components(
-                pairs, strategy=strategy, edges_materialize="deferred"
-            ).collect()
-        }
-        assert got == expected, strategy
-    # 5 pairs → upper bound 10 edges > cap 8 ⟹ iterate (no Python stage),
-    # even though the true distinct edge count (8) equals the cap: the
-    # deferred gate is conservative by design
-    over = dedup_components(
-        pairs, strategy="auto", packed_max_edges=8,
-        edges_materialize="deferred",
-    )
-    plan_over = over._jdf.queryExecution().executedPlan().toString()
-    assert "FlatMapGroupsInPandas" not in plan_over, plan_over
-    assert {r.id: r.component for r in over.collect()} == expected
-    # comfortably under the cap ⟹ packed, single FlatMapGroupsInPandas
-    under = dedup_components(
-        pairs, strategy="auto", packed_max_edges=10**6,
-        edges_materialize="deferred",
-    )
-    plan_under = under._jdf.queryExecution().executedPlan().toString()
-    assert "FlatMapGroupsInPandas" in plan_under, plan_under
-    assert {r.id: r.component for r in under.collect()} == expected
-    with pytest.raises(ValueError, match="unknown edges_materialize"):
-        dedup_components(pairs, edges_materialize="lazy")

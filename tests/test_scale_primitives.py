@@ -235,14 +235,12 @@ def test_compact_parquet_merges_small_files(spark, tmp_path):
     assert n_out == 1
 
 
-def test_materialize_paths_identical(spark, monkeypatch):
-    """r15 (VERDICT r14 #7): the two-level operators' materialization knob
-    (WINGFOIL_SCALE_MATERIALIZE) changes only the physical shape — "local"
-    derives the carry from the checkpointed within-pass, "none" is the
-    fault-tolerant pure-lineage shape that re-aggregates from the source —
-    and BOTH produce identical rows on the exact (decimal) types the
-    graded queries use."""
-    from wingfoil_spark.operators import scale
+def test_materialize_paths_identical(spark):
+    """The two-level operators' pure-lineage shape (bucket carries
+    re-aggregated from the source, never from the windowed pass) gives
+    exactly the global-order prefix sum and lag on the exact (decimal)
+    types the graded queries use — over tied timestamps and bucket
+    gaps."""
     from wingfoil_spark.operators.scale import global_lag, global_prefix_sum
     from wingfoil_spark.stream import Stream
 
@@ -256,21 +254,11 @@ def test_materialize_paths_identical(spark, monkeypatch):
         "ts", "seq", F.col("v").cast("decimal(12,2)").alias("v")
     )
     s = Stream(df, ts="ts", seq="seq")
-
-    def run(mode):
-        monkeypatch.setattr(scale, "MATERIALIZE", mode)
-        psum = global_prefix_sum(s, "v", "cum", bucket_width=10).df
-        lag = global_lag(s, "v", "prev", bucket_width=10).df
-        return (
-            sorted(((r["ts"], r["seq"], r["cum"]) for r in psum.collect())),
-            sorted(((r["ts"], r["seq"], r["prev"]) for r in lag.collect())),
-        )
-
-    psum_local, lag_local = run("local")
-    psum_none, lag_none = run("none")
-    assert psum_local == psum_none
-    assert lag_local == lag_none
-    # and the values really are the global-order prefix sum / lag
+    psum = global_prefix_sum(s, "v", "cum", bucket_width=10).df
+    lag = global_lag(s, "v", "prev", bucket_width=10).df
+    psum_rows = [(r["ts"], r["seq"], r["cum"]) for r in psum.collect()]
+    lag_rows = [(r["ts"], r["seq"], r["prev"]) for r in lag.collect()]
+    # the values are the global-order prefix sum / lag
     ordered = sorted(rows, key=lambda r: (r[0], r[1]))
     from decimal import Decimal
     acc, expect = Decimal(0), {}
@@ -280,7 +268,7 @@ def test_materialize_paths_identical(spark, monkeypatch):
         expect[(ts, seq)] = acc
         expect_lag[(ts, seq)] = prev
         prev = Decimal(v)
-    got = {(t, q): c for t, q, c in psum_local}
+    got = {(t, q): c for t, q, c in psum_rows}
     assert got == expect
-    got_lag = {(t, q): (None if p is None else p) for t, q, p in lag_local}
+    got_lag = {(t, q): p for t, q, p in lag_rows}
     assert got_lag == expect_lag

@@ -498,6 +498,42 @@ def test_selection_scores_onepass_matches(spark, docs_df):
     for i in got:
         assert got[i] == (w[i], bm[i], qc[i]), i
 
+    # a BM25 term carrying a quote and a backslash scores like any other
+    # term (it reaches the scorer as a literal, never as SQL text)
+    odd = {**DOCS, 7: "it's under c:\\dir now"}
+    odd_df = spark.createDataFrame(list(odd.items()), "doc_id long, text string")
+    odd_terms = ["spark", "it's", "c:\\dir"]
+    got = {
+        r["doc_id"]: r["score"]
+        for r in S.selection_scores(
+            odd_df, cond, odd_terms, model, n_buckets=NB
+        ).collect()
+    }
+    bm = {r["doc_id"]: r["score"]
+          for r in S.bm25_score(odd_df, odd_terms).collect()}
+    want = _py_bm25(odd, odd_terms)
+    assert got == bm
+    assert set(got) == set(want)
+    for i in got:
+        assert got[i] == pytest.approx(want[i], abs=1e-9), i
+    assert got[7] > 0
+
+    # text in a struct field scores exactly like the same corpus flattened
+    nested = docs_df.select(
+        "doc_id", F.struct(F.col("text").alias("text")).alias("meta")
+    )
+    flat = [
+        tuple(r) for r in S.selection_scores(
+            docs_df, cond, terms, model, n_buckets=NB
+        ).orderBy("doc_id").collect()
+    ]
+    deep = [
+        tuple(r) for r in S.selection_scores(
+            nested, cond, terms, model, text_col="meta.text", n_buckets=NB
+        ).orderBy("doc_id").collect()
+    ]
+    assert deep == flat
+
 
 def test_selection_scores_plan_one_scan(spark, docs_df):
     """The battery's physical plan must read the corpus ONCE on the

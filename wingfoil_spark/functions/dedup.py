@@ -311,7 +311,6 @@ def dedup_components(
     max_iters: int = 20,
     strategy: str = "auto",
     packed_max_edges: int = 2_000_000,
-    edges_materialize: str = "eager",
 ) -> DataFrame:
     """Connected components over a near-dup pair table: every doc reachable
     through the pair graph gets the MINIMUM id of its component as its
@@ -334,32 +333,9 @@ def dedup_components(
       distributed. Convergence checks are aggregates, not collects.
 
     ``"auto"`` (default) counts the (already-materialized) edge table —
-    one cheap job — and picks packed below 2M edges, iterate above.
-
-    ``edges_materialize`` (r15, guide §2.6/§5 — the bench is
-    driver-bound at small SF, so every serialized eager action in a
-    query's build phase is wall-clock):
-
-    - ``"eager"`` (default): distinct symmetric edges are
-      localCheckpoint'ed BEFORE the strategy gate, so the caller's pair
-      pipeline executes exactly once no matter what. Right whenever the
-      pair table hangs off an expensive un-materialized pipeline
-      (minhash → banding → Jaccard measured 8× slower per fixpoint pass
-      without it).
-    - ``"deferred"``: for callers whose ``pairs`` frame is ALREADY
-      materialized (e.g. reads a localCheckpoint, as the graded jaccard
-      query's verified frame does). The auto gate then counts the pair
-      rows directly (no distinct shuffle, no checkpoint write) and
-      bounds edges from above by 2×pairs — conservative: it can only
-      route MORE tables to the scale-safe iterate path. The packed path
-      folds the edge distinct into its single consumer action (one
-      fewer driver-blocking job in the build phase); the iterate path
-      still materializes edges before the loop exactly as "eager".
-      Labels are identical either way (same edge set after distinct)."""
+    one cheap job — and picks packed below 2M edges, iterate above."""
     from wingfoil_spark.plans.iterate import iterate_until_stable
 
-    if edges_materialize not in ("eager", "deferred"):
-        raise ValueError(f"unknown edges_materialize {edges_materialize!r}")
     edges = (
         pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
         .unionByName(
@@ -368,41 +344,23 @@ def dedup_components(
         .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
         .distinct()
     )
-    if edges_materialize == "eager":
-        # materialize ONCE before iterating: the pair table usually hangs
-        # off an expensive pipeline (minhash signatures → banding →
-        # Jaccard), and every fixpoint pass joins edges — without this the
-        # whole upstream pipeline re-executes per pass (measured 8×
-        # slowdown at sf0.1). localCheckpoint also truncates the lineage
-        # the loop would otherwise replay.
-        edges = edges.localCheckpoint(eager=True)
+    # materialize ONCE before iterating: the pair table usually hangs off
+    # an expensive pipeline (minhash signatures → banding → Jaccard), and
+    # every fixpoint pass joins edges — without this the whole upstream
+    # pipeline re-executes per pass (measured 8× slowdown at sf0.1).
+    # localCheckpoint also truncates the lineage the loop would otherwise
+    # replay.
+    edges = edges.localCheckpoint(eager=True)
     if strategy not in ("auto", "packed", "iterate"):
         raise ValueError(f"unknown components strategy {strategy!r}")
     if strategy == "auto":
-        if edges_materialize == "eager":
-            strategy = (
-                "packed"
-                if edges.limit(packed_max_edges + 1).count() <= packed_max_edges
-                else "iterate"
-            )
-        else:
-            # upper bound: each pair row yields ≤2 distinct directed
-            # edges, so 2×pairs ≤ cap ⟹ edges ≤ cap. One filter-count
-            # over the caller's (materialized) pair frame instead of a
-            # distinct shuffle + checkpoint write.
-            half_cap = packed_max_edges // 2
-            strategy = (
-                "packed"
-                if pairs.limit(half_cap + 1).count() <= half_cap
-                else "iterate"
-            )
+        strategy = (
+            "packed"
+            if edges.limit(packed_max_edges + 1).count() <= packed_max_edges
+            else "iterate"
+        )
     if strategy == "packed":
         return _components_packed(edges)
-    if edges_materialize == "deferred":
-        # the fixpoint joins edges every pass — materialize now (the
-        # deferred mode only skips this for the single-consumer packed
-        # path)
-        edges = edges.localCheckpoint(eager=True)
 
     labels = edges.select(F.col("src").alias("id")).distinct().select(
         "id", F.col("id").alias("component")
@@ -611,7 +569,11 @@ def cosine_near_dups(
     the dominant miss mode, so probing Hamming-1 takes recall from ~95% to
     ~99.98% at a bounded ×(bits+1) candidate cost). Semantic dedup tier of
     the dedup family (exact → MinHash → SimHash → embedding-cosine)."""
-    from wingfoil_spark.functions.similarity import hyperplane_signature, with_norm
+    from wingfoil_spark.functions.similarity import (
+        _dot,
+        hyperplane_signature,
+        with_norm,
+    )
 
     sig = hyperplane_signature(embeddings, emb_col, bits)
     n = with_norm(sig, emb_col, "__nrm").where(F.col("__nrm") > 0)
@@ -642,11 +604,7 @@ def cosine_near_dups(
         F.col(id_col).alias("b"), F.col(emb_col).alias("eb"),
         F.col("__nrm").alias("nb"), "bucket",
     )
-    dot = F.aggregate(
-        F.zip_with(F.col("ea"), F.col("eb"), lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
+    dot = _dot("ea", "eb")
     return (
         a.join(b, "bucket")
         .where(F.col("a") < F.col("b"))

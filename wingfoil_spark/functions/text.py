@@ -26,8 +26,11 @@ STOPWORDS = {
 
 
 def tokens(col: Column) -> Column:
-    """Whitespace tokenization, empty-token free."""
-    return F.filter(F.split(F.lower(F.trim(col)), r"\s+"), lambda x: x != "")
+    """Whitespace tokenization, empty-token free. Lambda-free on purpose:
+    a Python lambda costs a lambda-variable registration exchange with
+    the JVM on every call, and every selection, dedup and text builder
+    tokenizes."""
+    return F.array_remove(F.split(F.lower(F.trim(col)), r"\s+"), "")
 
 
 def _toks(col: Column, toks: Column | None) -> Column:

@@ -493,16 +493,18 @@ def dsir_score_stream(
     one-row :func:`build_dsir_index` frame. Plan per micro-batch, fully
     stateless: stream-static broadcast cross join of the single λ row,
     then the row-local JVM weight fold — zero shuffles, zero Python, no
-    standing state. The fold expression is SHARED with the batch scorer
-    (`selection._fold_weight`), so stream == batch is a structural fact
-    — and differentially tested anyway."""
-    from wingfoil_spark.functions.selection import _fold_weight, _grams
+    standing state. Tokens, grams, per-gram md5 and the weight fold are
+    the batch scorer's own builders (`selection._with_gram_md5`,
+    `selection._fold_weight`), so stream == batch is a structural fact —
+    and differentially tested anyway."""
+    from wingfoil_spark.functions.selection import (
+        _fold_weight,
+        _tokenized,
+        _with_gram_md5,
+    )
 
-    d = (
-        new_docs.where(F.col(text_col).isNotNull())
-        .withColumn("__tk", tokens(F.col(text_col)))
-        .withColumn("__g", _grams(F.col("__tk")))
-        .crossJoin(F.broadcast(index))
+    d = _with_gram_md5(_tokenized(new_docs, text_col)).crossJoin(
+        F.broadcast(index)
     )
     return d.select(F.col(id_col), _fold_weight(n_buckets).alias("log_w"))
 
@@ -516,14 +518,10 @@ def build_bm25_index(
     ONE-row ``(N, avgdl, dfs map<string,bigint>)`` frame the batch scorer
     folds (`functions.selection.bm25_score`). Batch; persist per corpus
     snapshot."""
-    from wingfoil_spark.functions.selection import _bm25_stats
+    from wingfoil_spark.functions.selection import _bm25_stats, _tokenized
 
     terms = [t.lower() for t in terms]
-    d = (
-        corpus.where(F.col(text_col).isNotNull())
-        .withColumn("__t", tokens(F.col(text_col)))
-        .withColumn("__dl", F.size("__t"))
-    )
+    d = _tokenized(corpus, text_col).withColumn("__dl", F.size("__t"))
     return _bm25_stats(d, terms)
 
 
@@ -543,22 +541,26 @@ def bm25_score_stream(
     ``new_docs`` may be a streaming frame; ``index`` is the static
     one-row :func:`build_bm25_index` frame. Per micro-batch: broadcast
     cross join of the single stats row + a row-local JVM projection —
-    zero shuffles, zero Python, no standing state. Scoring arithmetic is
-    IDENTICAL to the batch scorer (same expression shapes), so
-    stream == batch for docs whose stats snapshot matches — pinned by
-    the differential in tests/test_streaming_ingest.py."""
-    from wingfoil_spark.functions.selection import _bm25_score_expr
+    zero shuffles, zero Python, no standing state. Tokens, the query
+    terms column and the BM25 sum are the batch scorer's own builders
+    (`selection._tokenized`, `selection._terms_col`,
+    `selection._bm25_sum`), so stream == batch for docs whose stats
+    snapshot matches — pinned by the differential in
+    tests/test_streaming_ingest.py."""
+    from wingfoil_spark.functions.selection import (
+        _bm25_sum,
+        _terms_col,
+        _tokenized,
+    )
 
     terms = [t.lower() for t in terms]
     d = (
-        new_docs.where(F.col(text_col).isNotNull())
-        .withColumn("__t", tokens(F.col(text_col)))
+        _tokenized(new_docs, text_col)
         .withColumn("__dl", F.size("__t"))
+        .withColumn("__q", _terms_col(terms))
         .crossJoin(F.broadcast(index))
     )
-    return d.select(
-        F.col(id_col), _bm25_score_expr(terms, k1, b).alias("score")
-    )
+    return d.select(F.col(id_col), _bm25_sum(k1, b).alias("score"))
 
 
 def clf_score_stream(
