@@ -5,13 +5,15 @@ run modes, so they get adversarial inputs here: random tick streams,
 random micro-batch splits — a step must produce identical output whether
 it sees the whole history at once or any chunking of it (the resumability
 law that makes run-mode duality hold), and must agree with a naive
-reference model. Pure python/pandas — no SparkSession needed.
+reference model. Pure python/pandas — no SparkSession needed, except for
+the two packed batch operators whose steps are private closures.
 """
 
 import numpy as np
 import warnings
 
 import pandas as pd
+import pytest
 from hypothesis import given, settings, strategies as st
 
 from wingfoil_spark.operators.market import order_book_step
@@ -366,3 +368,135 @@ def test_tw_window_step_chunking_and_model(rows, cuts, frame):
         mask = ww > 0
         exp = _weighted_median_select(vv[mask], ww[mask], vals[i])
         assert whole["tw_median"].iloc[i] == exp, i
+
+
+# ----------------------------------------------------------- in_order
+
+
+def _frames():
+    """Frames in random order with tied ts and tied seq, a shuffled
+    non-default index, and ts as int, NaN-free float, float with NaN,
+    object, or nullable Int64."""
+    kinds = st.sampled_from(["int", "float", "nan", "object", "nullable"])
+    row = st.tuples(st.integers(0, 6), st.integers(0, 3), st.booleans())
+    return st.tuples(kinds, st.lists(row, max_size=25), st.randoms())
+
+
+def _frame(kind, rows, rnd):
+    ts = [t for t, _, _ in rows]
+    if kind == "float":
+        ts = [t / 2 - 1.0 for t in ts]
+    elif kind == "nan":
+        ts = [np.nan if null else t / 2 for t, _, null in rows]
+    elif kind == "object":
+        ts = pd.Series([None if null else t for t, _, null in rows], dtype=object)
+    elif kind == "nullable":
+        ts = pd.array([None if null else t for t, _, null in rows], dtype="Int64")
+    labels = list(range(100, 100 + len(rows)))
+    rnd.shuffle(labels)
+    return pd.DataFrame(
+        {"ts": ts, "seq": [q for _, q, _ in rows], "v": np.arange(len(rows)) * 0.5},
+        index=labels,
+    )
+
+
+@settings(max_examples=200, deadline=None)
+@given(_frames(), st.sampled_from([["ts"], ["ts", "seq"]]))
+def test_in_order_equals_stable_sort(frame, order):
+    """in_order is sort_values(order, kind="mergesort") — values AND index —
+    on ties, nulls and object columns; sorted input comes back as itself."""
+    from wingfoil_spark.streaming.stateful import in_order
+
+    pdf = _frame(*frame)
+    expected = pdf.sort_values(order, kind="mergesort")
+    pd.testing.assert_frame_equal(in_order(pdf, order), expected)
+    if frame[0] in ("int", "float"):
+        assert in_order(expected, order) is expected
+    pd.testing.assert_frame_equal(in_order(expected, order), expected)
+
+
+@pytest.mark.parametrize("n", [0, 1])
+def test_in_order_empty_and_one_row(n):
+    from wingfoil_spark.streaming.stateful import in_order
+
+    pdf = pd.DataFrame({"ts": [None] * n, "seq": [1] * n}, dtype=object)
+    assert in_order(pdf, ["ts", "seq"]) is pdf
+
+
+# ------------------------------------------------- int64 keys above 2**53
+
+BIG_KEY = 2**53 + 1  # not representable as float64
+
+
+def _big_key_cases():
+    from wingfoil_spark.streaming import twins
+
+    def ticks(**extra):
+        n = 6
+        return pd.DataFrame({"k": np.full(n, BIG_KEY, dtype=np.int64),
+                             "ts": np.arange(n, dtype=np.int64) * 2,
+                             "seq": np.arange(n, dtype=np.int64),
+                             "v": np.linspace(1.0, 3.5, n), **extra})
+
+    def tagged():
+        pdf = ticks(__side=np.array([0, 1] * 3), __seq=np.arange(6))
+        pdf["l"] = np.where(pdf["__side"] == 1, pdf["v"], np.nan)
+        pdf["r"] = np.where(pdf["__side"] == 0, pdf["v"], np.nan)
+        return pdf
+
+    def resets():
+        pdf = ticks(__trig=np.array([0, 0, 1, 0, 0, 0]), __seq=np.arange(6))
+        return pdf.rename(columns={"ts": "__t"})
+
+    wm = 10**6  # far past every fire time
+    k = ["k"]
+    return {
+        "combine": (twins.combine_step("ts", ["l"], ["r"], k), tagged),
+        "rolling_stats": (twins.rolling_stats_step("v", 3, "ts", "seq", k), ticks),
+        "range_stats": (twins.range_stats_step("v", 5, "ts", "seq", k), ticks),
+        "tw_profile": (twins.tw_profile_step("v", 5, "ts", k), ticks),
+        "tw_range": (twins.tw_range_step("v", 5, "ts", k), ticks),
+        "cum_stats": (twins.cum_stats_step("v", "ts", "seq", k), ticks),
+        "tw_window": (twins.tw_window_step("v", ("rows", 3), "ts", k), ticks),
+        "tw_cum": (twins.tw_cum_step("v", "ts", k), ticks),
+        "buffer": (twins.buffer_step(2, "v", "ts", "seq", k), ticks),
+        "delay": (twins.delay_step(3, "ts", ["v"], k), ticks),
+        "delay_timer": (lambda st_, pdf: twins.delay_timer_op(
+            3, "ts", ["v"], k, None).on_data(st_, pdf, wm), ticks),
+        "delay_with_reset_timer": (lambda st_, pdf: twins.delay_with_reset_timer_op(
+            3, "ts", ["v"], k, None).on_data(st_, pdf, wm), resets),
+    }
+
+
+@pytest.mark.parametrize("name", sorted(_big_key_cases()))
+def test_step_returns_int64_key_above_2_53_exactly(name):
+    """Every twin step emits the group's key as read from its own column:
+    a row read upcasts to float64 next to a float column and rounds
+    2**53 + 1 to 2**53."""
+    step, make_input = _big_key_cases()[name]
+    _, out = step(None, make_input())
+    assert len(out)
+    assert [int(x) for x in out["k"]] == [BIG_KEY] * len(out)
+
+
+def test_packed_operators_return_int64_key_above_2_53_exactly(spark):
+    """The packed batch operators with private steps: delay_with_reset's
+    timer walk and dynamic_group."""
+    from wingfoil_spark import Stream
+    from wingfoil_spark.operators.dynamic import dynamic_group
+    from wingfoil_spark.operators.stateful import delay_with_reset
+
+    def s(rows, schema="k long, ts long, v double"):
+        return Stream(spark.createDataFrame(rows, schema), ts="ts", keys=("k",))
+
+    src = s([(BIG_KEY, 10, 1.0), (BIG_KEY, 30, 3.0)])
+    trig = s([(BIG_KEY, 35)], "k long, ts long")
+    out = delay_with_reset(src, 20, trig, value_cols=["v"], strategy="timer")
+    got = sorted((r.k, r.ts) for r in out.df.collect())
+    assert got == [(BIG_KEY, 30), (BIG_KEY, 35)]
+
+    data = s([(BIG_KEY, 3, 2.0)])
+    add = s([(BIG_KEY, 2)], "k long, ts long")
+    rem = s([], "k long, ts long")
+    got = [(r.k, r.member_acc) for r in dynamic_group(data, add, rem, "v").df.collect()]
+    assert got == [(BIG_KEY, 2.0)]

@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from wingfoil_spark.stream import Stream
+from wingfoil_spark.streaming.stateful import group_key
 
 
 def dynamic_group(
@@ -104,7 +105,7 @@ def dynamic_group(
             elif member:
                 acc = fold_fn(acc, float(v_arr[i]))
                 rows.append((int(t_arr[i]), float(v_arr[i]), acc))
-        keyvals = tuple(pdf.iloc[0][k] for k in keys) if len(pdf) else ()
+        keyvals = group_key(pdf, keys)
         return pd.DataFrame(
             [(*keyvals, t, v, a) for t, v, a in rows],
             columns=[*keys, ts_col, col, out],

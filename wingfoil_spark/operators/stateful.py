@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from wingfoil_spark.stream import Stream
+from wingfoil_spark.streaming.stateful import group_key, in_order
 
 
 def _ewma_hl_kernel(ts: np.ndarray, x: np.ndarray, hl: float) -> np.ndarray:
@@ -76,7 +77,7 @@ def _apply_per_key(s: Stream, fn, added: list[T.StructField],
     if not keys:
         # keyless = one total order = one group (reference single-thread graph)
         def one(pdf: pd.DataFrame) -> pd.DataFrame:
-            return fn(pdf.sort_values(order, kind="mergesort"))
+            return fn(in_order(pdf, order))
 
         out_df = s.df.groupBy(F.lit(1).alias("__g")).applyInPandas(
             lambda p: one(p.drop(columns="__g", errors="ignore")), schema=schema
@@ -149,7 +150,7 @@ def _apply_per_key_reshape(s: Stream, fn, out_schema: T.StructType,
 
     if not keys:
         def one(pdf: pd.DataFrame) -> pd.DataFrame:
-            return fn(pdf.sort_values(order, kind="mergesort"))[out_cols]
+            return fn(in_order(pdf, order))[out_cols]
 
         return s.df.groupBy(F.lit(1).alias("__g")).applyInPandas(
             lambda p: one(p.drop(columns="__g", errors="ignore")), schema=out_schema
@@ -948,7 +949,7 @@ def _delay_with_reset_timer(s: Stream, delay_ns: int, trigger: Stream,
                 pending.append((t + delay, current))
         flush(np.iinfo(np.int64).max)
 
-        keyvals = tuple(pdf.iloc[0][k] for k in keys) if len(pdf) else ()
+        keyvals = group_key(pdf, keys)
         out = pd.DataFrame(
             [(*keyvals, t, *v) for t, v in rows],
             columns=[*keys, ts_col, *vals_t],

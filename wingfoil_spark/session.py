@@ -3,6 +3,19 @@
 Scale posture: these defaults are written for a real cluster (AQE on, skew
 join handling, partition-size-targeted shuffles); locally they run the same
 code on ``local[N]``.
+
+Python workers: sessions built by :func:`get_spark` start their Python
+workers from :mod:`wingfoil_spark.pydaemon` instead of ``pyspark.daemon``.
+Every Python task calls ``importlib.invalidate_caches()``, and on CPython
+below 3.13 that re-reads the whole directory of ``pyspark.zip`` once per
+zip importer, ~90 ms of worker CPU per task (the micro-batch stateful
+bindings pay it on every batch). The daemon re-reads an archive only when
+its mtime or size changed; CPython fixed this upstream only in 3.13, where
+zipimport invalidation became lazy. Sessions built elsewhere (a
+driver-provided session passed to :func:`configure_session`) keep the stock
+daemon: the module is a launch-time setting. The workers get this
+package's parent directory on their ``PYTHONPATH``, so the daemon (like the
+operators' closures) imports from any working directory.
 """
 
 from __future__ import annotations
@@ -10,6 +23,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+#: the directory holding the ``wingfoil_spark`` package
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 #: SQL confs we need regardless of who built the session. All of these are
 #: runtime-settable, so they can be applied to a driver-provided session.
@@ -68,6 +84,8 @@ def get_spark(app_name: str = "wingfoil_spark", cpus: int | None = None) -> Spar
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
+        .config("spark.python.daemon.module", "wingfoil_spark.pydaemon")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

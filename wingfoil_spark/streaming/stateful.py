@@ -16,10 +16,12 @@ docs/wingfoil-architecture.md:11-26). The Spark-native expression:
   state persists in the state store across micro-batches, keyed identically.
 
 Determinism contract: rows must reach the op in (ts, seq) order within a
-key. Batch mode sorts; streaming mode relies on in-order sources per key
-(Kafka per-partition order, file-source file order) — out-of-order data
-needs an upstream watermark-sort stage, which the reference simply forbids
-(non-decreasing source timestamps, adapters/csv.rs:110-115).
+key. Both bindings put each batch in that order with :func:`in_order`
+(a no-op on the usual already-ordered input); streaming mode otherwise
+relies on in-order sources per key (Kafka per-partition order, file-source
+file order) — out-of-order data across micro-batches needs an upstream
+watermark-sort stage, which the reference simply forbids (non-decreasing
+source timestamps, adapters/csv.rs:110-115).
 """
 
 from __future__ import annotations
@@ -36,6 +38,40 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 StepFn = Callable[[Any, pd.DataFrame], tuple[Any, pd.DataFrame]]
+
+
+def in_order(pdf: pd.DataFrame, order: list[str]) -> pd.DataFrame:
+    """``pdf.sort_values(order, kind="mergesort")`` — same rows, same index —
+    without the sort when ``pdf`` is already in ``order``: then ``pdf``
+    itself comes back. Rows reach a key's step sorted almost always (the
+    packed batch binding sorts within partitions, file sources deliver a
+    key's rows in order), so per-group cost is one vectorised comparison
+    instead of a pandas multi-column sort per binding and per step.
+    Integer, bool and NaN-free float columns take a stable ``np.lexsort``;
+    anything else (object, datetime, nulls) goes through pandas itself."""
+    if len(pdf) < 2:
+        return pdf
+    cols = [pdf[c].to_numpy() for c in order]
+    if not all(
+        a.dtype.kind in "iub" or (a.dtype.kind == "f" and not np.isnan(a).any())
+        for a in cols
+    ):
+        return pdf.sort_values(order, kind="mergesort")
+    tied = None  # adjacent pairs equal on every column so far
+    for a in cols:
+        le = a[:-1] <= a[1:]
+        if not (le if tied is None else le | ~tied).all():
+            return pdf.take(np.lexsort(cols[::-1]))
+        eq = a[:-1] == a[1:]
+        tied = eq if tied is None else tied & eq
+    return pdf
+
+
+def group_key(pdf: pd.DataFrame, keys) -> tuple:
+    """The key values of a one-key group, each read from its own column.
+    (A row read — ``pdf.iloc[0]`` — upcasts to float64 whenever the frame
+    mixes int and float columns, which rounds int64 keys above 2**53.)"""
+    return tuple(pdf[k].iloc[0] for k in keys) if len(pdf) else ()
 
 
 class KeyedStateOp:
@@ -82,7 +118,7 @@ class KeyedStateOp:
         )
 
         def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-            _, out = step(init, pdf.sort_values(order, kind="mergesort"))
+            _, out = step(init, in_order(pdf, order))
             if len(out.columns) == 0:  # e.g. a close-only batch (with_close)
                 out = pd.DataFrame({c: [] for c in names})
             return out
@@ -139,7 +175,7 @@ class KeyedStateOp:
             else:
                 st = init
             for pdf in pdfs:
-                st, out = step(st, pdf.sort_values(order, kind="mergesort"))
+                st, out = step(st, in_order(pdf, order))
                 if len(out):
                     yield out
             if st is None:

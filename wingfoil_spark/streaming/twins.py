@@ -46,7 +46,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from wingfoil_spark.stream import Stream
-from wingfoil_spark.streaming.stateful import KeyedStateOp, StepFn
+from wingfoil_spark.streaming.stateful import KeyedStateOp, StepFn, group_key, in_order
 
 
 def tagged_union(left: Stream, right: Stream, lvals: list[str], rvals: list[str]) -> DataFrame:
@@ -85,7 +85,7 @@ def combine_step(
     def step(state, pdf: pd.DataFrame):
         lat = dict(state) if state else {c: None for c in cols}
         pdf = pdf.sort_values([ts, "__side", "__seq"], kind="mergesort")
-        keyvals = tuple(pdf.iloc[0][k] for k in keys) if len(pdf) else ()
+        keyvals = group_key(pdf, keys)
         t_arr = pdf[ts].to_numpy()
         side_arr = pdf["__side"].to_numpy()
         val_arrs = {c: pdf[c].to_numpy() for c in cols}
@@ -157,6 +157,10 @@ def _sums_from_cents(cs: list, xs: list) -> tuple[float, float]:
     return float(sum(cs)) / 100.0, float(sum(c * c for c in cs)) / 10000.0
 
 
+_STAT_COLS = ("st_sum", "st_mean", "st_min", "st_max", "st_var", "st_std",
+              "st_median")
+
+
 def rolling_stats_step(
     col: str, n: int, ts: str, seq: str | None, keys: list[str]
 ) -> StepFn:
@@ -170,8 +174,8 @@ def rolling_stats_step(
         hist: list[tuple[int, float]] = list(state) if state else []
         out_rows = []
         order = [ts] + ([seq] if seq else [])
-        pdf = pdf.sort_values(order, kind="mergesort")
-        keyvals = tuple(pdf.iloc[0][k] for k in keys) if len(pdf) else ()
+        pdf = in_order(pdf, order)
+        keyvals = group_key(pdf, keys)
         meta = pdf[order].to_numpy()
         vals = pdf[col].to_numpy(dtype=np.float64)
         for i in range(len(pdf)):
@@ -192,8 +196,7 @@ def rolling_stats_step(
             )
         out = pd.DataFrame(
             [(*keyvals, *r) for r in out_rows],
-            columns=[*keys, *order, col, "st_sum", "st_mean", "st_min", "st_max",
-                     "st_var", "st_std", "st_median"],
+            columns=[*keys, *order, col, *_STAT_COLS],
         )
         return hist, out
 
@@ -210,26 +213,23 @@ def range_stats_step(
     the full instant in-frame (rangeBetween includes same-ts rows in both
     directions — runtime/burst.rs:16), so rows are processed per instant.
     Sums accumulate in exact integer cents with the same double op-order as
-    the decimal window formulation — bitwise across all three bindings."""
+    the decimal window formulation — bitwise across all three bindings.
+    The seven stats fill one (rows, 7) array, and the output frame is built
+    from column arrays: per-row tuples cost more than the stats."""
+    order = [ts] + ([seq] if seq else [])
 
     def step(state, pdf: pd.DataFrame):
         hist: list[tuple[int, int, float]] = list(state) if state else []
-        order = [ts] + ([seq] if seq else [])
-        pdf = pdf.sort_values(order, kind="mergesort")
-        keyvals = tuple(pdf.iloc[0][k] for k in keys) if len(pdf) else ()
-        meta = pdf[order].to_numpy()
-        t_arr = pdf[ts].to_numpy()
-        vals = pdf[col].to_numpy(dtype=np.float64)
-        out_rows = []
-        i = 0
+        pdf = in_order(pdf, order)
         n = len(pdf)
-        while i < n:
+        t_arr = pdf[ts].to_numpy().astype(np.int64, copy=False)
+        vals = pdf[col].to_numpy(dtype=np.float64)
+        stats = np.empty((n, len(_STAT_COLS)))
+        # instants = runs of equal ts
+        starts = [0, *(np.flatnonzero(t_arr[1:] != t_arr[:-1]) + 1).tolist()] if n else []
+        for i, j in zip(starts, starts[1:] + [n]):
             t = int(t_arr[i])
-            j = i
-            while j < n and int(t_arr[j]) == t:  # the whole instant
-                hist.append((int(t_arr[j]), _cents(float(vals[j])),
-                             float(vals[j])))
-                j += 1
+            hist += [(t, _cents(x), x) for x in vals[i:j].tolist()]
             hist = [h for h in hist if h[0] >= t - window_ns]
             cs = [c for _, c, _ in hist]
             vs = sorted(x for _, _, x in hist)
@@ -238,17 +238,13 @@ def range_stats_step(
             # single-sample var/std seed 0.0 (statistics_rolling.rs:9-15)
             var = max((s2 - s1 * s1 / cnt) / (cnt - 1), 0.0) if cnt > 1 else 0.0
             med = (vs[(cnt + 1) // 2 - 1] + vs[cnt // 2]) / 2
-            row_stats = (s1, s1 / cnt, vs[0], vs[-1], var, np.sqrt(var), med)
-            for r in range(i, j):
-                out_rows.append(
-                    (*[int(m) for m in meta[r]], float(vals[r]), *row_stats)
-                )
-            i = j
-        out = pd.DataFrame(
-            [(*keyvals, *r) for r in out_rows],
-            columns=[*keys, *order, col, "st_sum", "st_mean", "st_min",
-                     "st_max", "st_var", "st_std", "st_median"],
-        )
+            stats[i:j] = (s1, s1 / cnt, vs[0], vs[-1], var, np.sqrt(var), med)
+        out = pd.DataFrame({
+            **{k: pdf[k].to_numpy() for k in keys},
+            **{c: pdf[c].to_numpy().astype(np.int64, copy=False) for c in order},
+            col: vals,
+            **dict(zip(_STAT_COLS, stats.T)),
+        })
         return hist, out
 
     return step
@@ -275,8 +271,7 @@ def tw_profile_step(
         from wingfoil_spark.operators.stateful import _tw_profile_kernel
 
         h_ts, h_v = (list(state[0]), list(state[1])) if state else ([], [])
-        pdf = pdf.sort_values([ts], kind="mergesort")
-        keyvals = tuple(pdf.iloc[0][k] for k in keys) if len(pdf) else ()
+        pdf = in_order(pdf, [ts])
         new_ts = [int(t) for t in pdf[ts].to_numpy()]
         new_v = [float(x) for x in pdf[col].to_numpy(dtype=np.float64)]
         h_ts += new_ts
@@ -310,8 +305,8 @@ def tw_range_step(
 
     def step(state, pdf: pd.DataFrame):
         hist: list[tuple[int, int, float]] = list(state) if state else []
-        pdf = pdf.sort_values([ts], kind="mergesort")
-        keyvals = tuple(pdf.iloc[0][k] for k in keys) if len(pdf) else ()
+        pdf = in_order(pdf, [ts])
+        keyvals = group_key(pdf, keys)
         t_arr = pdf[ts].to_numpy()
         vals = pdf[col].to_numpy(dtype=np.float64)
         out_rows = []
@@ -376,8 +371,8 @@ def cum_stats_step(
         else:
             cnt, sc1, sc2, f1, f2, mn, mx, vs = 0, 0, 0, 0.0, 0.0, None, None, []
         order = [ts] + ([seq] if seq else [])
-        pdf = pdf.sort_values(order, kind="mergesort")
-        keyvals = tuple(pdf.iloc[0][k] for k in keys) if len(pdf) else ()
+        pdf = in_order(pdf, order)
+        keyvals = group_key(pdf, keys)
         meta = pdf[order].to_numpy()
         vals = pdf[col].to_numpy(dtype=np.float64)
         out_rows = []
@@ -409,8 +404,7 @@ def cum_stats_step(
             )
         out = pd.DataFrame(
             [(*keyvals, *r) for r in out_rows],
-            columns=[*keys, *order, col, "st_sum", "st_mean", "st_min",
-                     "st_max", "st_var", "st_std", "st_median"],
+            columns=[*keys, *order, col, *_STAT_COLS],
         )
         return (cnt, sc1, sc2, f1, f2, mn, mx, vs), out
 
@@ -441,8 +435,8 @@ def tw_window_step(col: str, frame, ts: str, keys: list[str]) -> StepFn:
         from wingfoil_spark.operators.stateful import _weighted_median_select
 
         hist: list[tuple] = list(state) if state else []
-        pdf = pdf.sort_values([ts], kind="mergesort")
-        keyvals = tuple(pdf.iloc[0][k] for k in keys) if len(pdf) else ()
+        pdf = in_order(pdf, [ts])
+        keyvals = group_key(pdf, keys)
         t_arr = pdf[ts].to_numpy()
         vals = pdf[col].to_numpy(dtype=np.float64)
         out_rows = []
@@ -506,8 +500,8 @@ def tw_cum_step(col: str, ts: str, keys: list[str]) -> StepFn:
         else:
             last_t, last_c, last_x, sw, swv, swv2, fwv, fwv2 = (
                 None, None, None, 0, 0, 0, 0.0, 0.0)
-        pdf = pdf.sort_values([ts], kind="mergesort")
-        keyvals = tuple(pdf.iloc[0][k] for k in keys) if len(pdf) else ()
+        pdf = in_order(pdf, [ts])
+        keyvals = group_key(pdf, keys)
         t_arr = pdf[ts].to_numpy()
         vals = pdf[col].to_numpy(dtype=np.float64)
         out_rows = []
@@ -557,8 +551,8 @@ def buffer_step(
     def step(state, pdf: pd.DataFrame):
         partial: list[tuple[int, int, float]] = list(state) if state else []
         order = [ts] + ([seq] if seq else [])
-        pdf = pdf.sort_values(order, kind="mergesort")
-        keyvals = tuple(pdf.iloc[0][k] for k in keys) if len(pdf) else ()
+        pdf = in_order(pdf, order)
+        keyvals = group_key(pdf, keys)
         t_arr = pdf[ts].to_numpy()
         vals = pdf[col].to_numpy(dtype=np.float64)
         out_rows = []
@@ -718,7 +712,7 @@ class EventTimeTimerOp:
                     yield out
             else:
                 for pdf in pdfs:
-                    pdf = pdf.drop(columns="__et").sort_values(order, kind="mergesort")
+                    pdf = in_order(pdf.drop(columns="__et"), order)
                     st, out = on_data(st, pdf, wm_us)
                     if len(out):
                         yield out
@@ -769,7 +763,7 @@ def delay_timer_op(
 
     def on_data(pending, pdf: pd.DataFrame, wm_us):
         pending = list(pending) if pending else []
-        keyvals = tuple(pdf.iloc[0][k] for k in keys) if len(pdf) else ()
+        keyvals = group_key(pdf, keys)
         t_arr = pdf[ts].to_numpy()
         val_arrs = [pdf[c].to_numpy() for c in vals]
         for i in range(len(pdf)):
@@ -830,7 +824,7 @@ def delay_with_reset_timer_op(
             rows.extend(fired)
 
         if len(pdf):
-            keyvals = tuple(pdf.iloc[0][k] for k in keys)
+            keyvals = group_key(pdf, keys)
             t_arr = pdf["__t"].to_numpy()
             trig_arr = pdf["__trig"].to_numpy()
             val_arrs = [pdf[c].to_numpy() for c in vals]
@@ -881,8 +875,8 @@ def delay_step(
 
     def step(state, pdf: pd.DataFrame):
         pending: list[tuple] = list(state) if state else []
-        pdf = pdf.sort_values([ts], kind="mergesort")
-        keyvals = tuple(pdf.iloc[0][k] for k in keys) if len(pdf) else ()
+        pdf = in_order(pdf, [ts])
+        keyvals = group_key(pdf, keys)
         t_arr = pdf[ts].to_numpy()
         val_arrs = [pdf[c].to_numpy() for c in vals]
         for i in range(len(pdf)):
