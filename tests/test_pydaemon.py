@@ -79,12 +79,21 @@ def test_rewritten_archive_is_reread(reads, archive):
 
 
 def test_session_workers_run_the_daemon_wrapper(spark):
+    """In a worker, ``importlib.invalidate_caches()`` keeps every unchanged
+    archive's cached directory (the stock method reads a new one)."""
+
     def probe(batches):
+        import importlib
         import zipimport
 
         for _ in batches:
             pass
-        yield pd.DataFrame({"m": [zipimport.zipimporter.invalidate_caches.__module__]})
+        before = dict(zipimport._zip_directory_cache)
+        importlib.invalidate_caches()
+        after = zipimport._zip_directory_cache
+        yield pd.DataFrame({"archive": list(before),
+                            "kept": [after.get(a) is d for a, d in before.items()]})
 
-    got = {r.m for r in spark.range(1).mapInPandas(probe, "m string").collect()}
-    assert got == {"wingfoil_spark.pydaemon"}
+    got = spark.range(1).mapInPandas(probe, "archive string, kept boolean").toPandas()
+    assert got["archive"].str.endswith("pyspark.zip").any()
+    assert got["kept"].all(), got

@@ -72,8 +72,4 @@ def main() -> None:
 
 
 if __name__ == "__main__":
-    # ``python -m`` runs this file as ``__main__``; run the importable copy
-    # so the installed wrapper is ``wingfoil_spark.pydaemon.invalidate_caches``
-    from wingfoil_spark import pydaemon
-
-    pydaemon.main()
+    main()

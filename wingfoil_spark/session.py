@@ -15,7 +15,8 @@ zipimport invalidation became lazy. Sessions built elsewhere (a
 driver-provided session passed to :func:`configure_session`) keep the stock
 daemon: the module is a launch-time setting. The workers get this
 package's parent directory on their ``PYTHONPATH``, so the daemon (like the
-operators' closures) imports from any working directory.
+operators' closures) imports from any working directory; a
+``spark.executorEnv.PYTHONPATH`` set elsewhere is kept after it.
 """
 
 from __future__ import annotations
@@ -85,8 +86,14 @@ def get_spark(app_name: str = "wingfoil_spark", cpus: int | None = None) -> Spar
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config("spark.python.daemon.module", "wingfoil_spark.pydaemon")
-        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    # Workers read PYTHONPATH from the context's environment, which already
+    # holds any spark.executorEnv.PYTHONPATH (spark-defaults, submit args):
+    # put this package's parent in front of it rather than replace it.
+    env = spark.sparkContext.environment
+    paths = [p for p in env.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if _PACKAGE_PARENT not in paths:
+        env["PYTHONPATH"] = os.pathsep.join([_PACKAGE_PARENT, *paths])
     return configure_session(spark)
