@@ -329,9 +329,10 @@ def test_decontaminate_plan_never_shuffles_corpus_scan(spark):
 def test_single_token_doc_survives_shingle_paths(spark):
     """Regression hardening: sequence(1, 0) DESCENDS in Spark, so the
     unguarded bigram bound indexed out of bounds for a 1-token doc and
-    ANSI mode aborted the JOB when word_bigrams was evaluated directly
-    (minhash's when()-guard masked it). word_bigrams is now total: [] for
-    short docs, and minhash keeps its lone-token signature policy."""
+    ANSI mode aborted the JOB when the bigrams were evaluated directly
+    (minhash's size guard masked it). The n-gram builder minhash shingles
+    with is total: [] for short docs, and minhash keeps its lone-token
+    signature policy."""
     import pyspark.sql.functions as F
 
     from wingfoil_spark.functions import dedup
@@ -340,7 +341,7 @@ def test_single_token_doc_survives_shingle_paths(spark):
     docs = _corpus(spark, [(1, "solo"), (2, "two words here"), (3, "x")])
     # direct, unguarded evaluation no longer aborts
     bg = (docs.withColumn("__toks", tokens(F.col("text")))
-              .select("doc_id", dedup.word_bigrams("text").alias("bg")))
+              .select("doc_id", dedup.word_ngrams_expr("__toks", 2).alias("bg")))
     got = {r.doc_id: r.bg for r in bg.collect()}
     assert got[1] == [] and got[3] == [], "short docs shingle to []"
     assert got[2] == ["two words", "words here"]

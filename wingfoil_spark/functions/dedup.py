@@ -40,6 +40,17 @@ def _md5_int(col) -> "F.Column":
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("bigint")
 
 
+# The row-local MinHash/LSH and gram expressions below are SQL text
+# (`F.expr`): one string costs one py4j round trip, where a wide Column
+# loop costs several per cell and every Python-lambda `F.transform` a
+# lambda-variable registration. The same rule as `selection`'s builders
+# keeps the text safe: it carries ONLY internal column names (``__toks``,
+# ``__sig``, ``mh*``, ``ids``, ``bucket``) and int()-coerced numbers;
+# caller columns resolve through ``F.col`` first.
+#: :func:`_md5_int` as SQL text over ``{x}``.
+_MD5_INT_SQL = "CAST(conv(substring(md5({x}), 1, 15), 16, 10) AS BIGINT)"
+
+
 def ensure_parallelism(df: DataFrame) -> DataFrame:
     """Row-local Arrow kernels inherit the SCAN's partitioning: a small
     corpus in one parquet file serializes the whole Python stage on one
@@ -67,21 +78,6 @@ def exact_dedup(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id")
         docs.withColumn("fp", fingerprint(F.col(text_col)))
         .groupBy("fp")
         .agg(F.min(id_col).alias("keep_id"), F.count("*").alias("n_dups"))
-    )
-
-
-def word_bigrams(text_col: str) -> "F.Column":
-    """Word-bigram shingles (array<string>); [] for single-token docs.
-
-    The short-doc case needs an explicit guard: ``sequence(1, 0)`` in
-    Spark DESCENDS to ``[1, 0]`` (step defaults to -1 for start > stop),
-    so the old ``greatest(size-1, 0)`` bound indexed past the array and
-    ABORTED the job under ANSI mode on any single-token doc — a one-token
-    tweet in a 100 TB corpus would have killed the whole dedup run."""
-    return F.expr(
-        "if(size({t}) < 2, array(), "
-        "transform(sequence(1, size({t}) - 1), "
-        "i -> concat({t}[i-1], ' ', {t}[i])))".format(t="__toks")
     )
 
 
@@ -123,10 +119,10 @@ def minhash_sig_array(
     vectorized. Integer math is exact, so the DuckDB oracle (the
     transform formulation) matches regardless of evaluation strategy.
 
-    The array form is also the PLANNING-cheap form: banding slices it
-    directly (:func:`lsh_candidate_pairs`), where the 128-scalar-column
-    projection (:func:`minhash_signatures`, the graded/oracle surface)
-    costs more Catalyst analysis time than the signatures themselves."""
+    Shingles and their md5 base are one SQL expression. Building this
+    frame sends ~140 py4j commands (245 with the former Python-lambda
+    base), most of them the kernel's UDF registration; banding reads the
+    array directly (:func:`lsh_candidate_pairs`)."""
     # NULL text carries no signature — dropped like simhash's vote-less
     # docs (a null doc is unknown, not equal to other null docs; letting
     # an all-null signature through would put every null doc in ONE LSH
@@ -134,15 +130,12 @@ def minhash_sig_array(
     # empty docs ARE exact duplicates.
     df = ensure_parallelism(docs).where(F.col(text_col).isNotNull())
     df = df.withColumn("__toks", tokens(F.col(text_col)))
-    df = df.withColumn(
-        "__shingles",
-        F.when(F.size("__toks") >= 2, word_bigrams(text_col)).otherwise(F.col("__toks")),
-    )
-    base = F.transform(
-        F.col("__shingles"),
-        lambda s: F.conv(F.substring(F.md5(s), 1, 7), 16, 10).cast("bigint"),
-    )
-    df = df.withColumn("__base", base)
+    # shingles: word bigrams, or the lone token of a one-token doc
+    shingles = f"IF(size(__toks) >= 2, {_ngrams_sql(2)}, __toks)"
+    df = df.withColumn("__base", F.expr(
+        f"transform({shingles}, "
+        "s -> CAST(conv(substring(md5(s), 1, 7), 16, 10) AS BIGINT))"
+    ))
 
     A = np.array(_MINHASH_A[:k], dtype=np.int64)
     B = np.array(_MINHASH_B[:k], dtype=np.int64)
@@ -194,9 +187,12 @@ def minhash_signatures(
     """:func:`minhash_sig_array` projected to the wide mh0..mh{k-1}
     scalar-column surface (the graded/oracle shape)."""
     sig = minhash_sig_array(docs, text_col, id_col, k)
+    # one struct, star-expanded; the optimizer folds each field back to
+    # __sig[j], so the plan is the 128-column projection itself
+    mh = ", ".join(f"'mh{j}', __sig[{j}]" for j in range(int(k)))
     return sig.select(
-        id_col, *[F.col("__sig")[j].alias(f"mh{j}") for j in range(k)]
-    )
+        F.col(id_col), F.expr(f"named_struct({mh})").alias("__mh")
+    ).select(id_col, "__mh.*")
 
 
 def band_explode(
@@ -208,22 +204,25 @@ def band_explode(
     batch pair expansion (:func:`lsh_candidate_pairs`) and the streaming
     ingest tier (`streaming.ingest`), which equi-joins arriving docs'
     band keys against a persisted corpus index built from this frame.
-    Accepts either the wide mh0..mh{k-1} frame or the ``__sig`` array."""
-    rows_per_band = k // bands
-    band_keys = []
-    has_array = "__sig" in sigs.columns
-    for b in range(bands):
-        if has_array:
-            parts = [
-                F.col("__sig")[b * rows_per_band + r].cast("string")
-                for r in range(rows_per_band)
-            ]
-        else:
-            parts = [F.col(f"mh{b * rows_per_band + r}").cast("string")
-                     for r in range(rows_per_band)]
-        band_keys.append(F.struct(F.lit(b).alias("band"), F.md5(F.concat_ws("|", *parts)).alias("bk")))
+    Accepts either the wide mh0..mh{k-1} frame or the ``__sig`` array.
+
+    All ``bands`` band keys are ONE SQL expression,
+    ``explode(array(named_struct('band', b, 'bk', md5(concat_ws('|',
+    CAST(cell AS STRING), …))), …))``; concat_ws skips NULL cells, so an
+    all-NULL signature (a token-less doc) keys every band as md5('').
+    Building it sends 53 py4j commands; the per-cell Column form sent
+    5,388 (16 × 8 cells, several round trips each)."""
+    rows = int(k) // int(bands)
+    cell = "__sig[{}]" if "__sig" in sigs.columns else "mh{}"
+    band_keys = ", ".join(
+        f"named_struct('band', {b}, 'bk', md5(concat_ws('|', "
+        + ", ".join(f"CAST({cell.format(b * rows + r)} AS STRING)"
+                    for r in range(rows))
+        + ")))"
+        for b in range(int(bands))
+    )
     return sigs.select(
-        F.col(id_col), F.explode(F.array(*band_keys)).alias("bandkey"),
+        F.col(id_col), F.expr(f"explode(array({band_keys}))").alias("bandkey"),
         *[F.col(c) for c in keep]
     ).select(id_col, "bandkey.band", "bandkey.bk", *keep)
 
@@ -234,9 +233,12 @@ def lsh_candidate_pairs(
     """Banded LSH: docs sharing any band of the signature become a candidate
     pair. Equi-join on (band_idx, band_key) — the scalable alternative to a
     cross join; dedup'd on (a, b) with a < b. Accepts either the wide
-    mh0..mh{k-1} frame or the ``__sig`` array frame (same band keys — the
-    array form slices instead of re-concatenating 128 scalar columns, a
-    big Catalyst-analysis saving)."""
+    mh0..mh{k-1} frame or the ``__sig`` array frame (same band keys).
+
+    Banding and the in-bucket pair expansion are SQL text: building
+    ``lsh_candidate_pairs(minhash_sig_array(docs))`` sends ~280 py4j
+    commands and takes ~0.12 s warm, against 5,841 and ~0.70 s for the
+    Column/Python-lambda form (sf0.001 documents, 4-vCPU host)."""
     exploded = band_explode(sigs, id_col, k, bands)
     # Pairs by grouping each bucket and expanding in-bucket combinations —
     # signatures are computed ONCE (a self-join would evaluate the minhash
@@ -247,19 +249,13 @@ def lsh_candidate_pairs(
     buckets = exploded.groupBy("band", "bk").agg(
         F.sort_array(F.collect_list(id_col)).alias("ids")
     )
-    n = F.size("ids")
-    pair_structs = F.flatten(
-        F.transform(
-            F.col("ids"),
-            lambda a, i: F.transform(
-                F.slice(F.col("ids"), i + 2, n),
-                lambda b: F.struct(a.alias("a"), b.alias("b")),
-            ),
-        )
+    pair_structs = F.expr(
+        "explode(flatten(transform(ids, (x, i) -> transform("
+        "slice(ids, i + 2, size(ids)), y -> named_struct('a', x, 'b', y)))))"
     )
     return (
-        buckets.where(n >= 2)
-        .select(F.explode(pair_structs).alias("p"))
+        buckets.where(F.size("ids") >= 2)
+        .select(pair_structs.alias("p"))
         .select("p.a", "p.b")
         .distinct()
     )
@@ -462,16 +458,30 @@ def dedup_keep(
     return docs.join(drop, id_col, "left_anti")
 
 
-def word_ngrams_expr(toks_col: str, n: int) -> "F.Column":
-    """Word n-gram strings (space-joined) from a staged token-array column;
-    [] for docs shorter than ``n`` tokens (explicit guard — ``sequence(1,
-    0)`` DESCENDS in Spark, see :func:`word_bigrams`). Pure Catalyst
-    (transform over sequence + slice)."""
-    return F.expr(
+def _ngrams_sql(n: int, toks_col: str = "__toks") -> str:
+    """SQL text of the word n-grams (space-joined) of ``toks_col``; [] for
+    docs shorter than ``n`` tokens. The guard is needed: ``sequence(1,
+    0)`` DESCENDS to ``[1, 0]`` in Spark, so an unguarded bound indexes
+    past the array and ANSI mode aborts the whole job on one short doc."""
+    n = int(n)
+    return (
         f"if(size({toks_col}) < {n}, array(), "
         f"transform(sequence(1, size({toks_col}) - {n - 1}), "
         f"i -> array_join(slice({toks_col}, i, {n}), ' ')))"
     )
+
+
+def word_ngrams_expr(toks_col: str, n: int) -> "F.Column":
+    """:func:`_ngrams_sql` of a staged token-array column, as a Column."""
+    return F.expr(_ngrams_sql(n, toks_col))
+
+
+def _gram_hashes(n: int) -> "F.Column":
+    """The 60-bit md5 int (:func:`_md5_int`) of every word ``n``-gram of
+    the internal ``__toks`` column — the gram stream of decontamination
+    and substring dedup, batch and streamed."""
+    h = _MD5_INT_SQL.format(x="g")
+    return F.expr(f"transform({_ngrams_sql(n)}, g -> {h})")
 
 
 def decontaminate(
@@ -505,11 +515,7 @@ def decontaminate(
     60-bit md5 units as the MinHash tier, so an exact DuckDB twin exists."""
     if n < 1:
         raise ValueError(f"n must be >= 1, got {n}")
-    gram_h = F.explode(
-        F.array_distinct(
-            F.transform(word_ngrams_expr("__toks", n), lambda g: _md5_int(g))
-        )
-    )
+    gram_h = F.explode(F.array_distinct(_gram_hashes(n)))
     # n-grams are over the raw token SEQUENCE (array_distinct applies to
     # the resulting grams, never the tokens) on BOTH sides:
     bench_units = (
@@ -571,6 +577,7 @@ def cosine_near_dups(
     the dedup family (exact → MinHash → SimHash → embedding-cosine)."""
     from wingfoil_spark.functions.similarity import (
         _dot,
+        hamming1_explode,
         hyperplane_signature,
         with_norm,
     )
@@ -588,14 +595,7 @@ def cosine_near_dups(
     # checkpoint runs it once (measured 1.085s -> 0.96s at sf0.1; at
     # data scale it removes a full corpus scan + two kernel passes).
     n = n.localCheckpoint(eager=True)
-    if probe_hamming:
-        probes = F.array(
-            F.col("bucket"),
-            *[F.col("bucket").bitwiseXOR(F.lit(1 << p)) for p in range(bits)],
-        )
-        a_side = n.withColumn("bucket", F.explode(probes))
-    else:
-        a_side = n
+    a_side = hamming1_explode(n, bits) if probe_hamming else n
     a = a_side.select(
         F.col(id_col).alias("a"), F.col(emb_col).alias("ea"),
         F.col("__nrm").alias("na"), "bucket",
@@ -730,9 +730,7 @@ def duplicate_spans(
     )
     grams = toks.select(
         id_col,
-        F.posexplode(
-            F.transform(word_ngrams_expr("__toks", L), lambda g: _md5_int(g))
-        ).alias("pos", "gh"),
+        F.posexplode(_gram_hashes(L)).alias("pos", "gh"),
     )
     # two-level occurrence election: partial-aggregated counts (map-side
     # combine caps any hot gram at one row per map task), keep only the
@@ -884,9 +882,9 @@ def dedup_lines(
     )
     rebuilt = kept.groupBy(id_col).agg(
         F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("__pos", "__line"))),
-                lambda s: s["__line"],
+            F.expr(
+                "transform(array_sort(collect_list(struct(__pos, __line))), "
+                "s -> s.__line)"
             ),
             "\n",
         ).alias("__new_text"),

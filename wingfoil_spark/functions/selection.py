@@ -43,7 +43,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from wingfoil_spark.functions.dedup import _md5_int, ensure_parallelism
+from wingfoil_spark.functions.dedup import (
+    _MD5_INT_SQL,
+    _md5_int,
+    ensure_parallelism,
+)
 from wingfoil_spark.functions.text import tokens
 
 __all__ = [
@@ -88,7 +92,6 @@ _H60 = 1 << 60
 # backslashes, dotted struct paths and the
 # ``spark.sql.parser.escapedStringLiterals`` setting cannot change what
 # an expression means.
-_MD5_INT_SQL = "CAST(conv(substring(md5({x}), 1, 15), 16, 10) AS BIGINT)"
 
 
 def _gram_array(tok_col: str) -> F.Column:

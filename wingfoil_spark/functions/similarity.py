@@ -111,26 +111,17 @@ def table_seed(t: int) -> str:
     return "hp" if t == 0 else f"hpT{t}p"
 
 
-def hamming1_explode(df: DataFrame, bits: int, bucket_col: str = "bucket") -> DataFrame:
-    """Explode a signed-off bucket column to itself + its ``bits``
+def hamming1_explode(df: DataFrame, bits: int) -> DataFrame:
+    """Explode the signed-off ``bucket`` column to itself + its ``bits``
     single-bit flips — the Hamming-1 multi-probe set, shared by every
     probing tier (batch and streamed; review r13 — four inline copies
     meant a probing-scheme change had four silent divergence points).
     The probed values (bucket ⊕ distinct masks incl. 0) are pairwise
     distinct, so downstream equi-joins against a one-bucket-per-row
-    corpus side cannot produce duplicate pairs."""
-    return df.withColumn(
-        bucket_col,
-        F.explode(
-            F.array(
-                F.col(bucket_col),
-                *[
-                    F.col(bucket_col).bitwiseXOR(F.lit(1 << b))
-                    for b in range(bits)
-                ],
-            )
-        ),
-    )
+    corpus side cannot produce duplicate pairs. One SQL expression over
+    the internal ``bucket`` column (see `dedup`'s SQL-text rule)."""
+    flips = "".join(f", bucket ^ {1 << b}" for b in range(int(bits)))
+    return df.withColumn("bucket", F.expr(f"explode(array(bucket{flips}))"))
 
 
 def _check_probe_hamming(fn: str, probe_hamming: int) -> None:

@@ -43,10 +43,9 @@ from pyspark.sql import DataFrame, functions as F
 from wingfoil_spark.functions.dedup import (
     LSH_BANDS,
     MINHASH_K,
-    _md5_int,
+    _gram_hashes,
     band_explode,
     minhash_sig_array,
-    word_ngrams_expr,
 )
 from wingfoil_spark.functions.text import tokens
 from wingfoil_spark.functions.text import fingerprint
@@ -368,11 +367,7 @@ def build_decon_index(
     micro-batch. Same gram/hash math as the batch scrub
     (`dedup.decontaminate`) — shared expressions, so stream == batch is a
     structural fact, then differentially tested anyway."""
-    gram_h = F.explode(
-        F.array_distinct(
-            F.transform(word_ngrams_expr("__toks", n), lambda g: _md5_int(g))
-        )
-    )
+    gram_h = F.explode(F.array_distinct(_gram_hashes(n)))
     return (
         benchmark.where(F.col(text_col).isNotNull())
         .select(tokens(F.col(text_col)).alias("__toks"))
@@ -424,11 +419,7 @@ def decontaminate_stream(
         .select(F.col(id_col), tokens(F.col(text_col)).alias("__toks"))
         .select(
             id_col,
-            F.explode(
-                F.array_distinct(
-                    F.transform(word_ngrams_expr("__toks", n), lambda g: _md5_int(g))
-                )
-            ).alias("gh"),
+            F.explode(F.array_distinct(_gram_hashes(n))).alias("gh"),
         )
     )
     hits = grams.join(F.broadcast(index), "gh", "left_semi").select(id_col)
