@@ -1075,8 +1075,8 @@ def q_decon_stream(spark, sf_dir):
     - part='ivf_serve' (aux=neighbor_id*10+rank, v=cosine): arriving
       probes against the frozen store-shaped assignment via
       streaming/ingest.ivf_topk_stream — the window-free row-local cell
-      pick (similarity.ivf_assign_rowlocal: centroid metadata inlined
-      as a literal array), the stream-static cid join, the shared
+      pick (similarity.ivf_assign: centroid metadata as one broadcast
+      array row), the stream-static cid join, the shared
       running top-k. Oracle = the batch IVF CTE over the same take
       centroids (shared with the ivfpq_store arm).
     - part='ivfpq_serve' (aux=neighbor_id*10+rank, v=round(1-adc/2,6)):
@@ -1146,7 +1146,7 @@ def q_decon_stream(spark, sf_dir):
       like 'recall'.
     - part='lsh_t' (aux=neighbor_id*10+rank, v=cosine): the
       multi-TABLE axis composed with per-table multiprobe —
-      lsh_tables_topk(n_tables=4, probe_hamming=1): one signature pass
+      lsh_bucketed_topk(n_tables=4, probe_hamming=1): one signature pass
       emits every table's bucket (posexplode), one (tbl, bucket)
       equi-join, and a REAL pair-dedup before scoring (unlike every
       single-table tier, a pair CAN co-bucket in several tables).
@@ -1461,7 +1461,7 @@ def q_decon_stream(spark, sf_dir):
         # r11 part='ivf_serve': ONLINE IVF serving inside the streaming
         # union — arriving probes against the frozen store-shaped
         # assignment via the window-free row-local cell pick
-        # (ivf_assign_rowlocal) + the shared running top-k. Rank rides
+        # (ivf_assign) + the shared running top-k. Rank rides
         # in aux (neighbor*10+rank) like part='ivfpq_store'.
         iserve = ingest.ivf_topk_stream(
             estream, pasg, pcents, k=5, nprobe=4
@@ -1669,7 +1669,7 @@ def q_decon_stream(spark, sf_dir):
         # single-bucket baseline — the full dial graded.
         def _chain_lsh_t():
             t0 = _time.perf_counter()
-            ilt = sim.lsh_tables_topk(
+            ilt = sim.lsh_bucketed_topk(
                 emb, emb.where(F.col("vec_id") % 50 == 0), k=5,
                 n_tables=4, probe_hamming=1,
             ).localCheckpoint(eager=True)
@@ -2621,8 +2621,9 @@ def _lsh_tables_sql_ctes(
     n_tables: int, bits: int, dim: int, reuse_table0: bool = False
 ) -> str:
     """The multi-table LSH candidate generation (similarity.
-    lsh_tables_topk with probe_hamming=1) replayed as DuckDB CTEs over
-    the decon_stream oracle's ``aen``/``aep`` relations: per-table plane
+    lsh_bucketed_topk with n_tables > 1 and probe_hamming=1) replayed as
+    DuckDB CTEs over the decon_stream oracle's ``aen``/``aep``
+    relations: per-table plane
     matrices from the :func:`similarity.table_seed` namespaces (table 0
     is the historical 'hp' seed — bit-identical to the single-table
     tier), list_reduce projections in the kernel's sequential fold

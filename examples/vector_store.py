@@ -15,7 +15,9 @@ twin — the reference's augurs/market tiers don't cover vectors):
    IVF-PQ (the billion-vector composition), all sharing ONE corpus
    assignment via the r9 ``centroids=``/``corpus_assign=`` hooks.
 4. SERVING path: `ann_topk_stream` answers ARRIVING probes against the
-   frozen bucket index (stream-static join, zero standing state).
+   frozen bucket index (`build_ann_index`, the same index and probe
+   builders as the batch `lsh_bucketed_topk`; stream-static join, zero
+   standing state).
 5. CURATION path: SemDeDup prunes semantic near-duplicates from the
    same assignment frame (assign once, prune per threshold/cap).
 
@@ -93,12 +95,13 @@ got = {(r.probe_id, r.rank): r.neighbor_id for r in served.collect()}
 assert got[(0, 1)] == 240, got
 print("streaming-serving index: rank-1 near-dup recovered")
 
-# 4a. the LSH recall dial (r13): per-table Hamming-1 multi-probe and L
-# independent plane tables compose — recall can only widen (structural:
-# every dial step probes a superset of buckets)
+# 4a. the LSH recall dial, bits x n_tables x probe_hamming in one
+# function: per-table Hamming-1 multi-probe and L independent plane
+# tables compose — recall can only widen (structural: every dial step
+# probes a superset of buckets)
 mp = sim.lsh_bucketed_topk(corpus, probes, k=3, probe_hamming=1)
-tables = sim.lsh_tables_topk(corpus, probes, k=3, n_tables=4,
-                             probe_hamming=1)
+tables = sim.lsh_bucketed_topk(corpus, probes, k=3, n_tables=4,
+                               probe_hamming=1)
 n_single = sim.lsh_bucketed_topk(corpus, probes, k=3).count()
 n_mp, n_tables_rows = mp.count(), tables.count()
 assert n_single <= n_mp <= n_tables_rows, (n_single, n_mp, n_tables_rows)

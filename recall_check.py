@@ -245,8 +245,8 @@ def compute_table(spark, sf_dir: str, k: int = 5, sweep: bool = False,
         # r13: the multi-TABLE axis — L=4 independent plane tables,
         # alone and composed with per-table Hamming-1 probing (the
         # full amplification dial; graded as decon_stream part='lsh_t')
-        "lsh_t4": lambda: sim.lsh_tables_topk(e, probes, k=k, n_tables=4),
-        "lsh_t4_mp": lambda: sim.lsh_tables_topk(
+        "lsh_t4": lambda: sim.lsh_bucketed_topk(e, probes, k=k, n_tables=4),
+        "lsh_t4_mp": lambda: sim.lsh_bucketed_topk(
             e, probes, k=k, n_tables=4, probe_hamming=1
         ),
         "ivf": lambda: sim.ivf_topk(

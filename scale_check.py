@@ -184,7 +184,7 @@ def selection_branches(spark):
     conclusion was about materializing the WIDE intermediate arrays. r8
     (VERDICT r7 Next #3) took the third option: one scan emitting all
     three SCORE scalars (selection_scores — shared tokenize, one md5 per
-    gram, tiny 4-column checkpoint), measured in selection_onepass_ab."""
+    gram, tiny 4-column checkpoint)."""
     from pyspark.sql import functions as F
 
     from wingfoil_spark.functions import dedup as dd
@@ -233,66 +233,6 @@ def selection_branches(spark):
         }
         print(f"# selection[{name}]: {t_small:.2f}s -> {t_big:.2f}s "
               f"({t_big / t_small:.1f}x)", file=sys.stderr)
-    return out
-
-
-def selection_union_legacy(spark, sf_dir):
-    """The r7 per-signal composition of the selection union (each signal
-    its own corpus scan), kept as the A/B baseline for the r8 one-pass
-    selection_scores swap — same output, different plan."""
-    from pyspark.sql import functions as F
-
-    from wingfoil_spark.functions import dedup as dd
-    from wingfoil_spark.functions import selection as sel
-    from wingfoil_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    ex = dd.exact_dedup(docs).select(
-        F.lit("exact").alias("part"), F.col("fp").alias("k"),
-        F.col("keep_id").alias("id"),
-        F.col("n_dups").cast("double").alias("v"),
-    )
-    w = sel.dsir_weights_subset(
-        docs, F.col("lang") == "en", n_buckets=entry.SEL_BUCKETS
-    ).localCheckpoint(eager=True)
-    dsir = w.select(
-        F.lit("dsir").alias("part"), F.lit(None).cast("string").alias("k"),
-        F.col("doc_id").alias("id"), F.round("log_w", 6).alias("v"),
-    )
-    top = sel.dsir_sample(w, entry.SEL_TOP).select(
-        F.lit("dsir_top").alias("part"), F.lit(None).cast("string").alias("k"),
-        F.col("doc_id").alias("id"), F.round("gumbel_key", 6).alias("v"),
-    )
-    bm = sel.bm25_topk(
-        docs, list(entry.SEL_TERMS), k=entry.SEL_BM25_K
-    ).select(
-        F.lit("bm25").alias("part"), F.lit(None).cast("string").alias("k"),
-        F.col("doc_id").alias("id"), F.round("score", 6).alias("v"),
-    )
-    qc = entry._derived_qc_model(spark)  # the ONE shared generator (r13)
-    clf = sel.quality_scores(docs, qc).select(
-        F.lit("clf").alias("part"), F.lit(None).cast("string").alias("k"),
-        F.col("doc_id").alias("id"), F.round("logit", 6).alias("v"),
-    )
-    return (
-        ex.unionByName(dsir).unionByName(top).unionByName(bm)
-        .unionByName(clf)
-    )
-
-
-def selection_onepass_ab(spark, qs):
-    """A/B the graded one-pass selection union against the r7 per-signal
-    composition at SMALL and the 10x tier (VERDICT r7 Next #3 'Done'
-    criterion: same hashes — pinned by the oracle gate — plus a measured
-    number in the artifact)."""
-    out = {}
-    for name, fn in [("onepass", qs["selection"]),
-                     ("legacy", selection_union_legacy)]:
-        t_small = timed(fn, spark, SMALL)
-        t_big = timed(fn, spark, BIG)
-        out[name] = {"t_small": round(t_small, 3), "t_big": round(t_big, 3)}
-        print(f"# selection_ab[{name}]: {t_small:.2f}s small, "
-              f"{t_big:.2f}s @10x", file=sys.stderr)
     return out
 
 
@@ -844,9 +784,9 @@ DECON_STREAM_PART_DECISIONS = {
     "poll": "keep — the only Python-DataSource source kind (own "
             "availableNow query by documented necessity)",
     "ivf_lloyd": "keep — the only SQL-replayed k-means fit grade",
-    "lsh_mp": "keep — pins lsh_bucketed_topk(probe_hamming=1), a "
-              "different function than lsh_t's lsh_tables_topk; also "
-              "the amplification axis cosine_near_dups shares",
+    "lsh_mp": "keep — pins lsh_bucketed_topk(probe_hamming=1), the "
+              "single-table dial setting (lsh_t grades n_tables=4); "
+              "also the amplification axis cosine_near_dups shares",
     "lsh_t": "keep — multi-table axis + the only cross-table pair-dedup "
              "contract",
     "rerank": "NEW (r14) — the part budget freed by the ivfpq_store "
@@ -946,22 +886,11 @@ def main() -> None:
         "queries_30x": out30,
         "superlinear": superlinear,
         "selection_branches": selection_branches(spark),
-        "selection_onepass_ab": selection_onepass_ab(spark, qs),
         "semdedup_cap_10x": semdedup_cap_10x(spark),
         "decon_stream_10x": decon_stream_scale(spark),
         "decon_stream_part_walls": decon_stream_part_walls(spark),
         "ivfpq_grow_scale": ivfpq_grow_scale(spark),
         "refit_scale": refit_scale(spark),
-        "selection_note_r8": (
-            "r8 swaps the graded union onto selection_scores (one corpus "
-            "scan emits dsir log-w + bm25 score + clf logit; shared "
-            "tokenize, one md5 per gram, 4-scalar checkpoint) - hashes "
-            "unchanged (oracle gate), A/B vs the r7 per-signal "
-            "composition in selection_onepass_ab. r7's token/bucket-"
-            "level checkpoints measured slower (6.26s/9.56s vs 5.94s) "
-            "because they materialized WIDE arrays; the score-level "
-            "share avoids that."
-        ),
     }
 
     if os.environ.get("SPARK_GRAFT_SCALE100") == "1":

@@ -53,10 +53,10 @@ _FULL_ONLY = (
     # ~214s: the PQ-Lloyd SQL-replay differential (its fast siblings
     # test_lloyd_fit_matches_sql_replay etc. stay)
     "test_similarity_ivf.py::test_pq_lloyd_fit_matches_sql_replay",
-    # ~340s: the three slow end-to-end example drives (quick_start and
-    # the cheap examples stay fast-lane)
+    # the two slowest end-to-end example drives (quick_start, the cheap
+    # examples and vector_store — ~32 s, it drives every similarity
+    # call site — stay fast-lane)
     "test_examples.py::test_example_runs[llm_pipeline]",
-    "test_examples.py::test_example_runs[vector_store]",
     "test_examples.py::test_example_runs[incremental_index]",
     # ~160s: the three slowest oracle-parity cases — the driver's own
     # verify step re-runs all 50 queries against DuckDB, so the pytest

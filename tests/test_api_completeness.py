@@ -74,8 +74,8 @@ MODULE_SURFACES = {
         "write_ivf_store", "ivf_topk_from_store",
         "write_ivfpq_store", "ivfpq_topk_from_store", "recall_at_k",
         "append_ivf_store", "append_ivfpq_store", "compact_cell_store",
-        "ivf_assign_rowlocal", "ivf_centroids",
-        "lsh_tables_topk", "hyperplane_signatures_multi", "table_seed",
+        "ivf_assign", "ivf_centroids", "build_ann_index",
+        "hyperplane_signatures_multi", "table_seed",
         "read_store_meta", "check_store_meta",
         "pq_decode", "refit_cell_store",
         "load_store_centroids", "load_store_codebooks",
@@ -161,7 +161,6 @@ MODULE_SURFACES = {
         "build_bm25_index", "bm25_score_stream", "lm_score_stream",
         "build_fingerprint_store", "dedup_against_store",
         "compact_fingerprint_store", "clf_score_stream",
-        "build_ann_index_multi", "ann_tables_topk_stream",
         "ivf_topk_stream", "ivfpq_topk_stream", "ivfpq_rerank_stream",
         "ivf_topk_stream_from_store", "ivfpq_topk_stream_from_store",
         "ivfpq_rerank_stream_from_store",

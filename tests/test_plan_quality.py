@@ -95,6 +95,23 @@ def test_cosine_near_dups_no_cartesian(spark):
     assert "BroadcastNestedLoopJoin" not in plan, plan
 
 
+def test_lsh_tables_sign_each_side_once(spark):
+    """The multi-table LSH top-k signs each side with ONE Arrow-batched
+    kernel pass: the posexplode's inferred filters must not be pushed
+    below the signature projection, which would split the UDF into two
+    stacked ArrowEvalPython nodes per side (four in all)."""
+    from pyspark.sql import functions as F
+
+    from wingfoil_spark.functions import similarity as sim
+    from wingfoil_spark.sources.tables import load_table
+
+    e = load_table(spark, SF_DIR, "embeddings")
+    probes = e.where(F.col("vec_id") % 50 == 0)
+    df = sim.lsh_bucketed_topk(e, probes, k=5, n_tables=4, probe_hamming=1)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("ArrowEvalPython") == 2, plan
+
+
 def test_analysis_scores_no_python_stage(spark):
     # the analysis window ops promise JVM-only evaluation
     plan = plan_of(spark, "analysis_scores")

@@ -583,29 +583,62 @@ def test_append_ivfpq_store_equals_rebuild(spark, emb, tmp_path):
     assert (g["adc_dist"].to_numpy() == w["adc_dist"].to_numpy()).all()
 
 
-def test_ivf_assign_rowlocal_matches_window(spark, emb):
-    """r11: the streaming-legal literal-array assignment must reproduce
-    ivf_assign's window ranking exactly — same cells, same tie order —
-    at nprobe=1 and nprobe=4."""
+def _fold(a, b):
+    """Left-to-right double fold — the canonical dot order."""
+    acc = 0.0
+    for x, y in zip(a, b):
+        acc = acc + float(x) * float(y)
+    return acc
+
+
+def _ref_assign(rows, cents, nprobe):
+    """Plain-Python IVF assignment: cosine of every (nonzero) vector
+    against every nonzero-norm centroid, sorted by (-sim, cid), first
+    ``nprobe`` kept. Returns sorted (vec_id, cid) pairs."""
+    import math
+
+    cs = [(int(c["cid"]), c["cvec"], math.sqrt(_fold(c["cvec"], c["cvec"])))
+          for c in cents]
+    out = []
+    for r in rows:
+        e = r["embedding"]
+        if e is None:
+            continue
+        n = math.sqrt(_fold(e, e))
+        if not n > 0:
+            continue
+        ranked = sorted((-(_fold(e, cv) / (n * cn)), cid)
+                        for cid, cv, cn in cs if cn > 0)
+        out += [(int(r["vec_id"]), cid) for _, cid in ranked[:nprobe]]
+    return sorted(out)
+
+
+def _assigned(df, cents, nprobe):
+    return sorted(
+        (int(r[0]), int(r[1])) for r in
+        sim.ivf_assign(df, cents, nprobe).select("vec_id", "cid").collect()
+    )
+
+
+def test_ivf_assign_matches_reference(spark, emb):
+    """The row-local assignment equals a plain-Python reference (double
+    fold, (-sim, cid) order) at nprobe=1 and nprobe=4, and its plan
+    carries no window (streaming-legal)."""
     cents = sim.ivf_centroids(emb, 8, fit="take").localCheckpoint(eager=True)
+    rows = emb.select("vec_id", "embedding").collect()
+    crow = cents.collect()
     for nprobe in (1, 4):
-        w = sim.ivf_assign(emb, cents, nprobe).select("vec_id", "cid").toPandas()
-        r = sim.ivf_assign_rowlocal(emb, cents, nprobe).select(
-            "vec_id", "cid"
-        ).toPandas()
-        key = ["vec_id", "cid"]
-        assert sorted(map(tuple, w[key].to_numpy().tolist())) == \
-            sorted(map(tuple, r[key].to_numpy().tolist())), f"nprobe={nprobe}"
-    # and it is genuinely window-free (streaming-legal plan shape)
-    plan = sim.ivf_assign_rowlocal(emb, cents, 4)._jdf.queryExecution() \
+        assert _assigned(emb, cents, nprobe) == \
+            _ref_assign(rows, crow, nprobe), f"nprobe={nprobe}"
+    plan = sim.ivf_assign(emb, cents, 4)._jdf.queryExecution() \
         .optimizedPlan().toString()
     assert "Window" not in plan
 
 
-def test_ivf_assign_rowlocal_tie_break(spark):
+def test_ivf_assign_tie_break(spark):
     """Planted centroid ties: two identical centroid vectors produce
-    EQUAL similarity for every probe — both assignment paths must break
-    the tie the same way (lower cid), at nprobe=1 and 2."""
+    EQUAL similarity for every probe — the tie breaks to the lower cid,
+    as in the reference, at nprobe=1, 2 and 3."""
     rows = [(0, [1.0, 0.0, 0.0, 0.0]),
             (1, [1.0, 0.0, 0.0, 0.0]),       # duplicate of vec 0 → dup centroid
             (2, [0.0, 1.0, 0.0, 0.0]),
@@ -614,21 +647,12 @@ def test_ivf_assign_rowlocal_tie_break(spark):
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     cents = sim.ivf_centroids(df, 3, fit="take").localCheckpoint(eager=True)
     # take-fit centroids = vecs 0,1,2 → cids 0 and 1 are IDENTICAL vectors
+    drows, crow = df.collect(), cents.collect()
     for nprobe in (1, 2, 3):
-        w = sorted(
-            map(tuple, sim.ivf_assign(df, cents, nprobe)
-                .select("vec_id", "cid").toPandas().to_numpy().tolist())
-        )
-        r = sorted(
-            map(tuple, sim.ivf_assign_rowlocal(df, cents, nprobe)
-                .select("vec_id", "cid").toPandas().to_numpy().tolist())
-        )
-        assert w == r, f"nprobe={nprobe}: {w} != {r}"
+        got = _assigned(df, cents, nprobe)
+        assert got == _ref_assign(drows, crow, nprobe), f"nprobe={nprobe}"
     # and the tie really resolves to the LOWER cid at nprobe=1
-    one = dict(
-        (r[0], r[1]) for r in sim.ivf_assign_rowlocal(df, cents, 1)
-        .select("vec_id", "cid").collect()
-    )
+    one = dict(_assigned(df, cents, 1))
     assert one[0] == 0 and one[1] == 0, one
 
 
@@ -676,11 +700,12 @@ def test_adc_duplicate_store_ids_single_rank(spark):
         assert float(mm.iloc[0]) <= float(bb.iloc[0])
 
 
-def test_ivf_assign_zero_norm_centroid_parity(spark):
-    """ADVICE r11 (low): a zero-norm centroid (take-fit can select a zero
-    vector) must be excluded by BOTH assignment paths — the window version
-    would rank its NaN similarity first while the row-local comparator
-    falls through to the cid tie-break, silently splitting the two paths."""
+def test_ivf_assign_zero_norm_centroid(spark):
+    """A zero-norm centroid (take-fit can select a zero vector) has no
+    direction: it is excluded, matching the reference, and an all-dead
+    centroid frame fails the action with a named error."""
+    from pyspark.errors import SparkRuntimeException
+
     rows = [(0, [0.0, 0.0, 0.0, 0.0]),   # zero vector → zero-norm centroid
             (1, [1.0, 0.0, 0.0, 0.0]),
             (2, [0.0, 1.0, 0.0, 0.0]),
@@ -690,17 +715,36 @@ def test_ivf_assign_zero_norm_centroid_parity(spark):
     cents = sim.ivf_centroids(df, 3, fit="take").localCheckpoint(eager=True)
     # take-fit picked vec 0 → cid 0 is the zero-norm centroid
     assert cents.where(F.col("cnorm") <= 0).count() == 1
+    drows, crow = df.collect(), cents.collect()
     for nprobe in (1, 2):
-        w = sorted(map(tuple, sim.ivf_assign(df, cents, nprobe)
-                       .select("vec_id", "cid").toPandas().to_numpy().tolist()))
-        r = sorted(map(tuple, sim.ivf_assign_rowlocal(df, cents, nprobe)
-                       .select("vec_id", "cid").toPandas().to_numpy().tolist()))
-        assert w == r, f"nprobe={nprobe}: {w} != {r}"
-        assert all(cid != 0 for _, cid in w)  # nobody lands in the dead cell
-    # all-zero-norm centroid frame → rowlocal refuses loudly
+        got = _assigned(df, cents, nprobe)
+        assert got == _ref_assign(drows, crow, nprobe), f"nprobe={nprobe}"
+        assert all(cid != 0 for _, cid in got)  # nobody lands in the dead cell
+    # all-zero-norm centroid frame → the assignment refuses loudly
     dead = cents.where(F.col("cnorm") <= 0)
-    with pytest.raises(ValueError, match="no usable centroids"):
-        sim.ivf_assign_rowlocal(df, dead, 1)
+    with pytest.raises(SparkRuntimeException, match="no usable centroids"):
+        sim.ivf_assign(df, dead, 1).collect()
+
+
+def test_append_ivf_store_keeps_duplicate_ids(spark, emb, tmp_path):
+    """An appended batch that carries one id twice, with different
+    vectors, lands BOTH rows in the store (dedup is the caller's crawl
+    gate, not the append's) — the row conservation refit_cell_store
+    already guarantees."""
+    cents = sim.ivf_centroids(emb, 4, fit="take").localCheckpoint(eager=True)
+    path = str(tmp_path / "ivf_dup")
+    sim.write_ivf_store(emb, path, centroids=cents,
+                        corpus_assign=sim.ivf_assign(emb, cents, 1))
+    v1, v2 = (r["embedding"] for r in emb.orderBy("vec_id").limit(2).collect())
+    assert v1 != v2
+    batch = spark.createDataFrame(
+        [(7_000_000, v1, 0), (7_000_000, v2, 0)], emb.schema
+    )
+    sim.append_ivf_store(batch, path, cents)
+    got = spark.read.parquet(path).where(F.col("vec_id") == 7_000_000) \
+        .select("embedding").collect()
+    assert sorted(list(r["embedding"]) for r in got) == sorted([v1, v2])
+    assert spark.read.parquet(path).count() == emb.count() + 2
 
 
 def test_append_ivf_store_raises_on_unreadable_existing(spark, emb, tmp_path):
@@ -1176,7 +1220,7 @@ def test_refit_codes_store_without_floats(spark, emb, tmp_path):
     recon = sim.pq_decode(
         spark.createDataFrame(before), books, out="__recon"
     )
-    want = sim.ivf_assign(recon, cents, 1, "__recon", "vec_id").select(
+    want = sim.ivf_assign(recon, cents, 1, "__recon").select(
         "vec_id", "cid"
     ).toPandas()
     assert key(store[["vec_id", "cid"]]).equals(key(want))

@@ -368,19 +368,19 @@ def test_ann_topk_stream_multiprobe_matches_batch(spark, sf_dir):
 
 def test_ann_tables_topk_stream_matches_batch(spark, sf_dir):
     """r13: the streamed multi-TABLE serving path (4 tables × Hamming-1)
-    == lsh_tables_topk row-for-row. Cross-table pair duplicates are
-    REAL here; the shared running-top-k iterator's keep-each-pair-once
-    contract must collapse them without any streaming dropDuplicates
-    (zero standing state)."""
+    == lsh_bucketed_topk(n_tables=4) row-for-row. Cross-table pair
+    duplicates are REAL here; the shared running-top-k iterator's
+    keep-each-pair-once contract must collapse them without any
+    streaming dropDuplicates (zero standing state)."""
     from wingfoil_spark.functions import similarity as sim
 
     emb = load_table(spark, sf_dir, "embeddings")
     probes = emb.where(F.col("vec_id") % 40 == 0)
-    batch = sim.lsh_tables_topk(
+    batch = sim.lsh_bucketed_topk(
         emb, probes, k=5, n_tables=4, probe_hamming=1
     ).toPandas()
 
-    index = ingest.build_ann_index_multi(emb, n_tables=4)
+    index = ingest.build_ann_index(emb, n_tables=4)
     pdf = probes.select("vec_id", "embedding").toPandas()
     src_dir = tempfile.mkdtemp(prefix="wf_ann_t_stream_")
     try:
@@ -396,7 +396,7 @@ def test_ann_tables_topk_stream_matches_batch(spark, sf_dir):
             .parquet(src_dir)
         )
         got = _run_to_memory(
-            ingest.ann_tables_topk_stream(
+            ingest.ann_topk_stream(
                 stream, index, k=5, n_tables=4, probe_hamming=1
             ),
             "ann_t_stream",
@@ -1044,9 +1044,9 @@ def test_ivfpq_topk_stream_matches_from_store(spark, sf_dir, tmp_path):
 
 def test_ivf_topk_stream_duplicate_store_ids_match_batch(spark, sf_dir, tmp_path):
     """Review r11: a store grown by append_ivf_store may carry duplicate
-    ids (dedup is the crawl gate's job). The batch twin collapses the
-    (probe, neighbor) pair via dropDuplicates; the stream iterator must
-    do the same — one rank per neighbor, stream == batch."""
+    ids (dedup is the crawl gate's job), with the same or different
+    vectors. Batch and stream both keep each (probe, neighbor) pair
+    once, at its best cosine — one rank per neighbor, stream == batch."""
     from wingfoil_spark.functions import similarity as sim
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -1057,6 +1057,13 @@ def test_ivf_topk_stream_duplicate_store_ids_match_batch(spark, sf_dir, tmp_path
     # re-append 20 existing vectors verbatim: duplicate ids, same vectors
     sim.append_ivf_store(emb.where(F.col("vec_id") % 7 == 0).limit(20),
                          path, cents)
+    # and every third id again with a NEGATED vector: one id, two
+    # different vectors — the pair's best cosine is the one that ranks
+    sim.append_ivf_store(
+        emb.where(F.col("vec_id") % 3 == 0)
+        .withColumn("embedding", F.expr("transform(embedding, x -> -x)")),
+        path, cents,
+    )
     store = spark.read.parquet(path)
     batch = sim.ivf_topk_from_store(
         spark, path, cents, probes, k=5, nprobe=3
@@ -1177,6 +1184,24 @@ def test_serving_joins_broadcast_the_probe_side(spark, sf_dir):
         plan = out._jdf.queryExecution().executedPlan().toString()
         assert "BroadcastHashJoin" in plan, plan[:500]
         assert "SortMergeJoin" not in plan, plan[:500]
+
+
+def test_ivf_topk_stream_build_py4j_round_trips(spark, sf_dir,
+                                               py4j_commands):
+    """Building the streamed IVF server is driver work counted in py4j
+    round trips, which host load cannot inflate. The probe assignment
+    reads the centroids as one broadcast array row, so the build does
+    not grow with the centroid count; inlining 64 centroids as literal
+    arrays sent more than 20k commands."""
+    from wingfoil_spark.functions import similarity as sim
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    probes = emb.where(F.col("vec_id") % 40 == 0)
+    cents = sim.ivf_centroids(emb, 64, fit="take").localCheckpoint(eager=True)
+    asg = sim.ivf_assign(emb, cents, 1).localCheckpoint(eager=True)
+    with py4j_commands() as c:
+        ingest.ivf_topk_stream(probes, asg, cents, k=5, nprobe=4)
+    assert c.n <= 600, f"{c.n} py4j round trips to build the IVF server"
 
 
 def test_exact_dedup_stream_rejects_fp_collision(spark, docs):

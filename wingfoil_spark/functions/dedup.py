@@ -578,11 +578,11 @@ def cosine_near_dups(
     from wingfoil_spark.functions.similarity import (
         _dot,
         hamming1_explode,
-        hyperplane_signature,
+        hyperplane_signatures_multi,
         with_norm,
     )
 
-    sig = hyperplane_signature(embeddings, emb_col, bits)
+    sig = hyperplane_signatures_multi(embeddings, emb_col, bits)
     n = with_norm(sig, emb_col, "__nrm").where(F.col("__nrm") > 0)
     # zero/null vectors carry no direction — excluded (ANSI division
     # would otherwise abort the job on one degenerate row)

@@ -638,13 +638,14 @@ def semdedup_assign(
     )
     # keep centroid similarity: re-derive it (ivf_assign drops its score)
     assigned = ivf_assign(
-        embeddings, cents, nprobe=1, emb_col=emb_col, id_col=id_col
+        embeddings, cents, nprobe=1, emb_col=emb_col
     ).join(F.broadcast(cents), "cid")
     return (
         with_norm(assigned, emb_col, "__nrm")
+        .withColumn("__e", F.col(emb_col))
         .withColumn(
             "centroid_sim",
-            _dot(emb_col, "cvec") / (F.col("__nrm") * F.col("cnorm")),
+            _dot("__e", "cvec") / (F.col("__nrm") * F.col("cnorm")),
         )
         .select(id_col, "cid", emb_col, "__nrm", "centroid_sim")
     )

@@ -7,9 +7,18 @@ Two tiers, per the scale plan:
   O(|probes| × corpus); right for small probe sets or as the oracle for
   approximate paths.
 - :func:`lsh_bucketed_topk` — random-hyperplane LSH: corpus is bucketed by
-  a b-bit signature (one shuffle), probes only scan their own bucket (and
-  optionally Hamming-adjacent buckets). The 100 TB path: bucket count
-  scales with corpus size, per-bucket scans are bounded.
+  a b-bit signature per plane table (one shuffle), probes only scan their
+  own buckets. The whole recall dial is ``bits × n_tables ×
+  probe_hamming`` in this one function: ``bits`` sets bucket precision,
+  ``n_tables`` adds independent plane tables, ``probe_hamming=1`` also
+  probes each table's bit-flip buckets. The corpus index
+  (:func:`build_ann_index`) and the probe-side signing are the same
+  builders the streamed ``ingest.ann_topk_stream`` serves from. The
+  100 TB path: bucket count scales with corpus size, per-bucket scans
+  are bounded.
+- :func:`ivf_assign` — the one IVF cell assignment (row-local, no window
+  and no shuffle, legal on a stream), shared by every IVF/IVF-PQ search,
+  store writer and streamed server.
 
 All float math is cast to double with left-to-right accumulation so the
 DuckDB oracle (list_dot_product over DOUBLE[]) matches bit-for-bit.
@@ -23,29 +32,35 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
 
-def _dot(a, b):
-    """THE canonical dot product: left-to-right double-cast fold over
-    two array columns (names or Column expressions) — the exact
-    accumulation every DuckDB oracle replays as ``list_dot_product``.
-    Every similarity/serving path builds its dot from this ONE helper
-    (review r12: eight hand-inlined copies risked a silent oracle
-    divergence if one changed); touch it only with every oracle."""
-    ca = F.col(a) if isinstance(a, str) else a
-    cb = F.col(b) if isinstance(b, str) else b
-    return F.aggregate(
-        F.zip_with(ca, cb, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
+#: THE canonical dot product as SQL text: a left-to-right double-cast
+#: fold over two array names — the exact accumulation every DuckDB
+#: oracle replays as ``list_dot_product``. Every similarity/serving path
+#: builds its dot (and :func:`with_norm` its norm) from this ONE string;
+#: touch it only with every oracle. ``{a}``/``{b}`` are INTERNAL names
+#: (or lambda-variable fields inside a larger SQL text) — never a
+#: caller's string; alias caller columns first (see `dedup`'s SQL-text
+#: rule). SQL text costs ~3 py4j round trips to build, the Python-lambda
+#: form ~120.
+_DOT_SQL = (
+    "aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * "
+    "CAST(y AS DOUBLE)), 0D, (acc, v) -> acc + v)"
+)
+
+
+def _dot(a: str, b: str):
+    """The canonical dot product (:data:`_DOT_SQL`) of two internal
+    array columns."""
+    return F.expr(_DOT_SQL.format(a=a, b=b))
 
 
 def with_norm(df: DataFrame, emb_col: str = "embedding", out: str = "norm") -> DataFrame:
-    sq = F.aggregate(
-        F.transform(F.col(emb_col), lambda x: x.cast("double") * x.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
+    """Add ``out`` = the L2 norm of ``emb_col``: the square root of the
+    canonical fold of the vector with itself."""
+    return (
+        df.withColumn("__v", F.col(emb_col))
+        .withColumn(out, F.sqrt(_dot("__v", "__v")))
+        .drop("__v")
     )
-    return df.withColumn(out, F.sqrt(sq))
 
 
 def cosine_topk(
@@ -124,18 +139,21 @@ def hamming1_explode(df: DataFrame, bits: int) -> DataFrame:
     return df.withColumn("bucket", F.expr(f"explode(array(bucket{flips}))"))
 
 
-def _check_probe_hamming(fn: str, probe_hamming: int) -> None:
-    if probe_hamming not in (0, 1):
-        raise ValueError(
-            f"{fn}: probe_hamming must be 0 (exact bucket) "
-            "or 1 (bit-flip neighbors)"
-        )
-
-
-def hyperplane_signature(
-    df: DataFrame, emb_col: str = "embedding", bits: int = 8, dim: int = 64
+def hyperplane_signatures_multi(
+    df: DataFrame,
+    emb_col: str = "embedding",
+    bits: int = 8,
+    n_tables: int = 1,
+    dim: int = 64,
 ) -> DataFrame:
-    """b-bit random-hyperplane signature, Arrow-batched.
+    """b-bit random-hyperplane signatures for ``n_tables`` independent
+    plane tables in ONE Arrow-batched pass: adds ``tbl`` and ``bucket``
+    columns, one row per (input row, table) via posexplode. Table t's
+    planes come from :func:`table_seed` (table 0 is the historical
+    single-table bucket). NULL embeddings have no direction and no
+    signature; they are dropped. This is the only hyperplane kernel:
+    the LSH tiers, the ANN index and ``dedup.cosine_near_dups`` all sign
+    through it.
 
     A pure-Catalyst formulation (bits × dim literal arrays folded per row)
     blows past the codegen method limit and falls back to interpreted
@@ -143,85 +161,35 @@ def hyperplane_signature(
     same math in milliseconds. Exactness: projections accumulate
     dim-SEQUENTIALLY (row-vectorized), the same order as a left fold, so
     buckets are bitwise-reproducible by the SQL oracle's list_reduce.
+    The per-row cost is ``n_tables × bits × dim`` flops; one corpus scan
+    builds every table.
 
-    Optimizer contract (r14, ADVICE r15-documented): the kernel UDF is
-    marked ``asNondeterministic()`` so the optimizer cannot duplicate the
-    evaluation when a consumer's join/filter infers predicates on
-    ``bucket`` (guide §4.4). The values ARE deterministic — but the
-    marking also stops deterministic filters from being pushed below the
-    projection, and a consumer that places the UDF call itself in a
-    position requiring determinism (join condition, some aggregate or
-    streaming positions) will get an analysis error rather than the
-    dedup. Callers should therefore project ``bucket`` FIRST and
-    filter/join on the projected column (as every in-repo consumer
-    does), or materialize the signed frame via localCheckpoint at hot
-    call sites (the cosine_near_dups pattern) when that is not
-    possible."""
-    # NOT repartitioned here (unlike the dedup text kernels): the signature
-    # kernel is light (bits × dim flops/row), and the ANN queries feed the
-    # bucketed frames straight into broadcast joins — an extra round-robin
-    # shuffle ahead of a broadcast build measured 1.5-4× slower and highly
-    # variable at sf0.1
-    # NULL embeddings have no signature (np.asarray(None) would kill the
-    # kernel; and no direction -> no bucket)
-    df = df.where(F.col(emb_col).isNotNull())
-    coefs = hyperplane_coefs(bits, dim)
-
-    @F.pandas_udf(T.LongType())
-    def sig_udf(emb: pd.Series) -> pd.Series:
-        if not len(emb):
-            return pd.Series([], dtype="int64")
-        arrs = [np.asarray(v, dtype=np.float64) for v in emb]
-        if all(a.shape == (dim,) for a in arrs):
-            m = np.stack(arrs)  # fast path: the well-formed batch
-        else:
-            # pad/truncate to the plane dimension: short vectors project
-            # with missing dims = 0 (ragged or off-dim inputs must not
-            # kill the job with an opaque IndexError/stack failure)
-            m = np.zeros((len(emb), dim), dtype=np.float64)
-            for i, a in enumerate(arrs):
-                a = a[:dim]
-                m[i, : len(a)] = a
-        out = np.zeros(len(emb), dtype=np.int64)
-        for p in range(bits):
-            acc = np.zeros(len(emb))
-            row = coefs[p]
-            for d in range(dim):  # sequential over dims = fold order
-                acc = acc + m[:, d] * row[d]
-            out |= (acc > 0).astype(np.int64) << p
-        return pd.Series(out)
-
-    # r14 OPT (guide §4.4): an inner join on the bucket column infers
-    # isnotnull(bucket) and pushes it BELOW the projection, splitting
-    # this UDF into two stacked ArrowEvalPython nodes — every consumer
-    # that equi-joins on the signature paid the kernel (and the Arrow
-    # transfer of the embedding column) twice per side. Marking the UDF
-    # non-deterministic forbids the optimizer from duplicating it; the
-    # values are of course deterministic — only the optimizer contract
-    # changes, and every value is unchanged.
-    sig_udf = sig_udf.asNondeterministic()
-    return df.withColumn("bucket", sig_udf(F.col(emb_col)))
-
-
-def hyperplane_signatures_multi(
-    df: DataFrame,
-    emb_col: str = "embedding",
-    bits: int = 8,
-    n_tables: int = 4,
-    dim: int = 64,
-) -> DataFrame:
-    """All ``n_tables`` table signatures in ONE pass: adds ``tbl`` and
-    ``bucket`` columns, one row per (input row, table) via posexplode.
-    Table t's planes come from :func:`table_seed` — table 0 is
-    bit-identical to :func:`hyperplane_signature`'s bucket. One corpus
-    scan builds every table's index (the L-pass formulation reads the
-    corpus L times for the same output); the per-row cost is
-    ``n_tables × bits × dim`` flops in the same vectorized kernel."""
+    Optimizer contract: the kernel UDF is marked ``asNondeterministic()``
+    so the optimizer cannot duplicate its evaluation (guide §4.4). The
+    posexplode lets ``InferFiltersFromGenerate`` add
+    ``size(sigs) > 0 AND isnotnull(sigs)``, and a consumer's equi-join
+    infers ``isnotnull(bucket)``; pushed below the projection, either
+    splits the UDF into two stacked ArrowEvalPython nodes, which run the
+    kernel (and ship the embedding column to Python) twice per side.
+    The values ARE deterministic — but the marking also stops
+    deterministic filters from being pushed below the projection, and a
+    consumer that places the UDF call itself in a position requiring
+    determinism (join condition, some aggregate or streaming positions)
+    will get an analysis error rather than the dedup. Callers should
+    therefore filter/join on the projected ``tbl``/``bucket`` columns
+    (as every in-repo consumer does), or materialize the signed frame
+    via localCheckpoint at hot call sites (the cosine_near_dups pattern)
+    when that is not possible."""
     if int(n_tables) < 1:
         raise ValueError(
             f"hyperplane_signatures_multi: n_tables must be >= 1, "
             f"got {n_tables}"
         )
+    # NOT repartitioned here (unlike the dedup text kernels): the signature
+    # kernel is light, and the ANN queries feed the bucketed frames
+    # straight into broadcast joins — an extra round-robin shuffle ahead
+    # of a broadcast build measured 1.5-4× slower and highly variable at
+    # sf0.1
     df = df.where(F.col(emb_col).isNotNull())
     books = np.stack(
         [hyperplane_coefs(bits, dim, table_seed(t)) for t in range(n_tables)]
@@ -233,8 +201,11 @@ def hyperplane_signatures_multi(
             return pd.Series([], dtype="object")
         arrs = [np.asarray(v, dtype=np.float64) for v in emb]
         if all(a.shape == (dim,) for a in arrs):
-            m = np.stack(arrs)
+            m = np.stack(arrs)  # fast path: the well-formed batch
         else:
+            # pad/truncate to the plane dimension: short vectors project
+            # with missing dims = 0 (ragged or off-dim inputs must not
+            # kill the job with an opaque IndexError/stack failure)
             m = np.zeros((len(emb), dim), dtype=np.float64)
             for i, a in enumerate(arrs):
                 a = a[:dim]
@@ -249,6 +220,7 @@ def hyperplane_signatures_multi(
                 out[:, t] |= (acc > 0).astype(np.int64) << p
         return pd.Series(list(out))
 
+    sigs_udf = sigs_udf.asNondeterministic()
     return (
         df.withColumn("__sigs", sigs_udf(F.col(emb_col)))
         .select("*", F.posexplode("__sigs").alias("tbl", "bucket"))
@@ -256,62 +228,54 @@ def hyperplane_signatures_multi(
     )
 
 
-def lsh_tables_topk(
+def build_ann_index(
     corpus: DataFrame,
-    probes: DataFrame,
-    k: int = 5,
     emb_col: str = "embedding",
     id_col: str = "vec_id",
     bits: int = 8,
-    n_tables: int = 4,
-    probe_hamming: int = 0,
+    n_tables: int = 1,
 ) -> DataFrame:
-    """Multi-TABLE LSH top-k — the classic recall amplification (L
-    independent plane tables turn one bucket's hit probability p into
-    1−(1−p)^L), the third axis of the dial beside bits (precision) and
-    :func:`lsh_bucketed_topk`'s ``probe_hamming`` (per-table probing).
-    Composable: ``probe_hamming=1`` multi-probes WITHIN each table.
-
-    Plan shape at 100 TB: ONE corpus signature pass emits every table's
-    bucket (posexplode to L rows/vector — the storage cost of any
-    multi-table LSH index), ONE (tbl, bucket) equi-join restricts
-    candidates, and — unlike the single-table tiers, where a pair can
-    only meet once — a genuine pair-dedup collapses pairs that
-    co-bucket in several tables before scoring, so each surviving pair
-    is scored exactly once. Never a cross join; every stage is
-    key-partitionable."""
-    _check_probe_hamming("lsh_tables_topk", probe_hamming)
+    """The corpus-side LSH index: ``(neighbor_id, e_c, tbl, bucket,
+    n_c)`` — one row per (vector, plane table), every table's bucket
+    from ONE signature pass, norm-annotated, zero/NULL vectors dropped.
+    ``tbl`` is the plane table (always 0 at ``n_tables=1``); rankers
+    probe the index on ``(tbl, bucket)``. :func:`lsh_bucketed_topk`
+    builds it inline; the streamed ``ingest.ann_topk_stream`` serves
+    from it persisted (parquet bucketed by ``(tbl, bucket)`` at scale).
+    Pass the same ``bits``/``n_tables`` to the probe side."""
     c = hyperplane_signatures_multi(corpus, emb_col, bits, n_tables).select(
         F.col(id_col).alias("neighbor_id"), F.col(emb_col).alias("e_c"),
         "tbl", "bucket",
     )
-    c = with_norm(c, "e_c", "n_c").where(F.col("n_c") > 0)
+    return with_norm(c, "e_c", "n_c").where(F.col("n_c") > 0)
+
+
+def _ann_probes(
+    probes: DataFrame,
+    emb_col: str,
+    id_col: str,
+    bits: int,
+    n_tables: int,
+    probe_hamming: int,
+    fn: str,
+) -> DataFrame:
+    """The probe side every LSH ranker joins against
+    :func:`build_ann_index`: ``(probe_id, e_p, tbl, bucket, n_p)``,
+    signed with the same plane tables, zero/NULL vectors dropped, and
+    with ``probe_hamming=1`` exploded to each table's Hamming-1 buckets
+    (:func:`hamming1_explode`). ``fn`` names the caller in the
+    ``probe_hamming`` error."""
+    if probe_hamming not in (0, 1):
+        raise ValueError(
+            f"{fn}: probe_hamming must be 0 (exact bucket) "
+            "or 1 (bit-flip neighbors)"
+        )
     p = hyperplane_signatures_multi(probes, emb_col, bits, n_tables).select(
         F.col(id_col).alias("probe_id"), F.col(emb_col).alias("e_p"),
         "tbl", "bucket",
     )
     p = with_norm(p, "e_p", "n_p").where(F.col("n_p") > 0)
-    if probe_hamming == 1:
-        p = hamming1_explode(p, bits)
-    dot = _dot("e_p", "e_c")
-    scored = (
-        c.join(p, ["tbl", "bucket"])
-        .where(F.col("probe_id") != F.col("neighbor_id"))
-        # REAL duplicates here (a pair may co-bucket in several tables);
-        # dedup BEFORE the dot product so each pair is scored once
-        .dropDuplicates(["probe_id", "neighbor_id"])
-        .withColumn("cosine", F.round(dot / (F.col("n_p") * F.col("n_c")), 6))
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("probe_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("probe_id", "neighbor_id", "cosine", "rank")
-    )
+    return hamming1_explode(p, bits) if probe_hamming == 1 else p
 
 
 def lsh_bucketed_topk(
@@ -321,47 +285,58 @@ def lsh_bucketed_topk(
     emb_col: str = "embedding",
     id_col: str = "vec_id",
     bits: int = 8,
+    n_tables: int = 1,
     probe_hamming: int = 0,
 ) -> DataFrame:
-    """Approximate top-k: candidates limited to the probe's LSH bucket.
-    Same output shape as cosine_topk (rank within bucket).
+    """Approximate top-k: candidates limited to the probe's LSH buckets.
+    Same output shape as cosine_topk (rank within the candidates).
 
-    ``probe_hamming=1`` is the MULTI-PROBE production tier (r13 —
-    RECALL.md's "what a deployment actually runs" made executable): the
-    probe side also queries every bucket at Hamming distance 1 from its
-    own signature (bit-flip neighbors — the buckets a near-miss
-    hyperplane vote lands in), the same recall amplification
-    :func:`~wingfoil_spark.functions.dedup.cosine_near_dups` uses for
-    near-dup pairs. Implemented as a probe-side EXPLODE to ``bits + 1``
-    bucket values so the candidate restriction STAYS an equi-join
-    (shuffle-partitionable at any corpus size — never a theta-join or a
-    popcount cross join); no dedup is needed — a corpus row carries
-    exactly ONE bucket and the probed values (bucket ⊕ distinct masks)
-    are pairwise distinct, so each (probe, neighbor) pair joins at most
-    once and the output IS the union of the probed buckets. Cost:
-    ~``(bits+1)×`` the candidate rows of one bucket at the same corpus;
-    recall on the isotropic testdata rises 0.05 → 0.18 at sf0.1 (see
-    RECALL.md's lsh_mp row — on a clustered real corpus the lift is
-    larger because near-misses concentrate at Hamming 1). Only
-    ``probe_hamming`` ∈ {0, 1} is supported — distance-2
-    explodes ``1 + bits + C(bits,2)`` buckets and is where multiple
-    independent TABLES beat deeper probing."""
-    _check_probe_hamming("lsh_bucketed_topk", probe_hamming)
-    c = hyperplane_signature(corpus, emb_col, bits).select(
-        F.col(id_col).alias("neighbor_id"), F.col(emb_col).alias("e_c"), "bucket"
+    The recall dial is ``bits × n_tables × probe_hamming``:
+
+    - ``n_tables`` — L independent plane tables turn one bucket's hit
+      probability p into 1−(1−p)^L (the classic amplification). ONE
+      signature pass emits every table's bucket (posexplode to L
+      rows/vector — the storage cost of any multi-table index) and ONE
+      ``(tbl, bucket)`` equi-join restricts candidates. A pair can
+      co-bucket in several tables, so at ``n_tables > 1`` a real
+      pair-dedup runs before scoring and each pair is scored once.
+    - ``probe_hamming=1`` — the MULTI-PROBE tier: the probe side also
+      queries every bucket at Hamming distance 1 from its own signature
+      in each table (bit-flip neighbors — the buckets a near-miss
+      hyperplane vote lands in), the same amplification
+      :func:`~wingfoil_spark.functions.dedup.cosine_near_dups` uses for
+      near-dup pairs. It is a probe-side EXPLODE to ``bits + 1`` bucket
+      values, so the candidate restriction STAYS an equi-join
+      (shuffle-partitionable at any corpus size — never a theta-join or
+      a popcount cross join). Within one table no dedup is needed: a
+      corpus row carries exactly ONE bucket per table and the probed
+      values (bucket ⊕ distinct masks) are pairwise distinct. Cost:
+      ~``(bits+1)×`` the candidate rows of one bucket; recall on the
+      isotropic testdata rises 0.05 → 0.18 at sf0.1 (RECALL.md's lsh_mp
+      row). Only ``probe_hamming`` ∈ {0, 1} is supported — distance-2
+      explodes ``1 + bits + C(bits,2)`` buckets and is where more tables
+      beat deeper probing.
+
+    The corpus index and the probe side are the same builders
+    (:func:`build_ann_index`, ``_ann_probes``) the streamed
+    ``ingest.ann_topk_stream`` uses; only the ranker differs (a window
+    here, the running top-k there). Never a cross join; every stage is
+    key-partitionable."""
+    c = build_ann_index(corpus, emb_col, id_col, bits, n_tables)
+    p = _ann_probes(
+        probes, emb_col, id_col, bits, n_tables, probe_hamming,
+        "lsh_bucketed_topk",
     )
-    c = with_norm(c, "e_c", "n_c").where(F.col("n_c") > 0)
-    p = hyperplane_signature(probes, emb_col, bits).select(
-        F.col(id_col).alias("probe_id"), F.col(emb_col).alias("e_p"), "bucket"
+    cand = c.join(p, ["tbl", "bucket"]).where(
+        F.col("probe_id") != F.col("neighbor_id")
     )
-    p = with_norm(p, "e_p", "n_p").where(F.col("n_p") > 0)
-    if probe_hamming == 1:
-        p = hamming1_explode(p, bits)
+    if n_tables > 1:
+        # REAL duplicates here (a pair may co-bucket in several tables);
+        # dedup BEFORE the dot product so each pair is scored once
+        cand = cand.dropDuplicates(["probe_id", "neighbor_id"])
     dot = _dot("e_p", "e_c")
-    scored = (
-        c.join(p, "bucket")
-        .where(F.col("probe_id") != F.col("neighbor_id"))
-        .withColumn("cosine", F.round(dot / (F.col("n_p") * F.col("n_c")), 6))
+    scored = cand.withColumn(
+        "cosine", F.round(dot / (F.col("n_p") * F.col("n_c")), 6)
     )
     from pyspark.sql import Window
 
@@ -378,122 +353,60 @@ def ivf_assign(
     centroids: DataFrame,
     nprobe: int = 1,
     emb_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Assign each vector to its ``nprobe`` nearest centroids (by cosine).
+    Output keeps the input columns and adds ``cid`` — one row per
+    (input row, assigned cell). Rows with a NULL or zero-norm vector have
+    no direction and are dropped.
 
-    ``centroids`` is tiny (cid, cvec, cnorm) → broadcast; the assignment is
-    one broadcast-nested-loop + a per-vector top-nprobe window. Output keeps
-    the input columns and adds ``cid``.
+    Row-local: the centroid frame ``(cid, cvec, cnorm)`` — index
+    metadata, n_centroids rows — is folded into ONE broadcast row holding
+    its cid-sorted struct array, cross-joined onto every vector. Each row
+    scores the canonical :func:`_dot` cosine against every centroid and
+    keeps the first ``nprobe`` under (sim desc, cid asc) with
+    ``array_sort`` + ``slice``. No window, no shuffle, no driver collect
+    and no literal inlining, so:
 
-    Zero-norm centroids are EXCLUDED from assignment (a take-fit can
-    select a zero vector; ``ivf_centroids`` does not norm-filter): a
-    cnorm=0 centroid has no direction and yields NaN similarities, which
-    Spark's window ORDER BY ranks FIRST (NaN > any double) while the
-    row-local twin's array_sort comparator would fall through to the cid
-    tie-break — the two paths must agree, so neither sees such a
-    centroid (ADVICE r11).
-    """
-    from pyspark.sql import Window
+    - input rows that share an id (a re-crawled vector in a store
+      append) are each assigned;
+    - the build costs a constant number of py4j round trips at any
+      centroid count;
+    - the plan is legal on a streaming frame (the serving-side
+      assignment of ``ingest.ivf_topk_stream``).
 
-    dot = _dot(emb_col, "cvec")
-    d = with_norm(df, emb_col, "__nrm").where(F.col("__nrm") > 0)
-    cents = centroids.where(F.col("cnorm") > 0)
-    scored = d.crossJoin(F.broadcast(cents)).withColumn(
-        "__sim", dot / (F.col("__nrm") * F.col("cnorm"))
+    Zero-norm centroids are excluded (a take-fit can select a zero
+    vector; ``ivf_centroids`` does not norm-filter): such a centroid has
+    no direction and yields NaN similarities. An empty usable set fails
+    the first action that assigns a row, with ``no usable centroids``.
+    Materialize a lazily-fit centroid frame first (localCheckpoint): its
+    plan is embedded in every assignment, and a streaming query re-runs
+    a static side each micro-batch."""
+    cents = (
+        centroids.where(F.col("cnorm") > 0)
+        .agg(F.expr(
+            "array_sort(collect_list(named_struct("
+            "'cid', cid, 'cvec', cvec, 'cnorm', cnorm)))"
+        ).alias("__cents"))
+        .select(F.expr(
+            "CASE WHEN size(__cents) > 0 THEN __cents ELSE raise_error("
+            "'ivf_assign: no usable centroids (empty frame or all "
+            "zero-norm)') END"
+        ).alias("__cents"))
     )
-    w = Window.partitionBy(id_col).orderBy(F.col("__sim").desc(), F.col("cid").asc())
+    cos = _DOT_SQL.format(a="__e", b="c.cvec") + " / (__nrm * c.cnorm)"
+    cells = (
+        f"transform(slice(array_sort(transform(__cents, c -> named_struct("
+        f"'sim', {cos}, 'cid', c.cid)), (a, b) -> CASE "
+        "WHEN a.sim > b.sim THEN -1 WHEN a.sim < b.sim THEN 1 "
+        "WHEN a.cid < b.cid THEN -1 WHEN a.cid > b.cid THEN 1 ELSE 0 END), "
+        f"1, {int(nprobe)}), s -> s.cid)"
+    )
+    d = with_norm(df.withColumn("__e", F.col(emb_col)), "__e", "__nrm")
     return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") <= nprobe)
-        .drop("__rn", "__sim", "cvec", "cnorm", "__nrm")
-    )
-
-
-def ivf_assign_rowlocal(
-    df: DataFrame,
-    centroids: DataFrame,
-    nprobe: int = 1,
-    emb_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """ROW-LOCAL twin of :func:`ivf_assign` — same output, no window.
-
-    :func:`ivf_assign` ranks the per-vector centroid similarities with a
-    ``row_number`` window: one shuffle on the id, and ILLEGAL on a
-    streaming frame. This variant collects the centroid frame (index
-    METADATA — n_centroids rows, the thing every search broadcasts
-    anyway) and inlines it as a literal array; the top-``nprobe`` pick
-    is a per-row ``array_sort`` + ``slice`` — zero shuffle, zero state,
-    legal in a streaming plan (the serving-side assignment
-    :func:`~wingfoil_spark.streaming.ingest.ivf_topk_stream` needs).
-
-    Bit-parity with :func:`ivf_assign` (test-pinned): the dot product is
-    the same zip_with/aggregate fold in the same order (float→double of
-    a literal equals the column cast), and ties break identically
-    (sim desc, cid asc). Zero-norm centroids are excluded exactly as in
-    ``ivf_assign`` — parity would otherwise break on them: their NaN
-    similarities rank first in the window version (Spark NaN > any
-    double) but fall through to the cid tie-break in this comparator
-    (every NaN comparison is false; ADVICE r11). Output keeps the input
-    columns and adds ``cid`` — one row per (vector, assigned cell),
-    exactly like ``ivf_assign``. Triggers one tiny collect job on
-    ``centroids``."""
-    rows = sorted(
-        (
-            r
-            for r in centroids.select("cid", "cvec", "cnorm").collect()
-            if r["cnorm"] is not None and r["cnorm"] > 0
-        ),
-        key=lambda r: r["cid"],
-    )
-    if not rows:
-        raise ValueError(
-            "ivf_assign_rowlocal: no usable centroids (empty frame or "
-            "all zero-norm)"
-        )
-    lit_cents = F.array(*[
-        F.struct(
-            F.lit(int(r["cid"])).alias("cid"),
-            F.array(*[F.lit(float(x)) for x in r["cvec"]]).alias("cvec"),
-            F.lit(float(r["cnorm"])).alias("cnorm"),
-        )
-        for r in rows
-    ])
-    d = with_norm(df, emb_col, "__nrm").where(F.col("__nrm") > 0)
-    sims = F.transform(
-        lit_cents,
-        lambda c: F.struct(
-            (
-                F.aggregate(
-                    F.zip_with(
-                        F.col(emb_col), c["cvec"],
-                        lambda x, y: x.cast("double") * y.cast("double"),
-                    ),
-                    F.lit(0.0),
-                    lambda acc, v: acc + v,
-                )
-                / (F.col("__nrm") * c["cnorm"])
-            ).alias("sim"),
-            c["cid"].alias("cid"),
-        ),
-    )
-    ranked = F.slice(
-        F.array_sort(
-            sims,
-            lambda a, b: F.when(a["sim"] > b["sim"], F.lit(-1))
-            .when(a["sim"] < b["sim"], F.lit(1))
-            .otherwise(a["cid"] - b["cid"]),
-        ),
-        1,
-        int(nprobe),
-    )
-    return (
-        d.withColumn("__cells", ranked)
-        .withColumn(
-            "cid", F.explode(F.transform(F.col("__cells"), lambda s: s["cid"]))
-        )
-        .drop("__cells", "__nrm")
+        d.where(F.col("__nrm") > 0)
+        .crossJoin(F.broadcast(cents))
+        .withColumn("cid", F.expr(f"explode({cells})"))
+        .drop("__e", "__nrm", "__cents")
     )
 
 
@@ -733,11 +646,11 @@ def ivf_topk(
             )
         c = c.where(F.col("n_c") > 0)
     else:
-        c = ivf_assign(corpus, cents, 1, emb_col, id_col).select(
+        c = ivf_assign(corpus, cents, 1, emb_col).select(
             F.col(id_col).alias("neighbor_id"), F.col(emb_col).alias("e_c"), "cid"
         )
         c = with_norm(c, "e_c", "n_c").where(F.col("n_c") > 0)
-    p = ivf_assign(probes, cents, nprobe, emb_col, id_col).select(
+    p = ivf_assign(probes, cents, nprobe, emb_col).select(
         F.col(id_col).alias("probe_id"), F.col(emb_col).alias("e_p"), "cid"
     )
     p = with_norm(p, "e_p", "n_p").where(F.col("n_p") > 0)
@@ -749,7 +662,11 @@ def ivf_topk(
     )
     w = Window.partitionBy("probe_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id").asc())
     return (
-        scored.dropDuplicates(["probe_id", "neighbor_id"])
+        # a store grown by appends may carry one id twice with different
+        # vectors: keep each pair's BEST cosine, as the streamed server's
+        # running top-k and the ADC iterators do
+        scored.groupBy("probe_id", "neighbor_id")
+        .agg(F.max("cosine").alias("cosine"))
         .withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
         .select("probe_id", "neighbor_id", "cosine", "rank")
@@ -995,7 +912,7 @@ def write_ivf_store(
             keep.append("__nrm")  # readers reuse the stored norm
         asg = corpus_assign.select(*keep)
     else:
-        asg = ivf_assign(corpus, cents, 1, emb_col, id_col)
+        asg = ivf_assign(corpus, cents, 1, emb_col)
     _write_by_cell(asg, path, id_col, mode, writers_per_cell)
     import json
 
@@ -1117,7 +1034,7 @@ def append_ivf_store(
         centroids = _require_store_centroids(
             spark, path, "append_ivf_store"
         )
-    asg = ivf_assign(new_vectors, centroids, 1, emb_col, id_col)
+    asg = ivf_assign(new_vectors, centroids, 1, emb_col)
     try:
         existing = spark.read.parquet(path).columns
     except AnalysisException as e:
@@ -1524,15 +1441,12 @@ def refit_cell_store(
         sample_n=max(LLOYD_SAMPLE_N, 4 * n_centroids),
     ).localCheckpoint(eager=True)
     obs_in = Observation()
-    # ROW-LOCAL assignment, not the windowed ivf_assign: the appends
-    # legitimately carry duplicate ids (crawl state — the compactor
-    # preserves them too), and a row_number window keyed on id_col
-    # would silently COLLAPSE duplicates (the row-conservation check
-    # below caught exactly this). Bit-parity with ivf_assign is
-    # test-pinned, and per-row assignment needs no shuffle at all.
-    asg = ivf_assign_rowlocal(
+    # the appends legitimately carry duplicate ids (crawl state — the
+    # compactor preserves them too); the row-local ivf_assign assigns
+    # each of them, and the row-conservation check below pins that
+    asg = ivf_assign(
         body.observe(obs_in, F.count(F.lit(1)).alias("n")),
-        cents, 1, vec_col, id_col,
+        cents, 1, vec_col,
     )
     if vec_col == "__recon":
         asg = asg.drop("__recon")
@@ -1607,7 +1521,7 @@ def write_ivfpq_store(
     asg = (
         corpus_assign.select(id_col, "cid")
         if corpus_assign is not None
-        else ivf_assign(corpus, cents, 1, emb_col, id_col).select(id_col, "cid")
+        else ivf_assign(corpus, cents, 1, emb_col).select(id_col, "cid")
     )
     if corpus_codes is not None:
         # LEFT join + raise_error on a missing code (ADVICE r10-low): the
@@ -1644,7 +1558,7 @@ def write_ivfpq_store(
         src = (
             corpus_assign.select(id_col, "cid", emb_col)
             if corpus_assign is not None
-            else ivf_assign(corpus, cents, 1, emb_col, id_col)
+            else ivf_assign(corpus, cents, 1, emb_col)
         )
         coded = pq_encode(src, codebooks, emb_col).select(
             F.col(id_col), F.col("cid"), F.col("pq_code")
@@ -1705,7 +1619,7 @@ def ivfpq_topk_from_store(
     check_store_meta(spark, path, check_cents, check_books,
                      op="ivfpq_topk_from_store")
     store = spark.read.parquet(path)
-    p = ivf_assign(probes, centroids, nprobe, emb_col, id_col).select(
+    p = ivf_assign(probes, centroids, nprobe, emb_col).select(
         F.col(id_col).alias("probe_id"), F.col(emb_col).alias("e_p"), "cid"
     )
     cand = (
@@ -1765,7 +1679,7 @@ def append_ivfpq_store(
         check_books = codebooks
     check_store_meta(spark, path, check_cents, check_books,
                      op="append_ivfpq_store")
-    asg = ivf_assign(new_vectors, centroids, 1, emb_col, id_col)
+    asg = ivf_assign(new_vectors, centroids, 1, emb_col)
     coded = pq_encode(asg, codebooks, emb_col).select(
         F.col(id_col), F.col("cid"), F.col("pq_code")
     )
@@ -2231,7 +2145,7 @@ def ivfpq_topk(
         c = (
             corpus_assign.select(id_col, "cid")
             if corpus_assign is not None
-            else ivf_assign(corpus, cents, 1, emb_col, id_col).select(id_col, "cid")
+            else ivf_assign(corpus, cents, 1, emb_col).select(id_col, "cid")
         )
         c_codes = c.join(
             corpus_codes.select(F.col(id_col), F.col(code_col).alias("pq_code")),
@@ -2241,12 +2155,12 @@ def ivfpq_topk(
         ca = (
             corpus_assign.select(id_col, "cid", emb_col)
             if corpus_assign is not None
-            else ivf_assign(corpus, cents, 1, emb_col, id_col)
+            else ivf_assign(corpus, cents, 1, emb_col)
         )
         c_codes = pq_encode(ca, codebooks, emb_col).select(
             F.col(id_col), F.col("cid"), F.col("pq_code")
         )
-    p = ivf_assign(probes, cents, nprobe, emb_col, id_col).select(
+    p = ivf_assign(probes, cents, nprobe, emb_col).select(
         F.col(id_col).alias("probe_id"), F.col(emb_col).alias("e_p"), "cid"
     )
     books = np.asarray([np.asarray(b, dtype=np.float64) for b in codebooks])

@@ -50,10 +50,10 @@ from wingfoil_spark.functions.dedup import (
 from wingfoil_spark.functions.text import tokens
 from wingfoil_spark.functions.text import fingerprint
 from wingfoil_spark.functions.similarity import (
-    _check_probe_hamming,
+    _ann_probes,
     _dot,
-    hamming1_explode,
-    hyperplane_signature,
+    build_ann_index,  # noqa: F401 — re-exported: the streamed tier's index
+    ivf_assign,
     with_norm,
 )
 
@@ -672,23 +672,6 @@ def lm_score_stream(
     return scored.repartition(id_col).mapInPandas(per_doc, schema)
 
 
-def build_ann_index(
-    corpus,
-    emb_col: str = "embedding",
-    id_col: str = "vec_id",
-    bits: int = 8,
-):
-    """The corpus-side ANN index: (neighbor_id, e_c, n_c, bucket) — the
-    hyperplane-LSH bucketed, norm-annotated corpus. Batch; persist it
-    (parquet bucketed by ``bucket`` at scale) and hand it to
-    :func:`ann_topk_stream`. Same signature math as the batch
-    ``lsh_bucketed_topk``, so stream results == batch results."""
-    c = hyperplane_signature(corpus, emb_col, bits).select(
-        F.col(id_col).alias("neighbor_id"), F.col(emb_col).alias("e_c"), "bucket"
-    )
-    return with_norm(c, "e_c", "n_c").where(F.col("n_c") > 0)
-
-
 def ann_topk_stream(
     probes,
     index,
@@ -696,17 +679,22 @@ def ann_topk_stream(
     emb_col: str = "embedding",
     id_col: str = "vec_id",
     bits: int = 8,
+    n_tables: int = 1,
     probe_hamming: int = 0,
 ):
     """Online retrieval: top-k cosine neighbors of ARRIVING probe vectors
     against the indexed corpus — the serving shape of the batch
-    ``lsh_bucketed_topk``.
+    ``lsh_bucketed_topk``, over the whole ``bits × n_tables ×
+    probe_hamming`` dial.
 
     ``probes`` may be a streaming frame; ``index`` is the static
-    :func:`build_ann_index` output. Plan per micro-batch, fully stateless:
-    row-local probe signatures → stream-static equi-join on the bucket →
-    repartition by probe (all of one probe's candidates colocate — a probe
-    lives in exactly one micro-batch) → per-partition pandas top-k.
+    :func:`build_ann_index` output built with the same ``bits`` and
+    ``n_tables``. The probe side is the batch tier's own builder, so
+    only the ranker differs. Plan per micro-batch, fully stateless:
+    row-local probe signatures → stream-static equi-join on
+    ``(tbl, bucket)`` → repartition by probe (all of one probe's
+    candidates colocate — a probe lives in exactly one micro-batch) →
+    per-partition pandas top-k.
 
     Window functions are illegal on streams, and a groupBy would drag in
     watermark/output-mode state for what is per-batch-local work — the
@@ -722,20 +710,16 @@ def ann_topk_stream(
     :func:`wingfoil_spark.functions.similarity._adc_topk_iter`).
     Selecting the k best under the (-cosine, neighbor_id) total order is
     associative, so batch-wise merge + one emission at exhaustion is
-    exact and O(probes_in_partition × k) memory.
+    exact and O(probes_in_partition × k) memory. It also keeps each
+    (probe, neighbor) pair once, which collapses the pairs that
+    co-bucket in several tables at ``n_tables > 1`` (identical cosine
+    per duplicate, so the merge is exact) — no streaming
+    dropDuplicates, no keyed state.
     """
-    _check_probe_hamming("ann_topk_stream", probe_hamming)
-    p = hyperplane_signature(probes, emb_col, bits).select(
-        F.col(id_col).alias("probe_id"), F.col(emb_col).alias("e_p"), "bucket"
+    p = _ann_probes(
+        probes, emb_col, id_col, bits, n_tables, probe_hamming,
+        "ann_topk_stream",
     )
-    p = with_norm(p, "e_p", "n_p").where(F.col("n_p") > 0)
-    if probe_hamming == 1:
-        # r13: the multi-probe serving dial — the streamed twin of
-        # lsh_bucketed_topk(probe_hamming=1); the shared explode keeps
-        # the candidate restriction on the broadcast equi-join below;
-        # row-local, still zero state (stream == batch,
-        # differential-pinned).
-        p = hamming1_explode(p, bits)
     dot = _dot("e_p", "e_c")
     scored = (
         # the PROBE micro-batch is broadcast explicitly (review r12):
@@ -747,87 +731,6 @@ def ann_topk_stream(
         # same reason. A serving micro-batch is small by definition;
         # batch-mode callers with huge probe sets should use the batch
         # tier (lsh_bucketed_topk), which lets AQE pick the strategy.
-        index.join(F.broadcast(p), "bucket")
-        .where(F.col("probe_id") != F.col("neighbor_id"))
-        .select(
-            "probe_id",
-            "neighbor_id",
-            F.round(dot / (F.col("n_p") * F.col("n_c")), 6).alias("cosine"),
-        )
-    )
-    # no (probe, neighbor) duplicates to dedup under multi-probe: a
-    # corpus row carries exactly ONE bucket and the probed values
-    # (bucket ⊕ 9 distinct masks incl. 0) are pairwise distinct, so
-    # each pair matches at most one exploded probe row — crucially, no
-    # streaming dropDuplicates (keyed standing state) is ever needed
-    # id field types DERIVED from the inputs (string/UUID ids must not
-    # fail on a hardcoded long — the _adc_out_schema rule; review r12)
-    schema = (
-        f"probe_id {probes.schema[id_col].dataType.simpleString()}, "
-        f"neighbor_id {index.schema['neighbor_id'].dataType.simpleString()}, "
-        "cosine double, rank long"
-    )
-    return scored.repartition("probe_id").mapInPandas(
-        _running_cosine_topk_iter(int(k)), schema
-    )
-
-
-def build_ann_index_multi(
-    corpus,
-    emb_col: str = "embedding",
-    id_col: str = "vec_id",
-    bits: int = 8,
-    n_tables: int = 4,
-):
-    """The multi-TABLE corpus index (r13): (neighbor_id, e_c, n_c, tbl,
-    bucket) — one row per (vector, table), every table's bucket from ONE
-    corpus signature pass (`similarity.hyperplane_signatures_multi`).
-    Batch; persist it (parquet bucketed by (tbl, bucket) at scale) and
-    hand it to :func:`ann_tables_topk_stream`. Table 0 is bit-identical
-    to :func:`build_ann_index`'s buckets."""
-    from wingfoil_spark.functions.similarity import hyperplane_signatures_multi
-
-    c = hyperplane_signatures_multi(corpus, emb_col, bits, n_tables).select(
-        F.col(id_col).alias("neighbor_id"), F.col(emb_col).alias("e_c"),
-        "tbl", "bucket",
-    )
-    return with_norm(c, "e_c", "n_c").where(F.col("n_c") > 0)
-
-
-def ann_tables_topk_stream(
-    probes,
-    index,
-    k: int = 5,
-    emb_col: str = "embedding",
-    id_col: str = "vec_id",
-    bits: int = 8,
-    n_tables: int = 4,
-    probe_hamming: int = 0,
-):
-    """Online serving for the FULL LSH recall dial (r13): arriving
-    probes against the :func:`build_ann_index_multi` tables — the
-    streamed twin of `similarity.lsh_tables_topk`, composable with the
-    per-table Hamming-1 multiprobe. Plan per micro-batch: one probe
-    signature kernel emits every table's bucket, the (tbl, bucket)
-    broadcast equi-join restricts candidates, and the shared running
-    top-k iterator collapses pairs that co-bucket in several tables
-    (its keep-each-pair-once contract — identical cosine per duplicate,
-    so the merge is exact); zero standing state, no streaming
-    dropDuplicates. Stream == batch differential-pinned."""
-    from wingfoil_spark.functions.similarity import hyperplane_signatures_multi
-
-    _check_probe_hamming("ann_tables_topk_stream", probe_hamming)
-    p = hyperplane_signatures_multi(probes, emb_col, bits, n_tables).select(
-        F.col(id_col).alias("probe_id"), F.col(emb_col).alias("e_p"),
-        "tbl", "bucket",
-    )
-    p = with_norm(p, "e_p", "n_p").where(F.col("n_p") > 0)
-    if probe_hamming == 1:
-        p = hamming1_explode(p, bits)
-    dot = _dot("e_p", "e_c")
-    scored = (
-        # probe micro-batch broadcast for the same reason as
-        # ann_topk_stream (AQE absent in micro-batch plans)
         index.join(F.broadcast(p), ["tbl", "bucket"])
         .where(F.col("probe_id") != F.col("neighbor_id"))
         .select(
@@ -836,6 +739,8 @@ def ann_tables_topk_stream(
             F.round(dot / (F.col("n_p") * F.col("n_c")), 6).alias("cosine"),
         )
     )
+    # id field types DERIVED from the inputs (string/UUID ids must not
+    # fail on a hardcoded long — the _adc_out_schema rule; review r12)
     schema = (
         f"probe_id {probes.schema[id_col].dataType.simpleString()}, "
         f"neighbor_id {index.schema['neighbor_id'].dataType.simpleString()}, "
@@ -856,8 +761,8 @@ def _running_cosine_topk_iter(kk: int):
     :func:`ivf_topk_stream` — the batching-invariance contract is
     pinned once in tests/test_streaming_ingest.py.
 
-    Each (probe, neighbor) pair is kept ONCE (best cosine): the batch
-    IVF twin runs dropDuplicates on the pair before ranking, and a
+    Each (probe, neighbor) pair is kept ONCE (best cosine), as the
+    batch IVF twin does before ranking, and a
     store grown by ``append_ivf_store`` may legitimately carry a
     duplicate id (dedup is the caller's crawl-gate job there) — without
     this, a duplicated neighbor would occupy two ranks in the stream
@@ -912,8 +817,9 @@ def ivf_topk_stream(
     """Online IVF serving from the PERSISTED store: top-k cosine
     neighbors of ARRIVING probe vectors against a
     :func:`~wingfoil_spark.functions.similarity.write_ivf_store` layout
-    — the streaming twin of ``ivf_topk_from_store`` (that op's probe
-    assignment uses a row_number window, illegal on a stream).
+    — the streaming twin of ``ivf_topk_from_store``: the same row-local
+    probe assignment, ranked by the running top-k instead of a window
+    (illegal on a stream).
 
     ``probes`` may be a streaming frame; ``store`` is the static
     ``spark.read.parquet(path)`` frame and ``centroids`` the metadata
@@ -922,11 +828,12 @@ def ivf_topk_stream(
     ``similarity.check_store_meta(spark, path, centroids)`` once at
     stream construction, as the batch twin does). Plan per micro-batch,
     fully stateless:
-    ROW-LOCAL nprobe assignment (``ivf_assign_rowlocal`` — the centroid
-    metadata inlined as a literal array, top-nprobe via array_sort: no
-    window, no shuffle, streaming-legal) → stream-static equi-join on
-    ``cid`` → repartition by probe → running per-probe top-k across
-    Arrow batches (shared iterator with :func:`ann_topk_stream`).
+    ROW-LOCAL nprobe assignment (``similarity.ivf_assign`` — the
+    centroid metadata as one broadcast array row, top-nprobe via
+    array_sort: no window, no shuffle, streaming-legal) → stream-static
+    equi-join on ``cid`` → repartition by probe → running per-probe
+    top-k across Arrow batches (shared iterator with
+    :func:`ann_topk_stream`).
     Ranking matches the batch tier: cosine rounded to 6dp desc,
     neighbor id asc. Batch == stream row-for-row against
     ``ivf_topk_from_store`` on the same store (test-pinned).
@@ -935,10 +842,7 @@ def ivf_topk_stream(
     micro-batch's join touches candidate rows only (AQE decides
     broadcast vs shuffle per batch), and state is zero — a probe lives
     in exactly one micro-batch."""
-    from wingfoil_spark.functions.similarity import ivf_assign_rowlocal
-
-    p = ivf_assign_rowlocal(probes, centroids, nprobe, emb_col, id_col)
-    p = p.select(
+    p = ivf_assign(probes, centroids, nprobe, emb_col).select(
         F.col(id_col).alias("probe_id"), F.col(emb_col).alias("e_p"), "cid"
     )
     p = with_norm(p, "e_p", "n_p").where(F.col("n_p") > 0)
@@ -999,7 +903,7 @@ def ivfpq_topk_stream(
     construction via ``similarity.check_store_meta(spark, path,
     centroids, codebooks)``, as the batch twin does). Plan
     per micro-batch, fully stateless: row-local nprobe assignment
-    (``ivf_assign_rowlocal`` — window-free, streaming-legal) →
+    (``similarity.ivf_assign`` — window-free, streaming-legal) →
     stream-static equi-join on ``cid`` → per-probe running ADC top-k
     across Arrow batches (the shared ``_adc_topk_iter`` — its
     batching-invariance is pinned with the batch tiers). Results are
@@ -1010,10 +914,9 @@ def ivfpq_topk_stream(
     from wingfoil_spark.functions.similarity import (
         _adc_out_schema,
         _adc_topk_iter,
-        ivf_assign_rowlocal,
     )
 
-    p = ivf_assign_rowlocal(probes, centroids, nprobe, emb_col, id_col).select(
+    p = ivf_assign(probes, centroids, nprobe, emb_col).select(
         F.col(id_col).alias("probe_id"), F.col(emb_col).alias("e_p"), "cid"
     )
     cand = (
@@ -1140,9 +1043,7 @@ def ivfpq_rerank_stream(
     store + metadata (test-pinned)."""
     import numpy as np
 
-    from wingfoil_spark.functions.similarity import ivf_assign_rowlocal
-
-    p = ivf_assign_rowlocal(probes, centroids, nprobe, emb_col, id_col).select(
+    p = ivf_assign(probes, centroids, nprobe, emb_col).select(
         F.col(id_col).alias("probe_id"), F.col(emb_col).alias("e_p"), "cid"
     )
     cand = (
