@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from wingfoil_spark.stream import Stream
-from wingfoil_spark.session import configure_session
+from wingfoil_spark.session import configure_session, overlap
 from wingfoil_spark.sources.tables import load_table, ts_us_expr
 from wingfoil_spark.plans import relational
 from wingfoil_spark.functions import dedup as dd
@@ -379,14 +379,10 @@ def q_curation(spark, sf_dir):
             cu.sample_hash(F.col("source"), "split_grp").alias("v"),
         )
 
-    from concurrent.futures import ThreadPoolExecutor
-
-    builders = [
+    parts = overlap(
         _p_strat, _p_mix, _p_shard, _p_chunk, _p_decon, _p_dupspan,
         _p_lines, _p_desc, _p_split, _p_split_grp,
-    ]
-    with ThreadPoolExecutor(max_workers=len(builders)) as _pool:
-        parts = [f.result() for f in [_pool.submit(b) for b in builders]]
+    )
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
@@ -1074,17 +1070,18 @@ def q_decon_stream(spark, sf_dir):
 
     - part='ivf_serve' (aux=neighbor_id*10+rank, v=cosine): arriving
       probes against the frozen store-shaped assignment via
-      streaming/ingest.ivf_topk_stream — the window-free row-local cell
-      pick (similarity.ivf_assign: centroid metadata as one broadcast
-      array row), the stream-static cid join, the shared
-      running top-k. Oracle = the batch IVF CTE over the same take
-      centroids (shared with the ivfpq_store arm).
+      similarity.ivf_topk — the batch tier's one body on a streaming
+      probe frame: the window-free row-local cell pick
+      (similarity.ivf_assign: centroid metadata as one broadcast array
+      row), the stream-static cid join, the running top-k. Oracle = the
+      batch IVF CTE over the same take centroids (shared with the
+      ivfpq_store arm).
     - part='ivfpq_serve' (aux=neighbor_id*10+rank, v=round(1-adc/2,6)):
-      arriving probes ADC-scored against the codes-store twin via
-      streaming/ingest.ivfpq_topk_stream — row-local assignment, codes
-      join, the shared _adc_topk_iter. Oracle = the same psranked ADC
-      CTE as the ivfpq_store round trip (streamed ADC must equal batch
-      ADC bit for bit).
+      arriving probes ADC-scored against the shared codes via
+      similarity.ivfpq_topk — row-local assignment, codes join, the
+      shared _adc_topk_iter. Oracle = the same psranked ADC CTE as the
+      ivfpq_store round trip (streamed ADC must equal batch ADC bit for
+      bit).
 
     r12 widens to TWELVE parts (VERDICT r11 Next #1/#2 — the two
     capabilities built in r11 but not yet driver-graded):
@@ -1251,8 +1248,6 @@ def q_decon_stream(spark, sf_dir):
     # ride the single snapshot/fixture pool inside the try block below;
     # each model's internal order (and so every fitted value) is
     # unchanged.
-    from concurrent.futures import ThreadPoolExecutor as _TPE
-
     def _fit_lam():
         return ingest.build_dsir_index(
             docs.where(F.col("lang") == "en"), docs, n_buckets=SEL_BUCKETS
@@ -1301,12 +1296,8 @@ def q_decon_stream(spark, sf_dir):
         # classifier coefs row were THREE sequential pool regions plus a
         # serial checkpoint (~8.9 + 0.8 + 1.8 s stage walls) — every
         # chain depends only on the lazy docs/emb frames, so they now
-        # share ONE pool and the region wall is the slowest chain, not
-        # the sum of region walls. The codes chain carries the one real
-        # cross-chain dependency explicitly (pcodes_store joins the
-        # assignment, so it awaits the centroid chain's future inside
-        # its own chain — the pool MUST therefore have at least as many
-        # workers as submitted chains, or that wait could deadlock).
+        # share ONE overlap and the region wall is the slowest chain,
+        # not the sum of region walls.
 
         def _fit_fpstore():
             ingest.build_fingerprint_store(
@@ -1331,57 +1322,23 @@ def q_decon_stream(spark, sf_dir):
                 .select("vec_id", "embedding") \
                 .repartition(4).write.mode("overwrite").parquet(psrc)
 
-        # r15 (ADVICE r14): _fit_codes blocks a pool worker on
-        # _fc.result() — safe ONLY while the pool has at least as many
-        # workers as submitted chains (all submissions get a worker, so
-        # the awaited chain is guaranteed to be running). Keep the two
-        # numbers tied by an assert rather than a comment.
-        _N_SNAPSHOT_CHAINS = 10
-        with _TPE(max_workers=_N_SNAPSHOT_CHAINS) as _pool:
-            _fl = _pool.submit(_fit_lam)
-            _fb = _pool.submit(_fit_bm)
-            _fm = _pool.submit(_fit_lm)
-            _fa = _pool.submit(_fit_ann)
-            _w1 = _pool.submit(_w_docs)
-            _w2 = _pool.submit(_w_probes)
-            _ff = _pool.submit(_fit_fpstore)
-            _fc = _pool.submit(_fit_cents)
-            _fq = _pool.submit(
-                lambda: _derived_qc_model(spark).localCheckpoint(eager=True)
-            )
+        def _fit_codes():
+            # the shared PQ code table; every consumer joins it to the
+            # assignment by id, so it needs no centroid chain
+            books_ = sim.pq_train(emb, m=8, k=16, fit="take")
+            return books_, sim.pq_encode(emb, books_).select(
+                "vec_id", "pq_code"
+            ).localCheckpoint(eager=True)
 
-            def _fit_codes():
-                books_ = sim.pq_train(emb, m=8, k=16, fit="take")
-                pcodes = sim.pq_encode(emb, books_).select(
-                    "vec_id", "pq_code"
-                )
-                # the codes-store twin (what write_ivfpq_store
-                # persists), pinned for the in-union ADC serving part
-                _, pasg_ = _fc.result()
-                store = (
-                    pasg_.select("vec_id", "cid").join(pcodes, "vec_id")
-                    .localCheckpoint(eager=True)
-                )
-                return books_, store
-
-            _fk = _pool.submit(_fit_codes)
-            # 10 submissions above (_fl _fb _fm _fa _w1 _w2 _ff _fc _fq
-            # _fk) — if a future edit adds a chain without growing the
-            # pool, the cross-chain _fc.result() wait inside _fit_codes
-            # could deadlock; fail loudly instead.
-            assert _N_SNAPSHOT_CHAINS >= 10, (
-                "snapshot pool must have >= 1 worker per submitted chain "
-                "(a chain blocks on another chain's future)"
-            )
-            lam, bmidx, lmm, annidx = (
-                _fl.result(), _fb.result(), _fm.result(), _fa.result()
-            )
-            _w1.result()
-            _w2.result()
-            fpstore = _ff.result()
-            pcents, pasg = _fc.result()
-            qcm = _fq.result()
-            books, pcodes_store = _fk.result()
+        (
+            lam, bmidx, lmm, annidx, _, _, fpstore, qcm, (pcents, pasg),
+            (books, pcodes),
+        ) = overlap(
+            _fit_lam, _fit_bm, _fit_lm, _fit_ann, _w_docs, _w_probes,
+            _fit_fpstore,
+            lambda: _derived_qc_model(spark).localCheckpoint(eager=True),
+            _fit_cents, _fit_codes,
+        )
         _mark("snapshots_and_fixtures")
         # r15 OPT (VERDICT r14 Next #3): maxFilesPerTrigger 1 -> 2. The
         # stream's wall is dominated by per-micro-batch INCREMENTAL
@@ -1460,22 +1417,24 @@ def q_decon_stream(spark, sf_dir):
         )
         # r11 part='ivf_serve': ONLINE IVF serving inside the streaming
         # union — arriving probes against the frozen store-shaped
-        # assignment via the window-free row-local cell pick
-        # (ivf_assign) + the shared running top-k. Rank rides
-        # in aux (neighbor*10+rank) like part='ivfpq_store'.
-        iserve = ingest.ivf_topk_stream(
-            estream, pasg, pcents, k=5, nprobe=4
+        # assignment through the batch tier's own body (row-local
+        # ivf_assign, the running top-k on a stream). Rank rides in aux
+        # (neighbor*10+rank) like part='ivfpq_grow'.
+        iserve = sim.ivf_topk(
+            pasg, estream, k=5, nprobe=4, centroids=pcents,
+            corpus_assign=pasg,
         ).select(
             F.lit("ivf_serve").alias("part"),
             F.col("probe_id").alias("doc_id"),
             (F.col("neighbor_id") * 10 + F.col("rank")).alias("aux"),
             F.col("cosine").alias("v"),
         )
-        # r11 part='ivfpq_serve': streamed ADC from the codes store —
+        # r11 part='ivfpq_serve': streamed ADC from the shared codes —
         # the third serving leg (LSH part='ann', IVF part='ivf_serve',
-        # PQ codes here), same oracle CTE as the ivfpq_store round trip
-        pqserve = ingest.ivfpq_topk_stream(
-            estream, pcodes_store, pcents, books, k=5, nprobe=4
+        # PQ codes here), same oracle CTE as the ivfpq_grow round trip
+        pqserve = sim.ivfpq_topk(
+            emb, estream, books, k=5, nprobe=4, corpus_codes=pcodes,
+            centroids=pcents, corpus_assign=pasg,
         ).select(
             F.lit("ivfpq_serve").alias("part"),
             F.col("probe_id").alias("doc_id"),
@@ -1616,7 +1575,7 @@ def q_decon_stream(spark, sf_dir):
                 emb.where(F.col("vec_id") % 7 != 3), gqpath, books,
                 centroids=pcents,
                 corpus_assign=pasg.where(F.col("vec_id") % 7 != 3),
-                corpus_codes=pcodes_store.where(F.col("vec_id") % 7 != 3),
+                corpus_codes=pcodes.where(F.col("vec_id") % 7 != 3),
             )
             sim.append_ivfpq_store(
                 emb.where(F.col("vec_id") % 7 == 3), gqpath, pcents, books
@@ -1689,28 +1648,22 @@ def q_decon_stream(spark, sf_dir):
             t0 = _time.perf_counter()
             irr = sim.ivfpq_rerank_topk(
                 emb, emb.where(F.col("vec_id") % 50 == 0), books, k=5,
-                shortlist=50, nprobe=4, corpus_codes=pcodes_store,
+                shortlist=50, nprobe=4, corpus_codes=pcodes,
                 centroids=pcents, corpus_assign=pasg,
             ).localCheckpoint(eager=True)
             PART_WALLS["rerank"] = round(_time.perf_counter() - t0, 3)
             return irr
 
-        with _TPE(max_workers=6) as _pool:
-            _f_gf = _pool.submit(_chain_grow_float)
-            _f_gc = _pool.submit(_chain_grow_codes)
-            _f_ll = _pool.submit(_chain_lloyd)
-            _f_mp = _pool.submit(_chain_lsh_mp)
-            _f_lt = _pool.submit(_chain_lsh_t)
-            _f_rr = _pool.submit(_chain_rerank)
-            # both streaming queries have been running since before the
-            # chains were submitted; await them while the chains fill
-            # the idle cores. stream_file_union's recorded wall now
-            # includes that contention by construction; stream_poll is
-            # ~0 (it finished under the file union).
+        # both streaming queries have been running since before the
+        # chains start; await them while the chains fill the idle
+        # cores. stream_file_union's recorded wall includes that
+        # contention by construction; stream_poll is ~0 (it finished
+        # under the file union).
+        def _await_streams():
             # r15 (ADVICE r14): assert the boolean — on timeout the old
-            # code proceeded with a partially-filled memory sink and only
-            # failed later (short output) with no clear signal; the
-            # stream now contends with the poll query and six batch
+            # code proceeded with a partially-filled memory sink and
+            # only failed later (short output) with no clear signal;
+            # the stream contends with the poll query and six batch
             # chains, so an overrun is likelier than when it ran alone.
             assert q.awaitTermination(300), (
                 "decon_stream file-union did not finish in 300s"
@@ -1725,12 +1678,11 @@ def q_decon_stream(spark, sf_dir):
                 "in the union?)"
             )
             _mark("stream_poll")
-            igrow, irefit = _f_gf.result()
-            igrowq = _f_gc.result()
-            illoyd = _f_ll.result()
-            imp = _f_mp.result()
-            ilt = _f_lt.result()
-            irr = _f_rr.result()
+
+        (igrow, irefit), igrowq, illoyd, imp, ilt, irr, _ = overlap(
+            _chain_grow_float, _chain_grow_codes, _chain_lloyd,
+            _chain_lsh_mp, _chain_lsh_t, _chain_rerank, _await_streams,
+        )
         _mark("batch_stages_wall")
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
@@ -1894,13 +1846,7 @@ def q_lm_packing(spark, sf_dir):
             F.col("seq_fill").cast("double").alias("v"),
         )
 
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as _pool:
-        _f_dual = _pool.submit(_chain_dual)
-        _f_pack = _pool.submit(_chain_pack)
-        dual = _f_dual.result()
-        pack = _f_pack.result()
+    dual, pack = overlap(_chain_dual, _chain_pack)
     ppl = dual.select(
         F.lit("ppl").alias("part"), "doc_id",
         F.col("n_bigrams").cast("string").alias("grp"),
@@ -2352,15 +2298,9 @@ def q_ann(spark, sf_dir):
             )
         ).select("vec_id", "embedding").localCheckpoint(eager=True)
 
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=3) as _pool:
-        _f_codes = _pool.submit(_codes_chain)
-        _f_cents = _pool.submit(_cents_chain)
-        _f_q8 = _pool.submit(_q8_chain)
-        books, codes = _f_codes.result()
-        cents, asg = _f_cents.result()
-        q8 = _f_q8.result()
+    (books, codes), (cents, asg), q8 = overlap(
+        _codes_chain, _cents_chain, _q8_chain
+    )
 
     pq = sim.pq_topk(codes, probes, books, k=5).select(
         "probe_id", "neighbor_id",

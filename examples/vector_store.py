@@ -90,7 +90,7 @@ for name, df in [("ivf", ivf), ("pq", pq), ("ivfpq", ivfpq)]:
 from wingfoil_spark.streaming import ingest
 
 index = ingest.build_ann_index(corpus).localCheckpoint(eager=True)
-served = ingest.ann_topk_stream(probes, index, k=3)  # batch frame: same plan
+served = ingest.ann_topk_stream(probes, index, k=3)  # batch or streamed probes
 got = {(r.probe_id, r.rank): r.neighbor_id for r in served.collect()}
 assert got[(0, 1)] == 240, got
 print("streaming-serving index: rank-1 near-dup recovered")

@@ -441,7 +441,7 @@ def decon_stream_scale(spark):
         )
         asg1 = sim.ivf_assign(small_emb, cents1, 1).localCheckpoint(eager=True)
         asg10 = sim.ivf_assign(big_emb, cents10, 1).localCheckpoint(eager=True)
-        # r12: the codes-only serving leg (ivfpq_topk_stream) — the
+        # r12: the codes-only serving leg (streamed ivfpq_topk) — the
         # last graded streamed path without a scale row; codebooks are
         # shared (index metadata, corpus-size-independent), codes
         # frames are per-tier
@@ -525,14 +525,15 @@ def decon_stream_scale(spark):
                 paths[dsrc], doc_schema,
             )
             t_iserve, n_iserve = run_stream(
-                lambda s, _a=asg, _c=cents: ingest.ivf_topk_stream(
-                    s, _a, _c, k=5, nprobe=4
+                lambda s, _a=asg, _c=cents: sim.ivf_topk(
+                    _a, s, k=5, nprobe=4, centroids=_c, corpus_assign=_a
                 ),
                 paths[esrc], emb_schema,
             )
             t_pqserve, n_pqserve = run_stream(
-                lambda s, _cd=codes, _c=cents: ingest.ivfpq_topk_stream(
-                    s, _cd, _c, books, k=5, nprobe=4
+                lambda s, _a=asg, _cd=codes, _c=cents: sim.ivfpq_topk(
+                    _a, s, books, k=5, nprobe=4, corpus_codes=_cd,
+                    centroids=_c, corpus_assign=_a,
                 ),
                 paths[esrc], emb_schema,
             )

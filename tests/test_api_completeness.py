@@ -161,9 +161,6 @@ MODULE_SURFACES = {
         "build_bm25_index", "bm25_score_stream", "lm_score_stream",
         "build_fingerprint_store", "dedup_against_store",
         "compact_fingerprint_store", "clf_score_stream",
-        "ivf_topk_stream", "ivfpq_topk_stream", "ivfpq_rerank_stream",
-        "ivf_topk_stream_from_store", "ivfpq_topk_stream_from_store",
-        "ivfpq_rerank_stream_from_store",
     ],
     "wingfoil_spark.streaming.metrics": [
         "ProgressListener", "attach", "render_exposition",

@@ -233,3 +233,35 @@ def test_delay_with_reset_no_trigger_passthrough(spark):
     trig = make(spark, [], "ts long, tick int")
     out = delay_with_reset(src, 5, trig, value_cols=["v"])
     assert rows(out, "ts", "v") == [(15, 1.0)]
+
+
+def test_time_buckets_accept_a_quoted_name_ts_column(spark):
+    """A caller's ts column is resolved as a column, never spliced into
+    SQL text: a name that is not a bare SQL identifier (``event-ts``)
+    must bucket like ``ts`` in ts_us_expr, the Stream time buckets and
+    the market/scale bucketed operators."""
+    from wingfoil_spark.operators import market, scale
+    from wingfoil_spark.sources.tables import ts_us_expr
+
+    data = [(1, 1.0), (5, 2.0), (11, 3.0), (19, 4.0), (21, 5.0)]
+    s = make(spark, data, "`event-ts` long, v double", ts="event-ts")
+    assert [r[0] for r in s.df.select(ts_us_expr(s.df, "event-ts")).collect()] \
+        == [0, 0, 0, 0, 0]
+    big = make(spark, [(1_500, 1.0), (2_999, 2.0)], "`event-ts` long, v double",
+               ts="event-ts")
+    assert [r[0] for r in big.df.select(ts_us_expr(big.df, "event-ts"))
+            .orderBy("event-ts").collect()] == [1, 2]
+    assert rows(s.throttle(10), "event-ts", "v") == [
+        (1, 1.0), (11, 3.0), (21, 5.0)]
+    t = s.tumbling(10, {"total": F.sum("v")})
+    assert rows(t, "event-ts", "total") == [(10, 3.0), (20, 7.0), (30, 5.0)]
+    g = scale.global_prefix_sum(s, "v", "cum", bucket_width=10)
+    assert [r["cum"] for r in g.df.orderBy("event-ts").collect()] == [
+        1.0, 3.0, 6.0, 10.0, 15.0]
+    trades = market.trades_from_events(
+        make(spark, [(1, 10.0, 0), (5, 20.0, 1), (11, 30.0, 2)],
+             "`event-ts` long, v double, seq long", ts="event-ts", seq="seq"),
+        px_col="v",
+    )
+    vw = market.tumbling_vwap(trades, 10).df.orderBy("event-ts").collect()
+    assert [r["event-ts"] for r in vw] == [10, 20]

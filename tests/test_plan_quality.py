@@ -357,3 +357,78 @@ def test_ivfpq_rerank_no_cartesian_and_broadcast_probes(spark):
     # hash equi-joins
     assert plan.count("BroadcastNestedLoopJoin") <= 2, plan
     assert "BroadcastHashJoin" in plan, plan
+
+
+def _plan_nodes(node):
+    """Every node of a JVM physical plan, root first."""
+    out, stack = [], [node]
+    while stack:
+        n = stack.pop()
+        out.append(n)
+        kids = n.children()
+        stack.extend(kids.apply(i) for i in range(kids.size() - 1, -1, -1))
+    return out
+
+
+def test_cosine_searches_one_exchange_and_no_array_pair_shuffle(spark, tmp_path):
+    """Each batch cosine search (exact, LSH single/multi-table, IVF,
+    IVF from store, rerank in memory and from store) ranks through ONE
+    shuffle: the probe_id repartition above the scoring join serves
+    both the pair max and the rank window. Pair dedup never shuffles
+    embedding arrays — a (probe_id, neighbor_id)-keyed exchange may not
+    carry an array column. Planned with AQE off, so the plan is the
+    static planner's."""
+    from pyspark.sql import functions as F
+
+    from wingfoil_spark.functions import similarity as sim
+    from wingfoil_spark.sources.tables import load_table
+
+    e = load_table(spark, SF_DIR, "embeddings")
+    probes = e.where(F.col("vec_id") % 50 == 0)
+    books = sim.pq_train(e, m=8, k=16, fit="take")
+    ipath, qpath = str(tmp_path / "ivf"), str(tmp_path / "ivfpq")
+    cents = sim.write_ivf_store(
+        e, ipath, n_centroids=8, fit="take"
+    ).localCheckpoint(eager=True)
+    sim.write_ivfpq_store(e, qpath, books, centroids=cents)
+    prev = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        searches = {
+            "cosine_topk": sim.cosine_topk(e, probes, k=5),
+            "lsh": sim.lsh_bucketed_topk(e, probes, k=5),
+            "lsh_t4": sim.lsh_bucketed_topk(
+                e, probes, k=5, n_tables=4, probe_hamming=1),
+            "ivf_topk": sim.ivf_topk(e, probes, k=5, nprobe=3,
+                                     centroids=cents),
+            "ivf_store": sim.ivf_topk_from_store(
+                spark, ipath, None, probes, k=5, nprobe=3),
+            "rerank": sim.ivfpq_rerank_topk(
+                e, probes, books, k=5, shortlist=10, nprobe=3,
+                centroids=cents),
+            "rerank_store": sim.ivfpq_rerank_from_store(
+                spark, qpath, e, probes, k=5, shortlist=10, nprobe=3),
+        }
+        for name, df in searches.items():
+            root = df._jdf.queryExecution().executedPlan()
+            above, node = 0, root
+            while "Join" not in node.nodeName():
+                assert node.children().size() == 1, (name, root.toString())
+                above += node.nodeName() == "Exchange"
+                node = node.children().apply(0)
+            assert above == 1, (name, root.toString())
+            for n in _plan_nodes(root):
+                if n.nodeName() != "Exchange":
+                    continue
+                part = n.outputPartitioning().toString()
+                if "probe_id" in part and "neighbor_id" in part:
+                    arrays = [
+                        a.name() for a in (
+                            n.output().apply(i)
+                            for i in range(n.output().size())
+                        )
+                        if a.dataType().typeName() == "array"
+                    ]
+                    assert not arrays, (name, part, arrays)
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", prev)

@@ -659,7 +659,7 @@ def test_ivf_assign_tie_break(spark):
 def test_adc_duplicate_store_ids_single_rank(spark):
     """ADVICE r11 (medium): a duplicate id in an append-grown codes store
     must occupy ONE rank in every ADC consumer (pq_topk here — the shared
-    _adc_topk_iter also backs ivfpq_topk_from_store / ivfpq_topk_stream),
+    _adc_topk_iter also backs ivfpq_topk_from_store, batch or streamed),
     keeping its BEST distance, so a real neighbor is not pushed out of
     the top-k. Mirrors test_ivf_topk_stream_duplicate_store_ids_match_batch."""
     import random

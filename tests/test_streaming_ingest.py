@@ -959,7 +959,6 @@ def test_ivf_topk_stream_matches_from_store(spark, sf_dir, tmp_path):
     path = str(tmp_path / "serve_store")
     cents = sim.write_ivf_store(emb, path, n_centroids=8, fit="take")
     cents = cents.localCheckpoint(eager=True)
-    store = spark.read.parquet(path)
     batch = sim.ivf_topk_from_store(
         spark, path, cents, probes, k=5, nprobe=3
     ).toPandas()
@@ -979,7 +978,7 @@ def test_ivf_topk_stream_matches_from_store(spark, sf_dir, tmp_path):
             .parquet(src_dir)
         )
         got = _run_to_memory(
-            ingest.ivf_topk_stream(stream, store, cents, k=5, nprobe=3),
+            sim.ivf_topk_from_store(spark, path, cents, stream, k=5, nprobe=3),
             "ivf_serve_stream",
         ).toPandas()
     finally:
@@ -1007,7 +1006,6 @@ def test_ivfpq_topk_stream_matches_from_store(spark, sf_dir, tmp_path):
     cents = sim.write_ivfpq_store(
         emb, path, books, n_centroids=8, fit="take"
     ).localCheckpoint(eager=True)
-    store = spark.read.parquet(path)
     batch = sim.ivfpq_topk_from_store(
         spark, path, cents, books, probes, k=5, nprobe=3
     ).toPandas()
@@ -1027,7 +1025,9 @@ def test_ivfpq_topk_stream_matches_from_store(spark, sf_dir, tmp_path):
             .parquet(src_dir)
         )
         got = _run_to_memory(
-            ingest.ivfpq_topk_stream(stream, store, cents, books, k=5, nprobe=3),
+            sim.ivfpq_topk_from_store(
+                spark, path, cents, books, stream, k=5, nprobe=3
+            ),
             "ivfpq_serve_stream",
         ).toPandas()
     finally:
@@ -1064,7 +1064,6 @@ def test_ivf_topk_stream_duplicate_store_ids_match_batch(spark, sf_dir, tmp_path
         .withColumn("embedding", F.expr("transform(embedding, x -> -x)")),
         path, cents,
     )
-    store = spark.read.parquet(path)
     batch = sim.ivf_topk_from_store(
         spark, path, cents, probes, k=5, nprobe=3
     ).toPandas()
@@ -1079,7 +1078,7 @@ def test_ivf_topk_stream_duplicate_store_ids_match_batch(spark, sf_dir, tmp_path
             "vec_id long, embedding array<float>"
         ).parquet(src_dir)
         got = _run_to_memory(
-            ingest.ivf_topk_stream(stream, store, cents, k=5, nprobe=3),
+            sim.ivf_topk_from_store(spark, path, cents, stream, k=5, nprobe=3),
             "ivf_dup_serve",
         ).toPandas()
     finally:
@@ -1134,10 +1133,11 @@ def test_decontaminate_stream_duplicate_and_huge_ids(spark):
 
 
 def test_serving_ops_accept_string_ids(spark):
-    """Review r12: ann_topk_stream / ivf_topk_stream derived their
-    mapInPandas schema from a hardcoded 'long' — string/UUID ids died at
-    Arrow conversion despite the id_col parameter. Both must serve
-    string-keyed corpora (run batch-mode: the ops are mode-agnostic)."""
+    """Review r12: the streamed rankers derived their mapInPandas schema
+    from a hardcoded 'long' — string/UUID ids died at Arrow conversion
+    despite the id_col parameter. The LSH and IVF tiers must serve
+    string-keyed corpora to a STREAMING probe frame (a batch frame takes
+    the window ranker, which never had the problem)."""
     import random
 
     from wingfoil_spark.functions import similarity as sim
@@ -1146,13 +1146,30 @@ def test_serving_ops_accept_string_ids(spark):
     rows = [(f"v{i:03d}", [rng.uniform(-1, 1) for _ in range(16)])
             for i in range(60)]
     df = spark.createDataFrame(rows, "vec_id string, embedding array<float>")
-    probes = df.where(F.col("vec_id") < "v005")
+    pdf = df.where(F.col("vec_id") < "v005").toPandas()
     idx = ingest.build_ann_index(df)
-    out = ingest.ann_topk_stream(probes, idx, k=3).toPandas()
-    assert len(out) and out["probe_id"].map(lambda s: s.startswith("v")).all()
     cents = sim.ivf_centroids(df, 4, fit="take").localCheckpoint(eager=True)
     asg = sim.ivf_assign(df, cents, 1).localCheckpoint(eager=True)
-    out2 = ingest.ivf_topk_stream(probes, asg, cents, k=3, nprobe=2).toPandas()
+    src_dir = tempfile.mkdtemp(prefix="wf_str_ids_")
+    try:
+        pdf.to_parquet(os.path.join(src_dir, "c0.parquet"), index=False)
+
+        def probes():
+            return spark.readStream.schema(
+                "vec_id string, embedding array<float>"
+            ).parquet(src_dir)
+
+        out = _run_to_memory(
+            ingest.ann_topk_stream(probes(), idx, k=3), "str_ids_ann"
+        ).toPandas()
+        out2 = _run_to_memory(
+            sim.ivf_topk(asg, probes(), k=3, nprobe=2, centroids=cents,
+                         corpus_assign=asg),
+            "str_ids_ivf",
+        ).toPandas()
+    finally:
+        shutil.rmtree(src_dir, ignore_errors=True)
+    assert len(out) and out["probe_id"].map(lambda s: s.startswith("v")).all()
     assert len(out2) and out2["neighbor_id"].map(
         lambda s: s.startswith("v")).all()
 
@@ -1161,7 +1178,7 @@ def test_serving_joins_broadcast_the_probe_side(spark, sf_dir):
     """Review r12: AQE does not run in streaming micro-batch plans, so
     the static index/store side must never be shuffled per trigger —
     the probe side carries an explicit broadcast hint (batch-mode plan
-    asserted; the same plan shape executes per micro-batch)."""
+    asserted; the same joins execute per micro-batch)."""
     from wingfoil_spark.functions import similarity as sim
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -1169,17 +1186,15 @@ def test_serving_joins_broadcast_the_probe_side(spark, sf_dir):
     idx = ingest.build_ann_index(emb)
     cents = sim.ivf_centroids(emb, 4, fit="take").localCheckpoint(eager=True)
     asg = sim.ivf_assign(emb, cents, 1).localCheckpoint(eager=True)
+    books = sim.pq_train(emb, m=8, k=16, fit="take")
+    codes = sim.pq_encode(emb, books).select("vec_id", "pq_code")
     for out in (
         ingest.ann_topk_stream(probes, idx, k=3),
-        ingest.ivf_topk_stream(probes, asg, cents, k=3, nprobe=2),
-        ingest.ivfpq_topk_stream(
-            probes,
-            asg.select("vec_id", "cid").join(
-                sim.pq_encode(emb, sim.pq_train(emb, m=8, k=16, fit="take"))
-                .select("vec_id", "pq_code"), "vec_id"),
-            cents, sim.pq_train(emb, m=8, k=16, fit="take"),
-            k=3, nprobe=2,
-        ),
+        sim.ivf_topk(asg, probes, k=3, nprobe=2, centroids=cents,
+                     corpus_assign=asg),
+        sim.ivfpq_topk(emb, probes, books, k=3, nprobe=2,
+                       corpus_codes=codes, centroids=cents,
+                       corpus_assign=asg),
     ):
         plan = out._jdf.queryExecution().executedPlan().toString()
         assert "BroadcastHashJoin" in plan, plan[:500]
@@ -1188,10 +1203,10 @@ def test_serving_joins_broadcast_the_probe_side(spark, sf_dir):
 
 def test_ivf_topk_stream_build_py4j_round_trips(spark, sf_dir,
                                                py4j_commands):
-    """Building the streamed IVF server is driver work counted in py4j
-    round trips, which host load cannot inflate. The probe assignment
-    reads the centroids as one broadcast array row, so the build does
-    not grow with the centroid count; inlining 64 centroids as literal
+    """Building the IVF server is driver work counted in py4j round
+    trips, which host load cannot inflate. The probe assignment reads
+    the centroids as one broadcast array row, so the build does not
+    grow with the centroid count; inlining 64 centroids as literal
     arrays sent more than 20k commands."""
     from wingfoil_spark.functions import similarity as sim
 
@@ -1200,7 +1215,8 @@ def test_ivf_topk_stream_build_py4j_round_trips(spark, sf_dir,
     cents = sim.ivf_centroids(emb, 64, fit="take").localCheckpoint(eager=True)
     asg = sim.ivf_assign(emb, cents, 1).localCheckpoint(eager=True)
     with py4j_commands() as c:
-        ingest.ivf_topk_stream(probes, asg, cents, k=5, nprobe=4)
+        sim.ivf_topk(asg, probes, k=5, nprobe=4, centroids=cents,
+                     corpus_assign=asg)
     assert c.n <= 600, f"{c.n} py4j round trips to build the IVF server"
 
 
@@ -1212,11 +1228,12 @@ def test_exact_dedup_stream_rejects_fp_collision(spark, docs):
 
 
 def test_ivfpq_rerank_stream_matches_batch(spark, sf_dir, tmp_path):
-    """r14: the streamed rerank twin — ADC shortlist from the codes-only
+    """r14: the streamed rerank — ADC shortlist from the codes-only
     store + exact re-rank against the float side — reproduces the batch
     ivfpq_rerank_topk EXACTLY under the same store/metadata, across 2
     micro-batches (the shortlist iterator's running merge and the
-    carried probe vector are both load-bearing here)."""
+    carried probe vector are both load-bearing here). The float side
+    holds every third id twice: both modes rank such a neighbor once."""
     from wingfoil_spark.functions import similarity as sim
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -1227,14 +1244,23 @@ def test_ivfpq_rerank_stream_matches_batch(spark, sf_dir, tmp_path):
         emb, path, books, n_centroids=8, fit="take"
     ).localCheckpoint(eager=True)
     store = spark.read.parquet(path)
-    # batch twin over the SAME store-shaped inputs: corpus_codes/assign
-    # from the store frame, centroids from the store metadata
-    batch = sim.ivfpq_rerank_topk(
-        emb, probes, books, k=5, shortlist=20, nprobe=3,
-        corpus_codes=store.select("vec_id", "pq_code"),
-        centroids=cents,
-        corpus_assign=store.select("vec_id", "cid"),
-    ).toPandas()
+    floats = emb.select("vec_id", "embedding").unionByName(
+        emb.where(F.col("vec_id") % 3 == 0).select("vec_id", "embedding")
+    )
+
+    def rerank(p):
+        # corpus_codes/assign from the store frame, centroids from the
+        # store metadata
+        return sim.ivfpq_rerank_topk(
+            floats, p, books, k=5, shortlist=20, nprobe=3,
+            corpus_codes=store.select("vec_id", "pq_code"),
+            centroids=cents,
+            corpus_assign=store.select("vec_id", "cid"),
+        )
+
+    batch = rerank(probes).toPandas()
+    assert batch.groupby("probe_id")["neighbor_id"].nunique().eq(
+        batch.groupby("probe_id")["neighbor_id"].size()).all()
 
     pdf = probes.select("vec_id", "embedding").toPandas()
     src_dir = tempfile.mkdtemp(prefix="wf_rerank_serve_")
@@ -1250,14 +1276,7 @@ def test_ivfpq_rerank_stream_matches_batch(spark, sf_dir, tmp_path):
             .option("maxFilesPerTrigger", 1)
             .parquet(src_dir)
         )
-        got = _run_to_memory(
-            ingest.ivfpq_rerank_stream(
-                stream, store, cents, books,
-                emb.select("vec_id", "embedding"),
-                k=5, shortlist=20, nprobe=3,
-            ),
-            "rerank_serve_stream",
-        ).toPandas()
+        got = _run_to_memory(rerank(stream), "rerank_serve_stream").toPandas()
     finally:
         shutil.rmtree(src_dir, ignore_errors=True)
 
@@ -1271,10 +1290,11 @@ def test_ivfpq_rerank_stream_matches_batch(spark, sf_dir, tmp_path):
 
 
 def test_stream_from_store_constructors_match_batch(spark, sf_dir, tmp_path):
-    """r14: the path-only stream constructors — store frame, centroids
-    and codebooks all loaded from the self-describing store at stream
-    construction — reproduce their batch from-store twins exactly on an
-    availableNow run (ivf serve, ADC serve, ADC + exact re-rank)."""
+    """r14: path-only streamed serving — store frame, centroids and
+    codebooks all loaded from the self-describing store at stream
+    construction — reproduces the same from-store call on batch probes
+    exactly on an availableNow run (ivf serve, ADC serve, ADC + exact
+    re-rank)."""
     from wingfoil_spark.functions import similarity as sim
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -1310,8 +1330,8 @@ def test_stream_from_store_constructors_match_batch(spark, sf_dir, tmp_path):
 
         cases = [
             (
-                ingest.ivf_topk_stream_from_store(
-                    spark, stream(), ipath, k=5, nprobe=3
+                sim.ivf_topk_from_store(
+                    spark, ipath, None, stream(), k=5, nprobe=3
                 ),
                 sim.ivf_topk_from_store(
                     spark, ipath, None, probes, k=5, nprobe=3
@@ -1319,8 +1339,8 @@ def test_stream_from_store_constructors_match_batch(spark, sf_dir, tmp_path):
                 "sfs_ivf",
             ),
             (
-                ingest.ivfpq_topk_stream_from_store(
-                    spark, stream(), qpath, k=5, nprobe=3
+                sim.ivfpq_topk_from_store(
+                    spark, qpath, None, None, stream(), k=5, nprobe=3
                 ),
                 sim.ivfpq_topk_from_store(
                     spark, qpath, None, None, probes, k=5, nprobe=3
@@ -1328,8 +1348,8 @@ def test_stream_from_store_constructors_match_batch(spark, sf_dir, tmp_path):
                 "sfs_ivfpq",
             ),
             (
-                ingest.ivfpq_rerank_stream_from_store(
-                    spark, stream(), qpath, emb, k=5, shortlist=10,
+                sim.ivfpq_rerank_from_store(
+                    spark, qpath, emb, stream(), k=5, shortlist=10,
                     nprobe=3,
                 ),
                 sim.ivfpq_rerank_from_store(
@@ -1343,6 +1363,90 @@ def test_stream_from_store_constructors_match_batch(spark, sf_dir, tmp_path):
             g, b = norm(_run_to_memory(out, name)), norm(batch)
             assert len(g) == len(b) and len(g) > 0, name
             for c in ("probe_id", "neighbor_id", "rank"):
+                assert g[c].tolist() == b[c].tolist(), (name, c)
+    finally:
+        shutil.rmtree(src_dir, ignore_errors=True)
+
+
+def test_search_tiers_serve_batch_and_streamed_probes(spark, sf_dir, tmp_path):
+    """Every search tier (exact, LSH, IVF, IVF-PQ, rerank) is ONE body
+    for batch and streaming probe frames: each tier's streamed output
+    schema equals its batch schema (rank int on the cosine tiers, the
+    ADC tiers' bigint on both sides), and the exact and multi-table LSH
+    tiers return the batch rows over 2 micro-batches."""
+    from pyspark.sql import types as T
+
+    from wingfoil_spark.functions import similarity as sim
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    probes = emb.where(F.col("vec_id") % 40 == 0)
+    books = sim.pq_train(emb, m=8, k=16, fit="take")
+    ipath, qpath = str(tmp_path / "ivf"), str(tmp_path / "ivfpq")
+    cents = sim.write_ivf_store(
+        emb, ipath, n_centroids=8, fit="take"
+    ).localCheckpoint(eager=True)
+    sim.write_ivfpq_store(emb, qpath, books, centroids=cents)
+    idx = ingest.build_ann_index(emb, n_tables=4)
+
+    pdf = probes.select("vec_id", "embedding").toPandas()
+    src_dir = tempfile.mkdtemp(prefix="wf_tiers_")
+    try:
+        n = len(pdf)
+        for i in range(2):
+            chunk = pdf.iloc[i * n // 2: (i + 1) * n // 2]
+            p = os.path.join(src_dir, f"c{i}.parquet")
+            chunk.to_parquet(p, index=False)
+            os.utime(p, (time.time() + i, time.time() + i))
+
+        def stream():
+            return (
+                spark.readStream
+                .schema("vec_id long, embedding array<float>")
+                .option("maxFilesPerTrigger", 1)
+                .parquet(src_dir)
+            )
+
+        tiers = {
+            "exact": lambda p: sim.cosine_topk(emb, p, k=5),
+            "lsh": lambda p: sim.lsh_bucketed_topk(
+                emb, p, k=5, n_tables=4, probe_hamming=1),
+            "ann": lambda p: ingest.ann_topk_stream(
+                p, idx, k=5, n_tables=4, probe_hamming=1),
+            "ivf": lambda p: sim.ivf_topk(
+                emb, p, k=5, nprobe=3, centroids=cents),
+            "ivf_store": lambda p: sim.ivf_topk_from_store(
+                spark, ipath, None, p, k=5, nprobe=3),
+            "ivfpq": lambda p: sim.ivfpq_topk(
+                emb, p, books, k=5, nprobe=3, centroids=cents),
+            "ivfpq_store": lambda p: sim.ivfpq_topk_from_store(
+                spark, qpath, None, None, p, k=5, nprobe=3),
+            "rerank": lambda p: sim.ivfpq_rerank_topk(
+                emb, p, books, k=5, shortlist=10, nprobe=3,
+                centroids=cents),
+            "rerank_store": lambda p: sim.ivfpq_rerank_from_store(
+                spark, qpath, emb, p, k=5, shortlist=10, nprobe=3),
+        }
+
+        def fields(df):
+            return [(f.name, f.dataType) for f in df.schema.fields]
+
+        for name, tier in tiers.items():
+            b, s = tier(probes), tier(stream())
+            assert s.isStreaming and not b.isStreaming, name
+            assert fields(s) == fields(b), (name, fields(s), fields(b))
+            want = T.LongType() if "adc_dist" in b.columns else T.IntegerType()
+            assert b.schema["rank"].dataType == want, name
+        # the LSH tier's prebuilt-index server ranks like the batch tier
+        assert fields(tiers["ann"](stream())) == fields(tiers["lsh"](probes))
+
+        key = ["probe_id", "rank"]
+        for name in ("exact", "lsh"):
+            g = _run_to_memory(tiers[name](stream()), f"tier_{name}") \
+                .toPandas().sort_values(key).reset_index(drop=True)
+            b = tiers[name](probes).toPandas().sort_values(key) \
+                .reset_index(drop=True)
+            assert len(g) == len(b) and len(g) > 0, name
+            for c in ("probe_id", "neighbor_id", "rank", "cosine"):
                 assert g[c].tolist() == b[c].tolist(), (name, c)
     finally:
         shutil.rmtree(src_dir, ignore_errors=True)

@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from wingfoil_spark.functions.text import tokens
+from wingfoil_spark.session import overlap
 
 
 def _bigram_pos(docs: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -391,13 +392,7 @@ def fit_bigram_counts(
         )
         return b, b.count()
 
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as _pool:
-        _fu = _pool.submit(_fit_uni)
-        _fb = _pool.submit(_fit_big)
-        uni, v = _fu.result()
-        big, b_types = _fb.result()
+    (uni, v), (big, b_types) = overlap(_fit_uni, _fit_big)
     if v == 0:
         raise ValueError(
             "fit_bigram_counts: reference corpus has empty vocabulary "

@@ -20,6 +20,11 @@ Two tiers, per the scale plan:
   and no shuffle, legal on a stream), shared by every IVF/IVF-PQ search,
   store writer and streamed server.
 
+Every search tier (exact, LSH, IVF, IVF-PQ, rerank) has ONE body that
+takes a batch or a streaming ``probes`` frame: the candidate plans are
+row-local or stream-static joins, and the rankers choose their form by
+``isStreaming`` (:func:`_rank_topk`; the rerank's probe-vector carry).
+
 All float math is cast to double with left-to-right accumulation so the
 DuckDB oracle (list_dot_product over DOUBLE[]) matches bit-for-bit.
 """
@@ -28,7 +33,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql import types as T
 
 
@@ -63,6 +68,98 @@ def with_norm(df: DataFrame, emb_col: str = "embedding", out: str = "norm") -> D
     )
 
 
+def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
+    """THE cosine ranker of every search tier: ``scored`` rows
+    ``(probe_id, neighbor_id, cosine)`` → ``(probe_id, neighbor_id,
+    cosine, rank int)``, each (probe, neighbor) pair kept once at its
+    best cosine, ranked by (cosine desc, neighbor asc), rank ≤ k.
+
+    One ``repartition("probe_id")`` colocates each probe's candidates,
+    then:
+
+    - a batch frame takes the pair max + ``row_number`` window — both
+      satisfied by that one exchange, which carries only the narrow
+      scored columns;
+    - a streaming frame (window functions are illegal there; a groupBy
+      would drag in watermark state for per-batch-local work) takes the
+      running top-k of :func:`_running_cosine_topk_iter` — exact because
+      a probe lives in exactly one micro-batch.
+
+    Keeping each pair once is what a store grown by appends (one id,
+    several rows), a float corpus holding an id twice, or a pair
+    co-bucketed in several LSH tables needs: a duplicate must not occupy
+    two ranks and push a real neighbor out of the k."""
+    scored = scored.repartition("probe_id")
+    if scored.isStreaming:
+        # id field types DERIVED from the inputs (string/UUID ids must
+        # not fail on a hardcoded long)
+        schema = (
+            f"probe_id {scored.schema['probe_id'].dataType.simpleString()}, "
+            f"neighbor_id "
+            f"{scored.schema['neighbor_id'].dataType.simpleString()}, "
+            "cosine double, rank int"
+        )
+        return scored.mapInPandas(_running_cosine_topk_iter(int(k)), schema)
+    # SQL text over internal names: ~40 py4j round trips to build, the
+    # Column-API form ~170
+    return (
+        scored.groupBy("probe_id", "neighbor_id")
+        .agg(F.expr("max(cosine) AS cosine"))
+        .withColumn("rank", F.expr(
+            "row_number() OVER (PARTITION BY probe_id "
+            "ORDER BY cosine DESC, neighbor_id ASC)"
+        ))
+        .where(f"rank <= {int(k)}")
+    )
+
+
+def _running_cosine_topk_iter(kk: int):
+    """mapInPandas iterator: RUNNING per-probe top-k over
+    (probe_id, neighbor_id, cosine) rows, merged across Arrow batches
+    under the (-cosine, neighbor_id) total order and flushed as ONE
+    frame per partition (a per-probe yield would make one Arrow batch
+    per probe — thousands of ≤k-row batches whose serialization
+    dominates the flush). mapInPandas splits a partition into ~10k-row
+    batches, so a per-batch groupby head(k) would emit up to k rows PER
+    BATCH with ranks restarting at 1; selecting the k best is
+    associative, so batch-wise merge + one emission at exhaustion is
+    exact in O(probes_in_partition × k) memory. Each (probe, neighbor)
+    pair is kept ONCE (first occurrence under the rank order == best
+    cosine), as the batch window's pair max does."""
+
+    def topk(batches):
+        best: dict = {}  # probe_id -> (cosines, neighbor_ids) top-k so far
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            for probe_id, grp in pdf.groupby("probe_id", sort=False):
+                cos = grp["cosine"].to_numpy(dtype=np.float64)
+                ids = grp["neighbor_id"].to_numpy()
+                if probe_id in best:
+                    pcos, pids = best[probe_id]
+                    cos = np.concatenate([pcos, cos])
+                    ids = np.concatenate([pids, ids])
+                order = np.lexsort((ids, -cos))
+                cos, ids = cos[order], ids[order]
+                keep = np.sort(np.unique(ids, return_index=True)[1])[:kk]
+                best[probe_id] = (cos[keep], ids[keep])
+        if best:
+            yield pd.concat(
+                [
+                    pd.DataFrame({
+                        "probe_id": probe_id,
+                        "neighbor_id": ids,
+                        "cosine": cos,
+                        "rank": np.arange(1, len(ids) + 1),
+                    })
+                    for probe_id, (cos, ids) in best.items()
+                ],
+                ignore_index=True,
+            )
+
+    return topk
+
+
 def cosine_topk(
     corpus: DataFrame,
     probes: DataFrame,
@@ -75,7 +172,7 @@ def cosine_topk(
 
     Output: probe_id, neighbor_id, cosine, rank. Cosine is rounded before
     ranking so rank order is reproducible cross-engine; ties break on
-    neighbor id.
+    neighbor id. ``probes`` may be a streaming frame (:func:`_rank_topk`).
     """
     c = with_norm(corpus, emb_col, "n_c").select(
         F.col(id_col).alias("neighbor_id"), F.col(emb_col).alias("e_c"), "n_c"
@@ -84,19 +181,18 @@ def cosine_topk(
     p = with_norm(probes, emb_col, "n_p").select(
         F.col(id_col).alias("probe_id"), F.col(emb_col).alias("e_p"), "n_p"
     ).where(F.col("n_p") > 0)
-    dot = _dot("e_p", "e_c")
-    scored = (
-        c.crossJoin(F.broadcast(p))
-        .where(F.col("probe_id") != F.col("neighbor_id"))
-        .withColumn("cosine", F.round(dot / (F.col("n_p") * F.col("n_c")), round_digits))
-    )
-    from pyspark.sql import Window
+    return _rank_topk(_cosine_scored(c.crossJoin(F.broadcast(p)), round_digits), k)
 
-    w = Window.partitionBy("probe_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("probe_id", "neighbor_id", "cosine", "rank")
+
+def _cosine_scored(cand: DataFrame, round_digits: int = 6) -> DataFrame:
+    """Candidate pairs ``(probe_id, e_p, n_p, neighbor_id, e_c, n_c)`` →
+    the ranker's ``(probe_id, neighbor_id, cosine)``: self-matches
+    dropped, the canonical :data:`_DOT_SQL` over the two norms, rounded
+    before ranking (SQL text over internal names)."""
+    dot = _DOT_SQL.format(a="e_p", b="e_c")
+    return cand.where("probe_id != neighbor_id").selectExpr(
+        "probe_id", "neighbor_id",
+        f"round({dot} / (n_p * n_c), {int(round_digits)}) AS cosine",
     )
 
 
@@ -298,8 +394,9 @@ def lsh_bucketed_topk(
       signature pass emits every table's bucket (posexplode to L
       rows/vector — the storage cost of any multi-table index) and ONE
       ``(tbl, bucket)`` equi-join restricts candidates. A pair can
-      co-bucket in several tables, so at ``n_tables > 1`` a real
-      pair-dedup runs before scoring and each pair is scored once.
+      co-bucket in several tables; the ranker keeps each pair once
+      (identical cosine per copy), so no embedding array crosses a
+      pair-dedup shuffle.
     - ``probe_hamming=1`` — the MULTI-PROBE tier: the probe side also
       queries every bucket at Hamming distance 1 from its own signature
       in each table (bit-flip neighbors — the buckets a near-miss
@@ -317,35 +414,17 @@ def lsh_bucketed_topk(
       explodes ``1 + bits + C(bits,2)`` buckets and is where more tables
       beat deeper probing.
 
-    The corpus index and the probe side are the same builders
-    (:func:`build_ann_index`, ``_ann_probes``) the streamed
-    ``ingest.ann_topk_stream`` uses; only the ranker differs (a window
-    here, the running top-k there). Never a cross join; every stage is
+    The corpus index, the probe side and the ranker are the same
+    builders (:func:`build_ann_index`, ``_ann_probes``,
+    :func:`_rank_topk`) the streamed ``ingest.ann_topk_stream`` serves a
+    prebuilt index with. Never a cross join; every stage is
     key-partitionable."""
     c = build_ann_index(corpus, emb_col, id_col, bits, n_tables)
     p = _ann_probes(
         probes, emb_col, id_col, bits, n_tables, probe_hamming,
         "lsh_bucketed_topk",
     )
-    cand = c.join(p, ["tbl", "bucket"]).where(
-        F.col("probe_id") != F.col("neighbor_id")
-    )
-    if n_tables > 1:
-        # REAL duplicates here (a pair may co-bucket in several tables);
-        # dedup BEFORE the dot product so each pair is scored once
-        cand = cand.dropDuplicates(["probe_id", "neighbor_id"])
-    dot = _dot("e_p", "e_c")
-    scored = cand.withColumn(
-        "cosine", F.round(dot / (F.col("n_p") * F.col("n_c")), 6)
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("probe_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("probe_id", "neighbor_id", "cosine", "rank")
-    )
+    return _rank_topk(_cosine_scored(c.join(p, ["tbl", "bucket"])), k)
 
 
 def ivf_assign(
@@ -371,8 +450,8 @@ def ivf_assign(
       append) are each assigned;
     - the build costs a constant number of py4j round trips at any
       centroid count;
-    - the plan is legal on a streaming frame (the serving-side
-      assignment of ``ingest.ivf_topk_stream``).
+    - the plan is legal on a streaming frame (the probe assignment of
+      every streamed IVF/IVF-PQ search).
 
     Zero-norm centroids are excluded (a take-fit can select a zero
     vector; ``ivf_centroids`` does not norm-filter): such a centroid has
@@ -561,14 +640,30 @@ def ivf_centroids(
             "cid int, cvec array<double>",
         )
         return with_norm(cents, "cvec", "cnorm")
-    from pyspark.sql import Window
-
     first = corpus.select(id_col, F.col(emb_col).alias("cvec")).orderBy(id_col).limit(n_centroids)
     w = Window.orderBy(id_col)  # n_centroids rows — single-task window is fine
     cents = first.select(
         (F.row_number().over(w) - 1).alias("cid"), "cvec"
     )
     return with_norm(cents, "cvec", "cnorm")
+
+
+def _search_centroids(
+    corpus, centroids, corpus_assign, n_centroids, emb_col, id_col, fit
+) -> DataFrame:
+    """The coarse centroid frame an IVF/IVF-PQ search runs under: the
+    caller's shared ``centroids`` or a fresh fit of ``corpus``. A shared
+    ``corpus_assign`` without its centroids is refused — an assignment
+    is only meaningful with the centroids that made it (a fresh fit
+    would probe the wrong cells silently)."""
+    if corpus_assign is not None and centroids is None:
+        raise ValueError(
+            "corpus_assign= requires the matching centroids= frame "
+            "(the one that produced the assignment)"
+        )
+    if centroids is not None:
+        return centroids
+    return ivf_centroids(corpus, n_centroids, emb_col, id_col, fit=fit)
 
 
 def ivf_topk(
@@ -610,67 +705,33 @@ def ivf_topk(
     assignment here. ``corpus_assign`` needs ``(id_col, cid, emb_col)``; a ``__nrm``
     column (the ``semdedup_assign`` layout) is reused verbatim when
     present — it is the same left-to-right double sum-of-squares fold as
-    :func:`with_norm`, so results are bitwise-unchanged."""
-    from pyspark.sql import Window
+    :func:`with_norm`, so results are bitwise-unchanged.
 
-    if corpus_assign is not None and centroids is None:
-        # ADVICE r9: a supplied assignment with a freshly-fit internal
-        # centroid frame can silently disagree (wrong cells probed,
-        # degraded recall, no error) — the two are one contract.
-        raise ValueError(
-            "corpus_assign= requires the matching centroids= frame "
-            "(the one that produced the assignment)"
-        )
-    cents = (
-        centroids
-        if centroids is not None
-        else ivf_centroids(corpus, n_centroids, emb_col, id_col, fit=fit)
+    ``probes`` may be a streaming frame — online serving against a
+    store-shaped ``corpus_assign`` (or :func:`ivf_topk_from_store`): the
+    assignment is row-local, the probe micro-batch is the broadcast side
+    of the stream-static ``cid`` join (no AQE runs in micro-batch plans,
+    and the static store must never be shuffled per trigger), and
+    :func:`_rank_topk` takes its streaming form. State is zero."""
+    cents = _search_centroids(
+        corpus, centroids, corpus_assign, n_centroids, emb_col, id_col, fit
     )
-    if corpus_assign is not None:
-        if "__nrm" in corpus_assign.columns:
-            c = corpus_assign.select(
-                F.col(id_col).alias("neighbor_id"),
-                F.col(emb_col).alias("e_c"),
-                "cid",
-                F.col("__nrm").alias("n_c"),
-            )
-        else:
-            c = with_norm(
-                corpus_assign.select(
-                    F.col(id_col).alias("neighbor_id"),
-                    F.col(emb_col).alias("e_c"),
-                    "cid",
-                ),
-                "e_c",
-                "n_c",
-            )
-        c = c.where(F.col("n_c") > 0)
+    asg = (
+        corpus_assign
+        if corpus_assign is not None
+        else ivf_assign(corpus, cents, 1, emb_col)
+    )
+    keep = [F.col(id_col).alias("neighbor_id"), F.col(emb_col).alias("e_c"), "cid"]
+    if "__nrm" in asg.columns:
+        c = asg.select(*keep, F.col("__nrm").alias("n_c"))
     else:
-        c = ivf_assign(corpus, cents, 1, emb_col).select(
-            F.col(id_col).alias("neighbor_id"), F.col(emb_col).alias("e_c"), "cid"
-        )
-        c = with_norm(c, "e_c", "n_c").where(F.col("n_c") > 0)
+        c = with_norm(asg.select(*keep), "e_c", "n_c")
+    c = c.where(F.col("n_c") > 0)
     p = ivf_assign(probes, cents, nprobe, emb_col).select(
         F.col(id_col).alias("probe_id"), F.col(emb_col).alias("e_p"), "cid"
     )
     p = with_norm(p, "e_p", "n_p").where(F.col("n_p") > 0)
-    dot = _dot("e_p", "e_c")
-    scored = (
-        c.join(F.broadcast(p), "cid")
-        .where(F.col("probe_id") != F.col("neighbor_id"))
-        .withColumn("cosine", F.round(dot / (F.col("n_p") * F.col("n_c")), 6))
-    )
-    w = Window.partitionBy("probe_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id").asc())
-    return (
-        # a store grown by appends may carry one id twice with different
-        # vectors: keep each pair's BEST cosine, as the streamed server's
-        # running top-k and the ADC iterators do
-        scored.groupBy("probe_id", "neighbor_id")
-        .agg(F.max("cosine").alias("cosine"))
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("probe_id", "neighbor_id", "cosine", "rank")
-    )
+    return _rank_topk(_cosine_scored(c.join(F.broadcast(p), "cid")), k)
 
 
 #: Sidecar filename for persisted-store metadata. Underscore-prefixed so
@@ -1601,44 +1662,29 @@ def ivfpq_topk_from_store(
     ``centroids=None`` / ``codebooks=None`` (r14) load the metadata the
     store itself persists (:func:`load_store_centroids` /
     :func:`load_store_codebooks`) — ADC serving from nothing but the
-    path; explicitly-passed metadata is digest-checked instead."""
+    path; explicitly-passed metadata is digest-checked instead.
+    ``probes`` may be a streaming frame (online ADC serving; the
+    metadata is loaded and checked once, here)."""
+    centroids, codebooks = _ivfpq_store_meta(
+        spark, path, centroids, codebooks, "ivfpq_topk_from_store"
+    )
+    return _ivfpq_rank(
+        spark.read.parquet(path), probes, centroids, codebooks, k, nprobe,
+        emb_col, id_col,
+    )
+
+
+def _ivfpq_store_meta(spark, path, centroids, codebooks, op):
+    """``(centroids, codebooks)`` of a :func:`write_ivfpq_store` layout:
+    metadata passed as ``None`` loads from the store's sidecar, passed
+    metadata is digest-checked against it."""
+    check_cents, check_books = centroids, codebooks
     if centroids is None:
-        centroids = _require_store_centroids(
-            spark, path, "ivfpq_topk_from_store"
-        )
-        check_cents = None  # self-loaded: no digest round trip
-    else:
-        check_cents = centroids
+        centroids = _require_store_centroids(spark, path, op)
     if codebooks is None:
-        codebooks = _require_store_codebooks(
-            spark, path, "ivfpq_topk_from_store"
-        )
-        check_books = None
-    else:
-        check_books = codebooks
-    check_store_meta(spark, path, check_cents, check_books,
-                     op="ivfpq_topk_from_store")
-    store = spark.read.parquet(path)
-    p = ivf_assign(probes, centroids, nprobe, emb_col).select(
-        F.col(id_col).alias("probe_id"), F.col(emb_col).alias("e_p"), "cid"
-    )
-    cand = (
-        store.join(F.broadcast(p), "cid")
-        .where(F.col("probe_id") != F.col(id_col))
-        .select(
-            "probe_id",
-            F.col(id_col).alias("neighbor_id"),
-            F.col("pq_code").alias("code"),
-            "e_p",
-        )
-    )
-    books = np.asarray([np.asarray(b, dtype=np.float64) for b in codebooks])
-    schema = _adc_out_schema(
-        probes.schema[id_col].dataType, store.schema[id_col].dataType
-    )
-    return cand.repartition("probe_id").mapInPandas(
-        _adc_topk_iter(books, int(k)), schema
-    )
+        codebooks = _require_store_codebooks(spark, path, op)
+    check_store_meta(spark, path, check_cents, check_books, op=op)
+    return centroids, codebooks
 
 
 def append_ivfpq_store(
@@ -1662,23 +1708,10 @@ def append_ivfpq_store(
     carries a metadata sidecar (r14, :func:`check_store_meta`).
     ``centroids=None`` / ``codebooks=None`` load the store's own
     persisted metadata — the safe default."""
-    spark = new_vectors.sparkSession
-    if centroids is None:
-        centroids = _require_store_centroids(
-            spark, path, "append_ivfpq_store"
-        )
-        check_cents = None
-    else:
-        check_cents = centroids
-    if codebooks is None:
-        codebooks = _require_store_codebooks(
-            spark, path, "append_ivfpq_store"
-        )
-        check_books = None
-    else:
-        check_books = codebooks
-    check_store_meta(spark, path, check_cents, check_books,
-                     op="append_ivfpq_store")
+    centroids, codebooks = _ivfpq_store_meta(
+        new_vectors.sparkSession, path, centroids, codebooks,
+        "append_ivfpq_store",
+    )
     asg = ivf_assign(new_vectors, centroids, 1, emb_col)
     coded = pq_encode(asg, codebooks, emb_col).select(
         F.col(id_col), F.col("cid"), F.col("pq_code")
@@ -1964,7 +1997,7 @@ def pq_decode(
     return df.withColumn(out, recon)
 
 
-def _adc_topk_iter(books: np.ndarray, topk: int):
+def _adc_topk_iter(books: np.ndarray, topk: int, carry_probe: bool = False):
     """Build the mapInPandas iterator for ADC top-k scoring.
 
     Keeps a RUNNING top-k per probe across Arrow batches: mapInPandas
@@ -1974,11 +2007,14 @@ def _adc_topk_iter(books: np.ndarray, topk: int):
     Selecting the k smallest under the (dist, neighbor_id) total order is
     associative, so batch-wise merge + one emission at iterator
     exhaustion is exact AND memory-bounded: O(probes_in_partition × k)
-    state, never the full candidate set."""
+    state, never the full candidate set. ``carry_probe`` also emits
+    each probe's raw vector ``e_p`` on its rows (the streamed rerank's
+    shortlist, see :func:`_exact_rerank`)."""
     m, kk_cent, d_sub = books.shape
 
     def adc(batches):
         tables: dict = {}   # probe_id -> m×k ADC lookup table
+        eps: dict = {}      # probe_id -> the probe's raw vector
         best: dict = {}     # probe_id -> (dists, neighbor_ids) top-k so far
         for pdf in batches:
             if not len(pdf):
@@ -1986,7 +2022,8 @@ def _adc_topk_iter(books: np.ndarray, topk: int):
             for probe_id, grp in pdf.groupby("probe_id", sort=False):
                 table = tables.get(probe_id)
                 if table is None:
-                    x = np.asarray(grp["e_p"].iloc[0], dtype=np.float64)
+                    eps[probe_id] = grp["e_p"].iloc[0]
+                    x = np.asarray(eps[probe_id], dtype=np.float64)
                     n = np.linalg.norm(x)
                     if n > 0:
                         x = x / n
@@ -2028,6 +2065,8 @@ def _adc_topk_iter(books: np.ndarray, topk: int):
                         "neighbor_id": ids,
                         "adc_dist": np.round(dists, 9),
                         "rank": np.arange(1, len(ids) + 1),
+                        **({"e_p": [eps[probe_id]] * len(ids)}
+                           if carry_probe else {}),
                     })
                     for probe_id, (dists, ids) in best.items()
                 ],
@@ -2044,6 +2083,53 @@ def _adc_out_schema(probe_id_type, neighbor_id_type) -> str:
         f"probe_id {probe_id_type.simpleString()}, "
         f"neighbor_id {neighbor_id_type.simpleString()}, "
         "adc_dist double, rank long"
+    )
+
+
+def _ivfpq_rank(
+    codes: DataFrame,
+    probes: DataFrame,
+    centroids: DataFrame,
+    codebooks: list,
+    k: int,
+    nprobe: int,
+    emb_col: str,
+    id_col: str,
+    carry_probe: bool = False,
+) -> DataFrame:
+    """THE IVF-PQ candidate tail, shared by :func:`ivfpq_topk`,
+    :func:`ivfpq_topk_from_store` and both reranks: probes assign
+    row-locally to their ``nprobe`` cells, the code rows ``(id_col,
+    cid, pq_code)`` of those cells join on ``cid`` against the
+    BROADCAST probe side (on a persisted store ``cid`` is the partition
+    column, so the join prunes directories; a streaming probe
+    micro-batch never shuffles the static codes), and the running ADC
+    top-k of :func:`_adc_topk_iter` ranks per probe. A corpus row
+    reaches one probe through at most one cell (corpus assignment is
+    1-nearest), so no cross-cell dedup is needed. Output
+    ``(probe_id, neighbor_id, adc_dist, rank)``, plus ``e_p`` with
+    ``carry_probe``."""
+    p = ivf_assign(probes, centroids, nprobe, emb_col).select(
+        F.col(id_col).alias("probe_id"), F.col(emb_col).alias("e_p"), "cid"
+    )
+    cand = (
+        codes.join(F.broadcast(p), "cid")
+        .where(F.col("probe_id") != F.col(id_col))
+        .select(
+            "probe_id",
+            F.col(id_col).alias("neighbor_id"),
+            F.col("pq_code").alias("code"),
+            "e_p",
+        )
+    )
+    books = np.asarray([np.asarray(b, dtype=np.float64) for b in codebooks])
+    schema = _adc_out_schema(
+        probes.schema[id_col].dataType, codes.schema[id_col].dataType
+    )
+    if carry_probe:
+        schema += f", e_p {probes.schema[emb_col].dataType.simpleString()}"
+    return cand.repartition("probe_id").mapInPandas(
+        _adc_topk_iter(books, int(k), carry_probe), schema
     )
 
 
@@ -2123,18 +2209,29 @@ def ivfpq_topk(
     ``centroids`` / ``corpus_assign`` share the coarse fit + full-corpus
     assignment exactly as in :func:`ivf_topk` — with both a shared code
     table AND a shared assignment, this function touches the corpus
-    vectors ZERO times."""
-    if corpus_assign is not None and centroids is None:
-        # ADVICE r9: same cross-function contract as ivf_topk — an
-        # assignment is only meaningful with the centroids that made it.
-        raise ValueError(
-            "corpus_assign= requires the matching centroids= frame "
-            "(the one that produced the assignment)"
-        )
-    cents = (
-        centroids
-        if centroids is not None
-        else ivf_centroids(corpus, n_centroids, emb_col, id_col, fit=fit)
+    vectors ZERO times.
+
+    ``probes`` may be a streaming frame: online ADC serving against the
+    shared code table (or :func:`ivfpq_topk_from_store`)."""
+    cents, codes = _ivfpq_index(
+        corpus, codebooks, n_centroids, emb_col, id_col, fit, corpus_codes,
+        code_col, centroids, corpus_assign,
+    )
+    return _ivfpq_rank(
+        codes, probes, cents, codebooks, k, nprobe, emb_col, id_col
+    )
+
+
+def _ivfpq_index(
+    corpus, codebooks, n_centroids, emb_col, id_col, fit, corpus_codes,
+    code_col, centroids, corpus_assign,
+):
+    """``(centroids, code rows (id_col, cid, pq_code))`` of an in-memory
+    IVF-PQ search: the shared or freshly fit coarse centroids, and the
+    corpus assigned to its nearest cell and PQ-encoded — or the shared
+    ``corpus_codes`` / ``corpus_assign`` frames joined on id."""
+    cents = _search_centroids(
+        corpus, centroids, corpus_assign, n_centroids, emb_col, id_col, fit
     )
     if corpus_codes is not None:
         # persisted/shared code table: (id, pq_code). Skips the encode
@@ -2147,39 +2244,17 @@ def ivfpq_topk(
             if corpus_assign is not None
             else ivf_assign(corpus, cents, 1, emb_col).select(id_col, "cid")
         )
-        c_codes = c.join(
+        return cents, c.join(
             corpus_codes.select(F.col(id_col), F.col(code_col).alias("pq_code")),
             id_col,
         )
-    else:
-        ca = (
-            corpus_assign.select(id_col, "cid", emb_col)
-            if corpus_assign is not None
-            else ivf_assign(corpus, cents, 1, emb_col)
-        )
-        c_codes = pq_encode(ca, codebooks, emb_col).select(
-            F.col(id_col), F.col("cid"), F.col("pq_code")
-        )
-    p = ivf_assign(probes, cents, nprobe, emb_col).select(
-        F.col(id_col).alias("probe_id"), F.col(emb_col).alias("e_p"), "cid"
+    ca = (
+        corpus_assign.select(id_col, "cid", emb_col)
+        if corpus_assign is not None
+        else ivf_assign(corpus, cents, 1, emb_col)
     )
-    books = np.asarray([np.asarray(b, dtype=np.float64) for b in codebooks])
-    topk = int(k)
-
-    cand = (
-        c_codes.join(F.broadcast(p), "cid")
-        .where(F.col("probe_id") != F.col(id_col))
-        .select("probe_id", F.col(id_col).alias("neighbor_id"),
-                F.col("pq_code").alias("code"), "e_p")
-        # a corpus row can reach one probe through at most one cell
-        # (corpus assignment is 1-nearest), so no cross-cell dedup needed
-    )
-
-    schema = _adc_out_schema(
-        probes.schema[id_col].dataType, corpus.schema[id_col].dataType
-    )
-    return cand.repartition("probe_id").mapInPandas(
-        _adc_topk_iter(books, topk), schema
+    return cents, pq_encode(ca, codebooks, emb_col).select(
+        F.col(id_col), F.col("cid"), F.col("pq_code")
     )
 
 
@@ -2218,42 +2293,61 @@ def ivfpq_rerank_topk(
     store is id-partitioned parquet — a shortlist lookup, not a scan),
     then takes the final top-k under the exact metric (cosine_topk's
     rounding + tie rules, so rerank(shortlist=corpus_size) degrades to
-    exact by construction). Output: probe_id, neighbor_id, cosine, rank.
+    exact by construction; a float corpus holding an id twice still
+    ranks that neighbor once). ``probes`` may be a streaming frame (see
+    :func:`_exact_rerank`). Output: probe_id, neighbor_id, cosine, rank.
     """
-    short = ivfpq_topk(
-        corpus, probes, codebooks, k=int(shortlist),
-        n_centroids=n_centroids, nprobe=nprobe, emb_col=emb_col,
-        id_col=id_col, fit=fit, corpus_codes=corpus_codes,
-        code_col=code_col, centroids=centroids,
-        corpus_assign=corpus_assign,
-    ).select("probe_id", "neighbor_id")
-    c = with_norm(corpus, emb_col, "n_c").select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(emb_col).alias("e_c"), "n_c",
-    ).where(F.col("n_c") > 0)
-    p = with_norm(probes, emb_col, "n_p").select(
-        F.col(id_col).alias("probe_id"), F.col(emb_col).alias("e_p"), "n_p"
-    ).where(F.col("n_p") > 0)
-    scored = (
-        short.join(c, "neighbor_id")        # shortlist-bounded id lookup
-        .join(F.broadcast(p), "probe_id")   # probes are the small side
-        .withColumn(
-            "cosine",
-            F.round(
-                _dot("e_p", "e_c") / (F.col("n_p") * F.col("n_c")),
-                round_digits,
-            ),
-        )
+    cents, codes = _ivfpq_index(
+        corpus, codebooks, n_centroids, emb_col, id_col, fit, corpus_codes,
+        code_col, centroids, corpus_assign,
     )
-    from pyspark.sql import Window
+    return _exact_rerank(
+        codes, corpus, probes, cents, codebooks, k, shortlist, nprobe,
+        emb_col, id_col, round_digits,
+    )
 
-    w = Window.partitionBy("probe_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
+
+def _exact_rerank(
+    codes, float_corpus, probes, centroids, codebooks, k, shortlist, nprobe,
+    emb_col, id_col, round_digits,
+) -> DataFrame:
+    """THE rerank body of :func:`ivfpq_rerank_topk` and
+    :func:`ivfpq_rerank_from_store`: the ADC top-``shortlist`` of
+    :func:`_ivfpq_rank`, looked up in ``float_corpus`` by id and
+    re-scored with exact rounded cosine, ranked by :func:`_rank_topk`.
+
+    Its one stream-only step: a streaming probe frame cannot be joined
+    back (a shortlist↔probes join would be a stream-stream self-join,
+    which Spark either rejects or turns into unbounded state), so the
+    shortlist CARRIES each probe's vector (~shortlist copies of one
+    array per probe) and is the broadcast side of the float lookup —
+    the static float store is never shuffled per trigger. A batch
+    shortlist joins the float corpus, then the broadcast probes."""
+    streaming = probes.isStreaming
+    short = _ivfpq_rank(
+        codes, probes, centroids, codebooks, shortlist, nprobe, emb_col,
+        id_col, carry_probe=streaming,
     )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= int(k))
-        .select("probe_id", "neighbor_id", "cosine", "rank")
+    c = with_norm(float_corpus, emb_col, "n_c").select(
+        F.col(id_col).alias("neighbor_id"), F.col(emb_col).alias("e_c"), "n_c",
+    ).where(F.col("n_c") > 0)
+    if streaming:
+        cand = c.join(
+            F.broadcast(short.select("probe_id", "neighbor_id", "e_p")),
+            "neighbor_id",
+        )
+    else:
+        p = probes.select(
+            F.col(id_col).alias("probe_id"), F.col(emb_col).alias("e_p")
+        )
+        cand = (
+            short.select("probe_id", "neighbor_id")
+            .join(c, "neighbor_id")             # shortlist-bounded id lookup
+            .join(F.broadcast(p), "probe_id")   # probes are the small side
+        )
+    cand = cand.withColumn("n_p", F.sqrt(_dot("e_p", "e_p")))
+    return _rank_topk(
+        _cosine_scored(cand.where(F.col("n_p") > 0), round_digits), k
     )
 
 
@@ -2273,9 +2367,8 @@ def ivfpq_rerank_from_store(
 ) -> DataFrame:
     """:func:`ivfpq_rerank_topk` served from the PERSISTED codes store —
     the batch leg completing the rerank serving matrix (in-memory batch
-    :func:`ivfpq_rerank_topk`, streamed store twin
-    :func:`~wingfoil_spark.streaming.ingest.ivfpq_rerank_stream`, batch
-    store: here). Stage 1 ADC-generates the top-``shortlist`` from the
+    :func:`ivfpq_rerank_topk`, store:
+    here — batch or streamed probes alike). Stage 1 ADC-generates the top-``shortlist`` from the
     codes-only store (:func:`ivfpq_topk_from_store`: DPP cell pruning,
     m byte-lookups per candidate — no float column exists in the
     store); stage 2 reads ONLY probes × shortlist float rows from
@@ -2286,35 +2379,10 @@ def ivfpq_rerank_from_store(
     the store's own persisted metadata, so serving needs the codes
     path plus the float table. Row-identical to
     :func:`ivfpq_rerank_topk` under the same metadata (test-pinned)."""
-    short = ivfpq_topk_from_store(
-        spark, path, centroids, codebooks, probes, k=int(shortlist),
-        nprobe=nprobe, emb_col=emb_col, id_col=id_col,
-    ).select("probe_id", "neighbor_id")
-    c = with_norm(float_corpus, emb_col, "n_c").select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(emb_col).alias("e_c"), "n_c",
-    ).where(F.col("n_c") > 0)
-    p = with_norm(probes, emb_col, "n_p").select(
-        F.col(id_col).alias("probe_id"), F.col(emb_col).alias("e_p"), "n_p"
-    ).where(F.col("n_p") > 0)
-    scored = (
-        short.join(c, "neighbor_id")        # shortlist-bounded id lookup
-        .join(F.broadcast(p), "probe_id")   # probes are the small side
-        .withColumn(
-            "cosine",
-            F.round(
-                _dot("e_p", "e_c") / (F.col("n_p") * F.col("n_c")),
-                round_digits,
-            ),
-        )
+    centroids, codebooks = _ivfpq_store_meta(
+        spark, path, centroids, codebooks, "ivfpq_rerank_from_store"
     )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("probe_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= int(k))
-        .select("probe_id", "neighbor_id", "cosine", "rank")
+    return _exact_rerank(
+        spark.read.parquet(path), float_corpus, probes, centroids, codebooks,
+        k, shortlist, nprobe, emb_col, id_col, round_digits,
     )

@@ -60,7 +60,7 @@ def tumbling_vwap(t: Stream, interval_ns: int) -> Stream:
     """Per-instrument volume-weighted average price per tumbling interval.
     One shuffle on (instrument, bucket); decimal-exact accumulation, final
     division in double."""
-    bucket = F.expr(f"{t.ts} div {interval_ns}")
+    bucket = F.call_function("div", F.col(t.ts), F.lit(int(interval_ns)))
     df = (
         t.df.withColumn("__b", bucket)
         .groupBy(*t.keys, "__b")

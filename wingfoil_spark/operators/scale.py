@@ -31,7 +31,9 @@ from wingfoil_spark.stream import Stream
 def _bucketed(s: Stream, bucket_width: int):
     """Attach a monotone time-bucket column; returns (df, order_cols)."""
     order = [F.col(s.ts).asc()] + ([F.col(s.seq).asc()] if s.seq else [])
-    df = s.df.withColumn("__b", F.expr(f"{s.ts} div {bucket_width}"))
+    df = s.df.withColumn(
+        "__b", F.call_function("div", F.col(s.ts), F.lit(int(bucket_width)))
+    )
     return df, order
 
 

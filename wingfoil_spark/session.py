@@ -97,3 +97,22 @@ def get_spark(app_name: str = "wingfoil_spark", cpus: int | None = None) -> Spar
     if _PACKAGE_PARENT not in paths:
         env["PYTHONPATH"] = os.pathsep.join([_PACKAGE_PARENT, *paths])
     return configure_session(spark)
+
+
+def overlap(*thunks):
+    """Run independent driver-side job chains concurrently; return their
+    results in argument order. A chain's error is raised once every
+    chain has finished.
+
+    Spark runs jobs only as sequentially as the driver submits them: a
+    chain of small eager jobs (fits, checkpoints, store writes) leaves
+    most cores idle, and submitting independent chains from driver
+    threads lets the scheduler back-fill them. Each call sizes its own
+    pool to one thread per thunk, so every chain starts at once and a
+    thunk may itself call ``overlap`` for a sub-chain it needs first;
+    never wait inside one thunk on another thunk's result."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    with ThreadPoolExecutor(max_workers=max(1, len(thunks))) as pool:
+        futures = [pool.submit(t) for t in thunks]
+        return [f.result() for f in futures]

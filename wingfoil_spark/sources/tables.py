@@ -58,7 +58,7 @@ def ts_us_expr(df: DataFrame, col: str = "ts"):
             f"to match DuckDB epoch_us; got {tz!r}"
         )
         return F.unix_micros(F.col(col).cast("timestamp"))
-    return F.expr(f"{col} div 1000")
+    return F.call_function("div", F.col(col), F.lit(1000))
 
 
 #: KDB epoch is 2000-01-01, Unix epoch is 1970-01-01 — the reference's

@@ -465,7 +465,9 @@ class Stream:
         throttle_exact`."""
         # integer division: exact for int64 timestamps (float division would
         # lose precision above 2^53 ns)
-        bucket = F.expr(f"({self.ts} - {origin_ns}) div {interval_ns}")
+        bucket = F.call_function(
+            "div", F.col(self.ts) - F.lit(int(origin_ns)), F.lit(int(interval_ns))
+        )
         w = Window.partitionBy(*(list(self.keys) + ["__b"])).orderBy(*self._order_cols())
         df = (
             self.df.withColumn("__b", bucket)
@@ -480,7 +482,9 @@ class Stream:
         (fluent.rs:988, ops.rs:583-658) — flush carries the interval-end
         timestamp. One shuffle on (keys, bucket); partial aggregation is
         map-side."""
-        bucket = F.expr(f"({self.ts} - {origin_ns}) div {interval_ns}")
+        bucket = F.call_function(
+            "div", F.col(self.ts) - F.lit(int(origin_ns)), F.lit(int(interval_ns))
+        )
         df = (
             self.df.withColumn("__b", bucket)
             .groupBy(*self.keys, "__b")

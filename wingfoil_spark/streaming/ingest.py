@@ -51,10 +51,9 @@ from wingfoil_spark.functions.text import tokens
 from wingfoil_spark.functions.text import fingerprint
 from wingfoil_spark.functions.similarity import (
     _ann_probes,
-    _dot,
+    _cosine_scored,
+    _rank_topk,
     build_ann_index,  # noqa: F401 — re-exported: the streamed tier's index
-    ivf_assign,
-    with_norm,
 )
 
 
@@ -689,496 +688,29 @@ def ann_topk_stream(
 
     ``probes`` may be a streaming frame; ``index`` is the static
     :func:`build_ann_index` output built with the same ``bits`` and
-    ``n_tables``. The probe side is the batch tier's own builder, so
-    only the ranker differs. Plan per micro-batch, fully stateless:
-    row-local probe signatures → stream-static equi-join on
-    ``(tbl, bucket)`` → repartition by probe (all of one probe's
-    candidates colocate — a probe lives in exactly one micro-batch) →
-    per-partition pandas top-k.
-
-    Window functions are illegal on streams, and a groupBy would drag in
-    watermark/output-mode state for what is per-batch-local work — the
-    repartition + mapInPandas pair gets exact per-probe top-k with one
-    intra-batch shuffle and zero standing state. Ranking matches the
-    batch tier: cosine rounded to 6dp desc, neighbor id asc.
-
-    The pandas iterator keeps a RUNNING top-k per probe across Arrow
-    batches: mapInPandas splits a partition into ~10k-row batches, so a
-    per-batch groupby head(k) would emit up to k rows PER BATCH with
-    ranks restarting at 1 whenever one probe's candidate set spans
-    batches (same class as the round-5 ADC finding —
-    :func:`wingfoil_spark.functions.similarity._adc_topk_iter`).
-    Selecting the k best under the (-cosine, neighbor_id) total order is
-    associative, so batch-wise merge + one emission at exhaustion is
-    exact and O(probes_in_partition × k) memory. It also keeps each
-    (probe, neighbor) pair once, which collapses the pairs that
-    co-bucket in several tables at ``n_tables > 1`` (identical cosine
-    per duplicate, so the merge is exact) — no streaming
-    dropDuplicates, no keyed state.
+    ``n_tables``. The probe side, the scoring and the ranker
+    (``similarity._rank_topk``: running top-k on a stream, the window
+    on a batch frame) are the batch tier's own; only the prebuilt index
+    differs. Plan per micro-batch, fully stateless: row-local probe
+    signatures → stream-static equi-join on ``(tbl, bucket)`` →
+    repartition by probe (a probe lives in exactly one micro-batch) →
+    running per-probe top-k, each (probe, neighbor) pair kept once —
+    which collapses the pairs that co-bucket in several tables at
+    ``n_tables > 1`` with no streaming dropDuplicates and no keyed
+    state. Ranking: cosine rounded to 6dp desc, neighbor id asc.
     """
     p = _ann_probes(
         probes, emb_col, id_col, bits, n_tables, probe_hamming,
         "ann_topk_stream",
     )
-    dot = _dot("e_p", "e_c")
-    scored = (
-        # the PROBE micro-batch is broadcast explicitly (review r12):
-        # AQE does not run inside streaming micro-batch plans and the
-        # static planner sizes the stream side at defaultSizeInBytes,
-        # so without the hint a large static index gets sort-merge
-        # SHUFFLED in its entirety every trigger for a handful of
-        # probes — the batch twin broadcasts the probe side for the
-        # same reason. A serving micro-batch is small by definition;
-        # batch-mode callers with huge probe sets should use the batch
-        # tier (lsh_bucketed_topk), which lets AQE pick the strategy.
-        index.join(F.broadcast(p), ["tbl", "bucket"])
-        .where(F.col("probe_id") != F.col("neighbor_id"))
-        .select(
-            "probe_id",
-            "neighbor_id",
-            F.round(dot / (F.col("n_p") * F.col("n_c")), 6).alias("cosine"),
-        )
-    )
-    # id field types DERIVED from the inputs (string/UUID ids must not
-    # fail on a hardcoded long — the _adc_out_schema rule; review r12)
-    schema = (
-        f"probe_id {probes.schema[id_col].dataType.simpleString()}, "
-        f"neighbor_id {index.schema['neighbor_id'].dataType.simpleString()}, "
-        "cosine double, rank long"
-    )
-    return scored.repartition("probe_id").mapInPandas(
-        _running_cosine_topk_iter(int(k)), schema
-    )
-
-
-def _running_cosine_topk_iter(kk: int):
-    """mapInPandas iterator: RUNNING per-probe top-k over
-    (probe_id, neighbor_id, cosine) rows, merged across Arrow batches
-    under the (-cosine, neighbor_id) total order and flushed as ONE
-    frame per partition (a per-probe yield would make one Arrow batch
-    per probe — thousands of ≤k-row batches whose serialization
-    dominates the flush). Shared by :func:`ann_topk_stream` and
-    :func:`ivf_topk_stream` — the batching-invariance contract is
-    pinned once in tests/test_streaming_ingest.py.
-
-    Each (probe, neighbor) pair is kept ONCE (best cosine), as the
-    batch IVF twin does before ranking, and a
-    store grown by ``append_ivf_store`` may legitimately carry a
-    duplicate id (dedup is the caller's crawl-gate job there) — without
-    this, a duplicated neighbor would occupy two ranks in the stream
-    result and push a real neighbor out of the k (review r11)."""
-    import numpy as np
-    import pandas as pd
-
-    def topk(batches):
-        best: dict = {}  # probe_id -> (cosines, neighbor_ids) top-k so far
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            for probe_id, grp in pdf.groupby("probe_id", sort=False):
-                cos = grp["cosine"].to_numpy(dtype=np.float64)
-                ids = grp["neighbor_id"].to_numpy()
-                if probe_id in best:
-                    pcos, pids = best[probe_id]
-                    cos = np.concatenate([pcos, cos])
-                    ids = np.concatenate([pids, ids])
-                order = np.lexsort((ids, -cos))
-                cos, ids = cos[order], ids[order]
-                # first occurrence per neighbor under the rank order ==
-                # best cosine per pair (associative across batch merges)
-                keep = np.sort(np.unique(ids, return_index=True)[1])[:kk]
-                best[probe_id] = (cos[keep], ids[keep])
-        if best:
-            yield pd.concat(
-                [
-                    pd.DataFrame({
-                        "probe_id": probe_id,
-                        "neighbor_id": ids,
-                        "cosine": cos,
-                        "rank": np.arange(1, len(ids) + 1),
-                    })
-                    for probe_id, (cos, ids) in best.items()
-                ],
-                ignore_index=True,
-            )
-
-    return topk
-
-
-def ivf_topk_stream(
-    probes,
-    store,
-    centroids,
-    k: int = 5,
-    nprobe: int = 4,
-    emb_col: str = "embedding",
-    id_col: str = "vec_id",
-):
-    """Online IVF serving from the PERSISTED store: top-k cosine
-    neighbors of ARRIVING probe vectors against a
-    :func:`~wingfoil_spark.functions.similarity.write_ivf_store` layout
-    — the streaming twin of ``ivf_topk_from_store``: the same row-local
-    probe assignment, ranked by the running top-k instead of a window
-    (illegal on a stream).
-
-    ``probes`` may be a streaming frame; ``store`` is the static
-    ``spark.read.parquet(path)`` frame and ``centroids`` the metadata
-    frame persisted beside it (this op takes frames, not a path, so it
-    cannot verify the store's metadata sidecar itself — call
-    ``similarity.check_store_meta(spark, path, centroids)`` once at
-    stream construction, as the batch twin does). Plan per micro-batch,
-    fully stateless:
-    ROW-LOCAL nprobe assignment (``similarity.ivf_assign`` — the
-    centroid metadata as one broadcast array row, top-nprobe via
-    array_sort: no window, no shuffle, streaming-legal) → stream-static
-    equi-join on ``cid`` → repartition by probe → running per-probe
-    top-k across Arrow batches (shared iterator with
-    :func:`ann_topk_stream`).
-    Ranking matches the batch tier: cosine rounded to 6dp desc,
-    neighbor id asc. Batch == stream row-for-row against
-    ``ivf_topk_from_store`` on the same store (test-pinned).
-
-    At scale the static side is the cell-partitioned parquet; each
-    micro-batch's join touches candidate rows only (AQE decides
-    broadcast vs shuffle per batch), and state is zero — a probe lives
-    in exactly one micro-batch."""
-    p = ivf_assign(probes, centroids, nprobe, emb_col).select(
-        F.col(id_col).alias("probe_id"), F.col(emb_col).alias("e_p"), "cid"
-    )
-    p = with_norm(p, "e_p", "n_p").where(F.col("n_p") > 0)
-    c = store.select(
-        F.col(id_col).alias("neighbor_id"), F.col(emb_col).alias("e_c"), "cid"
-    )
-    c = with_norm(c, "e_c", "n_c").where(F.col("n_c") > 0)
-    dot = _dot("e_p", "e_c")
-    scored = (
-        # probe micro-batch broadcast — same rationale as
-        # ann_topk_stream (no AQE in micro-batch plans; the static cell
-        # store must never be shuffled per trigger; review r12)
-        c.join(F.broadcast(p), "cid")
-        .where(F.col("probe_id") != F.col("neighbor_id"))
-        .select(
-            "probe_id",
-            "neighbor_id",
-            F.round(dot / (F.col("n_p") * F.col("n_c")), 6).alias("cosine"),
-        )
-        # a probe assigned to nprobe cells can meet the same neighbor
-        # only once (the store assigns each vector to ONE cell), so no
-        # pair dedup is needed before the top-k
-    )
-    # id field types DERIVED from the inputs, like _adc_out_schema
-    schema = (
-        f"probe_id {probes.schema[id_col].dataType.simpleString()}, "
-        f"neighbor_id {store.schema[id_col].dataType.simpleString()}, "
-        "cosine double, rank long"
-    )
-    return scored.repartition("probe_id").mapInPandas(
-        _running_cosine_topk_iter(int(k)), schema
-    )
-
-
-def ivfpq_topk_stream(
-    probes,
-    store,
-    centroids,
-    codebooks: list,
-    k: int = 5,
-    nprobe: int = 4,
-    emb_col: str = "embedding",
-    id_col: str = "vec_id",
-):
-    """Online ADC serving from the CODES-ONLY store: top-k neighbors of
-    ARRIVING probe vectors against a
-    :func:`~wingfoil_spark.functions.similarity.write_ivfpq_store`
-    layout — the streaming twin of ``ivfpq_topk_from_store`` and the
-    third leg of the serving matrix (LSH index → :func:`ann_topk_stream`,
-    IVF cells → :func:`ivf_topk_stream`, PQ codes → here). This is the
-    billion-vector serving shape: the static side holds m smallints per
-    vector — no float corpus column exists anywhere in the join.
-
-    ``probes`` may be a streaming frame; ``store`` is the static
-    ``spark.read.parquet(path)`` codes frame (``id, pq_code, cid``) and
-    ``centroids``/``codebooks`` the metadata persisted beside it
-    (frames, not a path — verify the sidecar once at stream
-    construction via ``similarity.check_store_meta(spark, path,
-    centroids, codebooks)``, as the batch twin does). Plan
-    per micro-batch, fully stateless: row-local nprobe assignment
-    (``similarity.ivf_assign`` — window-free, streaming-legal) →
-    stream-static equi-join on ``cid`` → per-probe running ADC top-k
-    across Arrow batches (the shared ``_adc_topk_iter`` — its
-    batching-invariance is pinned with the batch tiers). Results are
-    identical to ``ivfpq_topk_from_store`` under the same metadata
-    (test-pinned)."""
-    import numpy as np
-
-    from wingfoil_spark.functions.similarity import (
-        _adc_out_schema,
-        _adc_topk_iter,
-    )
-
-    p = ivf_assign(probes, centroids, nprobe, emb_col).select(
-        F.col(id_col).alias("probe_id"), F.col(emb_col).alias("e_p"), "cid"
-    )
-    cand = (
-        # probe micro-batch broadcast — same rationale as
-        # ann_topk_stream (no AQE in micro-batch plans; the codes store
-        # must never be shuffled per trigger; review r12). The batch
-        # twin ivfpq_topk_from_store broadcasts the probe side too.
-        store.join(F.broadcast(p), "cid")
-        .where(F.col("probe_id") != F.col(id_col))
-        .select(
-            "probe_id",
-            F.col(id_col).alias("neighbor_id"),
-            F.col("pq_code").alias("code"),
-            "e_p",
-        )
-    )
-    books = np.asarray([np.asarray(b, dtype=np.float64) for b in codebooks])
-    schema = _adc_out_schema(
-        probes.schema[id_col].dataType, store.schema[id_col].dataType
-    )
-    return cand.repartition("probe_id").mapInPandas(
-        _adc_topk_iter(books, int(k)), schema
-    )
-
-
-def _adc_shortlist_iter(books, shortlist: int):
-    """mapInPandas iterator for the STREAMED rerank's stage 1: the same
-    running ADC top-``shortlist`` merge as
-    :func:`~wingfoil_spark.functions.similarity._adc_topk_iter` (same
-    (dist, neighbor_id) total order, same duplicate-id first-occurrence
-    rule), but the flush emits ``(probe_id, neighbor_id, e_p)`` — the
-    probe VECTOR rides along so the exact re-scoring stage needs no
-    second look at the probe stream (a shortlist↔probes join would be a
-    stream-stream self-join, which Spark either rejects or turns into
-    unbounded state; carrying ~shortlist copies of one 64-float array
-    per probe is the cheap alternative)."""
-    import numpy as np
-    import pandas as pd
-
-    m, kk_cent, d_sub = books.shape
-
-    def adc(batches):
-        tables: dict = {}
-        eps: dict = {}      # probe_id -> the probe's raw vector
-        best: dict = {}
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            for probe_id, grp in pdf.groupby("probe_id", sort=False):
-                table = tables.get(probe_id)
-                if table is None:
-                    raw = grp["e_p"].iloc[0]
-                    eps[probe_id] = raw
-                    x = np.asarray(raw, dtype=np.float64)
-                    n = np.linalg.norm(x)
-                    if n > 0:
-                        x = x / n
-                    table = np.empty((m, kk_cent), dtype=np.float64)
-                    for j in range(m):
-                        sub = x[j * d_sub:(j + 1) * d_sub]
-                        table[j] = ((books[j] - sub[None, :]) ** 2).sum(axis=1)
-                    tables[probe_id] = table
-                codes = np.asarray(
-                    [np.asarray(c, dtype=np.int64) for c in grp["code"]]
-                )
-                dists = table[np.arange(m)[None, :], codes].sum(axis=1)
-                ids = grp["neighbor_id"].to_numpy()
-                if probe_id in best:
-                    pdists, pids = best[probe_id]
-                    dists = np.concatenate([pdists, dists])
-                    ids = np.concatenate([pids, ids])
-                order = np.lexsort((ids, dists))
-                dists, ids = dists[order], ids[order]
-                keep = np.sort(np.unique(ids, return_index=True)[1])[:shortlist]
-                best[probe_id] = (dists[keep], ids[keep])
-        if best:
-            yield pd.concat(
-                [
-                    pd.DataFrame({
-                        "probe_id": probe_id,
-                        "neighbor_id": ids,
-                        "e_p": [eps[probe_id]] * len(ids),
-                    })
-                    for probe_id, (dists, ids) in best.items()
-                ],
-                ignore_index=True,
-            )
-
-    return adc
-
-
-def ivfpq_rerank_stream(
-    probes,
-    store,
-    centroids,
-    codebooks: list,
-    float_corpus,
-    k: int = 5,
-    shortlist: int = 50,
-    nprobe: int = 4,
-    emb_col: str = "embedding",
-    id_col: str = "vec_id",
-):
-    """Streamed twin of :func:`~wingfoil_spark.functions.similarity.
-    ivfpq_rerank_topk` — online candidate generation from the CODES-ONLY
-    store plus an exact cosine re-rank of the ADC shortlist (r14; the
-    production serving composition the planted-cluster recall arm
-    motivates: the quantizer finds the right neighborhood, the exact
-    pass ranks within it).
-
-    ``probes`` may be a streaming frame; ``store`` is the static codes
-    frame (``id, pq_code, cid``), ``centroids``/``codebooks`` its
-    metadata, and ``float_corpus`` the static ``(id, embedding)`` float
-    source for the shortlist lookup (at scale: the id-partitioned float
-    store — only ``probes × shortlist`` rows of it are ever read per
-    micro-batch, through the id equi-join). Plan per micro-batch, fully
-    stateless: row-local nprobe assignment → stream-static cid join →
-    running ADC top-``shortlist`` per probe (``_adc_shortlist_iter``,
-    which carries the probe vector through so no second probe join is
-    needed) → stream-static id join to the float side (shortlist
-    micro-batch broadcast — the codes/float stores must never be
-    shuffled per trigger) → exact 6dp-rounded cosine → the shared
-    running top-k. Matches the batch tier row-for-row under the same
-    store + metadata (test-pinned)."""
-    import numpy as np
-
-    p = ivf_assign(probes, centroids, nprobe, emb_col).select(
-        F.col(id_col).alias("probe_id"), F.col(emb_col).alias("e_p"), "cid"
-    )
-    cand = (
-        store.join(F.broadcast(p), "cid")
-        .where(F.col("probe_id") != F.col(id_col))
-        .select(
-            "probe_id",
-            F.col(id_col).alias("neighbor_id"),
-            F.col("pq_code").alias("code"),
-            "e_p",
-        )
-    )
-    books = np.asarray([np.asarray(b, dtype=np.float64) for b in codebooks])
-    pt = probes.schema[emb_col].dataType.simpleString()
-    short_schema = (
-        f"probe_id {probes.schema[id_col].dataType.simpleString()}, "
-        f"neighbor_id {store.schema[id_col].dataType.simpleString()}, "
-        f"e_p {pt}"
-    )
-    short = cand.repartition("probe_id").mapInPandas(
-        _adc_shortlist_iter(books, int(shortlist)), short_schema
-    )
-    c = with_norm(
-        float_corpus.select(
-            F.col(id_col).alias("neighbor_id"), F.col(emb_col).alias("e_c")
-        ),
-        "e_c", "n_c",
-    ).where(F.col("n_c") > 0)
-    scored = (
-        c.join(F.broadcast(short), "neighbor_id")
-        .withColumn("n_p", F.sqrt(_dot("e_p", "e_p")))
-        .where(F.col("n_p") > 0)
-        .select(
-            "probe_id",
-            "neighbor_id",
-            F.round(
-                _dot("e_p", "e_c") / (F.col("n_p") * F.col("n_c")), 6
-            ).alias("cosine"),
-        )
-    )
-    schema = (
-        f"probe_id {probes.schema[id_col].dataType.simpleString()}, "
-        f"neighbor_id {store.schema[id_col].dataType.simpleString()}, "
-        "cosine double, rank int"
-    )
-    return scored.repartition("probe_id").mapInPandas(
-        _running_cosine_topk_iter(int(k)), schema
-    )
-
-
-def ivf_topk_stream_from_store(
-    spark,
-    probes,
-    path: str,
-    k: int = 5,
-    nprobe: int = 4,
-    emb_col: str = "embedding",
-    id_col: str = "vec_id",
-):
-    """Path-only construction of :func:`ivf_topk_stream` (r14): the
-    store frame and its sidecar-persisted centroids are loaded HERE,
-    once, at stream construction — an online server needs spark + the
-    store path + the probe stream, nothing else (self-describing
-    stores; raises the standard clear error for a pre-sidecar store).
-    The running plan is exactly the frame-based twin's."""
-    from wingfoil_spark.functions.similarity import (
-        _require_store_centroids,
-    )
-
-    cents = _require_store_centroids(
-        spark, path, "ivf_topk_stream_from_store"
-    )
-    return ivf_topk_stream(
-        probes, spark.read.parquet(path), cents,
-        k=k, nprobe=nprobe, emb_col=emb_col, id_col=id_col,
-    )
-
-
-def ivfpq_topk_stream_from_store(
-    spark,
-    probes,
-    path: str,
-    k: int = 5,
-    nprobe: int = 4,
-    emb_col: str = "embedding",
-    id_col: str = "vec_id",
-):
-    """Path-only construction of :func:`ivfpq_topk_stream` (r14):
-    codes frame, centroids AND codebooks all load from the store —
-    streamed ADC serving from nothing but the path."""
-    from wingfoil_spark.functions.similarity import (
-        _require_store_centroids,
-        _require_store_codebooks,
-    )
-
-    cents = _require_store_centroids(
-        spark, path, "ivfpq_topk_stream_from_store"
-    )
-    books = _require_store_codebooks(
-        spark, path, "ivfpq_topk_stream_from_store"
-    )
-    return ivfpq_topk_stream(
-        probes, spark.read.parquet(path), cents, books,
-        k=k, nprobe=nprobe, emb_col=emb_col, id_col=id_col,
-    )
-
-
-def ivfpq_rerank_stream_from_store(
-    spark,
-    probes,
-    path: str,
-    float_corpus,
-    k: int = 5,
-    shortlist: int = 50,
-    nprobe: int = 4,
-    emb_col: str = "embedding",
-    id_col: str = "vec_id",
-):
-    """Path-only construction of :func:`ivfpq_rerank_stream` (r14) —
-    the production serving composition from the codes path plus the
-    float table (``float_corpus``: the id-partitioned float source the
-    shortlist lookup reads, probes × shortlist rows per micro-batch)."""
-    from wingfoil_spark.functions.similarity import (
-        _require_store_centroids,
-        _require_store_codebooks,
-    )
-
-    cents = _require_store_centroids(
-        spark, path, "ivfpq_rerank_stream_from_store"
-    )
-    books = _require_store_codebooks(
-        spark, path, "ivfpq_rerank_stream_from_store"
-    )
-    return ivfpq_rerank_stream(
-        probes, spark.read.parquet(path), cents, books, float_corpus,
-        k=k, shortlist=shortlist, nprobe=nprobe,
-        emb_col=emb_col, id_col=id_col,
+    # the PROBE micro-batch is broadcast explicitly (review r12): AQE
+    # does not run inside streaming micro-batch plans and the static
+    # planner sizes the stream side at defaultSizeInBytes, so without
+    # the hint a large static index gets sort-merge SHUFFLED in its
+    # entirety every trigger for a handful of probes. A serving
+    # micro-batch is small by definition; batch-mode callers with huge
+    # probe sets should use the batch tier (lsh_bucketed_topk), which
+    # lets AQE pick the strategy.
+    return _rank_topk(
+        _cosine_scored(index.join(F.broadcast(p), ["tbl", "bucket"])), k
     )
