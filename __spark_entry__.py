@@ -1153,8 +1153,9 @@ def q_decon_stream(spark, sf_dir):
       similarity.table_seed; table 0 is the historical 'hp' planes).
 
     - part='clf' (aux=0, v=round(logit,6)): the trained-quality-
-      classifier SERVING path streamed — ingest.clf_score_stream under
-      the frozen derived coefs row (_derived_qc_model, the SAME
+      classifier SERVING path streamed — selection.quality_scores (the
+      batch scorer, row-local) on the doc stream under the frozen
+      derived coefs row (_derived_qc_model, the SAME
       generator the batch selection grade uses). DSIR/BM25/LM scorers
       have streamed graded rows since r8; the classifier — the quality
       gate a continuous crawl actually filters with — was batch-graded
@@ -1225,6 +1226,7 @@ def q_decon_stream(spark, sf_dir):
     import uuid
 
     from wingfoil_spark.functions import lm as lm_mod
+    from wingfoil_spark.functions import selection as sel
     from wingfoil_spark.streaming import ingest
 
     PART_WALLS.clear()
@@ -1401,7 +1403,7 @@ def q_decon_stream(spark, sf_dir):
         # (ONE generator, _derived_qc_model), checkpointed so every
         # micro-batch broadcasts a pinned frame (fitted in the
         # store-snapshot pool above).
-        clf = ingest.clf_score_stream(stream, qcm).select(
+        clf = sel.quality_scores(stream, qcm).select(
             F.lit("clf").alias("part"), "doc_id", zero,
             F.round("logit", 6).alias("v"),
         )

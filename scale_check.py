@@ -372,6 +372,7 @@ def decon_stream_scale(spark):
 
     from pyspark.sql import functions as F
 
+    from wingfoil_spark.functions import selection as sel
     from wingfoil_spark.sources.tables import load_table
     from wingfoil_spark.streaming import ingest
 
@@ -538,7 +539,7 @@ def decon_stream_scale(spark):
                 paths[esrc], emb_schema,
             )
             t_clf, n_clf = run_stream(
-                lambda s: ingest.clf_score_stream(s, qcm).select("doc_id"),
+                lambda s: sel.quality_scores(s, qcm).select("doc_id"),
                 paths[dsrc], doc_schema,
             )
             res[cname] = {

@@ -71,7 +71,6 @@ _FULL_ONLY = (
     "test_fix_codec.py::test_groups_split_differential_vs_python_walk",
     "test_lm_packing.py::test_kn_differential",
     "test_lm_packing.py::test_lm_differential",
-    "test_streaming_timers.py::test_delay_timer_random_splits",
     "test_scale_primitives.py::test_salted_grouped_apply_beats_hot_python_stage",
     "test_bpe.py::test_incremental_trainer_speed",
     "test_bpe.py::test_hypothesis_differential",
@@ -139,3 +138,40 @@ def py4j_commands(monkeypatch):
             open_counters.remove(c)
 
     return count
+
+
+@pytest.fixture
+def delay_with_reset_walk():
+    """Reference rows for ``delay_with_reset``: the streamed op's timer
+    walk (``twins.delay_with_reset_timer_op``) driven per key in pandas
+    over the tagged source/trigger union, with the watermark at int64 max
+    so every pending delivery fires. ``src``/``trg`` are pandas frames
+    carrying ``keys``, ``ts`` and ``seq`` (``None``: all 0); ``src`` also
+    carries ``vals``. Returns (keys, ts, vals) rows."""
+    import numpy as np
+    import pandas as pd
+
+    from wingfoil_spark.streaming.twins import delay_with_reset_timer_op
+
+    def walk(src, trg, delay, ts, seq, keys, vals):
+        def tag(pdf, trig):
+            out = pdf[list(keys)].copy()
+            out["__t"] = pdf[ts].to_numpy()
+            out["__trig"] = trig
+            out["__seq"] = pdf[seq].to_numpy() if seq else 0
+            for c in vals:
+                out[c] = pdf[c].to_numpy() if trig == 0 else np.nan
+            return out
+
+        u = pd.concat([tag(src, 0), tag(trg, 1)], ignore_index=True)
+        u = u.sort_values(["__t", "__trig", "__seq"], kind="mergesort")
+        op = delay_with_reset_timer_op(int(delay), ts, list(vals), list(keys), None)
+        wm = int(np.iinfo(np.int64).max)
+        outs = [op.on_data(None, g, wm)[1]
+                for _, g in u.groupby(list(keys), sort=False)]
+        outs = [o for o in outs if len(o)]
+        if not outs:
+            return pd.DataFrame(columns=[*keys, ts, *vals])
+        return pd.concat(outs, ignore_index=True)
+
+    return walk

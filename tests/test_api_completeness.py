@@ -160,7 +160,7 @@ MODULE_SURFACES = {
         "build_dsir_index", "dsir_score_stream",
         "build_bm25_index", "bm25_score_stream", "lm_score_stream",
         "build_fingerprint_store", "dedup_against_store",
-        "compact_fingerprint_store", "clf_score_stream",
+        "compact_fingerprint_store",
     ],
     "wingfoil_spark.streaming.metrics": [
         "ProgressListener", "attach", "render_exposition",

@@ -124,6 +124,24 @@ def test_token_budget_shards_bucket_count_invariance(spark, docs):
         assert a[col].tolist() == b[col].tolist() == c[col].tolist()
 
 
+@pytest.mark.parametrize("id_type", ["bigint", "string"])
+@pytest.mark.parametrize("name, ref", [("doc.id", "`doc.id`"),
+                                       ("doc`id", "`doc``id`")])
+def test_token_budget_shards_quoted_id_column(spark, docs, id_type, name, ref):
+    """A dotted or backtick-carrying id column, referenced the F.col way,
+    shards exactly like a plainly named one and keeps its name."""
+    plain = docs.select(F.col("doc_id").cast(id_type).alias("doc_id"), "text")
+    quoted = plain.withColumnRenamed("doc_id", name)
+    want = cu.token_budget_shards(plain, 3000, n_buckets=7).toPandas()
+    got = cu.token_budget_shards(quoted, 3000, id_col=ref, n_buckets=7).toPandas()
+    assert got.columns.tolist() == [name, "n_tokens", "cum_tokens", "shard"]
+    got = got.rename(columns={name: "doc_id"}).sort_values("doc_id")
+    want = want.sort_values("doc_id")
+    assert len(got) == docs.count()
+    pd.testing.assert_frame_equal(got.reset_index(drop=True),
+                                  want.reset_index(drop=True))
+
+
 def test_token_budget_shards_sparse_gappy_ids(spark):
     """Property: the prefix sum is exact for ARBITRARY id spacing — huge
     gaps leave most equal-width buckets empty (totals.get default) and

@@ -64,9 +64,10 @@ def test_combine_latest_matches_model(spark, left, right):
     assert got == model_combine_latest(left, right)
 
 
-def test_delay_with_reset_strategies_agree(spark, sf_dir):
-    """Relational (window-logic) and timer (pending-queue walk) strategies
-    of delay_with_reset are two physical plans for one semantics."""
+def test_delay_with_reset_strategies_agree(spark, sf_dir, delay_with_reset_walk):
+    """The relational (window-logic) batch plan of delay_with_reset and
+    the streamed op's timer walk (pending queue, run per key over the
+    whole history) are two physical forms of one semantics."""
     import pyspark.sql.functions as F
 
     from wingfoil_spark.operators.stateful import delay_with_reset
@@ -90,10 +91,12 @@ def test_delay_with_reset_strategies_agree(spark, sf_dir):
         ts="ts_us", seq="event_id", keys=("user_id",),
     )
     key = ["user_id", "ts_us", "pv"]
-    a = (delay_with_reset(purchases, 7200_000_000, errors, ["pv"], strategy="relational")
+    a = (delay_with_reset(purchases, 7200_000_000, errors, ["pv"])
          .df.toPandas().sort_values(key).reset_index(drop=True))
-    b = (delay_with_reset(purchases, 7200_000_000, errors, ["pv"], strategy="timer")
-         .df.toPandas().sort_values(key).reset_index(drop=True))
+    b = (delay_with_reset_walk(purchases.df.toPandas(), errors.df.toPandas(),
+                               7200_000_000, "ts_us", "event_id",
+                               ["user_id"], ["pv"])
+         .sort_values(key).reset_index(drop=True))
     assert len(a) == len(b) > 0
     assert a[key].equals(b[key])
 

@@ -6,7 +6,7 @@ random micro-batch splits — a step must produce identical output whether
 it sees the whole history at once or any chunking of it (the resumability
 law that makes run-mode duality hold), and must agree with a naive
 reference model. Pure python/pandas — no SparkSession needed, except for
-the two packed batch operators whose steps are private closures.
+the batch operators whose plans or steps are not exposed as steps.
 """
 
 import numpy as np
@@ -370,6 +370,149 @@ def test_tw_window_step_chunking_and_model(rows, cuts, frame):
         assert whole["tw_median"].iloc[i] == exp, i
 
 
+# ------------------------- one step per operator, both run modes
+# drop_small_change, throttle_exact and fold_pandas run the SAME twin step
+# in batch (whole history, one call) and stream (any micro-batch split);
+# each is checked against a plain-Python model written independently of it.
+
+
+def _kept_rows(out):
+    return [] if not len(out) else out["i"].tolist()
+
+
+def _model_drop_small_change(xs, small):
+    """Index i emits iff nothing was emitted before it or
+    ``small(x_i, x_j)`` is false for the last emitted index j."""
+    emitted = []
+    for i, x in enumerate(xs):
+        if not emitted or not small(x, xs[emitted[-1]]):
+            emitted.append(i)
+    return emitted
+
+
+@settings(max_examples=80, deadline=None)
+@given(
+    st.lists(st.one_of(st.none(), st.just(float("nan")),
+                       st.floats(-50, 50, allow_nan=False)), max_size=30),
+    st.sampled_from([0.0, 1.5, 10.0]),
+    st.lists(st.integers(1, 29), max_size=3),
+)
+def test_drop_small_change_step_matches_model(xs, tol, cuts):
+    """Float form: NaN/None values (None arrives as NaN in a double
+    column) compare false, so a NaN tick never emits after the first and
+    a NaN reference suppresses the rest."""
+    from wingfoil_spark.streaming.twins import drop_small_change_step
+
+    pdf = pd.DataFrame({"i": range(len(xs)), "v": xs}, dtype=float)
+    step = drop_small_change_step("v", tol, [])
+    exp = _model_drop_small_change(
+        pdf["v"].tolist(), lambda cur, ref: not (abs(cur - ref) > tol))
+    assert _kept_rows(_run_chunked(step, None, pdf, [])) == exp
+    assert _kept_rows(_run_chunked(step, None, pdf, cuts)) == exp
+
+
+@settings(max_examples=80, deadline=None)
+@given(
+    st.lists(st.one_of(st.none(), st.integers(-3, 3)), max_size=30),
+    st.lists(st.integers(1, 29), max_size=3),
+)
+def test_drop_small_change_pred_step_matches_model(xs, cuts):
+    """Predicate form over an object column holding None: an emitted None
+    is a reference like any other (it neither re-emits the next tick nor
+    releases the state slot)."""
+    from wingfoil_spark.streaming.twins import drop_small_change_pred_step
+
+    def pred(cur, prev):
+        if cur is None or prev is None:
+            return cur is prev
+        return abs(cur - prev) < 2
+
+    pdf = pd.DataFrame({"i": range(len(xs)),
+                        "v": pd.Series(xs, dtype=object)})
+    step = drop_small_change_pred_step("v", pred, [])
+    exp = _model_drop_small_change(xs, pred)
+    assert _kept_rows(_run_chunked(step, None, pdf, [])) == exp
+    assert _kept_rows(_run_chunked(step, None, pdf, cuts)) == exp
+
+
+def test_drop_small_change_pred_step_rejects_non_bool():
+    from wingfoil_spark.streaming.twins import drop_small_change_pred_step
+
+    step = drop_small_change_pred_step("v", lambda cur, prev: "no", [])
+    pdf = pd.DataFrame({"v": [1.0, 2.0]})
+    st_, out = step(None, pdf.iloc[:1])  # the first tick calls no predicate
+    assert len(out) == 1
+    with pytest.raises(TypeError, match="must return a bool, got str"):
+        step(st_, pdf.iloc[1:])
+
+
+def _model_throttle(ts, interval):
+    emitted = []
+    for i, t in enumerate(ts):
+        if not emitted or t - ts[emitted[-1]] >= interval:
+            emitted.append(i)
+    return emitted
+
+
+@settings(max_examples=80, deadline=None)
+@given(
+    st.lists(st.integers(-(1 << 63), (1 << 63) - 1), max_size=30),
+    st.sampled_from([0, 1, 7, 1 << 62]),
+    st.lists(st.integers(1, 29), max_size=3),
+)
+def test_throttle_step_matches_model(ts, interval, cuts):
+    """Any int64 ts, including ticks below -2**62."""
+    from wingfoil_spark.streaming.twins import throttle_step
+
+    ts = sorted(ts)
+    pdf = pd.DataFrame({"i": range(len(ts)),
+                        "ts": np.array(ts, dtype=np.int64)})
+    step = throttle_step(interval, "ts", [])
+    exp = _model_throttle(ts, interval)
+    assert _kept_rows(_run_chunked(step, None, pdf, [])) == exp
+    assert _kept_rows(_run_chunked(step, None, pdf, cuts)) == exp
+
+
+def test_throttle_step_first_tick_below_minus_2_62_emits():
+    """A key's first tick emits however small its ts (missing state means
+    nothing emitted yet, not a -2**62 timer)."""
+    from wingfoil_spark.streaming.twins import throttle_step
+
+    t0 = -(1 << 62) - 5
+    pdf = pd.DataFrame({"ts": np.array([t0, t0 + 3, t0 + 10], dtype=np.int64)})
+    _, out = throttle_step(10, "ts", [])(None, pdf)
+    assert out["ts"].tolist() == [t0, t0 + 10]
+
+
+@settings(max_examples=60, deadline=None)
+@given(
+    st.lists(st.integers(-5, 5), max_size=30),
+    st.sampled_from([0, 100, None]),
+    st.lists(st.integers(1, 29), max_size=3),
+)
+def test_fold_step_matches_model(xs, init, cuts):
+    """The accumulator starts from ``init`` once per key, not per
+    micro-batch; a None accumulator stays state (it is wrapped)."""
+    from functools import reduce
+
+    from wingfoil_spark.streaming.twins import fold_step
+
+    def fn(acc, row):
+        if row["v"] < -3:
+            return None
+        return (0 if acc is None else acc) * 2 + row["v"]
+
+    pdf = pd.DataFrame({"i": range(len(xs)), "v": xs})
+    step = fold_step(fn, init, ["v"], "acc")
+    rows = [{"v": x} for x in xs]
+    exp = [reduce(fn, rows[:n + 1], init) for n in range(len(rows))]
+    for chunking in ([], cuts):
+        out = _run_chunked(step, None, pdf, chunking)
+        got = [] if not len(out) else [
+            None if a is None or a != a else int(a) for a in out["acc"]]
+        assert got == exp
+
+
 # ----------------------------------------------------------- in_order
 
 
@@ -479,9 +622,11 @@ def test_step_returns_int64_key_above_2_53_exactly(name):
     assert [int(x) for x in out["k"]] == [BIG_KEY] * len(out)
 
 
-def test_packed_operators_return_int64_key_above_2_53_exactly(spark):
-    """The packed batch operators with private steps: delay_with_reset's
-    timer walk and dynamic_group."""
+def test_packed_operators_return_int64_key_above_2_53_exactly(
+        spark, delay_with_reset_walk):
+    """delay_with_reset (its batch plan and the timer walk it is checked
+    against) and the packed batch operator with a private step,
+    dynamic_group."""
     from wingfoil_spark import Stream
     from wingfoil_spark.operators.dynamic import dynamic_group
     from wingfoil_spark.operators.stateful import delay_with_reset
@@ -491,9 +636,12 @@ def test_packed_operators_return_int64_key_above_2_53_exactly(spark):
 
     src = s([(BIG_KEY, 10, 1.0), (BIG_KEY, 30, 3.0)])
     trig = s([(BIG_KEY, 35)], "k long, ts long")
-    out = delay_with_reset(src, 20, trig, value_cols=["v"], strategy="timer")
+    out = delay_with_reset(src, 20, trig, value_cols=["v"])
     got = sorted((r.k, r.ts) for r in out.df.collect())
     assert got == [(BIG_KEY, 30), (BIG_KEY, 35)]
+    walked = delay_with_reset_walk(src.df.toPandas(), trig.df.toPandas(),
+                                   20, "ts", None, ["k"], ["v"])
+    assert sorted(zip(walked["k"].tolist(), walked["ts"].tolist())) == got
 
     data = s([(BIG_KEY, 3, 2.0)])
     add = s([(BIG_KEY, 2)], "k long, ts long")

@@ -155,10 +155,10 @@ def test_tw_profile_rebind(spark, src_dir):
     _match(b, s, ["user_id", "ts_us"], ["tw_mean", "tw_var", "tw_median"])
 
 
-def test_delay_with_reset_rebind(spark, src_dir, sf_dir):
+def test_delay_with_reset_rebind(spark, src_dir, sf_dir, delay_with_reset_walk):
     """Streaming delay_with_reset binds the watermark-timer twin; compare
-    against the batch TIMER strategy after a sentinel chunk drains the
-    pending deliveries."""
+    against the same timer walk run per key over the whole history after
+    a sentinel chunk drains the pending deliveries."""
     from wingfoil_spark.operators.stateful import delay_with_reset
 
     DELAY = 1_000_000
@@ -176,10 +176,8 @@ def test_delay_with_reset_rebind(spark, src_dir, sf_dir):
     sent = pd.DataFrame({"user_id": [0, 0], "ts_us": [t_far, t_far + 1000],
                          "event_id": [-1, -2], "value": [0.0, 0.0]})
 
-    bs = Stream(spark.createDataFrame(src), "ts_us", "event_id", ("user_id",))
-    bt = Stream(spark.createDataFrame(trg), "ts_us", "event_id", ("user_id",))
-    batch = delay_with_reset(bs, DELAY, bt, value_cols=["value"],
-                             strategy="timer").df.toPandas()
+    batch = delay_with_reset_walk(src, trg, DELAY, "ts_us", "event_id",
+                                  ["user_id"], ["value"])
     batch = batch[batch["ts_us"] < t_far]
 
     import tempfile, shutil, time as _t
@@ -234,9 +232,9 @@ def test_delay_with_reset_rebind(spark, src_dir, sf_dir):
 def test_packed_binding_refuses_streaming(spark, src_dir):
     """The guard itself: reaching the packed per-key binding with a
     streaming frame raises instead of silently recomputing per batch."""
-    from wingfoil_spark.operators.stateful import _apply_per_key
+    from wingfoil_spark.operators.stateful import _apply_per_key_reshape
 
     sdf = spark.readStream.schema(SCHEMA).parquet(src_dir)
     s = Stream(sdf, ts="ts_us", seq="event_id", keys=("user_id",))
     with pytest.raises(NotImplementedError, match="KeyedStateOp"):
-        _apply_per_key(s, lambda p: p, [])
+        _apply_per_key_reshape(s, lambda p: p, sdf.schema)

@@ -657,12 +657,12 @@ def test_bm25_score_stream_equals_batch(spark, docs):
 
 
 def test_clf_score_stream_equals_batch(spark, docs):
-    """Streaming classifier scoring == batch quality_scores over the
+    """quality_scores on a doc STREAM == batch quality_scores over the
     same rows, under a frozen trained model row, across micro-batches
-    (r13 — the last frozen-model scorer to get its streamed twin). The
-    model is a REAL fit_quality_classifier artifact (MLlib LR persisted
-    as one data row), not the graded derived row, so the differential
-    covers the production model shape end to end."""
+    (the scorer is row-local, so one body serves both). The model is a
+    REAL fit_quality_classifier artifact (MLlib LR persisted as one data
+    row), not the graded derived row, so the differential covers the
+    production model shape end to end."""
     from wingfoil_spark.functions import selection as sel
 
     model = sel.fit_quality_classifier(
@@ -678,7 +678,7 @@ def test_clf_score_stream_equals_batch(spark, docs):
     stream, src_dir = _stream_chunks(spark, pdf)
     try:
         scored = _run_to_memory(
-            ingest.clf_score_stream(stream, model), "ingest_clf"
+            sel.quality_scores(stream, model), "ingest_clf"
         )
         got = {r.doc_id: (r.logit, r.quality) for r in scored.collect()}
     finally:

@@ -21,7 +21,6 @@ import pyspark.sql.functions as F
 import pytest
 
 from wingfoil_spark.sources.tables import load_table, ts_us_expr
-from wingfoil_spark.stream import Stream
 
 DELAY = 1_000_000  # 1s in µs
 
@@ -115,7 +114,8 @@ def test_delay_fires_without_new_key_input(spark, events_pdf):
 def test_delay_timer_random_splits(spark, events_pdf):
     """Property: ANY time-ordered micro-batch partitioning yields the same
     deliveries (the step only assumes per-key arrival order, which sorted
-    chunk boundaries preserve). Three random 6-way splits."""
+    chunk boundaries preserve). Random 6-way splits: one seed in the
+    default lane, three with WINGFOIL_FULL_SUITE=1."""
     import numpy as np
 
     from wingfoil_spark.streaming.twins import delay_timer_op
@@ -130,7 +130,8 @@ def test_delay_timer_random_splits(spark, events_pdf):
     sent1 = pd.DataFrame({"user_id": [0], "ts_us": [t_far], "value": [0.0]})
     sent2 = pd.DataFrame({"user_id": [0], "ts_us": [t_far + 1000], "value": [0.0]})
 
-    for seed in (1, 2, 3):
+    full = os.environ.get("WINGFOIL_FULL_SUITE", "") == "1"
+    for seed in (1, 2, 3) if full else (1,):
         rng = np.random.default_rng(seed)
         cuts = sorted(rng.integers(1, len(base), 5).tolist())
         bounds = [0] + cuts + [len(base)]
@@ -153,10 +154,10 @@ def test_delay_timer_random_splits(spark, events_pdf):
         assert got.equals(expected), f"seed {seed}: split-dependent delivery"
 
 
-def test_delay_with_reset_timer_duality(spark, events_pdf):
-    """Timer-cancel op under watermark firing == the batch timer walk.
+def test_delay_with_reset_timer_duality(spark, events_pdf, delay_with_reset_walk):
+    """Timer-cancel op under watermark firing == its timer walk run over
+    the whole history at once (per key, watermark at int64 max).
     Sources = click values, triggers = purchases; sentinels on key 0 only."""
-    from wingfoil_spark.operators.stateful import delay_with_reset
     from wingfoil_spark.streaming.twins import delay_with_reset_timer_op
 
     src = events_pdf[events_pdf["event_type"] == "click"][
@@ -164,14 +165,8 @@ def test_delay_with_reset_timer_duality(spark, events_pdf):
     trg = events_pdf[events_pdf["event_type"] == "purchase"][
         ["user_id", "ts_us", "event_id"]]
 
-    s = Stream(spark.createDataFrame(src), ts="ts_us", seq="event_id",
-               keys=("user_id",))
-    t = Stream(spark.createDataFrame(trg), ts="ts_us", seq="event_id",
-               keys=("user_id",))
-    batch = (
-        delay_with_reset(s, DELAY, t, value_cols=["value"], strategy="timer")
-        .df.toPandas()
-    )
+    batch = delay_with_reset_walk(src, trg, DELAY, "ts_us", "event_id",
+                                  ["user_id"], ["value"])
 
     union = pd.concat([
         src.rename(columns={"ts_us": "__t", "event_id": "__seq"})

@@ -187,16 +187,7 @@ def _wire_custom(node: CustomStream, upstreams: Sequence[Stream]) -> Stream:
 
     from wingfoil_spark.operators.stateful import _apply_per_key_reshape
 
-    if keys:
-        out_df = _apply_per_key_reshape(s, fn, out_schema)
-    else:
-        out_df = (
-            s.df.groupBy(F.lit(1).alias("__g"))
-            .applyInPandas(
-                lambda p: fn(p.drop(columns="__g", errors="ignore")),
-                schema=out_schema,
-            )
-        )
+    out_df = _apply_per_key_reshape(s, fn, out_schema)
     res = Stream(out_df, ts=ts_col, seq=seq, keys=keys)
     if proto._value is not None:
         # a value seeded in __init__ (before wiring) is readable by

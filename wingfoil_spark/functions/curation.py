@@ -198,8 +198,11 @@ def token_budget_shards(
     are identical to tokenizing ``text_col`` here.
     """
     spark = df.sparkSession
+    # the caller's id resolves through F.col once, under an internal alias
+    # that the SQL text below may name; the output restores its own name
+    id_name = df.select(F.col(id_col)).columns[0]
     toks = df.select(
-        F.col(id_col),
+        F.col(id_col).alias("__id"),
         # NULL text contributes 0 tokens (not a null that poisons every
         # downstream cumulative sum) — the doc still occupies a row so
         # shard assignment covers the whole corpus
@@ -220,16 +223,16 @@ def token_budget_shards(
     # at sf0.1.
     toks = toks.localCheckpoint(eager=True)
     lo_hi = toks.agg(
-        F.min(id_col).alias("lo"), F.max(id_col).alias("hi")
+        F.min("__id").alias("lo"), F.max("__id").alias("hi")
     ).collect()[0]
     if lo_hi["lo"] is None:
         return toks.withColumn("cum_tokens", F.lit(None).cast("long")).withColumn(
             "shard", F.lit(None).cast("long")
-        )
-    id_sql_type = df.schema[id_col].dataType.simpleString()
+        ).withColumnRenamed("__id", id_name)
+    id_sql_type = toks.schema["__id"].dataType.simpleString()
     if id_sql_type in ("tinyint", "smallint", "int", "bigint"):
         lo, hi = int(lo_hi["lo"]), int(lo_hi["hi"])
-        key_sql = f"cast({id_col} as bigint)"
+        key_sql = "cast(__id as bigint)"
     else:
         # String/UUID ids: equal-width ranges need arithmetic, so bucket
         # on an order-preserving numeric proxy — the 7 bytes after the
@@ -251,7 +254,7 @@ def token_budget_shards(
         lo, hi = _proxy(lo_b), _proxy(hi_b)
         key_sql = (
             "cast(coalesce(nullif(conv(hex(rpad(substring("
-            f"encode(cast({id_col} as string), 'UTF-8'), {p + 1}, 7), "
+            f"encode(cast(__id as string), 'UTF-8'), {p + 1}, 7), "
             "7, X'00')), 16, 10), ''), '0') as bigint)"
         )
     span = max(hi - lo + 1, 1)
@@ -273,7 +276,7 @@ def token_budget_shards(
         offsets.append((b, acc))
         acc += totals.get(b, 0)
     off_df = spark.createDataFrame(offsets, "__bkt long, __off long")
-    w = Window.partitionBy("__bkt").orderBy(F.col(id_col).asc()).rowsBetween(
+    w = Window.partitionBy("__bkt").orderBy(F.col("__id").asc()).rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
     out = (
@@ -286,7 +289,7 @@ def token_budget_shards(
         # same rule: exact integer div (cum/n are longs; a 100 TB corpus's
         # token total passes 2^53 long before its ids do)
         F.expr(f"(cum_tokens - n_tokens) div {int(budget)}L"),
-    )
+    ).withColumnRenamed("__id", id_name)
 
 
 def describe_corpus(

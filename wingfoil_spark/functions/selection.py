@@ -247,8 +247,6 @@ def _log_ratio_row(
     any corpus size) instead of a second aggregation, so each profile
     plan — and the corpus gram scan behind it — executes ONCE even when
     the caller does not checkpoint the profiles."""
-    from pyspark.sql import Window
-
     t = target_profile.select(F.col("bucket"), F.col("n").alias("tn"))
     r = raw_profile.select(F.col("bucket"), F.col("n").alias("rn"))
     joined = t.join(r, "bucket", "full").select(
@@ -256,9 +254,21 @@ def _log_ratio_row(
         F.coalesce(F.col("tn"), F.lit(0)).alias("tn"),
         F.coalesce(F.col("rn"), F.lit(0)).alias("rn"),
     )
-    w = Window.partitionBy(F.lit(1))  # ≤ 2·n_buckets rows: bounded
+    return _lam_row(joined, n_buckets)
+
+
+def _lam_row(counts: DataFrame, n_buckets: int) -> DataFrame:
+    """The λ row from per-bucket ``(bucket, tn, rn)`` target/raw counts:
+    add-1-smoothed log-ratio per bucket, collected to a map and densified
+    (:func:`_dense_lam`). Shared by :func:`_log_ratio_row` and
+    :func:`_lam_row_subset`, which differ only in how they count. The
+    totals come from a whole-frame window (≤ 2·n_buckets rows — bounded,
+    so the SinglePartition window is fine at any corpus size)."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy(F.lit(1))
     return (
-        joined.select(
+        counts.select(
             "bucket", "tn", "rn",
             F.sum("tn").over(w).alias("T"),
             F.sum("rn").over(w).alias("R"),
@@ -334,34 +344,7 @@ def _lam_row_subset(
             F.sum(F.when(F.col("__t"), 1).otherwise(0)).alias("tn"),
         )
     )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(F.lit(1))  # ≤ n_buckets rows: bounded
-    return (
-        gb.select(
-            "bucket", "tn", "rn",
-            F.sum("tn").over(w).alias("T"),
-            F.sum("rn").over(w).alias("R"),
-        )
-        .select(
-            "bucket",
-            (
-                F.log((F.col("tn") + 1.0) / (F.col("T") + float(n_buckets)))
-                - F.log((F.col("rn") + 1.0) / (F.col("R") + float(n_buckets)))
-            ).alias("lam"),
-            (
-                F.log(1.0 / (F.col("T") + float(n_buckets)))
-                - F.log(1.0 / (F.col("R") + float(n_buckets)))
-            ).alias("lam_oov"),
-        )
-        .agg(
-            F.map_from_entries(
-                F.collect_list(F.struct(F.col("bucket"), F.col("lam")))
-            ).alias("_m"),
-            F.first("lam_oov").alias("lam_oov"),
-        )
-        .select(_dense_lam("_m", n_buckets).alias("lam"), "lam_oov")
-    )
+    return _lam_row(gb, n_buckets)
 
 
 def dsir_weights_subset(

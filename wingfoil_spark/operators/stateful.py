@@ -3,9 +3,19 @@
 These are the operators whose value at tick n depends on their *own* emitted
 state (EWMA's recursion, drop_small_change's last-emitted reference point,
 throttle's last-emission timer) — not expressible as SQL window functions.
-They run as Arrow-batched ``applyInPandas`` over the stream's keys:
-sequential within a key (the recursion demands it — same as the reference's
+Sequential within a key (the recursion demands it — same as the reference's
 single-threaded node state), parallel across keys on a cluster.
+
+One walk per operator, both run modes: ``drop_small_change``,
+``throttle_exact`` and ``fold_pandas`` bind their step
+(``streaming/twins.py``) through :class:`KeyedStateOp` — ``run_batch`` on
+a batch frame, ``run_stream`` on a streaming one (:func:`_run_keyed`).
+The batch kernels the bench times keep their own batch binding and hand
+streams to the matching step: ``ewma_multi`` (C kernels /
+``ewma_step``), ``time_weighted_profile`` (:func:`_tw_profile_kernel`,
+shared with its step) and ``delay_with_reset`` (relational plan /
+``delay_with_reset_timer_op``). Every batch walk runs on the ONE packed
+per-key binding, :func:`_apply_per_key_reshape`.
 
 Reference ops: EWMA family (crates/wingfoil/src/ops.rs:821-951, trait
 stats.rs:21-29), drop_small_change (ops.rs:227-262), throttle
@@ -23,7 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from wingfoil_spark.stream import Stream
-from wingfoil_spark.streaming.stateful import group_key, in_order
+from wingfoil_spark.streaming.stateful import in_order
 
 
 def _ewma_hl_kernel(ts: np.ndarray, x: np.ndarray, hl: float) -> np.ndarray:
@@ -42,95 +52,20 @@ def _ewma_hl_kernel(ts: np.ndarray, x: np.ndarray, hl: float) -> np.ndarray:
     )
 
 
-def _apply_per_key(s: Stream, fn, added: list[T.StructField],
-                   fn_multi=None) -> Stream:
-    """Run ``fn(pdf) -> pdf`` once per key, rows pre-sorted by (ts, seq).
-
-    ``fn_multi(body) -> pdf | None`` (optional): whole-body fast path over
-    ALL complete key groups of a sorted, key-clustered batch in one call
-    (the op detects group boundaries itself — per-group pandas overhead
-    dominates small-key workloads). None return → per-group ``fn``; the
-    held trailing key always uses ``fn``.
+def _apply_per_key_reshape(s: Stream, fn, out_schema: T.StructType,
+                           fn_multi=None):
+    """The packed per-key batch binding: run ``fn(pdf) -> pdf`` once per
+    key on rows sorted by (ts, seq); ``fn`` returns frames in
+    ``out_schema`` (its own columns and row count, key columns included —
+    an op that only adds columns passes the input schema plus them).
 
     Binding: ``repartition(keys) → sortWithinPartitions(keys, ts, seq) →
     mapInPandas`` rather than ``groupBy().applyInPandas`` — one Python
-    round-trip per Arrow batch instead of one per key. With many small keys
-    (the normal stream shape: thousands of instruments/users) per-group
-    Arrow overhead dominates applyInPandas; this packs ~batch_size rows of
-    complete groups per call. Key groups spanning batch boundaries are
-    carried over inside the partition iterator, so ``fn`` always sees a
-    whole key's rows (sorted), exactly like applyInPandas."""
-    if s.df.isStreaming:
-        # the packed binding carries NO state across micro-batches — on a
-        # stream it would silently restart every recursion per batch. The
-        # stateful ops auto-rebind to their KeyedStateOp twins before
-        # reaching here; anything else must go through KeyedStateOp.
-        raise NotImplementedError(
-            "per-key pandas binding on a streaming frame: use the "
-            "operator's KeyedStateOp twin (streaming/twins.py) — state "
-            "must live in the state store, not the batch"
-        )
-    schema = T.StructType(list(s.df.schema.fields) + added)
-    order = [s.ts] + ([s.seq] if s.seq else [])
-    keys = list(s.keys)
-
-    if not keys:
-        # keyless = one total order = one group (reference single-thread graph)
-        def one(pdf: pd.DataFrame) -> pd.DataFrame:
-            return fn(in_order(pdf, order))
-
-        out_df = s.df.groupBy(F.lit(1).alias("__g")).applyInPandas(
-            lambda p: one(p.drop(columns="__g", errors="ignore")), schema=schema
-        )
-        return Stream(out_df, ts=s.ts, seq=s.seq, keys=s.keys)
-
-    def per_partition(batches):
-        held: pd.DataFrame | None = None
-        for pdf in batches:
-            if held is not None:
-                pdf = pd.concat([held, pdf], ignore_index=True)
-                held = None
-            if not len(pdf):
-                continue
-            # rows arrive key-clustered & (ts,seq)-sorted within key
-            last_key = tuple(pdf[k].iloc[-1] for k in keys)
-            mask_last = np.ones(len(pdf), dtype=bool)
-            for k, v in zip(keys, last_key):
-                mask_last &= (pdf[k] == v).to_numpy()
-            # hold back the (possibly incomplete) trailing key group
-            held = pdf.loc[mask_last]
-            body = pdf.loc[~mask_last]
-            if len(body):
-                if fn_multi is not None:
-                    whole = fn_multi(body.reset_index(drop=True))
-                    if whole is not None:
-                        yield whole
-                        continue
-                out = body.groupby(keys, sort=False, group_keys=False, dropna=False)[
-                    body.columns.tolist()
-                ].apply(fn)
-                yield out
-        if held is not None and len(held):
-            yield held.groupby(keys, sort=False, group_keys=False, dropna=False)[
-                held.columns.tolist()
-            ].apply(fn)
-
-    out_df = (
-        s.df.repartition(*keys)
-        .sortWithinPartitions(*keys, *order)
-        .mapInPandas(per_partition, schema=schema)
-    )
-    return Stream(out_df, ts=s.ts, seq=s.seq, keys=s.keys)
-
-
-def _apply_per_key_reshape(s: Stream, fn, out_schema: T.StructType,
-                           fn_multi=None):
-    """Packed per-key binding for RESHAPING ops: like :func:`_apply_per_key`
-    (repartition → sortWithinPartitions → mapInPandas, whole key groups per
-    Arrow batch) but ``fn(pdf) -> pdf`` returns frames in ``out_schema``
-    (its own columns/row count, key columns included) instead of
-    input+added. One Python round-trip per batch, not per key — built
-    because per-group applyInPandas was ~4× slower with many small keys.
+    round-trip per Arrow batch instead of one per key (per-group
+    applyInPandas was ~4× slower with many small keys). Key groups
+    spanning batch boundaries are carried over inside the partition
+    iterator, so ``fn`` always sees a whole key's rows. Keyless = one
+    total order = one group (the reference's single-thread graph).
 
     ``fn_multi(body) -> pdf | None`` (optional): a whole-body fast path
     that processes ALL complete key groups of a sorted, key-clustered
@@ -213,18 +148,17 @@ def _apply_per_key_reshape(s: Stream, fn, out_schema: T.StructType,
     )
 
 
-def _keyed_stream(s: Stream, step, out_schema, init_state=None,
-                  seq: str | None = "__default__") -> Stream:
-    """Bind a step to a STREAMING frame via KeyedStateOp.run_stream (the
-    auto-rebind target for the stateful operators below — r4: calling them
-    on a readStream frame previously reached the packed batch binding,
-    which carries no state across micro-batches)."""
+def _run_keyed(s: Stream, step, out_schema, init_state=None) -> Stream:
+    """Bind a step through :class:`KeyedStateOp` in the frame's own run
+    mode: ``run_batch`` (the packed binding, the whole history in one
+    call per key) on a batch frame, ``run_stream`` (state in the state
+    store across micro-batches) on a streaming one."""
     from wingfoil_spark.streaming.stateful import KeyedStateOp
 
-    use_seq = s.seq if seq == "__default__" else seq
     op = KeyedStateOp(step, out_schema=out_schema, init_state=init_state,
-                      ts=s.ts, seq=use_seq, keys=tuple(s.keys))
-    return Stream(op.run_stream(s.df), ts=s.ts, seq=use_seq, keys=s.keys)
+                      ts=s.ts, seq=s.seq, keys=tuple(s.keys))
+    run = op.run_stream if s.df.isStreaming else op.run_batch
+    return Stream(run(s.df), ts=s.ts, seq=s.seq, keys=s.keys)
 
 
 def _ewma_hl_step(col: str, hl: float, out: str, passthrough: list[str],
@@ -272,28 +206,8 @@ def ewma(
     """
     if (alpha is None) == (half_life_ns is None):
         raise ValueError("exactly one of alpha / half_life_ns")
-    # null value = non-tick (the reference's streams cannot carry nulls;
-    # a NaN entering the recursion would poison the accumulator FOREVER,
-    # unlike the window stats, which skip nulls per-frame)
-    s = s._derive(s.df.where(F.col(col).isNotNull()))
-
-    if s.df.isStreaming:
-        from wingfoil_spark.streaming.stateful import ewma_step
-
-        keep = [*s.keys, s.ts, *([s.seq] if s.seq else []), col]
-        schema = T.StructType(
-            [s.df.schema[c] for c in keep] + [T.StructField(out, T.DoubleType())]
-        )
-        if alpha is not None:
-            return _keyed_stream(s, ewma_step(col, alpha, out, keep), schema,
-                                 init_state=(False, 0.0))
-        return _keyed_stream(
-            s, _ewma_hl_step(col, float(half_life_ns), out, keep, s.ts),
-            schema, init_state=(False, 0.0, 0.0),
-        )
-
-    return ewma_multi(s, col, {out: {"alpha": alpha}} if alpha is not None
-                      else {out: {"half_life_ns": half_life_ns}})
+    return ewma_multi(s, col, {out: {"alpha": alpha} if alpha is not None
+                               else {"half_life_ns": half_life_ns}})
 
 
 def _grp_flags(pdf: pd.DataFrame, keys) -> np.ndarray:
@@ -311,56 +225,42 @@ def ewma_multi(s: Stream, col: str, specs: dict[str, dict]) -> Stream:
     the fused form of chained :func:`ewma` calls. ``specs`` maps output
     column → {"alpha": a} or {"half_life_ns": h}.
 
-    Both recursions run the C kernels (plain (1-α)·acc + α·x — the same
-    op order as the recursive-CTE oracle and the streaming ewma_step twin
-    — and the scalar-pow half-life walk), and the batch binding uses the
-    whole-body multi-key path: one kernel call over all complete key
-    groups with group-reset flags, bitwise identical to per-key runs."""
-    s = s._derive(s.df.where(F.col(col).isNotNull()))  # null = non-tick
+    Batch: both recursions run the C kernels (plain (1-α)·acc + α·x — the
+    same op order as the recursive-CTE oracle and ``ewma_step`` — and the
+    scalar-pow half-life walk), and the binding uses the whole-body
+    multi-key path: one kernel call over all complete key groups with
+    group-reset flags, bitwise identical to per-key runs. Stream: each
+    spec runs its step (``ewma_step`` / :func:`_ewma_hl_step`); the state
+    is a dict keyed by output column."""
+    # null value = non-tick (the reference's streams cannot carry nulls;
+    # a NaN entering the recursion would poison the accumulator FOREVER,
+    # unlike the window stats, which skip nulls per-frame)
+    s = s._derive(s.df.where(F.col(col).isNotNull()))
     ts_col, vcol = s.ts, col
     items = [(out, p.get("alpha"), p.get("half_life_ns")) for out, p in specs.items()]
     added = [T.StructField(out, T.DoubleType()) for out, _, _ in items]
 
     if s.df.isStreaming:
-        import math
+        from wingfoil_spark.streaming.stateful import ewma_step
 
         keep = [*s.keys, s.ts, *([s.seq] if s.seq else []), col]
-        schema = T.StructType([s.df.schema[c] for c in keep] + added)
+        steps = {
+            out: (ewma_step(col, alpha, out, []), (False, 0.0))
+            if alpha is not None else
+            (_ewma_hl_step(col, float(hl), out, [], ts_col), (False, 0.0, 0.0))
+            for out, alpha, hl in items
+        }
 
         def step(state, pdf: pd.DataFrame):
             st = dict(state) if state else {}
             out_pdf = pdf[keep].copy()
-            ts_l = pdf[ts_col].to_numpy(dtype=np.float64).tolist()
-            x_l = pdf[vcol].to_numpy(dtype=np.float64).tolist()
-            for out, alpha, hl in items:
-                if alpha is not None:
-                    init, acc = st.get(out, (False, 0.0))
-                    one_m = 1.0 - alpha
-                    res = []
-                    for x in x_l:
-                        if not init:
-                            acc, init = x, True
-                        else:
-                            acc = one_m * acc + alpha * x
-                        res.append(acc)
-                    st[out] = (init, acc)
-                else:
-                    init, acc, prev = st.get(out, (False, 0.0, 0.0))
-                    hlf = float(hl)
-                    res = []
-                    for t, x in zip(ts_l, x_l):
-                        if not init:
-                            acc, prev, init = x, t, True
-                        else:
-                            d = math.pow(0.5, (t - prev) / hlf)
-                            acc = d * acc + (1.0 - d) * x
-                            prev = t
-                        res.append(acc)
-                    st[out] = (init, acc, prev)
-                out_pdf[out] = res
+            for out, (one, init) in steps.items():
+                st[out], o = one(st.get(out, init), pdf)
+                out_pdf[out] = o[out]
             return st, out_pdf
 
-        return _keyed_stream(s, step, schema)
+        schema = T.StructType([s.df.schema[c] for c in keep] + added)
+        return _run_keyed(s, step, schema)
 
     def _compute(pdf: pd.DataFrame, grp) -> pd.DataFrame:
         from wingfoil_spark.operators import _ckernels
@@ -382,7 +282,9 @@ def ewma_multi(s: Stream, col: str, specs: dict[str, dict]) -> Stream:
     def fn_multi(body: pd.DataFrame):
         return _compute(body, _grp_flags(body, keys)) if keys else None
 
-    return _apply_per_key(s, fn, added, fn_multi=fn_multi)
+    schema = T.StructType(list(s.df.schema.fields) + added)
+    return Stream(_apply_per_key_reshape(s, fn, schema, fn_multi=fn_multi),
+                  ts=s.ts, seq=s.seq, keys=s.keys)
 
 
 def drop_small_change(s: Stream, col: str, tol) -> Stream:
@@ -398,83 +300,21 @@ def drop_small_change(s: Stream, col: str, tol) -> Stream:
     change is small. Predicate contracts replayed: an equality predicate
     degenerates to ``distinct``; a raising predicate aborts the run; a
     non-bool return is an error naming the contract."""
-    if callable(tol):
-        pred = tol
-        if s.df.isStreaming:
-            from wingfoil_spark.streaming.twins import (
-                drop_small_change_pred_step,
-            )
+    from wingfoil_spark.streaming import twins
 
-            return _keyed_stream(
-                s,
-                drop_small_change_pred_step(col, pred, list(s.keys)),
-                s.df.schema,
-            )
-
-        def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-            x = pdf[col].to_numpy()
-            keep = np.zeros(len(x), dtype=bool)
-            if len(x):
-                keep[0] = True
-                ref = x[0]
-                for i in range(1, len(x)):
-                    small = pred(x[i], ref)
-                    if not isinstance(small, (bool, np.bool_)):
-                        raise TypeError(
-                            "drop_small_change predicate must return a "
-                            f"bool, got {type(small).__name__}"
-                        )
-                    if not small:
-                        keep[i] = True
-                        ref = x[i]
-            return pdf.loc[keep]
-
-        return _apply_per_key(s, fn, [])
-    if s.df.isStreaming:
-        from wingfoil_spark.streaming.twins import drop_small_change_step
-
-        return _keyed_stream(
-            s, drop_small_change_step(col, tol, list(s.keys)), s.df.schema
-        )
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        x = pdf[col].to_numpy(dtype=np.float64)
-        keep = np.zeros(len(x), dtype=bool)
-        if len(x):
-            keep[0] = True
-            ref = x[0]
-            for i in range(1, len(x)):
-                if abs(x[i] - ref) > tol:
-                    keep[i] = True
-                    ref = x[i]
-        return pdf.loc[keep]
-
-    return _apply_per_key(s, fn, [])
+    keys = list(s.keys)
+    step = (twins.drop_small_change_pred_step(col, tol, keys) if callable(tol)
+            else twins.drop_small_change_step(col, tol, keys))
+    return _run_keyed(s, step, s.df.schema)
 
 
 def throttle_exact(s: Stream, interval_ns: int) -> Stream:
     """Timer-accurate throttle: emit iff ts ≥ last emission + interval.
     Reference ``throttle`` semantics (ops.rs:381-414)."""
-    if s.df.isStreaming:
-        from wingfoil_spark.streaming.twins import throttle_step
+    from wingfoil_spark.streaming.twins import throttle_step
 
-        return _keyed_stream(
-            s, throttle_step(interval_ns, s.ts, list(s.keys)), s.df.schema
-        )
-
-    ts_col = s.ts
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        ts = pdf[ts_col].to_numpy(dtype=np.int64)
-        keep = np.zeros(len(ts), dtype=bool)
-        next_ok = np.iinfo(np.int64).min
-        for i in range(len(ts)):
-            if ts[i] >= next_ok:
-                keep[i] = True
-                next_ok = ts[i] + interval_ns
-        return pdf.loc[keep]
-
-    return _apply_per_key(s, fn, [])
+    return _run_keyed(s, throttle_step(interval_ns, s.ts, list(s.keys)),
+                      s.df.schema)
 
 
 def time_windowed_time_weighted(
@@ -484,65 +324,22 @@ def time_windowed_time_weighted(
 
     The step-signal integral over [ts_n - W, ts_n] requires clipping the
     partial interval at the window's left edge — not window-expressible, so
-    computed per key with O(n) prefix integrals (cumulative v·w and v²·w,
-    searchsorted for the edge). Reference:
+    computed per key by :func:`_tw_mean_var` (integer-exact integrals, the
+    mean/var half of :func:`time_weighted_profile`'s kernel). Reference:
     ``time_windowed_*_time_weighted`` (stats.rs:154-162, ops.rs:2374-2501).
-
-    Numeric policy: the integrals accumulate in exact integers (value in
-    cents × in-effect µs; Python ints — v²·w exceeds int64) and convert to
-    double only for the final division, so the DuckDB oracle (HUGEINT sums
-    over the same clipped weights) matches bit-for-bit regardless of
-    summation order.
     """
-
     ts_col = s.ts
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        from wingfoil_spark.operators import _ckernels
-
-        ts = pdf[ts_col].to_numpy(dtype=np.int64)
-        v = pdf[col].to_numpy(dtype=np.float64)
-        vc = np.rint(v * 100).astype(np.int64)  # exact cents (2-decimal data)
-        n = len(ts)
-        res = np.empty(n)
-        mv = _ckernels.tw_mean_var(ts, vc, v, window_ns) if n else None
-        if mv is not None:
-            mean_a, var_a = mv
-            if stat == "mean":
-                res = mean_a
-            elif stat == "var":
-                res = var_a
-            else:
-                res = np.sqrt(var_a)
-        elif n:
-            tsl, vcl = ts.tolist(), vc.tolist()  # python ints: exact, unbounded
-            P1 = [0] * (n + 1)
-            P2 = [0] * (n + 1)
-            for k in range(n - 1):
-                w = tsl[k + 1] - tsl[k]
-                P1[k + 1] = P1[k] + vcl[k] * w
-                P2[k + 1] = P2[k] + vcl[k] * vcl[k] * w
-            P1[n] = P1[n - 1]
-            P2[n] = P2[n - 1]
-            for i in range(n):
-                t0 = max(tsl[0], tsl[i] - window_ns)
-                j = int(np.searchsorted(ts, t0, side="right")) - 1
-                span = tsl[i] - t0
-                if span <= 0:
-                    res[i] = v[i] if stat == "mean" else 0.0
-                    continue
-                i1 = P1[i] - (P1[j] + vcl[j] * (t0 - tsl[j]))
-                m = float(i1) / float(span * 100)
-                if stat == "mean":
-                    res[i] = m
-                else:
-                    i2 = P2[i] - (P2[j] + vcl[j] * vcl[j] * (t0 - tsl[j]))
-                    var = max(float(i2) / float(span * 10000) - m * m, 0.0)
-                    res[i] = var if stat == "var" else np.sqrt(var)
-        pdf[out] = res
+        mean, var = _tw_mean_var(pdf[ts_col].to_numpy(dtype=np.int64),
+                                 pdf[col].to_numpy(dtype=np.float64), window_ns)
+        pdf[out] = mean if stat == "mean" else var if stat == "var" else np.sqrt(var)
         return pdf
 
-    return _apply_per_key(s, fn, [T.StructField(out, T.DoubleType())])
+    schema = T.StructType(list(s.df.schema.fields)
+                          + [T.StructField(out, T.DoubleType())])
+    return Stream(_apply_per_key_reshape(s, fn, schema),
+                  ts=s.ts, seq=s.seq, keys=s.keys)
 
 
 def weighted_median(s: Stream, col: str, wname: str, frame, out: str) -> Stream:
@@ -590,52 +387,69 @@ def weighted_median(s: Stream, col: str, wname: str, frame, out: str) -> Stream:
         return pdf
 
     dropped = [c for c in s.df.columns if c != wname]
-    result = _apply_per_key(s, fn, [T.StructField(out, T.DoubleType())])
-    return Stream(result.df.select(*dropped, out), ts=s.ts, seq=s.seq, keys=s.keys)
+    schema = T.StructType(list(s.df.schema.fields)
+                          + [T.StructField(out, T.DoubleType())])
+    result = _apply_per_key_reshape(s, fn, schema)
+    return Stream(result.select(*dropped, out), ts=s.ts, seq=s.seq, keys=s.keys)
+
+
+def _tw_mean_var(ts: np.ndarray, v: np.ndarray, window_ns: int):
+    """Trailing-duration clipped time-weighted (mean, var) arrays over one
+    key's (ts,seq)-sorted history: the step-signal integral over
+    [ts_i - W, ts_i] clips the partial interval at the window's left edge.
+    The integrals are exact integers (value in cents × in-effect time) and
+    convert to double only for the final division, so the DuckDB oracle
+    (HUGEINT sums over the same clipped weights) matches bit-for-bit. C
+    two-pointer sliding-integral kernel (O(n), int64-exact within its
+    guard), falling back to the Python big-int prefix walk."""
+    from wingfoil_spark.operators import _ckernels
+
+    ts = np.asarray(ts, dtype=np.int64)
+    v = np.asarray(v, dtype=np.float64)
+    vc = np.rint(v * 100).astype(np.int64)  # exact cents (2-decimal data)
+    n = len(ts)
+    if n == 0:
+        return np.empty(0), np.empty(0)
+    mv = _ckernels.tw_mean_var(ts, vc, v, window_ns)
+    if mv is not None:
+        return mv
+    mean = np.empty(n)
+    var = np.empty(n)
+    tsl, vcl = ts.tolist(), vc.tolist()  # python ints: exact, unbounded
+    P1 = [0] * (n + 1)
+    P2 = [0] * (n + 1)
+    for k in range(n - 1):
+        w = tsl[k + 1] - tsl[k]
+        P1[k + 1] = P1[k] + vcl[k] * w
+        P2[k + 1] = P2[k] + vcl[k] * vcl[k] * w
+    for i in range(n):
+        t0 = max(tsl[0], tsl[i] - window_ns)
+        j = int(np.searchsorted(ts, t0, side="right")) - 1
+        span = tsl[i] - t0
+        if span <= 0:
+            mean[i], var[i] = v[i], 0.0
+        else:
+            i1 = P1[i] - (P1[j] + vcl[j] * (t0 - tsl[j]))
+            m = float(i1) / float(span * 100)
+            i2 = P2[i] - (P2[j] + vcl[j] * vcl[j] * (t0 - tsl[j]))
+            mean[i] = m
+            var[i] = max(float(i2) / float(span * 10000) - m * m, 0.0)
+    return mean, var
 
 
 def _tw_profile_kernel(ts: np.ndarray, v: np.ndarray, window_ns: int):
     """The fused time-weighted kernel over one key's FULL (ts,seq)-sorted
     history: returns (mean, var, median) arrays — trailing-duration clipped
-    mean/var (integer-exact integrals) + cumulative weighted median. Shared
+    mean/var (:func:`_tw_mean_var`) + cumulative weighted median. Shared
     verbatim by the batch operator and the streaming twin
     (streaming/twins.py:tw_profile_step), so run-mode duality is bitwise by
     construction — both modes execute THIS code on the same history."""
     ts = np.asarray(ts, dtype=np.int64)
     v = np.asarray(v, dtype=np.float64)
-    vc = np.rint(v * 100).astype(np.int64)
     n = len(ts)
-    mean = np.empty(n)
-    var = np.empty(n)
+    mean, var = _tw_mean_var(ts, v, window_ns)
     if n == 0:
         return mean, var, np.empty(0)
-    # mean/var: C two-pointer sliding-integral kernel (O(n), int64-exact
-    # within its guard), falling back to the Python big-int prefix walk
-    from wingfoil_spark.operators import _ckernels
-
-    mv = _ckernels.tw_mean_var(ts, vc, v, window_ns)
-    if mv is not None:
-        mean, var = mv
-    else:
-        tsl, vcl = ts.tolist(), vc.tolist()
-        P1 = [0] * (n + 1)
-        P2 = [0] * (n + 1)
-        for k in range(n - 1):
-            w = tsl[k + 1] - tsl[k]
-            P1[k + 1] = P1[k] + vcl[k] * w
-            P2[k + 1] = P2[k] + vcl[k] * vcl[k] * w
-        for i in range(n):
-            t0 = max(tsl[0], tsl[i] - window_ns)
-            j = int(np.searchsorted(ts, t0, side="right")) - 1
-            span = tsl[i] - t0
-            if span <= 0:
-                mean[i], var[i] = v[i], 0.0
-            else:
-                i1 = P1[i] - (P1[j] + vcl[j] * (t0 - tsl[j]))
-                m = float(i1) / float(span * 100)
-                i2 = P2[i] - (P2[j] + vcl[j] * vcl[j] * (t0 - tsl[j]))
-                mean[i] = m
-                var[i] = max(float(i2) / float(span * 10000) - m * m, 0.0)
 
     # cumulative weighted median: C Fenwick kernel (O(n log n) per key,
     # bitwise == the argsort walk — see _ckernels.tw_median_cum), falling
@@ -694,19 +508,14 @@ def time_weighted_profile(
         from wingfoil_spark.streaming.twins import tw_profile_step
 
         keep = [*s.keys, s.ts, col]
-        schema = T.StructType(
-            [s.df.schema[c] for c in keep]
-            + [T.StructField(c, T.DoubleType())
-               for c in (out_mean, out_var, out_median)]
-        )
         step = tw_profile_step(col, window_ns, s.ts, list(s.keys),
                                passthrough=keep)
         # twin emits fixed tw_* names; realias to the requested ones
-        res = _keyed_stream(s, step, T.StructType(
+        res = _run_keyed(s._derive(s.df, seq=None), step, T.StructType(
             [s.df.schema[c] for c in keep]
             + [T.StructField(c, T.DoubleType())
                for c in ("tw_mean", "tw_var", "tw_median")]
-        ), seq=None)
+        ))
         df = res.df
         for src_c, dst in (("tw_mean", out_mean), ("tw_var", out_var),
                            ("tw_median", out_median)):
@@ -726,8 +535,12 @@ def time_weighted_profile(
         pdf[out_median] = med
         return pdf
 
-    added = [T.StructField(c, T.DoubleType()) for c in (out_mean, out_var, out_median)]
-    return _apply_per_key(s, fn, added)
+    schema = T.StructType(
+        list(s.df.schema.fields)
+        + [T.StructField(c, T.DoubleType()) for c in (out_mean, out_var, out_median)]
+    )
+    return Stream(_apply_per_key_reshape(s, fn, schema),
+                  ts=s.ts, seq=s.seq, keys=s.keys)
 
 
 def fold_pandas(s: Stream, fn, init, out: str, cols: list[str] | None = None,
@@ -739,119 +552,48 @@ def fold_pandas(s: Stream, fn, init, out: str, cols: list[str] | None = None,
     this is the escape hatch, Arrow-batched per key.
 
     ``fn(acc, row: dict) -> acc`` — row carries ``cols`` (default: all
-    payload columns). On a streaming frame the fold rebinds as a
-    KeyedStateOp whose state is the accumulator (wrapped in a 1-tuple so a
+    payload columns). Both run modes bind ``twins.fold_step`` through
+    KeyedStateOp; its state is the accumulator (wrapped in a 1-tuple so a
     legitimately-None accumulator doesn't release the state slot)."""
+    from wingfoil_spark.stream import _wiring_seed
+    from wingfoil_spark.streaming.twins import fold_step
+
     use = cols or [c for c in s.df.columns if c not in (s.ts, s.seq, *s.keys)]
-
-    if s.df.isStreaming:
-        def sstep(state, pdf: pd.DataFrame):
-            acc = state[0] if state is not None else init
-            res = []
-            for r in pdf[use].to_dict("records"):
-                acc = fn(acc, r)
-                res.append(acc)
-            out_pdf = pdf.copy()
-            out_pdf[out] = res
-            return (acc,), out_pdf
-
-        schema = T.StructType(list(s.df.schema.fields)
-                              + [T.StructField(out, dtype)])
-        return _keyed_stream(s, sstep, schema)
-
-    def step(pdf: pd.DataFrame) -> pd.DataFrame:
-        acc = init
-        res = []
-        rows = pdf[use].to_dict("records")
-        for r in rows:
-            acc = fn(acc, r)
-            res.append(acc)
-        pdf[out] = res
-        return pdf
-
-    res_s = _apply_per_key(s, step, [T.StructField(out, dtype)])
+    schema = T.StructType(list(s.df.schema.fields) + [T.StructField(out, dtype)])
+    res_s = _run_keyed(s, fold_step(fn, init, use, out), schema)
     # Seed the fold's output slot with init at wiring time so passive
     # readers observe it before the first tick — the interpreted engine
     # seeds the value slot with init.clone(), a cross-path parity contract
     # (parity_bugs.rs BUG 1 :17-63).
-    from wingfoil_spark.stream import _wiring_seed
     if isinstance(init, (int, float, str, bool)):
         res_s._passive_seed = _wiring_seed(s, {out: F.lit(init).cast(dtype)})
     return res_s
 
 
 def delay_with_reset(s: Stream, delay_ns: int, trigger: Stream,
-                     value_cols: list[str] | None = None,
-                     strategy: str = "relational") -> Stream:
+                     value_cols: list[str] | None = None) -> Stream:
     """Delay each value by ``delay_ns``; a trigger tick *snaps*: it drops all
     pending (not-yet-fired) deliveries and immediately re-emits the current
     upstream value at the trigger's time. Reference: ``delay_with_reset``
     (fluent.rs:1060, ops.rs:3486-3604) — the timer-cancel op.
 
-    Two physical strategies, one semantics (differential-tested):
-
-    - ``"relational"`` (default for batch): the timer outcome as window
-      logic over the tagged union — a source row delivers at t+delay iff no
-      trigger lands in [t, t+delay); each trigger snaps the latest source
-      value at/<= its instant. One key shuffle, zero Python, whole-stage
-      codegen — the Catalyst-native form (~6× faster than the timer walk).
-    - ``"timer"``: the sequential pending-queue walk (packed Arrow per-key
-      pass) — the same shape as the streaming twin
-      (:func:`wingfoil_spark.streaming.twins.delay_step`), kept as the
-      executable spec of the timer semantics.
-
     Both streams must share keys. Output rows: (keys, ts, value_cols...).
+    Both run modes read one tagged union of source (``__trig`` 0) and
+    trigger (``__trig`` 1) rows:
 
-    On STREAMING frames both strategies rebind to the watermark-timer twin
-    (:func:`wingfoil_spark.streaming.twins.delay_with_reset_timer_op`) —
-    true event-time firing with zero further key input.
+    - batch: the timer outcome as window logic — a source row delivers at
+      t+delay iff no trigger lands in [t, t+delay); each trigger snaps the
+      latest source value at/<= its instant. One key shuffle, zero Python,
+      whole-stage codegen.
+    - stream: the watermark-timer walk
+      (:func:`wingfoil_spark.streaming.twins.delay_with_reset_timer_op`) —
+      true event-time firing with zero further key input. Its walk is the
+      executable spec the relational plan is tested against.
     """
-    if s.df.isStreaming or trigger.df.isStreaming:
-        from wingfoil_spark.streaming import twins
-
-        if s.keys != trigger.keys:
-            raise ValueError("delay_with_reset requires equal keys")
-        vals = value_cols or [
-            c for c in s.df.columns if c not in (s.ts, s.seq, *s.keys)
-        ]
-        src = s.df.select(
-            *s.keys, F.col(s.ts).alias("__t"), F.lit(0).alias("__trig"),
-            (F.col(s.seq) if s.seq else F.lit(0)).cast("long").alias("__seq"),
-            *vals,
-        )
-        trg = trigger.df.select(
-            *trigger.keys, F.col(trigger.ts).alias("__t"),
-            F.lit(1).alias("__trig"),
-            (F.col(trigger.seq) if trigger.seq else F.lit(0)).cast("long").alias("__seq"),
-            *[F.lit(None).cast(s.df.schema[c].dataType).alias(c) for c in vals],
-        )
-        u = src.unionByName(trg)
-        out_fields = [T.StructField(k, s.df.schema[k].dataType) for k in s.keys]
-        out_fields.append(T.StructField(s.ts, T.LongType()))
-        out_fields += [T.StructField(c, s.df.schema[c].dataType) for c in vals]
-        op = twins.delay_with_reset_timer_op(
-            int(delay_ns), s.ts, list(vals), list(s.keys),
-            T.StructType(out_fields),
-        )
-        return Stream(op.run_stream(u), ts=s.ts, seq=None, keys=s.keys)
-
-    if strategy == "relational":
-        return _delay_with_reset_relational(s, delay_ns, trigger, value_cols)
-    if strategy != "timer":
-        raise ValueError(f"unknown strategy {strategy!r}")
-    if s.keys != trigger.keys:
-        raise ValueError("delay_with_reset requires equal keys")
-    vals = value_cols or [c for c in s.df.columns if c not in (s.ts, s.seq, *s.keys)]
-    ts_col = s.ts
-    return _delay_with_reset_timer(s, delay_ns, trigger, vals, ts_col)
-
-
-def _delay_with_reset_relational(s: Stream, delay_ns: int, trigger: Stream,
-                                 value_cols: list[str] | None) -> Stream:
-    if s.keys != trigger.keys:
-        raise ValueError("delay_with_reset requires equal keys")
     from pyspark.sql import Window
 
+    if s.keys != trigger.keys:
+        raise ValueError("delay_with_reset requires equal keys")
     vals = value_cols or [c for c in s.df.columns if c not in (s.ts, s.seq, *s.keys)]
     ts_col, keys, delay = s.ts, list(s.keys), int(delay_ns)
     src = s.df.select(*keys, F.col(s.ts).alias("__t"), F.lit(0).alias("__trig"),
@@ -861,6 +603,16 @@ def _delay_with_reset_relational(s: Stream, delay_ns: int, trigger: Stream,
                             (F.col(trigger.seq) if trigger.seq else F.lit(0)).cast("long").alias("__seq"),
                             *[F.lit(None).cast(s.df.schema[c].dataType).alias(c) for c in vals])
     u = src.unionByName(trg)
+    if u.isStreaming:
+        from wingfoil_spark.streaming import twins
+
+        out_fields = [T.StructField(k, s.df.schema[k].dataType) for k in keys]
+        out_fields.append(T.StructField(ts_col, T.LongType()))
+        out_fields += [T.StructField(c, s.df.schema[c].dataType) for c in vals]
+        op = twins.delay_with_reset_timer_op(delay, ts_col, list(vals), keys,
+                                             T.StructType(out_fields))
+        return Stream(op.run_stream(u), ts=ts_col, seq=None, keys=s.keys)
+
     w = (Window.partitionBy(*keys) if keys else Window.partitionBy()).orderBy(
         "__t", "__trig", "__seq"
     )
@@ -894,69 +646,3 @@ def _delay_with_reset_relational(s: Stream, delay_ns: int, trigger: Stream,
     )
     out = delivered.unionByName(snaps).dropDuplicates()
     return Stream(out, ts=ts_col, seq=None, keys=s.keys)
-
-
-def _delay_with_reset_timer(s: Stream, delay_ns: int, trigger: Stream,
-                            vals: list[str], ts_col: str) -> Stream:
-
-    src = s.df.select(*s.keys, F.col(s.ts).alias("__t"),
-                      F.lit(0).alias("__trig"),
-                      (F.col(s.seq) if s.seq else F.lit(0)).cast("long").alias("__seq"),
-                      *vals)
-    trg = trigger.df.select(*trigger.keys, F.col(trigger.ts).alias("__t"),
-                            F.lit(1).alias("__trig"),
-                            (F.col(trigger.seq) if trigger.seq else F.lit(0)).cast("long").alias("__seq"),
-                            *[F.lit(None).cast(s.df.schema[c].dataType).alias(c) for c in vals])
-    u = src.unionByName(trg)
-    merged = Stream(u, ts="__t", seq="__trig", keys=s.keys)
-
-    out_fields = [T.StructField(k, s.df.schema[k].dataType) for k in s.keys]
-    out_fields.append(T.StructField(ts_col, T.LongType()))
-    out_fields += [T.StructField(c, s.df.schema[c].dataType) for c in vals]
-    schema = T.StructType(out_fields)
-
-    # bind plain values — closures must not capture Stream/DataFrame
-    # (SparkContext refs can't ship to workers)
-    keys, vals_t, delay = s.keys, tuple(vals), int(delay_ns)
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        # deterministic total order: ties at one instant resolve source-first
-        # then by upstream seq (two same-instant purchases apply in seq order)
-        pdf = pdf.sort_values(["__t", "__trig", "__seq"], kind="mergesort")
-        pending: list[tuple] = []  # (fire_at, values) — FIFO by schedule time
-        current = None
-        rows = []
-
-        def flush(upto):
-            nonlocal pending
-            fired = [p for p in pending if p[0] <= upto]
-            pending = [p for p in pending if p[0] > upto]
-            for fire_at, v in sorted(fired, key=lambda p: p[0]):
-                rows.append((fire_at, v))
-
-        t_arr = pdf["__t"].to_numpy()
-        trig_arr = pdf["__trig"].to_numpy()
-        val_arrs = [pdf[c].to_numpy() for c in vals_t]
-        for i in range(len(pdf)):
-            t = int(t_arr[i])
-            flush(t)  # deliveries due at/ before this instant fire first
-            if trig_arr[i]:
-                pending.clear()  # drop pending, snap to current
-                if current is not None:
-                    rows.append((t, current))
-            else:
-                current = tuple(a[i] for a in val_arrs)
-                pending.append((t + delay, current))
-        flush(np.iinfo(np.int64).max)
-
-        keyvals = group_key(pdf, keys)
-        out = pd.DataFrame(
-            [(*keyvals, t, *v) for t, v in rows],
-            columns=[*keys, ts_col, *vals_t],
-        )
-        # TimeQueue dedup: identical (time, value) schedules collapse
-        # (runtime/time_queue.rs:136)
-        return out.drop_duplicates()
-
-    out_df = _apply_per_key_reshape(merged, fn, schema)
-    return Stream(out_df, ts=ts_col, seq=None, keys=s.keys)

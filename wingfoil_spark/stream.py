@@ -243,7 +243,7 @@ class Stream:
         Returns ``(ok_with_acc, err)``."""
         from pyspark.sql import types as T
 
-        from wingfoil_spark.operators.stateful import _apply_per_key
+        from wingfoil_spark.operators.stateful import _apply_per_key_reshape
 
         use = cols or [c for c in self.df.columns if c not in (self.ts, self.seq, *self.keys)]
         dt = dtype or T.DoubleType()
@@ -263,16 +263,16 @@ class Stream:
             pdf["error"] = errs
             return pdf
 
-        folded = _apply_per_key(
-            self, step,
-            [T.StructField(out, dt), T.StructField("error", T.StringType())],
-        )
+        folded = _apply_per_key_reshape(self, step, T.StructType(
+            list(self.df.schema.fields)
+            + [T.StructField(out, dt), T.StructField("error", T.StringType())]
+        ))
         ok = Stream(
-            folded.df.where(F.col("error").isNull()).drop("error"),
+            folded.where(F.col("error").isNull()).drop("error"),
             self.ts, self.seq, self.keys,
         )
         err = Stream(
-            folded.df.where(F.col("error").isNotNull()).drop(out),
+            folded.where(F.col("error").isNotNull()).drop(out),
             self.ts, self.seq, self.keys,
         )
         return ok, err
@@ -758,12 +758,10 @@ class Stream:
         return throttle_exact(self, interval_ns)
 
     def delay_with_reset(self, delay_ns: int, trigger: "Stream",
-                         value_cols: list[str] | None = None,
-                         strategy: str = "relational") -> "Stream":
+                         value_cols: list[str] | None = None) -> "Stream":
         """Reference ``delay_with_reset`` (fluent.rs:1060)."""
         from wingfoil_spark.operators.stateful import delay_with_reset
-        return delay_with_reset(self, delay_ns, trigger,
-                                value_cols=value_cols, strategy=strategy)
+        return delay_with_reset(self, delay_ns, trigger, value_cols=value_cols)
 
     def fold_pandas(self, fn: Callable, init, out: str = "acc",
                     cols: list[str] | None = None, dtype=None) -> "Stream":

@@ -1,4 +1,4 @@
-from wingfoil_spark.streaming.stateful import KeyedStateOp, ewma_step, running_sum_step
+from wingfoil_spark.streaming.stateful import KeyedStateOp, ewma_step
 from wingfoil_spark.streaming.ingest import (
     ann_topk_stream,
     build_ann_index,
@@ -10,7 +10,6 @@ from wingfoil_spark.streaming.ingest import (
 __all__ = [
     "KeyedStateOp",
     "ewma_step",
-    "running_sum_step",
     "ann_topk_stream",
     "build_ann_index",
     "build_lsh_index",

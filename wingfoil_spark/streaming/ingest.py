@@ -553,36 +553,6 @@ def bm25_score_stream(
     return d.select(F.col(id_col), _bm25_sum(k1, b).alias("score"))
 
 
-def clf_score_stream(
-    new_docs: DataFrame,
-    model: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Quality-classifier logits for ARRIVING docs under a FROZEN
-    coefficient row — the streamed twin of
-    `selection.quality_scores`, completing the frozen-model serving
-    matrix (r13: DSIR λ, BM25 stats and the bigram LM all had streamed
-    scorers; the trained classifier — the CCNet/GPT-3 fasttext-style
-    quality gate a continuous crawl actually filters with — was
-    batch-named only).
-
-    ``new_docs`` may be a streaming frame; ``model`` is the static
-    one-row :func:`~wingfoil_spark.functions.selection.
-    fit_quality_classifier` frame (persist the fitted coefs as data;
-    refit per corpus refresh, never per micro-batch). Plan per
-    micro-batch: broadcast cross join of the single coefs row + the
-    row-local JVM gram fold + sigmoid — zero shuffles, zero Python, no
-    standing state. The implementation IS the batch scorer applied to
-    the streaming frame (quality_scores is stateless row-local by
-    construction — its docstring's "legal on a streaming frame as-is"
-    made executable and differential-pinned rather than left as
-    prose)."""
-    from wingfoil_spark.functions.selection import quality_scores
-
-    return quality_scores(new_docs, model, text_col, id_col)
-
-
 def lm_score_stream(
     new_docs: DataFrame,
     model: dict,

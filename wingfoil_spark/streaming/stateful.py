@@ -10,13 +10,15 @@ docs/wingfoil-architecture.md:11-26). The Spark-native expression:
   ``step(state, pdf) -> (state', out_pdf)`` over time-ordered per-key rows
   (the reference's ``Op::cycle`` with engine-owned state, op.rs:296-333 —
   batched rather than per-tick, because Arrow batches are Spark's unit);
-- **historical** binds it via ``groupBy(keys).applyInPandas`` (one batch =
+- **historical** binds it via the packed per-key ``mapInPandas`` binding
+  (``operators.stateful._apply_per_key_reshape``: one call per key with
   the whole history, state threads through trivially);
 - **realtime** binds the SAME function via ``applyInPandasWithState`` —
   state persists in the state store across micro-batches, keyed identically.
 
 Determinism contract: rows must reach the op in (ts, seq) order within a
-key. Both bindings put each batch in that order with :func:`in_order`
+key. The batch binding sorts within partitions by (keys, ts, seq); the
+streaming binding puts each batch in that order with :func:`in_order`
 (a no-op on the usual already-ordered input); streaming mode otherwise
 relies on in-order sources per key (Kafka per-partition order, file-source
 file order) — out-of-order data across micro-batches needs an upstream
@@ -33,7 +35,6 @@ from typing import Any
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
@@ -114,40 +115,28 @@ class KeyedStateOp:
     # ------------------------------------------------------------ historical
 
     def run_batch(self, df: DataFrame) -> DataFrame:
-        step, init, order = self.step, self.init_state, self._order()
-        from pyspark.sql import types as T
+        """Bind to a batch frame via the packed per-key binding: whole key
+        groups per Arrow batch, one Python round-trip per batch instead of
+        per key (per-group applyInPandas pays Arrow overhead × |keys| —
+        ~4× slower with thousands of small instruments). The binding
+        hands ``step`` each key's rows already in (ts, seq) order."""
+        from wingfoil_spark.operators.stateful import _apply_per_key_reshape
+        from wingfoil_spark.stream import Stream
 
-        names = (
-            T.StructType.fromDDL(self.out_schema).fieldNames()
-            if isinstance(self.out_schema, str) else self.out_schema.fieldNames()
-        )
+        step, init = self.step, self.init_state
+        schema = self.out_schema
+        if isinstance(schema, str):
+            schema = T.StructType.fromDDL(schema)
+        names = schema.fieldNames()
 
         def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-            _, out = step(init, in_order(pdf, order))
+            _, out = step(init, pdf)
             if len(out.columns) == 0:  # e.g. a close-only batch (with_close)
                 out = pd.DataFrame({c: [] for c in names})
             return out
 
-        if not self.keys:
-            return df.groupBy(F.lit(1).alias("__g")).applyInPandas(
-                lambda p: fn(p.drop(columns="__g", errors="ignore")),
-                schema=self.out_schema,
-            )
-        # packed binding: whole key groups per Arrow batch, one Python
-        # round-trip per batch instead of per key (per-group applyInPandas
-        # pays Arrow overhead × |keys| — ~4× slower with thousands of
-        # small instruments)
-        from pyspark.sql import types as T
-
-        from wingfoil_spark.operators.stateful import _apply_per_key_reshape
-        from wingfoil_spark.stream import Stream
-
-        schema = self.out_schema
-        if isinstance(schema, str):
-            schema = T.StructType.fromDDL(schema)
         s = Stream(df, ts=self.ts, seq=self.seq, keys=self.keys)
-        return _apply_per_key_reshape(s, fn, schema,
-                                      fn_multi=self.multi_step)
+        return _apply_per_key_reshape(s, fn, schema, fn_multi=self.multi_step)
 
     # -------------------------------------------------------------- realtime
 
@@ -263,20 +252,5 @@ def ewma_step(col: str, alpha: float, out: str, passthrough: list[str]) -> StepF
         out_pdf = pdf[passthrough].copy()
         out_pdf[out] = res
         return (init, value), out_pdf
-
-    return step
-
-
-def running_sum_step(col: str, out: str, passthrough: list[str]) -> StepFn:
-    """fold(+) as a resumable step: state = running total."""
-
-    def step(total, pdf: pd.DataFrame):
-        import numpy as np
-
-        vals = pdf[col].to_numpy(dtype=float)
-        acc = np.cumsum(vals) + total
-        out_pdf = pdf[passthrough].copy()
-        out_pdf[out] = acc
-        return (total + float(vals.sum())) if len(vals) else total, out_pdf
 
     return step

@@ -578,16 +578,16 @@ def buffer_step(
 
 
 def throttle_step(interval_ns: int, ts: str, keys: list[str]) -> StepFn:
-    """Timer-accurate throttle as a resumable step (state = next-allowed
-    ts), identical to the batch ``throttle_exact`` walk (ops.rs:381-414)."""
+    """Timer-accurate throttle (``throttle_exact``, ops.rs:381-414) as a
+    resumable step: emit iff ts ≥ last emission + interval. State = the
+    next allowed ts; missing state means nothing emitted yet, so a key's
+    first tick always emits, however small its ts."""
 
     def step(state, pdf: pd.DataFrame):
-        next_ok = state if state is not None else -(1 << 62)
+        next_ok = state
         keep = []
-        t_arr = pdf[ts].to_numpy()
-        for i in range(len(pdf)):
-            t = int(t_arr[i])
-            if t >= next_ok:
+        for i, t in enumerate(pdf[ts].to_numpy(dtype=np.int64).tolist()):
+            if next_ok is None or t >= next_ok:
                 keep.append(i)
                 next_ok = t + interval_ns
         return next_ok, pdf.iloc[keep]
@@ -596,15 +596,15 @@ def throttle_step(interval_ns: int, ts: str, keys: list[str]) -> StepFn:
 
 
 def drop_small_change_step(col: str, tol: float, keys: list[str]) -> StepFn:
-    """drop_small_change as a resumable step (state = last emitted value),
-    identical to the batch kernel (ops.rs:227-262)."""
+    """``drop_small_change`` (ops.rs:227-262) as a resumable step: emit
+    iff |cur − last emitted| > tol; a key's first tick always emits.
+    State = the last emitted value (a NaN reference suppresses every later
+    tick, as ``abs(x - NaN) > tol`` is false)."""
 
     def step(state, pdf: pd.DataFrame):
         ref = state
         keep = []
-        v = pdf[col].to_numpy(dtype=np.float64)
-        for i in range(len(pdf)):
-            x = float(v[i])
+        for i, x in enumerate(pdf[col].to_numpy(dtype=np.float64).tolist()):
             if ref is None or abs(x - ref) > tol:
                 keep.append(i)
                 ref = x
@@ -614,35 +614,51 @@ def drop_small_change_step(col: str, tol: float, keys: list[str]) -> StepFn:
 
 
 def drop_small_change_pred_step(col: str, pred, keys: list[str]) -> StepFn:
-    """Predicate-form drop_small_change as a resumable step (state = last
-    EMITTED value) — the reference binding's ``(cur, prev_emitted) ->
-    bool`` form (wingfoil-python tests/test_interop.py:68-107) on a
-    stream. Holding one scalar per key and calling the user predicate per
-    arriving row is exactly what the keyed state store is for (VERDICT r4
-    missing #1); the per-row Python cost is the predicate's own contract,
-    identical to the batch walk. A raising predicate aborts the query;
-    a non-bool return is the same loud TypeError as batch."""
+    """Predicate-form ``drop_small_change`` — the reference binding's
+    ``(cur, prev_emitted) -> bool`` form (wingfoil-python
+    tests/test_interop.py:68-107) — as a resumable step. State = a 1-tuple
+    holding the last EMITTED value (wrapped so an emitted None stays a
+    reference and does not release the state slot); a key's first tick
+    always emits. The per-row Python cost is the predicate's own contract.
+    A raising predicate aborts the run; a non-bool return is a TypeError
+    naming the contract."""
 
     def step(state, pdf: pd.DataFrame):
-        ref = state
         keep = []
         v = pdf[col].to_numpy()
         for i in range(len(pdf)):
             x = v[i]
-            if ref is None:
-                keep.append(i)
-                ref = x
-                continue
-            small = pred(x, ref)
-            if not isinstance(small, (bool, np.bool_)):
-                raise TypeError(
-                    "drop_small_change predicate must return a bool, "
-                    f"got {type(small).__name__}"
-                )
-            if not small:
-                keep.append(i)
-                ref = x
-        return ref, pdf.iloc[keep]
+            if state is not None:
+                small = pred(x, state[0])
+                if not isinstance(small, (bool, np.bool_)):
+                    raise TypeError(
+                        "drop_small_change predicate must return a bool, "
+                        f"got {type(small).__name__}"
+                    )
+                if small:
+                    continue
+            keep.append(i)
+            state = (x,)
+        return state, pdf.iloc[keep]
+
+    return step
+
+
+def fold_step(fn, init, cols: list[str], out: str) -> StepFn:
+    """``fold_pandas``' arbitrary-closure fold ``acc' = fn(acc, row)`` as a
+    resumable step, emitting each intermediate accumulator in ``out``.
+    State = a 1-tuple holding the accumulator (so a None accumulator does
+    not release the state slot); missing state starts from ``init``."""
+
+    def step(state, pdf: pd.DataFrame):
+        acc = state[0] if state is not None else init
+        res = []
+        for r in pdf[cols].to_dict("records"):
+            acc = fn(acc, r)
+            res.append(acc)
+        out_pdf = pdf.copy()
+        out_pdf[out] = res
+        return (acc,), out_pdf
 
     return step
 
@@ -804,10 +820,11 @@ def delay_with_reset_timer_op(
 ) -> EventTimeTimerOp:
     """``delay_with_reset`` with watermark-driven firing (reference timer-
     cancel node, ops.rs:3486-3604): input is the tagged union frame
-    (``__trig`` 0=source / 1=trigger, ``__seq``). The per-batch walk is the
-    SAME order as the batch timer strategy (operators/stateful.py
-    ``_delay_with_reset_timer``): deliveries due at/<= a row's instant fire
-    before it; a trigger drops all pending and re-emits the current value.
+    (``__trig`` 0=source / 1=trigger, ``__seq``), walked in (__t, __trig,
+    __seq) order: deliveries due at/<= a row's instant fire before it; a
+    trigger drops all pending and re-emits the current value. The batch
+    relational plan (operators/stateful.py ``delay_with_reset``) is tested
+    against this walk driven per key with the watermark at int64 max.
     Event-time guarantee makes watermark-firing safe: once the watermark
     passes a fire time, any future trigger has ts ≥ watermark and could not
     have cancelled that delivery."""
