@@ -69,8 +69,6 @@ _FULL_ONLY = (
     # sweeps and perf assertions, each with cheaper functional/golden
     # siblings that stay in the lane
     "test_fix_codec.py::test_groups_split_differential_vs_python_walk",
-    "test_lm_packing.py::test_kn_differential",
-    "test_lm_packing.py::test_lm_differential",
     "test_scale_primitives.py::test_salted_grouped_apply_beats_hot_python_stage",
     "test_bpe.py::test_incremental_trainer_speed",
     "test_bpe.py::test_hypothesis_differential",

@@ -158,7 +158,7 @@ MODULE_SURFACES = {
         "build_ann_index", "ann_topk_stream", "build_decon_index",
         "decontaminate_stream",
         "build_dsir_index", "dsir_score_stream",
-        "build_bm25_index", "bm25_score_stream", "lm_score_stream",
+        "build_bm25_index", "bm25_score_stream",
         "build_fingerprint_store", "dedup_against_store",
         "compact_fingerprint_store",
     ],

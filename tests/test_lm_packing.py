@@ -5,6 +5,7 @@ brute-force Python references; contracts pinned on hand-checked cases.
 """
 
 import math
+import os
 from collections import Counter
 
 import pytest
@@ -12,6 +13,10 @@ from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from wingfoil_spark.functions import curation as cu, lm
+
+#: hypothesis examples per LM differential: a bounded budget in the
+#: default lane, the full one with WINGFOIL_FULL_SUITE=1
+DIFF_EXAMPLES = 10 if os.environ.get("WINGFOIL_FULL_SUITE", "") == "1" else 5
 
 
 # ---------------------------------------------------------- python reference
@@ -43,16 +48,50 @@ def ref_lm_scores(ref_texts, texts, k):
     return out
 
 
-def spark_lm_scores(spark, ref_texts, texts, k):
+def _frames(spark, ref_texts, texts):
     ref = spark.createDataFrame([(t,) for t in ref_texts], "text string")
     docs = spark.createDataFrame(
         [(i, t) for i, t in texts.items()], "doc_id long, text string"
     )
+    return ref, docs
+
+
+def spark_lm_scores(spark, ref_texts, texts, k):
+    ref, docs = _frames(spark, ref_texts, texts)
     model = lm.fit_bigram_lm(ref, k=k)
     rows = lm.lm_perplexity(docs, model).collect()
     return {
         r.doc_id: (r.n_bigrams, r.logprob_per_token, r.perplexity) for r in rows
     }
+
+
+def spark_dual_scores(spark, ref_texts, texts, k, D):
+    """{id: (addk triple, kn triple)} from dual_perplexity."""
+    ref, docs = _frames(spark, ref_texts, texts)
+    rows = lm.dual_perplexity(
+        docs, lm.fit_bigram_counts(ref), k=k, discount=D
+    ).collect()
+    return {
+        r.doc_id: (
+            (r.n_bigrams, r.logprob_addk, r.perplexity_addk),
+            (r.n_bigrams, r.logprob_kn, r.perplexity_kn),
+        )
+        for r in rows
+    }
+
+
+def assert_scores_match(got, want, lp_tol):
+    """Spark {id: (n, logprob, ppl)} against the Python model's."""
+    assert set(got) == set(want)
+    for i in got:
+        gn, glp, gp = got[i]
+        wn, wlp, wp = want[i]
+        assert gn == wn
+        if wlp is None:
+            assert glp is None and gp is None
+        else:
+            assert glp == pytest.approx(wlp, **lp_tol)
+            assert gp == pytest.approx(wp, rel=1e-9)
 
 
 # ------------------------------------------------------------------------ lm
@@ -98,7 +137,7 @@ def test_lm_empty_vocab_guard(spark):
             lm.fit_bigram_lm(ref, k=0.1)
 
 
-@settings(max_examples=10, deadline=None)
+@settings(max_examples=DIFF_EXAMPLES, deadline=None)
 @given(
     st.lists(
         st.lists(st.sampled_from("abcd"), min_size=0, max_size=15).map(" ".join),
@@ -119,18 +158,11 @@ def test_lm_differential(spark, ref_texts, score_texts):
         with pytest.raises(ValueError, match="empty vocabulary"):
             spark_lm_scores(spark, ref_texts, texts, k=0.25)
         return
-    got = spark_lm_scores(spark, ref_texts, texts, k=0.25)
     want = ref_lm_scores(ref_texts, texts, k=0.25)
-    assert set(got) == set(want)
-    for i in got:
-        gn, glp, gp = got[i]
-        wn, wlp, wp = want[i]
-        assert gn == wn
-        if wlp is None:
-            assert glp is None and gp is None
-        else:
-            assert glp == pytest.approx(wlp, rel=1e-9, abs=1e-12)
-            assert gp == pytest.approx(wp, rel=1e-9)
+    tol = dict(rel=1e-9, abs=1e-12)
+    assert_scores_match(spark_lm_scores(spark, ref_texts, texts, k=0.25), want, tol)
+    dual = spark_dual_scores(spark, ref_texts, texts, k=0.25, D=0.75)
+    assert_scores_match({i: a for i, (a, _) in dual.items()}, want, tol)
 
 
 def test_ppl_buckets_ordering(spark):
@@ -277,10 +309,7 @@ def ref_kn_scores(ref_texts, texts, D=0.75):
 
 
 def spark_kn_scores(spark, ref_texts, texts, D=0.75):
-    ref = spark.createDataFrame([(t,) for t in ref_texts], "text string")
-    docs = spark.createDataFrame(
-        [(i, t) for i, t in texts.items()], "doc_id long, text string"
-    )
+    ref, docs = _frames(spark, ref_texts, texts)
     model = lm.fit_kn_lm(ref, discount=D)
     rows = lm.kn_perplexity(docs, model).collect()
     return {
@@ -329,7 +358,7 @@ def test_kn_guards(spark):
         lm.fit_kn_lm(empty)
 
 
-@settings(max_examples=10, deadline=None)
+@settings(max_examples=DIFF_EXAMPLES, deadline=None)
 @given(
     st.lists(
         st.lists(st.sampled_from("abcd"), min_size=0, max_size=15).map(" ".join),
@@ -348,18 +377,11 @@ def test_kn_differential(spark, ref_texts, score_texts):
         with pytest.raises(ValueError, match="empty vocabulary"):
             spark_kn_scores(spark, ref_texts, texts)
         return
-    got = spark_kn_scores(spark, ref_texts, texts)
     want = ref_kn_scores(ref_texts, texts)
-    assert set(got) == set(want)
-    for i in got:
-        gn, glp, gp = got[i]
-        wn, wlp, wp = want[i]
-        assert gn == wn
-        if wlp is None:
-            assert glp is None and gp is None
-        else:
-            assert glp == pytest.approx(wlp, abs=1e-9)
-            assert gp == pytest.approx(wp, rel=1e-9)
+    tol = dict(abs=1e-9)
+    assert_scores_match(spark_kn_scores(spark, ref_texts, texts), want, tol)
+    dual = spark_dual_scores(spark, ref_texts, texts, k=0.25, D=0.75)
+    assert_scores_match({i: kn for i, (_, kn) in dual.items()}, want, tol)
 
 
 def test_dual_perplexity_matches_separate_scorers(spark, sf_dir):

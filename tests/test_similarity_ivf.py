@@ -726,6 +726,18 @@ def test_ivf_assign_zero_norm_centroid(spark):
         sim.ivf_assign(df, dead, 1).collect()
 
 
+def test_ivf_assign_build_py4j_round_trips(spark, emb, py4j_commands):
+    """Every IVF/IVF-PQ search builds one or two assignments, so their
+    assembly cost is pinned in py4j round trips, which host load cannot
+    inflate: SQL text over internal names needs ~50 (the Column-API
+    chain it replaced sent 151)."""
+    cents = sim.ivf_centroids(emb, 64, fit="take").localCheckpoint(eager=True)
+    sim.ivf_assign(emb, cents, 4)  # warm: the input schema is cached
+    with py4j_commands() as c:
+        sim.ivf_assign(emb, cents, 4)
+    assert c.n <= 60, f"{c.n} py4j round trips to build ivf_assign"
+
+
 def test_append_ivf_store_keeps_duplicate_ids(spark, emb, tmp_path):
     """An appended batch that carries one id twice, with different
     vectors, lands BOTH rows in the store (dedup is the caller's crawl

@@ -689,17 +689,21 @@ def test_clf_score_stream_equals_batch(spark, docs):
         assert ql == pytest.approx(batch[i][1], abs=1e-12), i
 
 
-def test_lm_score_stream_equals_batch(spark, docs):
-    """Streaming LM scoring == batch lm_perplexity (docs with >=1 bigram)
-    against the frozen model frames, across micro-batch boundaries."""
+@pytest.mark.parametrize("smoothing", ["addk", "kn"])
+def test_lm_score_stream_equals_batch(spark, docs, smoothing):
+    """Streamed LM scoring == batch scoring (docs with >=1 bigram) under
+    the frozen count fit, across micro-batch boundaries: the same
+    lm_perplexity / kn_perplexity call on both frames."""
     from wingfoil_spark.functions import lm
 
     ref = docs.where(F.col("doc_id") % 7 == 0)
-    model = lm.fit_bigram_lm(ref, k=0.1)
-    model = {k: v.localCheckpoint() for k, v in model.items()}
+    if smoothing == "addk":
+        model, score = lm.fit_bigram_lm(ref, k=0.1), lm.lm_perplexity
+    else:
+        model, score = lm.fit_kn_lm(ref, discount=0.75), lm.kn_perplexity
     batch = {
         r.doc_id: (r.n_bigrams, r.logprob_per_token)
-        for r in lm.lm_perplexity(docs, model).collect()
+        for r in score(docs, model).collect()
         if r.n_bigrams > 0
     }
     assert batch
@@ -707,16 +711,13 @@ def test_lm_score_stream_equals_batch(spark, docs):
     pdf = docs.toPandas().sort_values("doc_id")
     stream, src_dir = _stream_chunks(spark, pdf)
     try:
-        scored = _run_to_memory(
-            ingest.lm_score_stream(stream, model),
-            "ingest_lm",
-        )
+        scored = _run_to_memory(score(stream, model), f"ingest_lm_{smoothing}")
         got = {r.doc_id: (r.n_bigrams, r.logprob_per_token)
                for r in scored.collect()}
     finally:
         shutil.rmtree(src_dir, ignore_errors=True)
     assert set(got) == set(batch)
-    # 1e-9: the stream scorer quantizes per-bigram logprobs to 1e-9
+    # 1e-9: the streamed scorer quantizes per-bigram logprobs to 1e-9
     # integers before the per-doc sum (order-free determinism, ADVICE
     # r8), so it differs from batch avg() by < 5e-10 per doc by design.
     for i, (n, lp) in got.items():

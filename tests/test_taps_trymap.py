@@ -8,7 +8,9 @@
 """
 
 import os
+import shutil
 import tempfile
+import time
 
 import pytest
 
@@ -83,6 +85,56 @@ def test_try_filter_and_try_fold(spark):
     # error rows skipped: accumulator unaffected by spiking rows
     if ferr_rows:
         assert all(r.error.startswith("ValueError: spike") for r in ferr_rows)
+
+
+def test_try_fold_streamed_equals_batch(spark):
+    """try_fold on a stream fed as time-ordered micro-batches emits the
+    batch (ok, err) rows: the accumulator, and the skip past an erroring
+    row, carry across micro-batch boundaries."""
+    s = _events(spark)
+
+    def stepper(acc, row):
+        if row["value"] > 240:
+            raise ValueError("spike")
+        return acc + row["value"]
+
+    want = [
+        sorted(tuple(r) for r in side.df.collect())
+        for side in s.try_fold(stepper, 0.0, out="acc")
+    ]
+    assert want[0] and want[1], "fixture should hold ok and spiking rows"
+
+    pdf = s.df.toPandas().sort_values(["ts_us", "event_id"], kind="mergesort")
+    src = tempfile.mkdtemp(prefix="wf_try_fold_src_")
+    got = []
+    try:
+        n = len(pdf)
+        for i in range(3):
+            path = os.path.join(src, f"chunk-{i:03d}.parquet")
+            pdf.iloc[n * i // 3:n * (i + 1) // 3].to_parquet(path, index=False)
+            os.utime(path, (time.time() + i, time.time() + i))
+        sdf = (
+            spark.readStream.schema(s.df.schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
+        )
+        sides = Stream(sdf, ts="ts_us", seq="event_id", keys=("user_id",)).try_fold(
+            stepper, 0.0, out="acc"
+        )
+        for name, side in zip(("try_fold_ok", "try_fold_err"), sides):
+            q = (
+                side.df.writeStream.format("memory")
+                .queryName(name)
+                .outputMode("append")
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination(180)
+            assert sum(p["numInputRows"] > 0 for p in q.recentProgress) >= 2
+            got.append(sorted(tuple(r) for r in spark.sql(f"SELECT * FROM {name}").collect()))
+    finally:
+        shutil.rmtree(src, ignore_errors=True)
+    assert got == want
 
 
 def test_try_map_routes_errors_to_side_stream(spark):

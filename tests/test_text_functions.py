@@ -350,6 +350,41 @@ def test_single_token_doc_survives_shingle_paths(spark):
     assert sigs.count() == 3
 
 
+def test_word_ngrams_expr_resolves_caller_column_like_f_col(spark):
+    """word_ngrams_expr resolves its caller's column through the Column
+    API: a dotted struct field, a backticked name holding a dot and a
+    name with a hyphen give the n-grams the internal-name SQL text gives
+    on the same tokens (short, empty and NULL arrays included)."""
+    import pyspark.sql.functions as F
+
+    from wingfoil_spark.functions import dedup
+
+    df = spark.createDataFrame(
+        [(1, ["a", "b", "c", "d"]), (2, ["a", "b", "c"]), (3, ["x", "y"]),
+         (4, []), (5, None)],
+        "id long, __toks array<string>",
+    )
+    want = {
+        r.id: r.g
+        for r in df.select("id", F.expr(dedup._ngrams_sql(3)).alias("g")).collect()
+    }
+    assert want[1] == ["a b c", "b c d"] and want[3] == [] and want[5] is None
+    cases = [
+        (df.select("id", F.struct(F.col("__toks").alias("toks")).alias("meta")),
+         "meta.toks"),
+        (df.select("id", F.col("__toks").alias("my.toks")), "`my.toks`"),
+        (df.select("id", F.col("__toks").alias("tok-s")), "tok-s"),
+    ]
+    for frame, name in cases:
+        got = {
+            r.id: r.g
+            for r in frame.select(
+                "id", dedup.word_ngrams_expr(name, 3).alias("g")
+            ).collect()
+        }
+        assert got == want, name
+
+
 def test_gopher_quality_flags(spark):
     """The published Gopher A1.1 rules as a struct column: a healthy doc
     passes every rule; each degenerate shape trips exactly its rule."""

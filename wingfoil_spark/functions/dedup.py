@@ -472,8 +472,18 @@ def _ngrams_sql(n: int, toks_col: str = "__toks") -> str:
 
 
 def word_ngrams_expr(toks_col: str, n: int) -> "F.Column":
-    """:func:`_ngrams_sql` of a staged token-array column, as a Column."""
-    return F.expr(_ngrams_sql(n, toks_col))
+    """The word ``n``-grams (space-joined) of the token-array column
+    ``toks_col``, resolved like ``F.col`` (dotted struct fields,
+    backticked names); [] for docs shorter than ``n`` tokens. The Column
+    form of :func:`_ngrams_sql`, whose SQL text names only internal
+    columns."""
+    n, t = int(n), F.col(toks_col)
+    return F.when(F.size(t) < n, F.array().cast("array<string>")).otherwise(
+        F.transform(
+            F.sequence(F.lit(1), F.size(t) - (n - 1)),
+            lambda i: F.array_join(F.slice(t, i, F.lit(n)), " "),
+        )
+    )
 
 
 def _gram_hashes(n: int) -> "F.Column":
@@ -482,6 +492,37 @@ def _gram_hashes(n: int) -> "F.Column":
     and substring dedup, batch and streamed."""
     h = _MD5_INT_SQL.format(x="g")
     return F.expr(f"transform({_ngrams_sql(n)}, g -> {h})")
+
+
+def _doc_grams(
+    docs: DataFrame,
+    n: int,
+    text_col: str = "text",
+    id_col: str | None = None,
+    toks_col: str | None = None,
+) -> DataFrame:
+    """One row per distinct word ``n``-gram hash ``gh`` of each doc,
+    beside ``id_col`` when given — decontamination's row-local gram
+    explode, batch and streamed. ``toks_col`` names a staged token array
+    to read instead of tokenizing ``text_col``. n-grams are over the raw
+    token SEQUENCE (``array_distinct`` applies to the resulting grams,
+    never the tokens)."""
+    ids = [id_col] if id_col else []
+    toks = F.col(toks_col) if toks_col else tokens(F.col(text_col))
+    return docs.select(*[F.col(i) for i in ids], toks.alias("__toks")).select(
+        *ids, F.explode(F.array_distinct(_gram_hashes(n))).alias("gh")
+    )
+
+
+def _bench_grams(
+    benchmark: DataFrame, n: int, text_col: str = "text"
+) -> DataFrame:
+    """The distinct ``n``-gram hash set ``(gh)`` of an eval set — the
+    broadcast side of :func:`decontaminate` and of the persisted
+    streaming index (``ingest.build_decon_index``)."""
+    return _doc_grams(
+        benchmark.where(F.col(text_col).isNotNull()), n, text_col
+    ).distinct()
 
 
 def decontaminate(
@@ -515,25 +556,11 @@ def decontaminate(
     60-bit md5 units as the MinHash tier, so an exact DuckDB twin exists."""
     if n < 1:
         raise ValueError(f"n must be >= 1, got {n}")
-    gram_h = F.explode(F.array_distinct(_gram_hashes(n)))
-    # n-grams are over the raw token SEQUENCE (array_distinct applies to
-    # the resulting grams, never the tokens) on BOTH sides:
-    bench_units = (
-        benchmark.select(tokens(F.col(text_col)).alias("__toks"))
-        .select(gram_h.alias("gh"))
-        .distinct()
-    )
+    bench_units = _bench_grams(benchmark, n, text_col)
     # toks_col: a precomputed CORPUS token array (one tokenize shared
     # across curation steps); the tiny bench side always tokenizes here
-    corpus_units = (
-        ensure_parallelism(corpus)
-        .select(
-            F.col(id_col),
-            (F.col(toks_col) if toks_col else tokens(F.col(text_col))).alias(
-                "__toks"
-            ),
-        )
-        .select(id_col, gram_h.alias("gh"))
+    corpus_units = _doc_grams(
+        ensure_parallelism(corpus), n, text_col, id_col, toks_col
     )
     hits = (
         corpus_units.join(F.broadcast(bench_units), "gh")

@@ -460,17 +460,20 @@ def ivf_assign(
     Materialize a lazily-fit centroid frame first (localCheckpoint): its
     plan is embedded in every assignment, and a streaming query re-runs
     a static side each micro-batch."""
+    # SQL text over internal names throughout: every Column-API call is
+    # a py4j round trip, and each IVF/IVF-PQ search builds one or two
+    # assignments (test_ivf_assign_build_py4j_round_trips)
     cents = (
-        centroids.where(F.col("cnorm") > 0)
-        .agg(F.expr(
+        centroids.where("cnorm > 0")
+        .selectExpr(
             "array_sort(collect_list(named_struct("
-            "'cid', cid, 'cvec', cvec, 'cnorm', cnorm)))"
-        ).alias("__cents"))
-        .select(F.expr(
+            "'cid', cid, 'cvec', cvec, 'cnorm', cnorm))) AS __cents"
+        )
+        .selectExpr(
             "CASE WHEN size(__cents) > 0 THEN __cents ELSE raise_error("
             "'ivf_assign: no usable centroids (empty frame or all "
-            "zero-norm)') END"
-        ).alias("__cents"))
+            "zero-norm)') END AS __cents"
+        )
     )
     cos = _DOT_SQL.format(a="__e", b="c.cvec") + " / (__nrm * c.cnorm)"
     cells = (
@@ -480,12 +483,13 @@ def ivf_assign(
         "WHEN a.cid < b.cid THEN -1 WHEN a.cid > b.cid THEN 1 ELSE 0 END), "
         f"1, {int(nprobe)}), s -> s.cid)"
     )
-    d = with_norm(df.withColumn("__e", F.col(emb_col)), "__e", "__nrm")
+    keep = ["`" + c.replace("`", "``") + "`" for c in df.columns]
     return (
-        d.where(F.col("__nrm") > 0)
+        df.withColumn("__e", F.col(emb_col))
+        .selectExpr("*", f"sqrt({_DOT_SQL.format(a='__e', b='__e')}) AS __nrm")
+        .where("__nrm > 0")
         .crossJoin(F.broadcast(cents))
-        .withColumn("cid", F.expr(f"explode({cells})"))
-        .drop("__e", "__nrm", "__cents")
+        .selectExpr(*keep, f"explode({cells}) AS cid")
     )
 
 
@@ -591,12 +595,12 @@ def ivf_centroids(
       exactly — any order, any engine — then one double division chain
       ``(Σ/1e9)/n`` and the 6dp half-up round). Empty cluster keeps its
       previous centroid. The quantized sum is the same order-free trick
-      as ``lm_score_stream``; and the similarities feeding each argmax
-      are computed with an explicitly ORDERED left fold on BOTH engines
-      (a dim-at-a-time loop here, ``list_reduce`` in the SQL replay —
-      ADVICE r12: numpy BLAS and a sequential SQL fold accumulate in
-      different orders, so a real-data near-tie between two centroids
-      could otherwise flip an assignment). With bit-identical fold
+      as the streamed ``lm.lm_perplexity``; and the similarities feeding
+      each argmax are computed with an explicitly ORDERED left fold on
+      BOTH engines (a dim-at-a-time loop here, ``list_reduce`` in the SQL
+      replay — ADVICE r12: numpy BLAS and a sequential SQL fold
+      accumulate in different orders, so a real-data near-tie between
+      two centroids could otherwise flip an assignment). With bit-identical fold
       inputs and IEEE-exact ``/``/``sqrt``, every iteration — sims,
       assignments, means — is bit-identical between numpy and the SQL
       replay by construction.

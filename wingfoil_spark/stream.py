@@ -240,33 +240,19 @@ class Stream:
         running accumulator ``acc' = fn(acc, row)``; a row whose step raises
         is routed to the error stream and the accumulator is left unchanged
         (the reference's Err-skip contract — the graph keeps running).
-        Returns ``(ok_with_acc, err)``."""
+        Returns ``(ok_with_acc, err)``. Both run modes bind
+        ``twins.try_fold_step`` through KeyedStateOp."""
         from pyspark.sql import types as T
 
-        from wingfoil_spark.operators.stateful import _apply_per_key_reshape
+        from wingfoil_spark.operators.stateful import _run_keyed
+        from wingfoil_spark.streaming.twins import try_fold_step
 
         use = cols or [c for c in self.df.columns if c not in (self.ts, self.seq, *self.keys)]
-        dt = dtype or T.DoubleType()
-
-        def step(pdf):
-            acc = init
-            vals, errs = [], []
-            for row in pdf[use].to_dict("records"):
-                try:
-                    acc = fn(acc, row)
-                    vals.append(acc)
-                    errs.append(None)
-                except Exception as e:
-                    vals.append(None)
-                    errs.append(f"{type(e).__name__}: {e}")
-            pdf[out] = vals
-            pdf["error"] = errs
-            return pdf
-
-        folded = _apply_per_key_reshape(self, step, T.StructType(
+        folded = _run_keyed(self, try_fold_step(fn, init, use, out), T.StructType(
             list(self.df.schema.fields)
-            + [T.StructField(out, dt), T.StructField("error", T.StringType())]
-        ))
+            + [T.StructField(out, dtype or T.DoubleType()),
+               T.StructField("error", T.StringType())]
+        )).df
         ok = Stream(
             folded.where(F.col("error").isNull()).drop("error"),
             self.ts, self.seq, self.keys,

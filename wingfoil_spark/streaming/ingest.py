@@ -23,6 +23,11 @@ continuous crawl. This module gives the batch dedup/text operators
   are stateless Catalyst projections (or Arrow-batched kernels), legal on
   a streaming frame as-is. tests/test_streaming_ingest.py pins
   batch == stream for the full battery.
+- Frozen-model scorers and searches whose batch function takes a
+  streaming frame need no twin here either: the LM perplexity scorers
+  (`lm.lm_perplexity` / `kn_perplexity` / `dual_perplexity` over a
+  persisted count fit), the quality classifier
+  (`selection.quality_scores`) and every `similarity` search.
 
 Scale posture: everything here shuffles at most once per micro-batch on
 the band key (the join); signatures and fingerprints are row-local. The
@@ -43,7 +48,8 @@ from pyspark.sql import DataFrame, functions as F
 from wingfoil_spark.functions.dedup import (
     LSH_BANDS,
     MINHASH_K,
-    _gram_hashes,
+    _bench_grams,
+    _doc_grams,
     band_explode,
     minhash_sig_array,
 )
@@ -366,13 +372,7 @@ def build_decon_index(
     micro-batch. Same gram/hash math as the batch scrub
     (`dedup.decontaminate`) — shared expressions, so stream == batch is a
     structural fact, then differentially tested anyway."""
-    gram_h = F.explode(F.array_distinct(_gram_hashes(n)))
-    return (
-        benchmark.where(F.col(text_col).isNotNull())
-        .select(tokens(F.col(text_col)).alias("__toks"))
-        .select(gram_h.alias("gh"))
-        .distinct()
-    )
+    return _bench_grams(benchmark, n, text_col)
 
 
 def decontaminate_stream(
@@ -411,15 +411,11 @@ def decontaminate_stream(
     corrupting ids above 2^53 in the dedup pass)."""
     import pandas as pd
 
-    grams = (
+    grams = _doc_grams(
         new_docs.where(
             F.col(text_col).isNotNull() & F.col(id_col).isNotNull()
-        )
-        .select(F.col(id_col), tokens(F.col(text_col)).alias("__toks"))
-        .select(
-            id_col,
-            F.explode(F.array_distinct(_gram_hashes(n))).alias("gh"),
-        )
+        ),
+        n, text_col, id_col,
     )
     hits = grams.join(F.broadcast(index), "gh", "left_semi").select(id_col)
     id_type = new_docs.schema[id_col].dataType.simpleString()
@@ -551,94 +547,6 @@ def bm25_score_stream(
         .crossJoin(F.broadcast(index))
     )
     return d.select(F.col(id_col), _bm25_sum(k1, b).alias("score"))
-
-
-def lm_score_stream(
-    new_docs: DataFrame,
-    model: dict,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """CCNet-shape LM perplexity for ARRIVING docs against a frozen
-    add-k model (`functions.lm.fit_bigram_lm` — persist the model frames
-    per corpus refresh, like every index here).
-
-    Per micro-batch: the row-local bigram explode (`lm._bigram_pos`,
-    shared with the batch scorer), stream-static left joins against the
-    model frames (AQE broadcast-decides), then per-doc (count, mean) via
-    repartition(id) + mapInPandas with a RUNNING merge across Arrow
-    batches — a doc's rows colocate in one partition but may span
-    batches (the pq_topk batch-invariance lesson); (n, Σlp) merging is
-    associative, so the emission at iterator exhaustion is exact and the
-    state is O(docs-in-partition). Zero standing state across batches —
-    a doc lives in exactly one micro-batch.
-
-    Determinism (ADVICE r8): per-bigram logprobs are quantized JVM-side
-    to 1e-9 integers (round(lp·1e9) as long) BEFORE the per-doc sum, so
-    Σlp is exact integer arithmetic — identical under ANY summation
-    order, Arrow batching, arrival order, or engine. The reported
-    logprob_per_token = Σ/1e9/n differs from the unquantized mean by
-    < 5e-10 (the batch scorer's double `avg` is engine-order-dependent
-    at ~1e-13 anyway); the stream-vs-batch differential pin holds at
-    1e-9.
-
-    Emits only docs with ≥ 1 bigram (the flagged-only convention: token-
-    poor docs carry no LM evidence; the batch scorer reports them as
-    NULL). Output: (id, n_bigrams, logprob_per_token, perplexity)."""
-    import pandas as pd
-
-    from wingfoil_spark.functions.lm import _bigram_pos
-
-    pos = _bigram_pos(
-        new_docs.where(F.col(text_col).isNotNull()), text_col, id_col
-    )
-    scored = (
-        pos.join(model["bigrams"], ["w1", "w2"], "left")
-        .join(model["histories"], ["w1"], "left")
-        .crossJoin(F.broadcast(model["consts"]))
-        .select(
-            id_col,
-            F.round(
-                F.coalesce(
-                    F.col("logp"), F.col("logp_unseen"), F.col("logp_oov")
-                )
-                * F.lit(1e9)
-            )
-            .cast("long")
-            .alias("__lpq"),
-        )
-    )
-    id_type = new_docs.schema[id_col].dataType.simpleString()
-    schema = (
-        f"{id_col} {id_type}, n_bigrams long, "
-        "logprob_per_token double, perplexity double"
-    )
-
-    def per_doc(batches):
-        acc: dict = {}  # id -> [n, lp_quantized_int_sum]
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            g = pdf.groupby(id_col, sort=False)["__lpq"].agg(["count", "sum"])
-            for i, row in g.iterrows():
-                st = acc.setdefault(i, [0, 0])
-                st[0] += int(row["count"])
-                st[1] += int(row["sum"])
-        if acc:
-            import math
-
-            out = pd.DataFrame(
-                [
-                    (i, n, s / 1e9 / n, math.exp(-(s / 1e9 / n)))
-                    for i, (n, s) in acc.items()
-                ],
-                columns=[
-                    id_col, "n_bigrams", "logprob_per_token", "perplexity"
-                ],
-            )
-            yield out
-
-    return scored.repartition(id_col).mapInPandas(per_doc, schema)
 
 
 def ann_topk_stream(

@@ -663,6 +663,32 @@ def fold_step(fn, init, cols: list[str], out: str) -> StepFn:
     return step
 
 
+def try_fold_step(fn, init, cols: list[str], out: str) -> StepFn:
+    """``Stream.try_fold``'s fallible fold as a resumable step: a row
+    whose ``fn`` raises emits ``"<Type>: <message>"`` in ``error`` (and
+    NULL ``out``) and leaves the accumulator unchanged; every other row
+    emits the new accumulator and a NULL ``error``. State = the
+    accumulator 1-tuple, as in :func:`fold_step`."""
+
+    def step(state, pdf: pd.DataFrame):
+        acc = state[0] if state is not None else init
+        vals, errs = [], []
+        for r in pdf[cols].to_dict("records"):
+            try:
+                acc = fn(acc, r)
+                vals.append(acc)
+                errs.append(None)
+            except Exception as e:
+                vals.append(None)
+                errs.append(f"{type(e).__name__}: {e}")
+        out_pdf = pdf.copy()
+        out_pdf[out] = vals
+        out_pdf["error"] = errs
+        return (acc,), out_pdf
+
+    return step
+
+
 class EventTimeTimerOp:
     """A keyed stateful op with TRUE event-time timers, bound via
     ``applyInPandasWithState`` + ``GroupStateTimeout.EventTimeTimeout``.
