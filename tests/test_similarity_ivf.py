@@ -738,6 +738,51 @@ def test_ivf_assign_build_py4j_round_trips(spark, emb, py4j_commands):
     assert c.n <= 60, f"{c.n} py4j round trips to build ivf_assign"
 
 
+def test_with_norm_and_near_dup_filter_py4j_round_trips(spark, emb, py4j_commands):
+    """``with_norm`` builds as one projection of SQL text over an internal
+    alias (27 round trips for the withColumn/F.sqrt/drop chain it
+    replaced), and ``cosine_near_dups`` filters the norm with SQL text
+    (the Column predicate sent 25 more); the build of the whole
+    near-dup query, one eager checkpoint included, is pinned with it
+    (472 before)."""
+    from wingfoil_spark.functions import dedup
+
+    sim.with_norm(emb, "embedding", "__nrm")  # warm: the schema is cached
+    with py4j_commands() as c:
+        sim.with_norm(emb, "embedding", "__nrm")
+    assert c.n <= 12, f"{c.n} py4j round trips to build with_norm"
+    dedup.cosine_near_dups(emb, threshold=0.5)
+    with py4j_commands() as c:
+        dedup.cosine_near_dups(emb, threshold=0.5)
+    assert c.n <= 450, f"{c.n} py4j round trips to build cosine_near_dups"
+
+
+def test_with_norm_resolves_caller_column_like_f_col(spark):
+    """``with_norm`` resolves its caller's column through the Column API:
+    a dotted struct field, a backticked name holding a dot and a name
+    with a hyphen give the norm of the plain column; an existing ``out``
+    column is replaced."""
+    df = spark.createDataFrame(
+        [(1, [3.0, 4.0]), (2, [0.0, 0.0]), (3, None), (4, [1.0, 2.0, 2.0])],
+        "id long, e array<double>",
+    )
+    want = {1: 5.0, 2: 0.0, 3: None, 4: 3.0}
+    got = {r.id: r.n for r in sim.with_norm(df, "e", "n").collect()}
+    assert got == want
+    cases = [
+        (df.select("id", F.struct(F.col("e").alias("v")).alias("meta")), "meta.v"),
+        (df.select("id", F.col("e").alias("my.e")), "`my.e`"),
+        (df.select("id", F.col("e").alias("e-1")), "e-1"),
+    ]
+    for frame, name in cases:
+        out = sim.with_norm(frame, name, "n")
+        assert out.columns == [*frame.columns, "n"], name
+        assert {r.id: r.n for r in out.collect()} == want, name
+    out = sim.with_norm(df.withColumn("n", F.lit("x")), "e", "n")
+    assert out.columns == ["id", "e", "n"]
+    assert {r.id: r.n for r in out.collect()} == want
+
+
 def test_append_ivf_store_keeps_duplicate_ids(spark, emb, tmp_path):
     """An appended batch that carries one id twice, with different
     vectors, lands BOTH rows in the store (dedup is the caller's crawl

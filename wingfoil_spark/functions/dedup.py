@@ -610,7 +610,7 @@ def cosine_near_dups(
     )
 
     sig = hyperplane_signatures_multi(embeddings, emb_col, bits)
-    n = with_norm(sig, emb_col, "__nrm").where(F.col("__nrm") > 0)
+    n = with_norm(sig, emb_col, "__nrm").where("__nrm > 0")
     # zero/null vectors carry no direction — excluded (ANSI division
     # would otherwise abort the job on one degenerate row)
     # r14 OPT (guide §4.4/§2.4): materialize the signed+normed frame ONCE.

@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from wingfoil_spark.stream import Stream
-from wingfoil_spark.streaming.stateful import in_order
+from wingfoil_spark.streaming.stateful import concat_outs, in_order
 
 
 def _ewma_hl_kernel(ts: np.ndarray, x: np.ndarray, hl: float) -> np.ndarray:
@@ -91,18 +91,6 @@ def _apply_per_key_reshape(s: Stream, fn, out_schema: T.StructType,
             lambda p: one(p.drop(columns="__g", errors="ignore")), schema=out_schema
         )
 
-    def _concat(outs):
-        # empty frames are pre-filtered; frames may still carry all-NA
-        # OBJECT columns (e.g. an empty book side's best_bid) which pandas
-        # deprecation-warns about. The Arrow serializer coerces every
-        # column to out_schema regardless of pandas' inferred dtype, so
-        # the future inference change cannot alter results — suppress.
-        import warnings
-
-        with warnings.catch_warnings():
-            warnings.simplefilter("ignore", FutureWarning)
-            return pd.concat(outs, ignore_index=True)[out_cols]
-
     def per_partition(batches):
         held: pd.DataFrame | None = None
         for pdf in batches:
@@ -124,22 +112,17 @@ def _apply_per_key_reshape(s: Stream, fn, out_schema: T.StructType,
                         if len(whole):
                             yield whole[out_cols]
                         continue
-                outs = [
-                    o for o in (
-                        fn(g) for _, g in
-                        body.groupby(keys, sort=False, dropna=False)
-                    ) if len(o)  # empty frames poison concat dtypes
-                ]
-                if outs:
-                    yield _concat(outs)
+                whole = concat_outs([
+                    fn(g) for _, g in body.groupby(keys, sort=False, dropna=False)
+                ])
+                if len(whole):
+                    yield whole[out_cols]
         if held is not None and len(held):
-            outs = [
-                o for o in (
-                    fn(g) for _, g in held.groupby(keys, sort=False, dropna=False)
-                ) if len(o)
-            ]
-            if outs:
-                yield _concat(outs)
+            whole = concat_outs([
+                fn(g) for _, g in held.groupby(keys, sort=False, dropna=False)
+            ])
+            if len(whole):
+                yield whole[out_cols]
 
     return (
         s.df.repartition(*keys)

@@ -13,17 +13,24 @@ docs/wingfoil-architecture.md:11-26). The Spark-native expression:
 - **historical** binds it via the packed per-key ``mapInPandas`` binding
   (``operators.stateful._apply_per_key_reshape``: one call per key with
   the whole history, state threads through trivially);
-- **realtime** binds the SAME function via ``applyInPandasWithState`` —
-  state persists in the state store across micro-batches, keyed identically.
+- **realtime** binds the SAME function via ``applyInPandasWithState``,
+  packed by key bucket: one Python call per touched bucket
+  (``pmod(xxhash64(keys), B)``, ``B`` = ``spark.sql.shuffle.partitions``
+  at build time) walks all of the bucket's keys, and the bucket's one
+  state row holds a pickled key → state map
+  (:meth:`KeyedStateOp.run_stream`). ``B`` is fixed in the checkpoint: a
+  restart under another value raises. A touched bucket's whole map is
+  rewritten each micro-batch. A one-key step is :func:`lift`-ed to the
+  multi-key walk; an op with a native walk (:func:`one_key`) runs it.
 
 Determinism contract: rows must reach the op in (ts, seq) order within a
 key. The batch binding sorts within partitions by (keys, ts, seq); the
-streaming binding puts each batch in that order with :func:`in_order`
-(a no-op on the usual already-ordered input); streaming mode otherwise
-relies on in-order sources per key (Kafka per-partition order, file-source
-file order) — out-of-order data across micro-batches needs an upstream
-watermark-sort stage, which the reference simply forbids (non-decreasing
-source timestamps, adapters/csv.rs:110-115).
+streaming binding puts each bucket's micro-batch rows in that order with
+:func:`in_order` (stable, so a key's ties keep arrival order); streaming
+mode otherwise relies on in-order sources per key (Kafka per-partition
+order, file-source file order) — out-of-order data across micro-batches
+needs an upstream watermark-sort stage, which the reference simply
+forbids (non-decreasing source timestamps, adapters/csv.rs:110-115).
 """
 
 from __future__ import annotations
@@ -35,21 +42,24 @@ from typing import Any
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 StepFn = Callable[[Any, pd.DataFrame], tuple[Any, pd.DataFrame]]
+#: ``walk(states, body) -> (states', out)``: a body holding many keys,
+#: sorted by (keys, ts, seq); ``states`` maps key tuple (:func:`key_runs`)
+#: to step state, a missing key starting fresh and a dropped one released
+WalkFn = Callable[[dict, pd.DataFrame], tuple[dict, pd.DataFrame]]
 
 
 def in_order(pdf: pd.DataFrame, order: list[str]) -> pd.DataFrame:
     """``pdf.sort_values(order, kind="mergesort")`` — same rows, same index —
     without the sort when ``pdf`` is already in ``order``: then ``pdf``
-    itself comes back. Rows usually reach a key's binding sorted (the
-    packed batch binding sorts within partitions, file sources deliver a
-    key's rows in order; on the ``event_stream`` benchmark ~9 groups in
-    10), and always reach its step sorted, so per-group cost is mostly one
-    vectorised comparison instead of a pandas multi-column sort per
-    binding and per step."""
+    itself comes back. The bindings sort once (the batch binding within
+    partitions, the streamed one per bucket body) and steps re-check, so a
+    step's cost is mostly one vectorised comparison instead of a pandas
+    multi-column sort per step."""
     if len(pdf) < 2 or _is_ordered(pdf, order):
         return pdf
     return pdf.sort_values(order, kind="mergesort")
@@ -85,7 +95,9 @@ class KeyedStateOp:
 
     ``step`` must be pure in (state, sorted-batch) — it is the single source
     of semantics. ``out_schema`` is the full output schema (key columns
-    included).
+    included). :meth:`run_stream` runs the step's multi-key walk
+    (:func:`pack`): the native one a :func:`one_key` step carries, or the
+    step lifted to walk key runs.
     """
 
     def __init__(
@@ -140,53 +152,152 @@ class KeyedStateOp:
 
     # -------------------------------------------------------------- realtime
 
-    def run_stream(
-        self,
-        df: DataFrame,
-        timeout: str = "NoTimeout",
-        idle_timeout_ms: int | None = None,
-    ) -> DataFrame:
-        """Bind to a streaming DataFrame via applyInPandasWithState. State is
-        pickled into a single binary state column — opaque to Spark, owned by
-        the state store (the engine-owned per-node state model).
+    def run_stream(self, df: DataFrame) -> DataFrame:
+        """Bind to a streaming DataFrame via ``applyInPandasWithState``,
+        grouped by key BUCKET: ``__bkt = pmod(xxhash64(keys…), B)`` with
+        ``B`` = ``spark.sql.shuffle.partitions`` when the query is built.
+        One Python call per touched bucket per micro-batch receives all of
+        the bucket's rows, puts them in (keys, ts, seq) order once and runs
+        the op's multi-key walk (:func:`pack`) over them. The bucket's one
+        state row holds ``B`` and a pickled map from key tuple to step
+        state — opaque to Spark, owned by the state store (the
+        engine-owned per-node state model).
+
+        Trade-off: a touched bucket's whole map is unpickled and rewritten
+        every micro-batch, keys that did not tick included; the per-key
+        binding this replaces paid one Python call (~2 ms) per key
+        instead.
+
+        ``B`` is part of the checkpoint: a restart must run with the same
+        ``spark.sql.shuffle.partitions``. Every load checks the stored
+        ``B`` and raises naming both values if it differs — rehashed keys
+        would otherwise start from empty state without a word.
 
         Slot lifecycle (the reference's ``demux_map`` capacity/Close model,
         interp.rs:4145-4168, DemuxEvent :4273): a step that returns ``None``
-        state releases the key's slot — the state-store entry is REMOVED, so
-        a later tick re-creates the member fresh (see :func:`with_close`).
-        ``idle_timeout_ms`` additionally reaps keys with no traffic (pass
-        ``timeout="ProcessingTimeTimeout"``) — the bounded-capacity analog:
-        state volume tracks live keys, not ever-seen keys."""
-        step, init, order = self.step, self.init_state, self._order()
+        state releases the key's slot — its map entry is REMOVED, so a
+        later tick re-creates the member fresh (see :func:`with_close`); a
+        bucket whose map empties drops its state row."""
+        nb = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+        walk = pack(self.step, self.keys, self.init_state)
+        order = [*self.keys, *self._order()]
 
-        def fn(key, pdfs, state: GroupState):
-            if timeout != "NoTimeout" and state.hasTimedOut:
-                state.remove()  # idle slot reaped
-                return
+        def fn(_bucket, pdfs, state: GroupState):
+            states = {}
             if state.exists:
-                (blob,) = state.get
-                st = pickle.loads(bytes(blob))
-            else:
-                st = init
-            for pdf in pdfs:
-                st, out = step(st, in_order(pdf, order))
-                if len(out):
-                    yield out
-            if st is None:
-                if state.exists:
-                    state.remove()  # Close: release the slot
-            else:
-                state.update((bytearray(pickle.dumps(st)),))
-                if idle_timeout_ms is not None:
-                    state.setTimeoutDuration(idle_timeout_ms)
+                stored, blob = state.get
+                if stored != nb:
+                    raise RuntimeError(
+                        f"KeyedStateOp.run_stream: the checkpoint holds keyed "
+                        f"state in {stored} buckets, but this query was built "
+                        f"with spark.sql.shuffle.partitions={nb}; restart it "
+                        f"with spark.sql.shuffle.partitions={stored}"
+                    )
+                states = pickle.loads(bytes(blob))
+            pdfs = list(pdfs)  # one frame per Arrow batch of the bucket's rows
+            body = pdfs[0] if len(pdfs) == 1 else pd.concat(pdfs, ignore_index=True)
+            states, out = walk(states, in_order(body.drop(columns="__bkt"), order))
+            if len(out):
+                yield out
+            if states:
+                state.update((nb, bytearray(pickle.dumps(states))))
+            elif state.exists:
+                state.remove()
 
-        return df.groupBy(*self.keys).applyInPandasWithState(
+        bucket = (F.pmod(F.xxhash64(*self.keys), F.lit(nb)) if self.keys
+                  else F.lit(0))
+        return df.withColumn("__bkt", bucket).groupBy("__bkt").applyInPandasWithState(
             fn,
             outputStructType=self.out_schema,
-            stateStructType="state binary",
+            stateStructType="nb int, state binary",
             outputMode="append",
-            timeoutConf=getattr(GroupStateTimeout, timeout),
+            timeoutConf=GroupStateTimeout.NoTimeout,
         )
+
+
+def key_runs(body: pd.DataFrame, keys) -> tuple[list[tuple], list[int]]:
+    """(key tuples, start rows) of the runs of equal keys in a body
+    clustered by ``keys``. Key tuples hold Python scalars with NaN read as
+    None, so they hash alike in every micro-batch (a NaN is not equal to
+    itself) and pickle small. Keyless: one run, key ``()``."""
+    n = len(body)
+    if not n:
+        return [], []
+    new = np.zeros(n, dtype=bool)
+    new[0] = True
+    cols = [body[k].to_numpy() for k in keys]
+    for a in cols:
+        ne = a[1:] != a[:-1]
+        if a.dtype.kind == "f":
+            ne &= ~(np.isnan(a[1:]) & np.isnan(a[:-1]))
+        new[1:] |= ne
+    starts = np.flatnonzero(new)
+    vals = [a[starts].tolist() for a in cols]
+    tuples = [tuple(None if isinstance(v, float) and v != v else v for v in t)
+              for t in zip(*vals)] if keys else [()]
+    return tuples, starts.tolist()
+
+
+def concat_outs(outs: list[pd.DataFrame]) -> pd.DataFrame:
+    """The non-empty frames of ``outs`` as one frame (empty frames poison
+    concat dtypes). Frames may still carry all-NA OBJECT columns (an empty
+    book side's best_bid) that pandas deprecation-warns about; the Arrow
+    serializer coerces every column to the output schema whatever pandas
+    infers, so the future inference change cannot alter results —
+    suppressed."""
+    outs = [o for o in outs if len(o)]
+    if len(outs) < 2:
+        return outs[0] if outs else pd.DataFrame()
+    import warnings
+
+    with warnings.catch_warnings():
+        warnings.simplefilter("ignore", FutureWarning)
+        return pd.concat(outs, ignore_index=True)
+
+
+def lift(step: StepFn, keys, init_state) -> WalkFn:
+    """The multi-key walk of a one-key ``step``: one ``step`` call per key
+    run of the body, threading each key's state through ``states`` (a key
+    missing there starts from ``init_state``; a ``None`` return removes
+    its entry)."""
+    def walk(states: dict, body: pd.DataFrame):
+        tuples, starts = key_runs(body, keys)
+        outs = []
+        for k, a, b in zip(tuples, starts, [*starts[1:], len(body)]):
+            st, out = step(states.get(k, init_state), body.iloc[a:b])
+            if st is None:
+                states.pop(k, None)
+            else:
+                states[k] = st
+            outs.append(out)
+        return states, concat_outs(outs)
+
+    return walk
+
+
+def one_key(walk: WalkFn, keys, order: list[str]) -> StepFn:
+    """The one-key step of a native multi-key ``walk``: the walk run on a
+    one-key body, so the op's body exists once. ``None`` state starts the
+    key fresh. The step carries the walk as ``step.walk`` for
+    :func:`pack`."""
+    def step(state, pdf: pd.DataFrame):
+        pdf = in_order(pdf, order)
+        if not len(pdf):
+            return state, walk({}, pdf)[1]
+        (k,), _ = key_runs(pdf.iloc[:1], keys)
+        states, out = walk({} if state is None else {k: state}, pdf)
+        return states.get(k), out
+
+    step.walk = walk
+    return step
+
+
+def pack(step: StepFn, keys, init_state) -> WalkFn:
+    """The walk :meth:`KeyedStateOp.run_stream` runs on a bucket's body:
+    the step's own multi-key walk when it has one (:func:`one_key`) and
+    the op starts keys from ``None``, else the step :func:`lift`-ed."""
+    walk = getattr(step, "walk", None)
+    return walk if walk is not None and init_state is None else lift(step, keys, init_state)
 
 
 def with_close(step: StepFn, close_col: str, init_state) -> StepFn:
@@ -194,8 +305,8 @@ def with_close(step: StepFn, close_col: str, init_state) -> StepFn:
     Close, interp.rs:4145-4168): rows where ``close_col`` is truthy split
     the batch — state resets to ``init_state`` at each close (the slot is
     re-created fresh on the next data tick), and a trailing close returns
-    ``None`` state so :meth:`KeyedStateOp.run_stream` removes the
-    state-store entry entirely. Close rows themselves emit nothing.
+    ``None`` state so :meth:`KeyedStateOp.run_stream` removes the key's
+    entry from its bucket's map (other keys in the bucket keep theirs). Close rows themselves emit nothing.
     Works identically under run_batch (one big batch) and run_stream."""
 
     def step2(state, pdf: pd.DataFrame):

@@ -46,7 +46,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from wingfoil_spark.stream import Stream
-from wingfoil_spark.streaming.stateful import KeyedStateOp, StepFn, group_key, in_order
+from wingfoil_spark.streaming.stateful import (
+    KeyedStateOp, StepFn, WalkFn, group_key, in_order, key_runs, one_key,
+)
 
 
 def tagged_union(left: Stream, right: Stream, lvals: list[str], rvals: list[str]) -> DataFrame:
@@ -203,51 +205,70 @@ def rolling_stats_step(
     return step
 
 
-def range_stats_step(
+def range_stats_walk(
     col: str, window_ns: int, ts: str, seq: str | None, keys: list[str]
-) -> StepFn:
+) -> WalkFn:
     """Trailing-DURATION tick-weighted stats matrix (the ``("range", ns)``
-    frame, reference time_windowed_* stats.rs:90-131) as a resumable step.
-    State = the (ts, cents, value) samples still inside any future frame
+    frame, reference time_windowed_* stats.rs:90-131) as a native
+    multi-key walk over a body sorted by (keys, ts, seq). Each key's state
+    = the (ts, cents, value) samples still inside any future frame
     (ts ≥ newest − window). Burst atomicity: every row of one instant sees
     the full instant in-frame (rangeBetween includes same-ts rows in both
-    directions — runtime/burst.rs:16), so rows are processed per instant.
-    Sums accumulate in exact integer cents with the same double op-order as
-    the decimal window formulation — bitwise across all three bindings.
-    The seven stats fill one (rows, 7) array, and the output frame is built
-    from column arrays: per-row tuples cost more than the stats."""
+    directions — runtime/burst.rs:16), so rows are processed per instant,
+    an instant being a run of equal (key, ts). Sums accumulate in exact
+    integer cents with the same double op-order as the decimal window
+    formulation — bitwise across all three bindings. The seven stats fill
+    one (rows, 7) array, and the output frame is built from the body's
+    column arrays: per-row tuples cost more than the stats."""
     order = [ts] + ([seq] if seq else [])
 
-    def step(state, pdf: pd.DataFrame):
-        hist: list[tuple[int, int, float]] = list(state) if state else []
-        pdf = in_order(pdf, order)
-        n = len(pdf)
-        t_arr = pdf[ts].to_numpy().astype(np.int64, copy=False)
-        vals = pdf[col].to_numpy(dtype=np.float64)
+    def walk(states: dict, body: pd.DataFrame):
+        n = len(body)
+        t_arr = body[ts].to_numpy().astype(np.int64, copy=False)
+        vals = body[col].to_numpy(dtype=np.float64)
         stats = np.empty((n, len(_STAT_COLS)))
-        # instants = runs of equal ts
-        starts = [0, *(np.flatnonzero(t_arr[1:] != t_arr[:-1]) + 1).tolist()] if n else []
-        for i, j in zip(starts, starts[1:] + [n]):
-            t = int(t_arr[i])
-            hist += [(t, _cents(x), x) for x in vals[i:j].tolist()]
-            hist = [h for h in hist if h[0] >= t - window_ns]
-            cs = [c for _, c, _ in hist]
-            vs = sorted(x for _, _, x in hist)
-            cnt = len(hist)
-            s1, s2 = _sums_from_cents(cs, [x for _, _, x in hist])
-            # single-sample var/std seed 0.0 (statistics_rolling.rs:9-15)
-            var = max((s2 - s1 * s1 / cnt) / (cnt - 1), 0.0) if cnt > 1 else 0.0
-            med = (vs[(cnt + 1) // 2 - 1] + vs[cnt // 2]) / 2
-            stats[i:j] = (s1, s1 / cnt, vs[0], vs[-1], var, np.sqrt(var), med)
+        tuples, starts = key_runs(body, keys)
+        new = np.zeros(n, dtype=bool)
+        new[1:] = t_arr[1:] != t_arr[:-1]
+        new[starts] = True
+        cuts = [*np.flatnonzero(new).tolist(), n]  # instant starts, then n
+        pos = 0
+        for k, end in zip(tuples, [*starts[1:], n]):
+            hist: list[tuple[int, int, float]] = list(states.get(k) or ())
+            while cuts[pos] < end:
+                i, j = cuts[pos], cuts[pos + 1]
+                pos += 1
+                t = int(t_arr[i])
+                hist += [(t, _cents(x), x) for x in vals[i:j].tolist()]
+                hist = [h for h in hist if h[0] >= t - window_ns]
+                cs = [c for _, c, _ in hist]
+                vs = sorted(x for _, _, x in hist)
+                cnt = len(hist)
+                s1, s2 = _sums_from_cents(cs, [x for _, _, x in hist])
+                # single-sample var/std seed 0.0 (statistics_rolling.rs:9-15)
+                var = max((s2 - s1 * s1 / cnt) / (cnt - 1), 0.0) if cnt > 1 else 0.0
+                med = (vs[(cnt + 1) // 2 - 1] + vs[cnt // 2]) / 2
+                stats[i:j] = (s1, s1 / cnt, vs[0], vs[-1], var, np.sqrt(var), med)
+            states[k] = hist
         out = pd.DataFrame({
-            **{k: pdf[k].to_numpy() for k in keys},
-            **{c: pdf[c].to_numpy().astype(np.int64, copy=False) for c in order},
+            **{k: body[k].to_numpy() for k in keys},
+            **{c: body[c].to_numpy().astype(np.int64, copy=False) for c in order},
             col: vals,
             **dict(zip(_STAT_COLS, stats.T)),
         })
-        return hist, out
+        return states, out
 
-    return step
+    return walk
+
+
+def range_stats_step(
+    col: str, window_ns: int, ts: str, seq: str | None, keys: list[str]
+) -> StepFn:
+    """:func:`range_stats_walk` as a resumable one-key step (state = the
+    key's retained samples; ``None`` starts fresh) — the same body, run on
+    one key's rows."""
+    return one_key(range_stats_walk(col, window_ns, ts, seq, keys), keys,
+                   [ts] + ([seq] if seq else []))
 
 
 def tw_profile_step(
