@@ -961,19 +961,16 @@ def _derived_qc_model(spark):
     generator on purpose (the _lloyd_sql_ctes discipline): if the two
     graded arms built their own copies, a drift would leave one green
     and one red with no pin connecting them."""
-    from wingfoil_spark.functions import dedup as dd
+    from wingfoil_spark.functions.dedup import _MD5_INT_SQL
 
-    return spark.range(1).select(
-        F.transform(
-            F.sequence(F.lit(0), F.lit(QC_NF - 1)),
-            lambda b: (
-                dd._md5_int(F.concat(F.lit("qc:"), b.cast("string"))) % 2001
-                - 1000
-            )
-            / 1000.0,
-        ).alias("coefs"),
-        F.lit(QC_B0).alias("intercept"),
-        F.lit(QC_NF).alias("n_features"),
+    # SQL text over constants: 11 py4j round trips per build, where the
+    # Python-lambda F.transform sent 161
+    h = _MD5_INT_SQL.format(x="concat('qc:', CAST(b AS STRING))")
+    return spark.range(1).selectExpr(
+        f"transform(sequence(0, {int(QC_NF) - 1}), "
+        f"b -> (((({h}) % 2001) - 1000) / 1000.0D)) AS coefs",
+        f"{float(QC_B0)!r}D AS intercept",
+        f"{int(QC_NF)} AS n_features",
     )
 
 

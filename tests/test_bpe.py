@@ -3,12 +3,17 @@ independent brute-force trainer (merge-ALL-occurrences formulation, vs the
 library's vocab-rewrite formulation), encode parity with the training
 segmentation, determinism, and the Sennrich-paper example."""
 
+import os
 from collections import Counter
 
 import pytest
 from hypothesis import given, settings, strategies as st
 
 from wingfoil_spark.functions import bpe
+
+#: hypothesis examples for the trainer/encoder differential: a bounded
+#: budget in the default lane, the full one with WINGFOIL_FULL_SUITE=1
+DIFF_EXAMPLES = 10 if os.environ.get("WINGFOIL_FULL_SUITE", "") == "1" else 5
 
 
 # ----------------------------------------------------- independent reference
@@ -109,7 +114,7 @@ def test_train_differential_and_encode_parity(spark):
         assert segs.get(word, ref_encode(word, merges)) == list(syms)
 
 
-@settings(max_examples=10, deadline=None)
+@settings(max_examples=DIFF_EXAMPLES, deadline=None)
 @given(
     st.lists(
         st.lists(

@@ -6,11 +6,17 @@ Incomplete — more bytes may arrive); our unit is a captured-log ROW that
 already holds every byte it will ever have, so the same frame decodes as
 a BodyLength error."""
 
+import os
+
 import pandas as pd
 import pyspark.sql.functions as F
 import pytest
 
 from wingfoil_spark.sources import fix as fx
+
+#: hypothesis examples for the groups-split differential: a bounded
+#: budget in the default lane, the full one with WINGFOIL_FULL_SUITE=1
+GROUPS_EXAMPLES = 25 if os.environ.get("WINGFOIL_FULL_SUITE", "") == "1" else 10
 
 SOH = b"\x01"
 
@@ -427,7 +433,7 @@ def test_groups_split_differential_vs_python_walk(spark):
     tag = st.sampled_from([CT, DT, 270, 271, 55])
     val = st.sampled_from(["0", "1", "2", "3", "x", "150.10", ""])
 
-    @settings(max_examples=25, deadline=None)
+    @settings(max_examples=GROUPS_EXAMPLES, deadline=None)
     @given(st.lists(st.tuples(tag, val), min_size=0, max_size=12))
     def prop(pairs):
         df = spark.createDataFrame(

@@ -8,9 +8,15 @@ one latch per side — semantically the reference's interpreted engine; the
 Spark implementation is the union+window plan. Divergence means the plan
 broke the combine-latest contract."""
 
+import os
+
 from hypothesis import given, settings, strategies as st
 
 from wingfoil_spark import Stream
+
+#: hypothesis examples for the combine-latest differential: a bounded
+#: budget in the default lane, the full one with WINGFOIL_FULL_SUITE=1
+COMBINE_EXAMPLES = 12 if os.environ.get("WINGFOIL_FULL_SUITE", "") == "1" else 5
 
 
 def model_combine_latest(left, right):
@@ -42,7 +48,7 @@ ticks = st.lists(
 )
 
 
-@settings(max_examples=12, deadline=None)
+@settings(max_examples=COMBINE_EXAMPLES, deadline=None)
 @given(left=ticks, right=ticks)
 def test_combine_latest_matches_model(spark, left, right):
     # seqs must be globally unique across both sides for a total order

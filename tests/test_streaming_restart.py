@@ -5,7 +5,9 @@ The realtime binding keeps one state row per key bucket, ``B`` =
 (``KeyedStateOp.run_stream``). A query stopped mid-stream and restarted
 from its checkpoint must emit the rows of an uninterrupted run; a restart
 built under another ``spark.sql.shuffle.partitions`` must fail naming
-both bucket counts instead of losing state.
+both bucket counts instead of losing state. ``get_spark`` sessions write
+the checkpoint through Hadoop ``FileSystem`` (``session`` module
+docstring), so the restart also covers that manager.
 
 Runs in a subprocess: it needs its own small SparkContext, one per
 process, independent of the suite's session."""
@@ -16,6 +18,8 @@ import subprocess
 import sys
 
 import pytest
+
+from wingfoil_spark import session
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -92,6 +96,7 @@ print("RESULT " + json.dumps({
     "restart_equal": key(whole) == key(pd.concat([first, second])),
     "mismatch_rows": None if third is None else len(third),
     "mismatch_error": err,
+    "manager": spark.conf.get("spark.sql.streaming.checkpointFileManagerClass"),
 }))
 '''
 
@@ -118,3 +123,15 @@ def test_restart_from_checkpoint_and_bucket_count_mismatch(tmp_path):
     assert err is not None
     assert "checkpoint holds keyed state in 3 buckets" in err
     assert "spark.sql.shuffle.partitions=5" in err
+    # the checkpoint was written and resumed through Hadoop FileSystem
+    assert res["manager"] == session._FS_CHECKPOINT_MANAGER
+
+
+def test_get_spark_writes_checkpoints_through_filesystem(spark):
+    """``get_spark`` sessions (local[N]) write streaming checkpoints
+    through Hadoop ``FileSystem``, whose local rename spawns no process;
+    a driver-provided session keeps its own manager, so the setting is
+    not a runtime conf that ``configure_session`` applies."""
+    key = "spark.sql.streaming.checkpointFileManagerClass"
+    assert spark.conf.get(key) == session._FS_CHECKPOINT_MANAGER
+    assert key not in session._RUNTIME_CONFS

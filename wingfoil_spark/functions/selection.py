@@ -73,7 +73,7 @@ _H60 = 1 << 60
 # ---------------------------------------------------------------------------
 # One builder per row-local selection expression.
 #
-# Grams, per-gram md5, the table fold, the densify and the BM25 sum are
+# Grams, per-gram md5, the table fold, the λ row and the BM25 sum are
 # each built HERE, once, and every caller — the single-signal APIs, the
 # one-pass `selection_scores` battery and the streaming scorers in
 # `streaming/ingest.py` — goes through them, so stream == batch ==
@@ -135,15 +135,6 @@ def _table_fold(items: str, table: str, modulus: int | str) -> F.Column:
     return F.expr(
         f"aggregate(`{items}`, 0.0D, (acc, x) -> (acc + "
         f"element_at(`{table}`, CAST(((x % {mod}) + 1) AS INT))))"
-    )
-
-
-def _dense_lam(map_col: str, n_buckets: int) -> F.Column:
-    """Sparse bucket→λ map → dense length-``n_buckets`` array (missing
-    buckets take ``lam_oov``). Runs once inside the one-row λ frame."""
-    return F.expr(
-        f"transform(sequence(0, {int(n_buckets) - 1}), "
-        f"b -> coalesce(element_at(`{map_col}`, CAST(b AS BIGINT)), lam_oov))"
     )
 
 
@@ -237,9 +228,11 @@ def _log_ratio_row(
     map-backed λ costs O(n_buckets) per gram lookup — ~5k comparisons
     per gram at the default 10k buckets, which dominated the whole
     selection query the moment the corpus outgrew the scheduler overhead
-    (7.3× at the 10× scale tier). Array indexing is O(1); the one-time
-    densify (n_buckets map probes inside the single λ row) is the cheap
-    side of that trade.
+    (7.3× at the 10× scale tier). Array indexing is O(1). Building the
+    array probes no map either: a bucket map read inside the array's
+    lambda is rebuilt once per bucket in the joined plan (6 s in one task
+    with all 10k buckets seen), so :func:`_lam_row` lays the array out
+    from the sorted seen buckets and their gaps in O(n_buckets).
 
     Single-pass on purpose too: the profile totals come from a
     whole-frame window over the joined profiles (≤ 2·n_buckets rows —
@@ -259,38 +252,54 @@ def _log_ratio_row(
 
 def _lam_row(counts: DataFrame, n_buckets: int) -> DataFrame:
     """The λ row from per-bucket ``(bucket, tn, rn)`` target/raw counts:
-    add-1-smoothed log-ratio per bucket, collected to a map and densified
-    (:func:`_dense_lam`). Shared by :func:`_log_ratio_row` and
-    :func:`_lam_row_subset`, which differ only in how they count. The
-    totals come from a whole-frame window (≤ 2·n_buckets rows — bounded,
-    so the SinglePartition window is fine at any corpus size)."""
-    from pyspark.sql import Window
+    the add-1-smoothed log-ratio per bucket, laid out as the dense
+    length-``n_buckets`` array. Shared by :func:`_log_ratio_row` and
+    :func:`_lam_row_subset`, which differ only in how they count.
 
-    w = Window.partitionBy(F.lit(1))
+    One window stage over the ≤ 2·n_buckets count rows (bounded, so the
+    single-partition window is fine at any corpus size) carries the
+    totals ``T``/``R`` and each bucket's ``gap``: how many unseen buckets
+    follow it before the next seen one (or the array's end). One
+    aggregate then builds the array: ``lam_oov`` for the buckets before
+    the first seen one, then per seen bucket, in bucket order, its λ
+    followed by ``gap`` copies of ``lam_oov``. That is O(n_buckets).
+
+    No lambda body reads a collected value: the lambda sees only its own
+    struct ``s``, which carries ``lam_oov`` along. Catalyst inlines an
+    aggregate's result into the projections above it, and a lambda body
+    is not subject to subexpression elimination, so a collected map read
+    per array slot would be rebuilt once per bucket: O(n_buckets ×
+    buckets seen) in one task once the row is joined (``plan_summary``'s
+    ``lambda_collections`` reads 0 here).
+
+    Buckets outside ``[0, n_buckets)`` (a profile built with another
+    bucket count) count in ``T``/``R`` but stay out of the array; an
+    empty corpus gives ``n_buckets`` copies of a NULL ``lam_oov``."""
+    n = int(n_buckets)
+    nf = f"{float(n_buckets)!r}D"
+    inside = f"(bucket >= 0 AND bucket < {n})"
     return (
-        counts.select(
+        counts.selectExpr(
             "bucket", "tn", "rn",
-            F.sum("tn").over(w).alias("T"),
-            F.sum("rn").over(w).alias("R"),
+            "sum(tn) OVER (PARTITION BY 1) AS T",
+            "sum(rn) OVER (PARTITION BY 1) AS R",
+            f"CAST(least(lead(bucket, 1, {n}) OVER (PARTITION BY 1 "
+            f"ORDER BY bucket), {n}) - bucket - 1 AS INT) AS gap",
         )
-        .select(
-            "bucket",
-            (
-                F.log((F.col("tn") + 1.0) / (F.col("T") + float(n_buckets)))
-                - F.log((F.col("rn") + 1.0) / (F.col("R") + float(n_buckets)))
-            ).alias("lam"),
-            (
-                F.log(1.0 / (F.col("T") + float(n_buckets)))
-                - F.log(1.0 / (F.col("R") + float(n_buckets)))
-            ).alias("lam_oov"),
+        .selectExpr(
+            "bucket", "gap",
+            f"(ln(((tn + 1.0D) / (T + {nf}))) "
+            f"- ln(((rn + 1.0D) / (R + {nf})))) AS lam",
+            f"(ln((1.0D / (T + {nf}))) - ln((1.0D / (R + {nf})))) AS lam_oov",
         )
-        .agg(
-            F.map_from_entries(
-                F.collect_list(F.struct(F.col("bucket"), F.col("lam")))
-            ).alias("_m"),
-            F.first("lam_oov").alias("lam_oov"),
+        .selectExpr(
+            f"concat(array_repeat(first(lam_oov), CAST(coalesce(min(CASE "
+            f"WHEN {inside} THEN bucket END), {n}) AS INT)), "
+            f"flatten(transform(array_sort(collect_list(CASE WHEN {inside} "
+            f"THEN struct(bucket, lam, gap, lam_oov) END)), "
+            f"s -> concat(array(s.lam), array_repeat(s.lam_oov, s.gap))))) AS lam",
+            "first(lam_oov) AS lam_oov",
         )
-        .select(_dense_lam("_m", n_buckets).alias("lam"), "lam_oov")
     )
 
 

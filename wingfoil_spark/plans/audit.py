@@ -23,6 +23,46 @@ def _plan_string(df_or_stream) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+#: the aggregate collections (and the maps built from them) that must
+#: not appear inside a lambda body: a lambda is not subject to
+#: subexpression elimination, so each one is rebuilt per lambda call
+_COLLECTIONS = (
+    "collect_list(", "collect_set(", "map_from_entries(", "map_from_arrays(",
+)
+
+
+def _lambda_bodies(plan: str) -> list[str]:
+    """The text inside every ``lambdafunction(...)`` of a plan string,
+    nested lambdas included (each once, and inside its parent)."""
+    bodies = []
+    for m in re.finditer(r"lambdafunction\(", plan):
+        depth = 1
+        for i in range(m.end(), len(plan)):
+            if plan[i] == "(":
+                depth += 1
+            elif plan[i] == ")":
+                depth -= 1
+                if depth == 0:
+                    bodies.append(plan[m.end():i])
+                    break
+    return bodies
+
+
+def _lambda_collections(df_or_stream) -> int:
+    """How many lambda bodies in the OPTIMIZED plan hold a collection
+    (:data:`_COLLECTIONS`). Catalyst inlines an aggregate's result into
+    the projections above it, so a one-row model that collects a list or
+    map and then reads it inside ``transform`` rebuilds it once per array
+    slot (the DSIR λ row's old map densify: O(n_buckets × buckets seen)
+    in one task). The executed plan prints the aggregate's output
+    attribute instead, so only the optimized plan shows this."""
+    df = getattr(df_or_stream, "df", df_or_stream)
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    return sum(
+        any(c in body for c in _COLLECTIONS) for body in _lambda_bodies(plan)
+    )
+
+
 def plan_summary(df_or_stream) -> dict:
     """The physical plan reduced to the numbers that matter at scale:
 
@@ -35,7 +75,9 @@ def plan_summary(df_or_stream) -> dict:
       projection is wrong),
     - ``python_stages`` — Arrow/pandas evaluation nodes (the slow path:
       keep them off hot queries),
-    - ``codegen_spans`` — whole-stage codegen regions (wider is better).
+    - ``codegen_spans`` — whole-stage codegen regions (wider is better),
+    - ``lambda_collections`` — lambda bodies that rebuild a collected
+      list or map per call (:func:`_lambda_collections`; keep it at 0).
 
     Accepts a DataFrame or a Stream."""
     plan = _plan_string(df_or_stream)
@@ -69,6 +111,7 @@ def plan_summary(df_or_stream) -> dict:
             set(re.findall(r"WholeStageCodegen \((\d+)\)", plan))
             | set(re.findall(r"\*\((\d+)\)", plan))
         ),
+        "lambda_collections": _lambda_collections(df_or_stream),
     }
 
 
