@@ -138,6 +138,16 @@ def py4j_commands(monkeypatch):
 
 
 @pytest.fixture
+def codegen_compiles(spark):
+    """Read the JVM-wide count of Janino compiles: ``codegen_compiles()``.
+    A generated class found in Spark's codegen cache is not compiled
+    again, so the count's growth over a block of driver code is the
+    number of classes the block missed the cache with."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return lambda: metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+@pytest.fixture
 def delay_with_reset_walk():
     """Reference rows for ``delay_with_reset``: the streamed op's timer
     walk (``twins.delay_with_reset_timer_op``) driven per key in pandas

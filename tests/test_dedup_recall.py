@@ -264,6 +264,20 @@ def test_components_auto_gate_picks_iterate_above_threshold(spark):
     assert {r.id: r.component for r in under.collect()} == expected
 
 
+def test_components_auto_gate_rebuild_compiles_no_class(spark, codegen_compiles):
+    """A second 'auto' build (edge checkpoint plus gate count) finds every
+    generated class in Spark's codegen cache. A ``limit(n).count()`` gate
+    never could: each ``LocalLimitExec`` names its counter from a JVM-wide
+    sequence, so its generated code differed on every build."""
+    from wingfoil_spark.functions.dedup import dedup_components
+
+    pairs = spark.createDataFrame([(5, 9), (9, 1), (3, 7)], "a long, b long")
+    dedup_components(pairs, strategy="auto")
+    before = codegen_compiles()
+    dedup_components(pairs, strategy="auto")
+    assert codegen_compiles() == before
+
+
 def test_components_string_ids_both_strategies(spark):
     """String/UUID doc ids: the packed path must preserve the input id
     type (ADVICE r4: it hardcoded long, so 'auto' silently mis-coerced

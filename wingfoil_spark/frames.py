@@ -71,7 +71,7 @@ def build_dataframe(streams: dict, spark=None) -> DataFrame:
             .where(F.col("__rn") == 1)
             .drop("__rn", "__seq")
         )
-        if proj.limit(1).count() == 0:
+        if proj.isEmpty():
             continue  # never-ran stream: no column
         parts.append((name, proj, tuple(s.keys), s.ts))
     if not parts:

@@ -350,11 +350,7 @@ def dedup_components(
     if strategy not in ("auto", "packed", "iterate"):
         raise ValueError(f"unknown components strategy {strategy!r}")
     if strategy == "auto":
-        strategy = (
-            "packed"
-            if edges.limit(packed_max_edges + 1).count() <= packed_max_edges
-            else "iterate"
-        )
+        strategy = "packed" if edges.count() <= packed_max_edges else "iterate"
     if strategy == "packed":
         return _components_packed(edges)
 

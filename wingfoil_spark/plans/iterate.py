@@ -59,12 +59,6 @@ def iterate_until_stable(
 
     def same(prev: DataFrame, cur: DataFrame) -> bool:
         cols = key_cols + value_cols
-        changed = (
-            cur.select(*cols)
-            .exceptAll(prev.select(*cols))
-            .limit(1)
-            .count()
-        )
-        return changed == 0
+        return cur.select(*cols).exceptAll(prev.select(*cols)).isEmpty()
 
     return feedback_iterate(df, step, max_iters=max_iters, converged=same)

@@ -30,6 +30,23 @@ local file system these ``local[N]`` sessions write to. A
 driver-provided session keeps its own manager: on HDFS the default
 relies on ``FileContext``'s atomic rename, so the setting is not one of
 the runtime confs :func:`configure_session` applies.
+
+Generated code: Catalyst's whole-stage codegen stands in for a compiled
+graph, and like one it should be compiled once and run many times. Spark
+keeps the compiled classes in an LRU cache of
+``spark.sql.codegen.cache.maxEntries`` entries, 100 by default, and one
+pass of the three ``llm_batch`` queries alone compiles ~140 classes, so at
+the default every repeated query missed the cache and paid Janino
+compiles, class loading and JIT warm-up again. A first pass over all 50
+graded queries at sf0.01 compiles 1,039 distinct classes (``decon_stream``
+299, ``curation`` 125, ``ann`` 67); :func:`get_spark` sessions keep 2,000,
+room for that working set with headroom for larger query sets. With
+stage ids also kept out of class names (a runtime conf below), a steady
+pass over the 50 compiles no class, where the defaults compiled 1,701.
+The cache size is a static conf, read when the JVM's code generator first
+runs, so it cannot be one of the runtime confs: a driver-provided session
+keeps Spark's default, and its owner should set it in
+``spark-defaults.conf`` (or ``--conf``) at launch.
 """
 
 from __future__ import annotations
@@ -47,6 +64,10 @@ _FS_CHECKPOINT_MANAGER = (
     "org.apache.spark.sql.execution.streaming.checkpointing."
     "FileSystemBasedCheckpointFileManager"
 )
+
+#: generated classes the JVM keeps compiled in :func:`get_spark` sessions
+#: (see the module docstring)
+_CODEGEN_CACHE_ENTRIES = 2000
 
 #: SQL confs we need regardless of who built the session. All of these are
 #: runtime-settable, so they can be applied to a driver-provided session.
@@ -72,6 +93,12 @@ _RUNTIME_CONFS = {
     "spark.sql.adaptive.coalescePartitions.minPartitionSize": "64k",
     # Arrow transfer for every pandas-UDF boundary.
     "spark.sql.execution.arrow.pyspark.enabled": "true",
+    # Keep the codegen stage id out of generated class names, so one stage
+    # body is one cache entry under any id: AQE numbers a query's stages
+    # in the order it plans them, which varies from run to run, and each
+    # new numbering recompiled the same code (17-22 classes a pass in
+    # ann and curation, 4-9 in llm_batch's first timed passes).
+    "spark.sql.codegen.useIdInClassName": "false",
     "spark.sql.session.timeZone": "UTC",
 }
 
@@ -106,6 +133,7 @@ def get_spark(app_name: str = "wingfoil_spark", cpus: int | None = None) -> Spar
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config("spark.python.daemon.module", "wingfoil_spark.pydaemon")
+        .config("spark.sql.codegen.cache.maxEntries", str(_CODEGEN_CACHE_ENTRIES))
         .config("spark.sql.streaming.checkpointFileManagerClass", _FS_CHECKPOINT_MANAGER)
     )
     spark = builder.getOrCreate()

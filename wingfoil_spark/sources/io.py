@@ -86,8 +86,7 @@ def validate_replay(s: Stream, start_ts: int | None = None) -> Stream:
 
     df = s.df
     if start_ts is not None:
-        n_bad = df.where(F.col(s.ts) < F.lit(start_ts)).limit(1).count()
-        if n_bad:
+        if not df.where(F.col(s.ts) < F.lit(start_ts)).isEmpty():
             first_bad = df.where(F.col(s.ts) < F.lit(start_ts)).agg(
                 F.min(s.ts)).collect()[0][0]
             raise ValueError(
