@@ -102,12 +102,13 @@ def test_resumable_across_chunks():
         assert ((a == b) | (a.isna() & b.isna())).all(), c
 
 
-def test_book_feed_multi_matches_per_key():
-    """The whole-body multi-key walk equals the per-key step on random
-    key-clustered batches (covering snapshots, gaps, buffering races)."""
+def test_book_feed_walk_matches_per_key():
+    """The multi-key walk equals the one-key step called per key on random
+    key-clustered bodies (covering snapshots, gaps, buffering races), on
+    the rows and on each key's state."""
     import numpy as np
 
-    from wingfoil_spark.operators.market import book_feed_multi, book_feed_step
+    from wingfoil_spark.operators.market import book_feed_step, book_feed_walk
 
     rng = np.random.default_rng(31)
     frames = []
@@ -126,15 +127,16 @@ def test_book_feed_multi_matches_per_key():
             "ask_price": 101.0, "ask_qty": 1.0,
         }))
     body = pd.concat(frames, ignore_index=True)
-    multi = book_feed_multi(body, ("user_id",))
-    per_key = []
+    states, walked = book_feed_walk(("user_id",))({}, body)
+    per_key, want_states = [], {}
     for key, g in body.groupby("user_id", sort=False):
-        _, out = book_feed_step(None, g.reset_index(drop=True))
+        want_states[(key,)], out = book_feed_step(None, g.reset_index(drop=True))
         out.insert(0, "user_id", key)
         per_key.append(out)
     per_key = [o for o in per_key if len(o)]
     ref = pd.concat(per_key, ignore_index=True)
-    assert len(multi) == len(ref) > 0
+    assert len(walked) == len(ref) > 0
     for c in ref.columns:
-        a, b = multi[c], ref[c]
+        a, b = walked[c], ref[c]
         assert ((a == b) | (a.isna() & b.isna())).all(), c
+    assert states == want_states

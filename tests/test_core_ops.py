@@ -6,6 +6,7 @@ modeled on /root/reference/crates/wingfoil/tests/catalog.rs.
 """
 
 import pyspark.sql.functions as F
+import pytest
 
 from wingfoil_spark import Stream, replay_rows, ticker
 
@@ -213,6 +214,34 @@ def test_fold_pandas_arbitrary_closure(spark):
     # non-SQL fold: running product via closure
     out = fold_pandas(s, lambda acc, r: acc * r["v"], 1.0, out="prod")
     assert rows(out, "ts", "prod") == [(1, 2.0), (2, 6.0), (3, 24.0)]
+
+
+@pytest.mark.parametrize("ddl, key, other", [("bigint", None, 5),
+                                             ("double", float("nan"), 5.0)])
+def test_fold_pandas_null_and_nan_key_spans_arrow_batches(spark, ddl, key, other):
+    """A null or NaN key whose rows span Arrow batches is one key, as in
+    the streamed binding: its running sum never restarts. One shuffle
+    partition and 4-row Arrow batches put both keys' 10 rows over three
+    batches each."""
+    from wingfoil_spark.operators.stateful import fold_pandas
+
+    confs = {"spark.sql.execution.arrow.maxRecordsPerBatch": "4",
+             "spark.sql.shuffle.partitions": "1"}
+    before = {c: spark.conf.get(c) for c in confs}
+    try:
+        for c, v in confs.items():
+            spark.conf.set(c, v)
+        data = [(k, t, 1.0) for k in (key, other) for t in range(10)]
+        s = make(spark, data, f"k {ddl}, ts long, v double", keys=("k",))
+        out = fold_pandas(s, lambda acc, r: acc + r["v"], 0.0, out="n")
+        got = {}
+        for r in out.df.orderBy("ts").collect():
+            got.setdefault(r.k == other, []).append(r.n)
+    finally:
+        for c, v in before.items():
+            spark.conf.set(c, v)
+    assert got == {True: [float(i) for i in range(1, 11)],
+                   False: [float(i) for i in range(1, 11)]}
 
 
 def test_delay_with_reset_snaps_and_drops(spark):

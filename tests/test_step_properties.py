@@ -17,7 +17,7 @@ import pytest
 from hypothesis import given, settings, strategies as st
 
 from wingfoil_spark.operators.market import order_book_step
-from wingfoil_spark.streaming.twins import combine_step, delay_step, rolling_stats_step
+from wingfoil_spark.streaming.twins import combine_step, rolling_stats_step
 
 
 def _chunks(pdf, cuts):
@@ -97,29 +97,6 @@ def test_rolling_stats_step_matches_naive_model(rows, cuts):
         n = len(sw)
         med = (sw[(n + 1) // 2 - 1] + sw[n // 2]) / 2
         assert out["st_median"].iloc[i] == med
-
-
-@settings(max_examples=60, deadline=None)
-@given(events)
-def test_delay_step_fires_everything_once_time_passes(rows):
-    rows = sorted(rows)
-    pdf = pd.DataFrame(
-        [(1, t, float(i)) for i, (t, _, _) in enumerate(rows)],
-        columns=["k", "ts", "v"],
-    )
-    DELAY = 7
-    step = delay_step(DELAY, "ts", ["v"], ["k"])
-    sentinel = pd.DataFrame([(1, pdf["ts"].max() + 2 * DELAY, -1.0)],
-                            columns=["k", "ts", "v"])
-    out = _run_chunked(step, None, pd.concat([pdf, sentinel], ignore_index=True),
-                       [len(pdf) // 2, len(pdf)])
-    fired = out[out["v"] >= 0]
-    # every original tick delivered exactly once, restamped by +DELAY,
-    # deduped on identical (fire_at, value) schedules
-    expect = pdf.assign(ts=pdf["ts"] + DELAY)[["k", "ts", "v"]].drop_duplicates()
-    got = fired[["k", "ts", "v"]].reset_index(drop=True)
-    assert len(got) == len(expect)
-    assert set(map(tuple, got.values)) == set(map(tuple, expect.values))
 
 
 @settings(max_examples=40, deadline=None)
@@ -603,7 +580,6 @@ def _big_key_cases():
         "tw_window": (twins.tw_window_step("v", ("rows", 3), "ts", k), ticks),
         "tw_cum": (twins.tw_cum_step("v", "ts", k), ticks),
         "buffer": (twins.buffer_step(2, "v", "ts", "seq", k), ticks),
-        "delay": (twins.delay_step(3, "ts", ["v"], k), ticks),
         "delay_timer": (lambda st_, pdf: twins.delay_timer_op(
             3, "ts", ["v"], k, None).on_data(st_, pdf, wm), ticks),
         "delay_with_reset_timer": (lambda st_, pdf: twins.delay_with_reset_timer_op(

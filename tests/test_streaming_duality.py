@@ -469,45 +469,6 @@ def test_stream_stat_api_on_readstream(spark, typed_events, tmp_path):
     assert np.allclose(av, bv, rtol=1e-12, atol=1e-9), "stat API twin diverged"
 
 
-def test_delay_timer_duality(spark, typed_events):
-    """Batch re-stamp delay == streaming timer delay (after the stream's
-    event time passes every fire time via a sentinel chunk)."""
-    from wingfoil_spark.stream import Stream
-    from wingfoil_spark.streaming.twins import delay_step
-    import pandas as pd
-
-    DELAY = 1_000_000  # 1s
-    base = typed_events.select("user_id", "ts_us", "event_id", "value")
-    s = Stream(base, ts="ts_us", seq="event_id", keys=("user_id",))
-    batch = s.delay(DELAY).df.select("user_id", "ts_us", "value").toPandas()
-
-    op = KeyedStateOp(
-        delay_step(DELAY, "ts_us", ["value"], ["user_id"]),
-        out_schema="user_id long, ts_us long, value double",
-        init_state=None, ts="ts_us", seq=None, keys=("user_id",),
-    )
-    pdf = base.toPandas()
-    # sentinel rows (event_id -1) at max_ts + 2*delay advance every key's
-    # event time past all pending fire times (watermark-push pattern)
-    sent_ts = int(pdf["ts_us"].max()) + 2 * DELAY
-    sent = pd.DataFrame({
-        "user_id": sorted(pdf["user_id"].unique()),
-        "ts_us": sent_ts, "event_id": -1, "value": 0.0,
-    })
-    streamed = _run_stream_chunks(
-        spark, op, pd.concat([pdf, sent], ignore_index=True),
-        "user_id long, ts_us long, event_id long, value double",
-        ["ts_us", "event_id"], name="delay_twin",
-    )
-    # drop the sentinels' own delayed emissions from the stream output
-    streamed = streamed[streamed["ts_us"] != sent_ts + DELAY]
-    key = ["user_id", "ts_us", "value"]
-    b = batch.drop_duplicates().sort_values(key).reset_index(drop=True)
-    st = streamed[list(b.columns)].drop_duplicates().sort_values(key).reset_index(drop=True)
-    assert len(b) == len(st) > 0
-    assert b.equals(st), "delay timer semantics diverged"
-
-
 def test_ewma_step_matches_batch_operator_bitwise(spark, typed_events):
     """The streaming step and the batch pandas operator are the SAME ewma,
     bit-for-bit — one semantics, three bindings."""

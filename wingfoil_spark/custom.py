@@ -159,7 +159,6 @@ def _wire_custom(node: CustomStream, upstreams: Sequence[Stream]) -> Stream:
 
     s = combined
     keys, ts_col, seq = s.keys, s.ts, s.seq
-    order = [ts_col] + ([seq] if seq else [])
     ucols = [f"__u{i}" for i in range(len(upstreams))]
     key_fields = [s.df.schema[k] for k in keys]
     out_schema = T.StructType(
@@ -170,8 +169,7 @@ def _wire_custom(node: CustomStream, upstreams: Sequence[Stream]) -> Stream:
     )
     proto = node
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order, kind="mergesort")
+    def step(_, pdf: pd.DataFrame):
         inst = copy.deepcopy(proto)  # fresh per-key node state
         out = []
         for d in pdf.to_dict("records"):
@@ -183,11 +181,12 @@ def _wire_custom(node: CustomStream, upstreams: Sequence[Stream]) -> Stream:
                     [d[k] for k in keys] + [d[ts_col]]
                     + ([d[seq]] if seq else []) + [inst.peek()]
                 )
-        return pd.DataFrame(out, columns=out_schema.names)
+        return None, pd.DataFrame(out, columns=out_schema.names)
 
     from wingfoil_spark.operators.stateful import _apply_per_key_reshape
+    from wingfoil_spark.streaming.stateful import lift
 
-    out_df = _apply_per_key_reshape(s, fn, out_schema)
+    out_df = _apply_per_key_reshape(s, lift(step, keys, None), out_schema)
     res = Stream(out_df, ts=ts_col, seq=seq, keys=keys)
     if proto._value is not None:
         # a value seeded in __init__ (before wiring) is readable by

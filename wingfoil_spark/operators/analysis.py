@@ -29,6 +29,7 @@ from pyspark.sql import Column, Window, functions as F
 from pyspark.sql import types as T
 
 from wingfoil_spark.stream import Stream
+from wingfoil_spark.streaming.stateful import lift
 
 
 def _arr_median(arr: Column) -> Column:
@@ -192,8 +193,7 @@ def bocpd_changepoints(
     the same; keep ``window_n`` modest on long keys, or use
     :func:`mean_shift_changepoint` (pure window aggregates) for the
     cheap score surface. Keys parallelize across the cluster."""
-    keys, ts_col, seq = s.keys, s.ts, s.seq
-    order = [ts_col] + ([seq] if seq else [])
+    keys, ts_col = s.keys, s.ts
     window_n = max(window_n, min_points)
     key_fields = [s.df.schema[k] for k in keys]
     ts_field = s.df.schema[ts_col]
@@ -207,8 +207,7 @@ def bocpd_changepoints(
     )
     vcol, wl, hz, mp = col, window_n, float(hazard_lambda), min_points
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order, kind="mergesort")
+    def step(_, pdf: pd.DataFrame):
         x = pdf[vcol].to_numpy(dtype=np.float64)
         keyvals = [pdf[k].iloc[0] for k in keys]
         out = []
@@ -220,11 +219,11 @@ def bocpd_changepoints(
             out.append(
                 [*keyvals, pdf[ts_col].iloc[t], [int(c) for c in cps], len(cps)]
             )
-        return pd.DataFrame(out, columns=schema.names)
+        return None, pd.DataFrame(out, columns=schema.names)
 
     from wingfoil_spark.operators.stateful import _apply_per_key_reshape
 
-    return _apply_per_key_reshape(s, fn, schema)
+    return _apply_per_key_reshape(s, lift(step, keys, None), schema)
 
 
 def cross_section_outlier(
@@ -392,8 +391,7 @@ def seasonal_forecast(
     for p in periods:
         if p < 2:
             raise ValueError(f"mstl period must be >= 2, got {p}")
-    keys, ts_col, seq = s.keys, s.ts, s.seq
-    order = [ts_col] + ([seq] if seq else [])
+    keys, ts_col = s.keys, s.ts
     key_fields = [s.df.schema[k] for k in keys]
     ts_field = s.df.schema[ts_col]
     schema = T.StructType(
@@ -430,8 +428,7 @@ def seasonal_forecast(
             out.append(float(v))
         return out
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order, kind="mergesort")
+    def step(_, pdf: pd.DataFrame):
         x = pdf[vcol].to_numpy(dtype=np.float64)
         keyvals = [pdf[k].iloc[0] for k in keys]
         out = []
@@ -442,11 +439,11 @@ def seasonal_forecast(
             out.append(
                 [*keyvals, pdf[ts_col].iloc[t_i], fit_forecast(x[lo : t_i + 1])]
             )
-        return pd.DataFrame(out, columns=schema.names)
+        return None, pd.DataFrame(out, columns=schema.names)
 
     from wingfoil_spark.operators.stateful import _apply_per_key_reshape
 
-    return _apply_per_key_reshape(s, fn, schema)
+    return _apply_per_key_reshape(s, lift(step, keys, None), schema)
 
 
 # ------------------------------------------------------- Python-kernel ops
@@ -469,8 +466,7 @@ def detect_seasons(
     batch surface reports for short-but-present keys. The 8-tick periodogram
     floor still yields a null-period row — a window below the model floor
     still emits (tests/augurs_adapter.rs:354-369)."""
-    keys, ts_col, seq = s.keys, s.ts, s.seq
-    order = [ts_col] + ([seq] if seq else [])
+    keys = s.keys
     key_fields = [s.df.schema[k] for k in keys]
     schema = T.StructType(
         list(key_fields)
@@ -482,15 +478,14 @@ def detect_seasons(
     )
     vcol, mp, minp = col, max_period, min_points
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order, kind="mergesort")
+    def seasons(_, pdf: pd.DataFrame):
         x = pdf[vcol].to_numpy(dtype=np.float64)
         n = len(x)
         keyvals = [pdf[k].iloc[0] for k in keys]
         if minp is not None and n < minp:
-            return pd.DataFrame(columns=schema.names)
+            return None, pd.DataFrame(columns=schema.names)
         if n < 8:
-            return pd.DataFrame([[*keyvals, None, None, n]], columns=schema.names)
+            return None, pd.DataFrame([[*keyvals, None, None, n]], columns=schema.names)
         x = x - x.mean()
         p = np.abs(np.fft.rfft(x)) ** 2
         p[0] = 0.0
@@ -498,11 +493,11 @@ def detect_seasons(
         periods = np.where(freqs > 0, n / np.maximum(freqs, 1), np.inf)
         valid = (periods >= 2) & (periods <= (mp or n / 2))
         if not valid.any() or p[valid].sum() == 0:
-            return pd.DataFrame([[*keyvals, None, None, n]], columns=schema.names)
+            return None, pd.DataFrame([[*keyvals, None, None, n]], columns=schema.names)
         k = int(np.argmax(np.where(valid, p, -1.0)))
         # half-up (floor(x+0.5)), not Python's banker's round: the SQL twin
         # (round half away from zero) must agree when n/k lands on .5
-        return pd.DataFrame(
+        return None, pd.DataFrame(
             [[*keyvals, int(math.floor(n / k + 0.5)), float(p[k] / p[valid].sum()), n]],
             columns=schema.names,
         )
@@ -512,7 +507,7 @@ def detect_seasons(
     # even though seasons emits one row per key (VERDICT r2 wrongness #3)
     from wingfoil_spark.operators.stateful import _apply_per_key_reshape
 
-    return _apply_per_key_reshape(s, fn, schema)
+    return _apply_per_key_reshape(s, lift(seasons, keys, None), schema)
 
 
 def _dtw(a: np.ndarray, b: np.ndarray, metric: str = "manhattan") -> float:
@@ -556,8 +551,7 @@ def dtw_distances(
     so the pairwise stage joins only tiny fixed-size vectors (a broadcast-
     able |keys|² problem, not an O(data²) one). The DP kernel runs in a
     pandas UDF over the pair table."""
-    keys, ts_col, seq, vcol = s.keys, s.ts, s.seq, col
-    order = [ts_col] + ([seq] if seq else [])
+    keys, vcol = s.keys, col
     if metric not in ("manhattan", "euclidean"):
         # wiring-time validation, not first-cycle: the binding validates its
         # knobs loudly (augurs_adapter.rs:125-136 is the pattern)
@@ -572,22 +566,21 @@ def dtw_distances(
         [key_field, T.StructField("series", T.ArrayType(T.DoubleType()))]
     )
 
-    def profile(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order, kind="mergesort")
+    def profile(_, pdf: pd.DataFrame):
         x = pdf[vcol].to_numpy(dtype=np.float64)
         if len(x) < 2:
             # a DTW distance over length-<2 columns is not a windowed-
             # history distance: the key stays SILENT (dtw_waits_for_two_
             # samples, tests/augurs_adapter.rs:426-442)
-            return pd.DataFrame({key: [], "series": []})
+            return None, pd.DataFrame({key: [], "series": []})
         grid = np.linspace(0, len(x) - 1, rs)
         ser = np.interp(grid, np.arange(len(x)), x).tolist()
-        return pd.DataFrame({key: [pdf[key].iloc[0]], "series": [ser]})
+        return None, pd.DataFrame({key: [pdf[key].iloc[0]], "series": [ser]})
 
     # packed per-key binding, as in detect_seasons (VERDICT r2 wrongness #3)
     from wingfoil_spark.operators.stateful import _apply_per_key_reshape
 
-    prof = _apply_per_key_reshape(s, profile, prof_schema)
+    prof = _apply_per_key_reshape(s, lift(profile, keys, None), prof_schema)
 
     a = prof.select(F.col(key).alias("key_a"), F.col("series").alias("sa"))
     b = prof.select(F.col(key).alias("key_b"), F.col("series").alias("sb"))

@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from wingfoil_spark.stream import Stream
-from wingfoil_spark.streaming.stateful import group_key
+from wingfoil_spark.streaming.stateful import group_key, lift
 
 
 def dynamic_group(
@@ -89,7 +89,7 @@ def dynamic_group(
     )
     start_member = bool(member_from_start)
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
+    def step(_, pdf: pd.DataFrame):
         pdf = pdf.sort_values(["__t", "__tag", "__seq"], kind="mergesort")
         member, acc = start_member, init
         t_arr = pdf["__t"].to_numpy()
@@ -106,7 +106,7 @@ def dynamic_group(
                 acc = fold_fn(acc, float(v_arr[i]))
                 rows.append((int(t_arr[i]), float(v_arr[i]), acc))
         keyvals = group_key(pdf, keys)
-        return pd.DataFrame(
+        return None, pd.DataFrame(
             [(*keyvals, t, v, a) for t, v, a in rows],
             columns=[*keys, ts_col, col, out],
         )
@@ -116,5 +116,5 @@ def dynamic_group(
     # with thousands of small keys)
     from wingfoil_spark.operators.stateful import _apply_per_key_reshape
 
-    out_df = _apply_per_key_reshape(merged, fn, schema)
+    out_df = _apply_per_key_reshape(merged, lift(step, keys, None), schema)
     return Stream(out_df, ts=ts_col, seq=None, keys=tuple(keys))

@@ -33,7 +33,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from wingfoil_spark.stream import Stream
-from wingfoil_spark.streaming.stateful import KeyedStateOp
+from wingfoil_spark.streaming.stateful import (
+    KeyedStateOp, WalkFn, lift, one_key, runs,
+)
 
 #: fixed-point price/quantity types (reference Px/Qty, market.rs:318-388)
 PX = "decimal(18,9)"
@@ -315,7 +317,7 @@ def book_feed_step(state, pdf: pd.DataFrame):
     (sources/fix.py:book_updates_from_fix).
     """
     arr, n = _feed_arrays(pdf)
-    state, out_rows = _feed_walk(arr, 0, n, state, None)
+    state, out_rows = _feed_walk(arr, 0, n, state, ())
     out = pd.DataFrame(out_rows, columns=[f.name for f in BOOK_FEED_FIELDS])
     return state, out
 
@@ -330,16 +332,15 @@ def _feed_arrays(pdf: pd.DataFrame):
     return arr, n
 
 
-def _feed_walk(arr, i0: int, i1: int, state, keyvals):
-    """The feed-handler walk over rows [i0, i1) of pre-extracted column
-    arrays — ONE implementation shared by the per-key step and the
-    whole-body multi-key path (output rows are tuples; ``keyvals``
-    prefixes them when set). Returns (state', rows)."""
+def _feed_walk(arr, i0: int, i1: int, state, prefix: tuple):
+    """The feed-handler walk over one key's rows [i0, i1) of pre-extracted
+    column arrays — ONE implementation shared by the one-key step and the
+    multi-key walk (output rows are tuples, each prefixed by ``prefix``).
+    Returns (state', rows)."""
     status, last_seq, bids, asks, buffer = state if state is not None else (
         "await", None, {}, {}, []
     )
     out_rows = []
-    prefix = keyvals if keyvals is not None else ()
 
     def apply_delta(side, price, qty):
         book = bids if side == "bid" else asks
@@ -424,15 +425,17 @@ def _feed_walk(arr, i0: int, i1: int, state, keyvals):
 
 
 def order_book_multi(pdf: pd.DataFrame, keys: tuple[str, ...]):
-    """Whole-body fold across ALL key groups of a sorted, key-clustered
+    """Whole-body fold across ALL key runs of a sorted, key-clustered
     batch in ONE C call (the multi-key ``new_grp`` reset flags of
-    _ckernels.book_fold). Per-group pandas frame construction cost
-    ~0.7 ms/key — 60× the fold itself for small keys — so this builds the
-    output frame ONCE per Arrow batch. Returns None (→ per-key fallback)
-    without a compiler or past the level-span budget. Every group in the
-    body is complete (the binding holds the trailing key back), so all
-    groups start from fresh state."""
+    _ckernels.book_fold, set at the key-run starts). Per-run pandas frame
+    construction cost ~0.7 ms/key — 60× the fold itself for small keys —
+    so this builds the output frame ONCE per Arrow batch. Returns None
+    without a compiler or past the level-span budget. Every run starts
+    from a fresh book and only the last run's book comes back from the
+    kernel, so this is a batch walk (:func:`order_book`), not a stream
+    one."""
     from wingfoil_spark.operators import _ckernels
+    from wingfoil_spark.streaming.stateful import run_starts
 
     n = len(pdf)
     if n == 0:
@@ -442,9 +445,7 @@ def order_book_multi(pdf: pd.DataFrame, keys: tuple[str, ...]):
     lvl = pdf["level"].to_numpy()
     qd = pdf["qty_delta"].to_numpy()
     new_grp = np.zeros(n, dtype=np.int8)
-    for k in keys:
-        a = pdf[k].to_numpy()
-        new_grp[1:] |= (a[1:] != a[:-1]).astype(np.int8)
+    new_grp[run_starts(pdf, keys)] = 1
     res = _ckernels.book_fold(is_snap, is_bid, lvl, qd, {}, {},
                               new_grp=new_grp)
     if res is None:
@@ -473,10 +474,10 @@ def order_book_multi(pdf: pd.DataFrame, keys: tuple[str, ...]):
 
 def order_book_op(key_fields: list[T.StructField]) -> KeyedStateOp:
     """The order-book operator, bindable to batch (``run_batch``) or
-    streaming (``run_stream``) — ONE step function, two run modes; batch
-    additionally uses the whole-body multi-key C path
-    (:func:`order_book_multi`, differentially tested against the per-key
-    step)."""
+    streaming (``run_stream``) — ONE step function, two run modes.
+    :func:`order_book` binds the whole-body C fold
+    (:func:`order_book_multi`, differentially tested against this step)
+    as its batch walk instead."""
     keys = tuple(f.name for f in key_fields)
 
     def step_with_keys(state, pdf):
@@ -492,59 +493,44 @@ def order_book_op(key_fields: list[T.StructField]) -> KeyedStateOp:
         ts="ts",
         seq="upd_seq",
         keys=keys,
-        multi_step=lambda pdf: order_book_multi(pdf, keys),
     )
 
 
-def book_feed_multi(pdf: pd.DataFrame, keys: tuple[str, ...]):
-    """Whole-body feed-handler fold: ONE pass over all key groups of a
-    sorted key-clustered batch, one output frame (the per-group pandas
-    construction cost dominated small-key workloads — same lever as
-    :func:`order_book_multi`). Each group starts fresh (the binding holds
-    the trailing key back for exact state carry)."""
-    n = len(pdf)
-    if n == 0:
-        return None
-    arr, _ = _feed_arrays(pdf)
-    karrs = [pdf[k].to_numpy() for k in keys]
-    new_grp = np.zeros(n, dtype=bool)
-    for a in karrs:
-        new_grp[1:] |= (a[1:] != a[:-1])
-    bounds = [0] + [int(x) for x in np.flatnonzero(new_grp)] + [n]
-    rows = []
-    for a, b in zip(bounds, bounds[1:]):
-        keyvals = tuple(ka[a] for ka in karrs)
-        _, r = _feed_walk(arr, a, b, None, keyvals)
-        rows.extend(r)
-    return pd.DataFrame(
-        rows, columns=[*keys, *[f.name for f in BOOK_FEED_FIELDS]]
-    )
+def book_feed_walk(keys: tuple[str, ...]) -> WalkFn:
+    """The feed-handler book (:func:`book_feed_step`) as a native
+    multi-key walk: one :func:`_feed_walk` per key run of the body,
+    carrying each key's (status, last_seq, bids, asks, buffer) state, and
+    one output frame (key columns first)."""
+    names = [*keys, *[f.name for f in BOOK_FEED_FIELDS]]
+
+    def walk(states: dict, body: pd.DataFrame):
+        arr, _ = _feed_arrays(body)
+        rows = []
+        for k, a, b in runs(body, keys):
+            states[k], r = _feed_walk(arr, a, b, states.get(k), k)
+            rows += r
+        return states, pd.DataFrame(rows, columns=names)
+
+    return walk
 
 
 def book_feed_op(key_fields: list[T.StructField],
                  order_col: str = "seq") -> KeyedStateOp:
-    """The FULL feed-handler book (:func:`book_feed_step` — status machine,
-    gap refusal, pre-snapshot buffering) as a two-run-mode KeyedStateOp.
-    ``order_col`` is the intra-instant SORT tiebreaker (the step always
-    reads the ``seq`` column for gap logic); pass a composite like the FIX
-    bridge's ``__ord`` when several rows share one (ts, seq) — a message's
-    change batch — and wire order must survive the partition sort."""
+    """The FULL feed-handler book (:func:`book_feed_walk` — status
+    machine, gap refusal, pre-snapshot buffering) as a two-run-mode
+    KeyedStateOp. ``order_col`` is the intra-instant SORT tiebreaker (the
+    walk always reads the ``seq`` column for gap logic); pass a composite
+    like the FIX bridge's ``__ord`` when several rows share one (ts, seq)
+    — a message's change batch — and wire order must survive the
+    partition sort."""
     keys = tuple(f.name for f in key_fields)
-
-    def step_with_keys(state, pdf):
-        state, out = book_feed_step(state, pdf)
-        for k in keys:
-            out[k] = pdf[k].iloc[0] if len(pdf) else None
-        return state, out
-
     return KeyedStateOp(
-        step_with_keys,
+        one_key(book_feed_walk(keys), keys, ["ts", order_col]),
         out_schema=T.StructType(list(key_fields) + BOOK_FEED_FIELDS),
         init_state=None,
         ts="ts",
         seq=order_col,
         keys=keys,
-        multi_step=lambda pdf: book_feed_multi(pdf, keys),
     )
 
 
@@ -567,10 +553,22 @@ def book_feed(updates: Stream, order_col: str | None = None) -> Stream:
 
 def order_book(updates: Stream) -> Stream:
     """Maintain per-instrument order books from a BookUpdate stream,
-    emitting top-of-book after every update (batch binding; streaming twin
-    in tests/test_streaming_duality.py)."""
+    emitting top-of-book after every update. Batch binding: the walk is
+    the whole-body C fold (:func:`order_book_multi`), or
+    :func:`order_book_op`'s step lifted per key run when that returns
+    None (no compiler); streams bind ``order_book_op(...).run_stream``
+    (tests/test_streaming_duality.py)."""
+    from wingfoil_spark.operators.stateful import _apply_per_key_reshape
+
     keys = updates.keys
     op = order_book_op([updates.df.schema[k] for k in keys])
     renamed = updates.df.withColumnRenamed(updates.ts, "ts") if updates.ts != "ts" else updates.df
-    out_df = op.run_batch(renamed)
+    lifted = lift(op.step, keys, None)
+
+    def walk(states: dict, body: pd.DataFrame):
+        out = order_book_multi(body, keys)
+        return (states, out) if out is not None else lifted(states, body)
+
+    out_df = _apply_per_key_reshape(
+        Stream(renamed, ts="ts", seq="upd_seq", keys=keys), walk, op.out_schema)
     return Stream(out_df, ts="ts", seq="upd_seq", keys=keys)

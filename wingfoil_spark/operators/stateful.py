@@ -8,14 +8,17 @@ single-threaded node state), parallel across keys on a cluster.
 
 One walk per operator, both run modes: ``drop_small_change``,
 ``throttle_exact`` and ``fold_pandas`` bind their step
-(``streaming/twins.py``) through :class:`KeyedStateOp` — ``run_batch`` on
-a batch frame, ``run_stream`` on a streaming one (:func:`_run_keyed`).
-The batch kernels the bench times keep their own batch binding and hand
-streams to the matching step: ``ewma_multi`` (C kernels /
-``ewma_step``), ``time_weighted_profile`` (:func:`_tw_profile_kernel`,
-shared with its step) and ``delay_with_reset`` (relational plan /
-``delay_with_reset_timer_op``). Every batch walk runs on the ONE packed
-per-key binding, :func:`_apply_per_key_reshape`.
+(``streaming/twins.py``, each ``one_key`` of a native multi-key walk)
+through :class:`KeyedStateOp` — ``run_batch`` on a batch frame,
+``run_stream`` on a streaming one (:func:`_run_keyed`). Every batch op
+runs on the ONE packed binding, :func:`_apply_per_key_reshape`, which
+hands a walk ``walk(states, body)`` whole Arrow batches of complete key
+runs. The batch kernels the bench times keep their own batch walk and
+hand streams to the matching step: ``ewma_multi`` (C kernels with reset
+flags at the key-run starts / ``ewma_step``), ``time_weighted_profile``
+(:func:`_tw_profile_kernel`, shared with its step) and
+``delay_with_reset`` (relational plan / ``delay_with_reset_timer_op``).
+The other per-key kernels are stateless steps, :func:`lift`-ed.
 
 Reference ops: EWMA family (crates/wingfoil/src/ops.rs:821-951, trait
 stats.rs:21-29), drop_small_change (ops.rs:227-262), throttle
@@ -33,7 +36,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from wingfoil_spark.stream import Stream
-from wingfoil_spark.streaming.stateful import concat_outs, in_order
+from wingfoil_spark.streaming.stateful import key_tuples, lift, run_starts
 
 
 def _ewma_hl_kernel(ts: np.ndarray, x: np.ndarray, hl: float) -> np.ndarray:
@@ -52,28 +55,19 @@ def _ewma_hl_kernel(ts: np.ndarray, x: np.ndarray, hl: float) -> np.ndarray:
     )
 
 
-def _apply_per_key_reshape(s: Stream, fn, out_schema: T.StructType,
-                           fn_multi=None):
-    """The packed per-key batch binding: run ``fn(pdf) -> pdf`` once per
-    key on rows sorted by (ts, seq); ``fn`` returns frames in
+def _apply_per_key_reshape(s: Stream, walk, out_schema: T.StructType):
+    """The packed batch binding: run ``walk(states, body) -> (states, out)``
+    (the multi-key walk contract, ``streaming.stateful.WalkFn``) over
+    bodies sorted by (keys, ts, seq) that hold only complete key runs,
+    each call starting from empty ``states``; ``out`` is in
     ``out_schema`` (its own columns and row count, key columns included —
     an op that only adds columns passes the input schema plus them).
 
     Binding: ``repartition(keys) → sortWithinPartitions(keys, ts, seq) →
-    mapInPandas`` rather than ``groupBy().applyInPandas`` — one Python
-    round-trip per Arrow batch instead of one per key (per-group
-    applyInPandas was ~4× slower with many small keys). Key groups
-    spanning batch boundaries are carried over inside the partition
-    iterator, so ``fn`` always sees a whole key's rows. Keyless = one
-    total order = one group (the reference's single-thread graph).
-
-    ``fn_multi(body) -> pdf | None`` (optional): a whole-body fast path
-    that processes ALL complete key groups of a sorted, key-clustered
-    batch in one call (the op handles group boundaries itself — r4: the
-    per-group pandas frame construction cost ~0.7 ms/key, 60× the fold
-    for small keys). Returning None falls back to the per-group ``fn``.
-    The held (possibly incomplete) trailing key always uses ``fn`` so its
-    state carry stays exact."""
+    mapInPandas`` — one walk call per Arrow batch, not one Python call or
+    pandas slice per key. Keyless input is one total order in one
+    partition, one run (the reference's single-thread graph). The
+    partition iterator is :func:`walk_batches`."""
     if s.df.isStreaming:
         raise NotImplementedError(
             "per-key pandas binding on a streaming frame: bind the step "
@@ -83,58 +77,63 @@ def _apply_per_key_reshape(s: Stream, fn, out_schema: T.StructType,
     keys = list(s.keys)
     out_cols = [f.name for f in out_schema.fields]
 
-    if not keys:
-        def one(pdf: pd.DataFrame) -> pd.DataFrame:
-            return fn(in_order(pdf, order))[out_cols]
-
-        return s.df.groupBy(F.lit(1).alias("__g")).applyInPandas(
-            lambda p: one(p.drop(columns="__g", errors="ignore")), schema=out_schema
-        )
-
     def per_partition(batches):
-        held: pd.DataFrame | None = None
-        for pdf in batches:
-            if held is not None:
-                pdf = pd.concat([held, pdf], ignore_index=True)
-                held = None
-            if not len(pdf):
-                continue
-            last_key = tuple(pdf[k].iloc[-1] for k in keys)
-            mask_last = np.ones(len(pdf), dtype=bool)
-            for k, v in zip(keys, last_key):
-                mask_last &= (pdf[k] == v).to_numpy()
-            held = pdf.loc[mask_last]
-            body = pdf.loc[~mask_last]
-            if len(body):
-                if fn_multi is not None:
-                    whole = fn_multi(body.reset_index(drop=True))
-                    if whole is not None:
-                        if len(whole):
-                            yield whole[out_cols]
-                        continue
-                whole = concat_outs([
-                    fn(g) for _, g in body.groupby(keys, sort=False, dropna=False)
-                ])
-                if len(whole):
-                    yield whole[out_cols]
-        if held is not None and len(held):
-            whole = concat_outs([
-                fn(g) for _, g in held.groupby(keys, sort=False, dropna=False)
-            ])
-            if len(whole):
-                yield whole[out_cols]
+        return walk_batches(batches, walk, keys, out_cols)
 
-    return (
-        s.df.repartition(*keys)
-        .sortWithinPartitions(*keys, *order)
-        .mapInPandas(per_partition, schema=out_schema)
-    )
+    df = s.df.repartition(*keys) if keys else s.df.repartition(1)
+    return df.sortWithinPartitions(*keys, *order).mapInPandas(
+        per_partition, schema=out_schema)
+
+
+def walk_batches(batches, walk, keys, out_cols):
+    """The batch binding's partition iterator: yield ``walk``'s output
+    (``out_cols``) over the Arrow batches of one partition clustered by
+    ``keys``. Each batch's complete key runs are walked in one call; the
+    trailing run is held back — as a list of frames, concatenated once
+    when the run ends — so a key spanning batches is walked whole. Keys
+    compare as :func:`~wingfoil_spark.streaming.stateful.key_runs` reads
+    them (a null or NaN key is one key)."""
+    held, held_key = [], None
+
+    def run(frames):
+        body = frames[0] if len(frames) == 1 else pd.concat(frames, ignore_index=True)
+        _, out = walk({}, body)
+        return [out[out_cols]] if len(out) else []
+
+    for pdf in batches:
+        if not len(pdf):
+            continue
+        starts = run_starts(pdf, keys)
+        first, last = key_tuples(pdf, keys, [0, starts[-1]])
+        cut = 0  # rows [0, cut) continue the held run
+        if held and first == held_key:
+            cut = int(starts[1]) if len(starts) > 1 else len(pdf)
+            held.append(pdf.iloc[:cut])
+        if held and cut < len(pdf):  # the held run ended before this row
+            yield from run(held)
+            held = []
+        if cut == len(pdf):
+            continue
+        if cut < starts[-1]:
+            yield from run([pdf.iloc[cut:starts[-1]]])
+        held, held_key = [pdf.iloc[starts[-1]:]], last
+    if held:
+        yield from run(held)
+
+
+def _with_columns(pdf: pd.DataFrame, cols: dict) -> pd.DataFrame:
+    """``pdf`` plus the new columns ``cols``, as a new frame: a per-key
+    kernel under :func:`lift` gets an ``iloc`` slice of the body and must
+    not write into it. One column-wise concat — ``assign`` inserts the
+    columns one at a time, which costs more than the kernels themselves
+    on small keys."""
+    return pd.concat([pdf, pd.DataFrame(cols, index=pdf.index)], axis=1)
 
 
 def _run_keyed(s: Stream, step, out_schema, init_state=None) -> Stream:
     """Bind a step through :class:`KeyedStateOp` in the frame's own run
-    mode: ``run_batch`` (the packed binding, the whole history in one
-    call per key) on a batch frame, ``run_stream`` (state in the state
+    mode: ``run_batch`` (the packed binding, each key's whole history
+    walked at once) on a batch frame, ``run_stream`` (state in the state
     store across micro-batches) on a streaming one."""
     from wingfoil_spark.streaming.stateful import KeyedStateOp
 
@@ -193,16 +192,6 @@ def ewma(
                                else {"half_life_ns": half_life_ns}})
 
 
-def _grp_flags(pdf: pd.DataFrame, keys) -> np.ndarray:
-    """Per-row new-group flags over a key-clustered sorted batch."""
-    n = len(pdf)
-    g = np.zeros(n, dtype=np.int8)
-    for k in keys:
-        a = pdf[k].to_numpy()
-        g[1:] |= (a[1:] != a[:-1]).astype(np.int8)
-    return g
-
-
 def ewma_multi(s: Stream, col: str, specs: dict[str, dict]) -> Stream:
     """Several EWMA columns in ONE Arrow pass (one sort, one Python stage) —
     the fused form of chained :func:`ewma` calls. ``specs`` maps output
@@ -210,11 +199,11 @@ def ewma_multi(s: Stream, col: str, specs: dict[str, dict]) -> Stream:
 
     Batch: both recursions run the C kernels (plain (1-α)·acc + α·x — the
     same op order as the recursive-CTE oracle and ``ewma_step`` — and the
-    scalar-pow half-life walk), and the binding uses the whole-body
-    multi-key path: one kernel call over all complete key groups with
-    group-reset flags, bitwise identical to per-key runs. Stream: each
-    spec runs its step (``ewma_step`` / :func:`_ewma_hl_step`); the state
-    is a dict keyed by output column."""
+    scalar-pow half-life walk) as the binding's walk: one kernel call over
+    all complete key runs of a body, with reset flags at the run starts,
+    bitwise identical to per-key runs. Stream: each spec runs its step
+    (``ewma_step`` / :func:`_ewma_hl_step`); the state is a dict keyed by
+    output column."""
     # null value = non-tick (the reference's streams cannot carry nulls;
     # a NaN entering the recursion would poison the accumulator FOREVER,
     # unlike the window stats, which skip nulls per-frame)
@@ -245,28 +234,24 @@ def ewma_multi(s: Stream, col: str, specs: dict[str, dict]) -> Stream:
         schema = T.StructType([s.df.schema[c] for c in keep] + added)
         return _run_keyed(s, step, schema)
 
-    def _compute(pdf: pd.DataFrame, grp) -> pd.DataFrame:
-        from wingfoil_spark.operators import _ckernels
-
-        x = pdf[vcol].to_numpy(dtype=np.float64)
-        ts = pdf[ts_col].to_numpy(dtype=np.float64)
-        for out, alpha, hl in items:
-            if alpha is not None:
-                pdf[out] = _ckernels.ewma_alpha(x, float(alpha), grp)
-            else:
-                pdf[out] = _ckernels.ewma_hl(ts, x, float(hl), grp)
-        return pdf
-
     keys = list(s.keys)
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _compute(pdf, None)
+    def walk(states: dict, body: pd.DataFrame):
+        # batch only: every run of the body is complete and starts fresh
+        from wingfoil_spark.operators import _ckernels
 
-    def fn_multi(body: pd.DataFrame):
-        return _compute(body, _grp_flags(body, keys)) if keys else None
+        grp = np.zeros(len(body), dtype=np.int8)
+        grp[run_starts(body, keys)] = 1
+        x = body[vcol].to_numpy(dtype=np.float64)
+        ts = body[ts_col].to_numpy(dtype=np.float64)
+        return states, body.assign(**{
+            out: _ckernels.ewma_alpha(x, float(alpha), grp) if alpha is not None
+            else _ckernels.ewma_hl(ts, x, float(hl), grp)
+            for out, alpha, hl in items
+        })
 
     schema = T.StructType(list(s.df.schema.fields) + added)
-    return Stream(_apply_per_key_reshape(s, fn, schema, fn_multi=fn_multi),
+    return Stream(_apply_per_key_reshape(s, walk, schema),
                   ts=s.ts, seq=s.seq, keys=s.keys)
 
 
@@ -313,15 +298,15 @@ def time_windowed_time_weighted(
     """
     ts_col = s.ts
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
+    def step(_, pdf: pd.DataFrame):
         mean, var = _tw_mean_var(pdf[ts_col].to_numpy(dtype=np.int64),
                                  pdf[col].to_numpy(dtype=np.float64), window_ns)
-        pdf[out] = mean if stat == "mean" else var if stat == "var" else np.sqrt(var)
-        return pdf
+        return None, _with_columns(pdf, {out: mean if stat == "mean" else var
+                                         if stat == "var" else np.sqrt(var)})
 
     schema = T.StructType(list(s.df.schema.fields)
                           + [T.StructField(out, T.DoubleType())])
-    return Stream(_apply_per_key_reshape(s, fn, schema),
+    return Stream(_apply_per_key_reshape(s, lift(step, s.keys, None), schema),
                   ts=s.ts, seq=s.seq, keys=s.keys)
 
 
@@ -340,7 +325,7 @@ def weighted_median(s: Stream, col: str, wname: str, frame, out: str) -> Stream:
     range_ns = frame[1] if frame[0] == "range" else None
     ts_col = s.ts
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
+    def step(_, pdf: pd.DataFrame):
         from wingfoil_spark.operators import _ckernels
 
         v = pdf[col].to_numpy(dtype=np.float64)
@@ -366,13 +351,12 @@ def weighted_median(s: Stream, col: str, wname: str, frame, out: str) -> Stream:
                 mask = ww > 0
                 vv, ww = vv[mask], ww[mask]
                 res[i] = _weighted_median_select(vv, ww, v[i])
-        pdf[out] = res
-        return pdf
+        return None, _with_columns(pdf, {out: res})
 
     dropped = [c for c in s.df.columns if c != wname]
     schema = T.StructType(list(s.df.schema.fields)
                           + [T.StructField(out, T.DoubleType())])
-    result = _apply_per_key_reshape(s, fn, schema)
+    result = _apply_per_key_reshape(s, lift(step, s.keys, None), schema)
     return Stream(result.select(*dropped, out), ts=s.ts, seq=s.seq, keys=s.keys)
 
 
@@ -507,22 +491,19 @@ def time_weighted_profile(
         return Stream(df, ts=s.ts, seq=None, keys=s.keys)
     ts_col = s.ts
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
+    def step(_, pdf: pd.DataFrame):
         mean, var, med = _tw_profile_kernel(
             pdf[ts_col].to_numpy(dtype=np.int64),
             pdf[col].to_numpy(dtype=np.float64),
             window_ns,
         )
-        pdf[out_mean] = mean
-        pdf[out_var] = var
-        pdf[out_median] = med
-        return pdf
+        return None, _with_columns(pdf, {out_mean: mean, out_var: var, out_median: med})
 
     schema = T.StructType(
         list(s.df.schema.fields)
         + [T.StructField(c, T.DoubleType()) for c in (out_mean, out_var, out_median)]
     )
-    return Stream(_apply_per_key_reshape(s, fn, schema),
+    return Stream(_apply_per_key_reshape(s, lift(step, s.keys, None), schema),
                   ts=s.ts, seq=s.seq, keys=s.keys)
 
 
@@ -543,7 +524,7 @@ def fold_pandas(s: Stream, fn, init, out: str, cols: list[str] | None = None,
 
     use = cols or [c for c in s.df.columns if c not in (s.ts, s.seq, *s.keys)]
     schema = T.StructType(list(s.df.schema.fields) + [T.StructField(out, dtype)])
-    res_s = _run_keyed(s, fold_step(fn, init, use, out), schema)
+    res_s = _run_keyed(s, fold_step(fn, init, use, out, list(s.keys)), schema)
     # Seed the fold's output slot with init at wiring time so passive
     # readers observe it before the first tick — the interpreted engine
     # seeds the value slot with init.clone(), a cross-path parity contract

@@ -248,7 +248,8 @@ class Stream:
         from wingfoil_spark.streaming.twins import try_fold_step
 
         use = cols or [c for c in self.df.columns if c not in (self.ts, self.seq, *self.keys)]
-        folded = _run_keyed(self, try_fold_step(fn, init, use, out), T.StructType(
+        step = try_fold_step(fn, init, use, out, list(self.keys))
+        folded = _run_keyed(self, step, T.StructType(
             list(self.df.schema.fields)
             + [T.StructField(out, dtype or T.DoubleType()),
                T.StructField("error", T.StringType())]

@@ -10,18 +10,22 @@ docs/wingfoil-architecture.md:11-26). The Spark-native expression:
   ``step(state, pdf) -> (state', out_pdf)`` over time-ordered per-key rows
   (the reference's ``Op::cycle`` with engine-owned state, op.rs:296-333 —
   batched rather than per-tick, because Arrow batches are Spark's unit);
-- **historical** binds it via the packed per-key ``mapInPandas`` binding
-  (``operators.stateful._apply_per_key_reshape``: one call per key with
-  the whole history, state threads through trivially);
-- **realtime** binds the SAME function via ``applyInPandasWithState``,
+- both run modes run the step's multi-key walk
+  ``walk(states, body) -> (states', out)`` (:func:`pack`) over a body
+  sorted by (keys, ts, seq): the native one a :func:`one_key` step
+  carries, or the step :func:`lift`-ed to walk the body's key runs;
+- **historical** binds the walk via the packed ``mapInPandas`` binding
+  (``operators.stateful._apply_per_key_reshape``): one walk call per
+  Arrow batch over its complete key runs, a key whose rows span batches
+  held back until its run ends (:meth:`KeyedStateOp.run_batch`);
+- **realtime** binds the SAME walk via ``applyInPandasWithState``,
   packed by key bucket: one Python call per touched bucket
   (``pmod(xxhash64(keys), B)``, ``B`` = ``spark.sql.shuffle.partitions``
   at build time) walks all of the bucket's keys, and the bucket's one
   state row holds a pickled key → state map
   (:meth:`KeyedStateOp.run_stream`). ``B`` is fixed in the checkpoint: a
   restart under another value raises. A touched bucket's whole map is
-  rewritten each micro-batch. A one-key step is :func:`lift`-ed to the
-  multi-key walk; an op with a native walk (:func:`one_key`) runs it.
+  rewritten each micro-batch.
 
 Determinism contract: rows must reach the op in (ts, seq) order within a
 key. The batch binding sorts within partitions by (keys, ts, seq); the
@@ -95,9 +99,9 @@ class KeyedStateOp:
 
     ``step`` must be pure in (state, sorted-batch) — it is the single source
     of semantics. ``out_schema`` is the full output schema (key columns
-    included). :meth:`run_stream` runs the step's multi-key walk
-    (:func:`pack`): the native one a :func:`one_key` step carries, or the
-    step lifted to walk key runs.
+    included). Both :meth:`run_batch` and :meth:`run_stream` run the
+    step's multi-key walk (:func:`pack`): the native one a :func:`one_key`
+    step carries, or the step lifted to walk key runs.
     """
 
     def __init__(
@@ -108,7 +112,6 @@ class KeyedStateOp:
         ts: str = "ts",
         seq: str | None = None,
         keys: tuple[str, ...] = (),
-        multi_step=None,
     ):
         self.step = step
         self.out_schema = out_schema
@@ -116,10 +119,6 @@ class KeyedStateOp:
         self.ts = ts
         self.seq = seq
         self.keys = keys
-        #: optional whole-body fast path for run_batch: processes all
-        #: complete key groups of a sorted batch in one call (None return
-        #: falls back to per-group ``step``); see _apply_per_key_reshape
-        self.multi_step = multi_step
 
     def _order(self) -> list[str]:
         return [self.ts] + ([self.seq] if self.seq else [])
@@ -127,28 +126,22 @@ class KeyedStateOp:
     # ------------------------------------------------------------ historical
 
     def run_batch(self, df: DataFrame) -> DataFrame:
-        """Bind to a batch frame via the packed per-key binding: whole key
-        groups per Arrow batch, one Python round-trip per batch instead of
-        per key (per-group applyInPandas pays Arrow overhead × |keys| —
-        ~4× slower with thousands of small instruments). The binding
-        hands ``step`` each key's rows already in (ts, seq) order."""
+        """Bind to a batch frame via the packed batch binding
+        (``operators.stateful._apply_per_key_reshape``): one walk call
+        (:func:`pack`) per Arrow batch over the batch's complete key runs,
+        in (keys, ts, seq) order — the walk :meth:`run_stream` runs on a
+        bucket. A key whose rows span Arrow batches is held back and
+        walked once its run ends, so every key is walked whole from
+        ``init_state``."""
         from wingfoil_spark.operators.stateful import _apply_per_key_reshape
         from wingfoil_spark.stream import Stream
 
-        step, init = self.step, self.init_state
         schema = self.out_schema
         if isinstance(schema, str):
             schema = T.StructType.fromDDL(schema)
-        names = schema.fieldNames()
-
-        def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-            _, out = step(init, pdf)
-            if len(out.columns) == 0:  # e.g. a close-only batch (with_close)
-                out = pd.DataFrame({c: [] for c in names})
-            return out
-
         s = Stream(df, ts=self.ts, seq=self.seq, keys=self.keys)
-        return _apply_per_key_reshape(s, fn, schema, fn_multi=self.multi_step)
+        return _apply_per_key_reshape(
+            s, pack(self.step, self.keys, self.init_state), schema)
 
     # -------------------------------------------------------------- realtime
 
@@ -215,27 +208,45 @@ class KeyedStateOp:
         )
 
 
-def key_runs(body: pd.DataFrame, keys) -> tuple[list[tuple], list[int]]:
-    """(key tuples, start rows) of the runs of equal keys in a body
-    clustered by ``keys``. Key tuples hold Python scalars with NaN read as
-    None, so they hash alike in every micro-batch (a NaN is not equal to
-    itself) and pickle small. Keyless: one run, key ``()``."""
+def run_starts(body: pd.DataFrame, keys) -> np.ndarray:
+    """Start rows of the runs of equal keys in a body clustered by
+    ``keys``; NaN keys are equal to each other (a NaN is not equal to
+    itself). Keyless: one run."""
     n = len(body)
-    if not n:
-        return [], []
     new = np.zeros(n, dtype=bool)
-    new[0] = True
-    cols = [body[k].to_numpy() for k in keys]
-    for a in cols:
+    new[:1] = True
+    for k in keys:
+        a = body[k].to_numpy()
         ne = a[1:] != a[:-1]
         if a.dtype.kind == "f":
             ne &= ~(np.isnan(a[1:]) & np.isnan(a[:-1]))
         new[1:] |= ne
-    starts = np.flatnonzero(new)
-    vals = [a[starts].tolist() for a in cols]
-    tuples = [tuple(None if isinstance(v, float) and v != v else v for v in t)
-              for t in zip(*vals)] if keys else [()]
-    return tuples, starts.tolist()
+    return np.flatnonzero(new)
+
+
+def key_tuples(body: pd.DataFrame, keys, rows) -> list[tuple]:
+    """The key tuples of ``rows`` of ``body``: Python scalars with NaN read
+    as None, so they hash alike in every micro-batch and pickle small."""
+    if not keys:
+        return [()] * len(rows)
+    vals = [body[k].to_numpy()[rows].tolist() for k in keys]
+    return [tuple(None if isinstance(v, float) and v != v else v for v in t)
+            for t in zip(*vals)]
+
+
+def key_runs(body: pd.DataFrame, keys) -> tuple[list[tuple], list[int]]:
+    """(key tuples, start rows) of the runs of equal keys in a body
+    clustered by ``keys`` (:func:`run_starts`, :func:`key_tuples`).
+    Keyless: one run, key ``()``."""
+    starts = run_starts(body, keys)
+    return key_tuples(body, keys, starts), starts.tolist()
+
+
+def runs(body: pd.DataFrame, keys):
+    """(key tuple, first row, end row) of each key run of ``body``
+    (:func:`key_runs`)."""
+    tuples, starts = key_runs(body, keys)
+    return zip(tuples, starts, [*starts[1:], len(body)])
 
 
 def concat_outs(outs: list[pd.DataFrame]) -> pd.DataFrame:
@@ -261,9 +272,8 @@ def lift(step: StepFn, keys, init_state) -> WalkFn:
     missing there starts from ``init_state``; a ``None`` return removes
     its entry)."""
     def walk(states: dict, body: pd.DataFrame):
-        tuples, starts = key_runs(body, keys)
         outs = []
-        for k, a, b in zip(tuples, starts, [*starts[1:], len(body)]):
+        for k, a, b in runs(body, keys):
             st, out = step(states.get(k, init_state), body.iloc[a:b])
             if st is None:
                 states.pop(k, None)
@@ -275,29 +285,33 @@ def lift(step: StepFn, keys, init_state) -> WalkFn:
     return walk
 
 
-def one_key(walk: WalkFn, keys, order: list[str]) -> StepFn:
+def one_key(walk: WalkFn, keys, order=()) -> StepFn:
     """The one-key step of a native multi-key ``walk``: the walk run on a
-    one-key body, so the op's body exists once. ``None`` state starts the
-    key fresh. The step carries the walk as ``step.walk`` for
-    :func:`pack`."""
+    one-key body (put in ``order`` first), so the op's body exists once.
+    ``None`` state starts the key fresh. The step carries the walk as
+    ``step.walk`` and its keys as ``step.walk_keys`` for :func:`pack`."""
     def step(state, pdf: pd.DataFrame):
-        pdf = in_order(pdf, order)
+        pdf = in_order(pdf, list(order))
         if not len(pdf):
             return state, walk({}, pdf)[1]
-        (k,), _ = key_runs(pdf.iloc[:1], keys)
+        (k,) = key_tuples(pdf, keys, [0])
         states, out = walk({} if state is None else {k: state}, pdf)
         return states.get(k), out
 
     step.walk = walk
+    step.walk_keys = tuple(keys)
     return step
 
 
 def pack(step: StepFn, keys, init_state) -> WalkFn:
-    """The walk :meth:`KeyedStateOp.run_stream` runs on a bucket's body:
-    the step's own multi-key walk when it has one (:func:`one_key`) and
-    the op starts keys from ``None``, else the step :func:`lift`-ed."""
+    """The walk both bindings run (:class:`KeyedStateOp`): the step's own
+    multi-key walk when it has one (:func:`one_key`) over the op's keys
+    and the op starts keys from ``None``, else the step :func:`lift`-ed."""
     walk = getattr(step, "walk", None)
-    return walk if walk is not None and init_state is None else lift(step, keys, init_state)
+    if (walk is not None and init_state is None
+            and step.walk_keys == tuple(keys)):
+        return walk
+    return lift(step, keys, init_state)
 
 
 def with_close(step: StepFn, close_col: str, init_state) -> StepFn:
@@ -326,15 +340,7 @@ def with_close(step: StepFn, close_col: str, init_state) -> StepFn:
         if len(seg):
             st, out = step(st if st is not None else init_state, seg)
             outs.append(out)
-        # drop empty frames before concat: concatenating empty/all-NA
-        # entries is deprecated pandas behavior that would silently change
-        # empty-group dtypes in a future release
-        outs = [o for o in outs if len(o)]
-        merged = (
-            pd.concat(outs, ignore_index=True) if outs
-            else pd.DataFrame()
-        )
-        return st, merged
+        return st, concat_outs(outs)
 
     return step2
 

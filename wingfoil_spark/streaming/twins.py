@@ -34,8 +34,7 @@ falls behind the advancing WATERMARK — with no new input for the key. The
 :class:`EventTimeTimerOp` binding below uses exactly that, closing the r2
 gap where a key with no traffic never fired its pending ``delay``
 deliveries (the reference timer node contract, ops.rs:3090-3155; timer
-cancel :3486-3604). The older max-event-time twins remain for ops that
-don't need wall-to-watermark firing.
+cancel :3486-3604).
 """
 
 from __future__ import annotations
@@ -48,6 +47,7 @@ from pyspark.sql import functions as F
 from wingfoil_spark.stream import Stream
 from wingfoil_spark.streaming.stateful import (
     KeyedStateOp, StepFn, WalkFn, group_key, in_order, key_runs, one_key,
+    runs,
 )
 
 
@@ -598,116 +598,148 @@ def buffer_step(
     return step
 
 
-def throttle_step(interval_ns: int, ts: str, keys: list[str]) -> StepFn:
+def throttle_walk(interval_ns: int, ts: str, keys: list[str]) -> WalkFn:
     """Timer-accurate throttle (``throttle_exact``, ops.rs:381-414) as a
-    resumable step: emit iff ts ≥ last emission + interval. State = the
-    next allowed ts; missing state means nothing emitted yet, so a key's
-    first tick always emits, however small its ts."""
+    native multi-key walk: emit iff ts ≥ last emission + interval. A key's
+    state = its next allowed ts; a missing key has emitted nothing yet, so
+    its first tick always emits, however small its ts."""
 
-    def step(state, pdf: pd.DataFrame):
-        next_ok = state
+    def walk(states: dict, body: pd.DataFrame):
+        t = body[ts].to_numpy(dtype=np.int64).tolist()
         keep = []
-        for i, t in enumerate(pdf[ts].to_numpy(dtype=np.int64).tolist()):
-            if next_ok is None or t >= next_ok:
-                keep.append(i)
-                next_ok = t + interval_ns
-        return next_ok, pdf.iloc[keep]
+        for k, a, b in runs(body, keys):
+            next_ok = states.get(k)
+            for i in range(a, b):
+                if next_ok is None or t[i] >= next_ok:
+                    keep.append(i)
+                    next_ok = t[i] + interval_ns
+            states[k] = next_ok
+        return states, body.iloc[keep]
 
-    return step
+    return walk
+
+
+def throttle_step(interval_ns: int, ts: str, keys: list[str]) -> StepFn:
+    """:func:`throttle_walk` as a resumable one-key step (state = the next
+    allowed ts; ``None`` starts fresh)."""
+    return one_key(throttle_walk(interval_ns, ts, keys), keys)
+
+
+def drop_small_change_walk(col: str, tol: float, keys: list[str]) -> WalkFn:
+    """``drop_small_change`` (ops.rs:227-262) as a native multi-key walk:
+    emit iff |cur − last emitted| > tol; a key's first tick always emits.
+    A key's state = its last emitted value (a NaN reference suppresses
+    every later tick, as ``abs(x - NaN) > tol`` is false)."""
+
+    def walk(states: dict, body: pd.DataFrame):
+        v = body[col].to_numpy(dtype=np.float64).tolist()
+        keep = []
+        for k, a, b in runs(body, keys):
+            ref = states.get(k)
+            for i in range(a, b):
+                if ref is None or abs(v[i] - ref) > tol:
+                    keep.append(i)
+                    ref = v[i]
+            states[k] = ref
+        return states, body.iloc[keep]
+
+    return walk
 
 
 def drop_small_change_step(col: str, tol: float, keys: list[str]) -> StepFn:
-    """``drop_small_change`` (ops.rs:227-262) as a resumable step: emit
-    iff |cur − last emitted| > tol; a key's first tick always emits.
-    State = the last emitted value (a NaN reference suppresses every later
-    tick, as ``abs(x - NaN) > tol`` is false)."""
+    """:func:`drop_small_change_walk` as a resumable one-key step (state =
+    the last emitted value; ``None`` starts fresh)."""
+    return one_key(drop_small_change_walk(col, tol, keys), keys)
 
-    def step(state, pdf: pd.DataFrame):
-        ref = state
+
+def drop_small_change_pred_walk(col: str, pred, keys: list[str]) -> WalkFn:
+    """Predicate-form ``drop_small_change`` — the reference binding's
+    ``(cur, prev_emitted) -> bool`` form (wingfoil-python
+    tests/test_interop.py:68-107) — as a native multi-key walk. A key's
+    state = a 1-tuple holding its last EMITTED value (wrapped so an
+    emitted None stays a reference); a key's first tick always emits. The
+    per-row Python cost is the predicate's own contract. A raising
+    predicate aborts the run; a non-bool return is a TypeError naming the
+    contract."""
+
+    def walk(states: dict, body: pd.DataFrame):
+        v = body[col].to_numpy()
         keep = []
-        for i, x in enumerate(pdf[col].to_numpy(dtype=np.float64).tolist()):
-            if ref is None or abs(x - ref) > tol:
+        for k, a, b in runs(body, keys):
+            state = states.get(k)
+            for i in range(a, b):
+                x = v[i]
+                if state is not None:
+                    small = pred(x, state[0])
+                    if not isinstance(small, (bool, np.bool_)):
+                        raise TypeError(
+                            "drop_small_change predicate must return a bool, "
+                            f"got {type(small).__name__}"
+                        )
+                    if small:
+                        continue
                 keep.append(i)
-                ref = x
-        return ref, pdf.iloc[keep]
+                state = (x,)
+            states[k] = state
+        return states, body.iloc[keep]
 
-    return step
+    return walk
 
 
 def drop_small_change_pred_step(col: str, pred, keys: list[str]) -> StepFn:
-    """Predicate-form ``drop_small_change`` — the reference binding's
-    ``(cur, prev_emitted) -> bool`` form (wingfoil-python
-    tests/test_interop.py:68-107) — as a resumable step. State = a 1-tuple
-    holding the last EMITTED value (wrapped so an emitted None stays a
-    reference and does not release the state slot); a key's first tick
-    always emits. The per-row Python cost is the predicate's own contract.
-    A raising predicate aborts the run; a non-bool return is a TypeError
-    naming the contract."""
-
-    def step(state, pdf: pd.DataFrame):
-        keep = []
-        v = pdf[col].to_numpy()
-        for i in range(len(pdf)):
-            x = v[i]
-            if state is not None:
-                small = pred(x, state[0])
-                if not isinstance(small, (bool, np.bool_)):
-                    raise TypeError(
-                        "drop_small_change predicate must return a bool, "
-                        f"got {type(small).__name__}"
-                    )
-                if small:
-                    continue
-            keep.append(i)
-            state = (x,)
-        return state, pdf.iloc[keep]
-
-    return step
+    """:func:`drop_small_change_pred_walk` as a resumable one-key step
+    (state = the last emitted value's 1-tuple; ``None`` starts fresh)."""
+    return one_key(drop_small_change_pred_walk(col, pred, keys), keys)
 
 
-def fold_step(fn, init, cols: list[str], out: str) -> StepFn:
+def fold_walk(fn, init, cols: list[str], out: str, keys=(),
+              errors: bool = False) -> WalkFn:
     """``fold_pandas``' arbitrary-closure fold ``acc' = fn(acc, row)`` as a
-    resumable step, emitting each intermediate accumulator in ``out``.
-    State = a 1-tuple holding the accumulator (so a None accumulator does
-    not release the state slot); missing state starts from ``init``."""
+    native multi-key walk, emitting each intermediate accumulator in
+    ``out``. A key's state = a 1-tuple holding its accumulator (so a None
+    accumulator stays a state); a missing key starts from ``init``.
 
-    def step(state, pdf: pd.DataFrame):
-        acc = state[0] if state is not None else init
-        res = []
-        for r in pdf[cols].to_dict("records"):
-            acc = fn(acc, r)
-            res.append(acc)
-        out_pdf = pdf.copy()
-        out_pdf[out] = res
-        return (acc,), out_pdf
+    ``errors``: ``Stream.try_fold``'s fallible form — a row whose ``fn``
+    raises emits ``"<Type>: <message>"`` in ``error`` (and NULL ``out``)
+    and leaves the accumulator unchanged; every other row emits the new
+    accumulator and a NULL ``error``."""
 
-    return step
-
-
-def try_fold_step(fn, init, cols: list[str], out: str) -> StepFn:
-    """``Stream.try_fold``'s fallible fold as a resumable step: a row
-    whose ``fn`` raises emits ``"<Type>: <message>"`` in ``error`` (and
-    NULL ``out``) and leaves the accumulator unchanged; every other row
-    emits the new accumulator and a NULL ``error``. State = the
-    accumulator 1-tuple, as in :func:`fold_step`."""
-
-    def step(state, pdf: pd.DataFrame):
-        acc = state[0] if state is not None else init
+    def walk(states: dict, body: pd.DataFrame):
+        rows = body[cols].to_dict("records")
         vals, errs = [], []
-        for r in pdf[cols].to_dict("records"):
-            try:
-                acc = fn(acc, r)
+        for k, a, b in runs(body, keys):
+            acc = states[k][0] if k in states else init
+            for r in rows[a:b]:
+                try:
+                    acc = fn(acc, r)
+                except Exception as e:
+                    if not errors:
+                        raise
+                    vals.append(None)
+                    errs.append(f"{type(e).__name__}: {e}")
+                    continue
                 vals.append(acc)
                 errs.append(None)
-            except Exception as e:
-                vals.append(None)
-                errs.append(f"{type(e).__name__}: {e}")
-        out_pdf = pdf.copy()
+            states[k] = (acc,)
+        out_pdf = body.copy()
         out_pdf[out] = vals
-        out_pdf["error"] = errs
-        return (acc,), out_pdf
+        if errors:
+            out_pdf["error"] = errs
+        return states, out_pdf
 
-    return step
+    return walk
+
+
+def fold_step(fn, init, cols: list[str], out: str, keys=()) -> StepFn:
+    """:func:`fold_walk` as a resumable one-key step (state = the
+    accumulator 1-tuple; ``None`` starts from ``init``)."""
+    return one_key(fold_walk(fn, init, cols, out, keys), keys)
+
+
+def try_fold_step(fn, init, cols: list[str], out: str, keys=()) -> StepFn:
+    """``Stream.try_fold``'s fallible fold (:func:`fold_walk` with
+    ``errors``) as a resumable one-key step."""
+    return one_key(fold_walk(fn, init, cols, out, keys, errors=True), keys)
 
 
 class EventTimeTimerOp:
@@ -925,36 +957,3 @@ def delay_with_reset_timer_op(
         init_state=None, ts="__t", keys=tuple(keys),
         order=["__t", "__trig", "__seq"],
     )
-
-
-def delay_step(
-    delay_ns: int, ts: str, vals: list[str], keys: list[str]
-) -> StepFn:
-    """Timer-based delay as a resumable step (reference delay timers,
-    ops.rs:3090-3155): every tick schedules (t+delay, values); pending
-    deliveries fire once the key's event time passes their fire time
-    (checked per micro-batch against the batch's max event time). TimeQueue
-    dedup: identical (fire_at, values) schedules collapse
-    (runtime/time_queue.rs:136)."""
-
-    def step(state, pdf: pd.DataFrame):
-        pending: list[tuple] = list(state) if state else []
-        pdf = in_order(pdf, [ts])
-        keyvals = group_key(pdf, keys)
-        t_arr = pdf[ts].to_numpy()
-        val_arrs = [pdf[c].to_numpy() for c in vals]
-        for i in range(len(pdf)):
-            item = (int(t_arr[i]) + delay_ns, tuple(a[i] for a in val_arrs))
-            if item not in pending:
-                pending.append(item)
-        max_t = int(t_arr[-1]) if len(t_arr) else None
-        fired, keep = [], []
-        for item in pending:
-            (fired if max_t is not None and item[0] <= max_t else keep).append(item)
-        fired.sort(key=lambda p: p[0])
-        out = pd.DataFrame(
-            [(*keyvals, t, *v) for t, v in fired], columns=[*keys, ts, *vals]
-        )
-        return keep, out
-
-    return step
