@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from wingfoil_spark.stream import Stream
-from wingfoil_spark.session import configure_session, overlap
+from wingfoil_spark.session import configure_session, materialize, overlap
 from wingfoil_spark.sources.tables import load_table, ts_us_expr
 from wingfoil_spark.plans import relational
 from wingfoil_spark.functions import dedup as dd
@@ -1249,14 +1249,14 @@ def q_decon_stream(spark, sf_dir):
     # each model's internal order (and so every fitted value) is
     # unchanged.
     def _fit_lam():
-        return ingest.build_dsir_index(
+        return materialize(ingest.build_dsir_index(
             docs.where(F.col("lang") == "en"), docs, n_buckets=SEL_BUCKETS
-        ).localCheckpoint(eager=True)
+        ))
 
     def _fit_bm():
-        return ingest.build_bm25_index(
+        return materialize(ingest.build_bm25_index(
             docs, list(SEL_TERMS)
-        ).localCheckpoint(eager=True)
+        ))
 
     def _fit_lm():
         # the count fit checkpoints the frames the add-k scorer joins
@@ -1269,7 +1269,7 @@ def q_decon_stream(spark, sf_dir):
         # annotated) — checkpointed so the stream-static join reads a
         # pinned frame instead of re-scanning the parquet every
         # micro-batch
-        return ingest.build_ann_index(emb).localCheckpoint(eager=True)
+        return materialize(ingest.build_ann_index(emb))
 
     zero = F.lit(0).cast("long").alias("aux")
     run = uuid.uuid4().hex[:12]
@@ -1301,15 +1301,11 @@ def q_decon_stream(spark, sf_dir):
             ingest.build_fingerprint_store(
                 docs.where(F.col("doc_id") % 3 == 0), fpstore_path
             )
-            return spark.read.parquet(fpstore_path).localCheckpoint(
-                eager=True
-            )
+            return materialize(spark.read.parquet(fpstore_path))
 
         def _fit_cents():
-            pc = sim.ivf_centroids(emb, 16, fit="take").localCheckpoint(
-                eager=True
-            )
-            return pc, sim.ivf_assign(emb, pc, 1).localCheckpoint(eager=True)
+            pc = materialize(sim.ivf_centroids(emb, 16, fit="take"))
+            return pc, materialize(sim.ivf_assign(emb, pc, 1))
 
         def _w_docs():
             docs.select("doc_id", "text").repartition(4) \
@@ -1324,9 +1320,9 @@ def q_decon_stream(spark, sf_dir):
             # the shared PQ code table; every consumer joins it to the
             # assignment by id, so it needs no centroid chain
             books_ = sim.pq_train(emb, m=8, k=16, fit="take")
-            return books_, sim.pq_encode(emb, books_).select(
+            return books_, materialize(sim.pq_encode(emb, books_).select(
                 "vec_id", "pq_code"
-            ).localCheckpoint(eager=True)
+            ))
 
         (
             lam, bmidx, lmm, annidx, _, _, fpstore, qcm, (pcents, pasg),
@@ -1334,7 +1330,7 @@ def q_decon_stream(spark, sf_dir):
         ) = overlap(
             _fit_lam, _fit_bm, _fit_lm, _fit_ann, _w_docs, _w_probes,
             _fit_fpstore,
-            lambda: _derived_qc_model(spark).localCheckpoint(eager=True),
+            lambda: materialize(_derived_qc_model(spark)),
             _fit_cents, _fit_codes,
         )
         _mark("snapshots_and_fixtures")
@@ -1521,10 +1517,10 @@ def q_decon_stream(spark, sf_dir):
             # (dropped cell, mangled partition column, clobbered row)
             # diverges the hash
             sim.compact_cell_store(spark, gpath)
-            igrow = sim.ivf_topk_from_store(
+            igrow = materialize(sim.ivf_topk_from_store(
                 spark, gpath, pcents, emb.where(F.col("vec_id") % 50 == 0),
                 k=5, nprobe=4,
-            ).localCheckpoint(eager=True)
+            ))
             PART_WALLS["ivf_grow_loop"] = round(_time.perf_counter() - t0, 3)
             # r14 part='refit': the DRIFT stage of the same lifecycle —
             # refit_cell_store re-tiles the grown float store in place
@@ -1548,10 +1544,10 @@ def q_decon_stream(spark, sf_dir):
             # the float grow loop.
             t1 = _time.perf_counter()
             rcents = sim.refit_cell_store(spark, gpath, 16, fit="lloyd")
-            irefit = sim.ivf_topk_from_store(
+            irefit = materialize(sim.ivf_topk_from_store(
                 spark, gpath, rcents, emb.where(F.col("vec_id") % 50 == 0),
                 k=5, nprobe=4,
-            ).localCheckpoint(eager=True)
+            ))
             PART_WALLS["refit_loop"] = round(_time.perf_counter() - t1, 3)
             return igrow, irefit
         # r13 part='ivfpq_grow' (VERDICT r12 Next #1): the CODES-ONLY
@@ -1579,10 +1575,10 @@ def q_decon_stream(spark, sf_dir):
                 emb.where(F.col("vec_id") % 7 == 3), gqpath, pcents, books
             )
             sim.compact_cell_store(spark, gqpath)
-            igrowq = sim.ivfpq_topk_from_store(
+            igrowq = materialize(sim.ivfpq_topk_from_store(
                 spark, gqpath, pcents, books,
                 emb.where(F.col("vec_id") % 50 == 0), k=5, nprobe=4,
-            ).localCheckpoint(eager=True)
+            ))
             PART_WALLS["ivfpq_grow_loop"] = round(
                 _time.perf_counter() - t0, 3
             )
@@ -1594,13 +1590,11 @@ def q_decon_stream(spark, sf_dir):
         # like 'recall'.
         def _chain_lloyd():
             t0 = _time.perf_counter()
-            lcents = sim.ivf_centroids(emb, 16, fit="lloyd").localCheckpoint(
-                eager=True
-            )
-            illoyd = sim.ivf_topk(
+            lcents = materialize(sim.ivf_centroids(emb, 16, fit="lloyd"))
+            illoyd = materialize(sim.ivf_topk(
                 emb, emb.where(F.col("vec_id") % 50 == 0), k=5, nprobe=4,
                 centroids=lcents,
-            ).localCheckpoint(eager=True)
+            ))
             PART_WALLS["ivf_lloyd"] = round(_time.perf_counter() - t0, 3)
             return illoyd
 
@@ -1611,10 +1605,10 @@ def q_decon_stream(spark, sf_dir):
         # equi-join; oracle replays the 9-bucket union).
         def _chain_lsh_mp():
             t0 = _time.perf_counter()
-            imp = sim.lsh_bucketed_topk(
+            imp = materialize(sim.lsh_bucketed_topk(
                 emb, emb.where(F.col("vec_id") % 50 == 0), k=5,
                 probe_hamming=1,
-            ).localCheckpoint(eager=True)
+            ))
             PART_WALLS["lsh_mp"] = round(_time.perf_counter() - t0, 3)
             return imp
 
@@ -1626,10 +1620,10 @@ def q_decon_stream(spark, sf_dir):
         # single-bucket baseline — the full dial graded.
         def _chain_lsh_t():
             t0 = _time.perf_counter()
-            ilt = sim.lsh_bucketed_topk(
+            ilt = materialize(sim.lsh_bucketed_topk(
                 emb, emb.where(F.col("vec_id") % 50 == 0), k=5,
                 n_tables=4, probe_hamming=1,
-            ).localCheckpoint(eager=True)
+            ))
             PART_WALLS["lsh_t"] = round(_time.perf_counter() - t0, 3)
             return ilt
 
@@ -1644,11 +1638,11 @@ def q_decon_stream(spark, sf_dir):
         # rules.
         def _chain_rerank():
             t0 = _time.perf_counter()
-            irr = sim.ivfpq_rerank_topk(
+            irr = materialize(sim.ivfpq_rerank_topk(
                 emb, emb.where(F.col("vec_id") % 50 == 0), books, k=5,
                 shortlist=50, nprobe=4, corpus_codes=pcodes,
                 centroids=pcents, corpus_assign=pasg,
-            ).localCheckpoint(eager=True)
+            ))
             PART_WALLS["rerank"] = round(_time.perf_counter() - t0, 3)
             return irr
 
@@ -1684,12 +1678,11 @@ def q_decon_stream(spark, sf_dir):
         _mark("batch_stages_wall")
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
-    # the memory sinks hold the materialized rows; localCheckpoint pins
-    # them to this returned frame (the table names are run-unique anyway)
-    out = (
+    # the memory sinks hold the rows; the pin copies them into this
+    # returned frame (the table names are run-unique anyway)
+    out = materialize(
         spark.table(name)
         .unionByName(spark.table(f"{name}_poll"))
-        .localCheckpoint(eager=True)
     )
     _mark("sink_collect")
     # r10 part='recall': recall@5 of the STREAMED ann rows vs the exact
@@ -1785,9 +1778,7 @@ def q_dtw_cluster(spark, sf_dir):
     # scalars — checkpointing it runs the kernel once (4 Python nodes,
     # 2 scans); values bit-identical (deterministic kernel, 6dp-rounded
     # before materialization).
-    pairs = analysis.dtw_distances(s16, "value", resample_to=32).localCheckpoint(
-        eager=True
-    )
+    pairs = materialize(analysis.dtw_distances(s16, "value", resample_to=32))
     dtw = pairs.select(
         F.lit("dtw").alias("part"), F.col("key_a").alias("a"),
         F.col("key_b").alias("b"), F.col("dtw").alias("v"),
@@ -1829,9 +1820,9 @@ def q_lm_packing(spark, sf_dir):
     # threads overlap them.
     def _chain_dual():
         counts = lm.fit_bigram_counts(ref)
-        return lm.dual_perplexity(
+        return materialize(lm.dual_perplexity(
             docs, counts, k=LM_K, discount=LM_KN_D
-        ).localCheckpoint(eager=True)
+        ))
 
     def _chain_pack():
         return cu.pack_sequences(
@@ -2098,10 +2089,10 @@ def q_selection(spark, sf_dir):
     # values pinned by tests/test_selection.py, hashes unchanged in
     # CORRECTNESS_r08. A/B vs the r7 per-signal composition is recorded
     # in SCALE_r08.json (selection_onepass_ab).
-    sc = sel.selection_scores(
+    sc = materialize(sel.selection_scores(
         docs, F.col("lang") == "en", list(SEL_TERMS), qc_model,
         n_buckets=SEL_BUCKETS,
-    ).localCheckpoint(eager=True)
+    ))
     dsir = sc.select(
         F.lit("dsir").alias("part"), F.lit(None).cast("string").alias("k"),
         F.col("doc_id").alias("id"), F.round("log_w", 6).alias("v"),
@@ -2146,7 +2137,7 @@ def q_jaccard_pairs(spark, sf_dir):
     # the signature → banding → Jaccard pipeline ONCE instead of once per
     # branch (A/B at sf0.1: best 2.75s vs 4.14s, mean ~2s faster), and the
     # components' own edge materialization then reads the cache
-    jac = dd.ngram_jaccard(d, pairs).localCheckpoint(eager=True)
+    jac = materialize(dd.ngram_jaccard(d, pairs))
     verified = jac.where(F.col("jaccard") >= 0.8).select("a", "b")
     # "auto" lets the 2M-edge gate (dedup.py) pick packed vs the
     # distributed iterate fixpoint — the graded plan must not enshrine the
@@ -2214,7 +2205,7 @@ def q_ann(spark, sf_dir):
     # sf0.1 and every branch (and both probe filters) now reads the
     # in-memory copy. At data scale this checkpoint is the working set a
     # vector-search service keeps resident anyway.
-    e = load_table(spark, sf_dir, "embeddings").localCheckpoint(eager=True)
+    e = materialize(load_table(spark, sf_dir, "embeddings"))
     probes = e.where(F.col("vec_id") % 50 == 0)
 
     import os as _os
@@ -2252,9 +2243,9 @@ def q_ann(spark, sf_dir):
         books = sim.pq_train(e, m=8, k=16, fit="take")
         # encode ONCE; both PQ branches read the shared code table (the
         # persisted-codes shape ivfpq_topk(corpus_codes=...) models)
-        codes = sim.pq_encode(e, books).select(
+        codes = materialize(sim.pq_encode(e, books).select(
             "vec_id", "pq_code"
-        ).localCheckpoint(eager=True)
+        ))
         return books, codes
 
     def _cents_chain():
@@ -2269,12 +2260,10 @@ def q_ann(spark, sf_dir):
         # that embeds it — materializing it makes "fit once" literally
         # true. The ivf_store write rides this chain (it needs cents +
         # asg and nothing else needs it).
-        cents = sim.ivf_centroids(e, 16, fit="take").localCheckpoint(
-            eager=True
-        )
-        asg = sel.semdedup_assign(
+        cents = materialize(sim.ivf_centroids(e, 16, fit="take"))
+        asg = materialize(sel.semdedup_assign(
             e, n_clusters=16, fit="take", centroids=cents
-        ).localCheckpoint(eager=True)
+        ))
         sim.write_ivf_store(
             e, store_path, n_centroids=16, fit="take",
             centroids=cents, corpus_assign=asg,
@@ -2288,11 +2277,11 @@ def q_ann(spark, sf_dir):
         # every per-pair dot product (measured 2.0s vs 0.9s + one 0.3s
         # materialization at sf0.1). At scale this checkpoint IS the
         # int8 store: codes written once, floats dropped.
-        return sim.dequantize_embeddings(
+        return materialize(sim.dequantize_embeddings(
             sim.quantize_embeddings(e).select(
                 "vec_id", "q_embedding", "q_scale"
             )
-        ).select("vec_id", "embedding").localCheckpoint(eager=True)
+        ).select("vec_id", "embedding"))
 
     (books, codes), (cents, asg), q8 = overlap(
         _codes_chain, _cents_chain, _q8_chain

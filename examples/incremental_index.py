@@ -37,6 +37,7 @@ import pyspark.sql.functions as F
 
 import wingfoil_spark as wf
 from wingfoil_spark.functions import similarity as sim
+from wingfoil_spark.session import materialize
 
 spark = wf.get_spark("incremental_index", cpus=4)
 tmp = tempfile.mkdtemp(prefix="wf_example_incidx_")
@@ -58,9 +59,9 @@ try:
     # PERSIST the returned centroid frame beside the store: it is the
     # index metadata every later append/search needs, and it stays
     # FROZEN until a scheduled re-fit.
-    cents = sim.write_ivf_store(
+    cents = materialize(sim.write_ivf_store(
         day0, store, n_centroids=4, fit="lloyd"
-    ).localCheckpoint(eager=True)
+    ))
 
     # 2-3. INGEST + APPEND per crawl day (dedup gate upstream; the toy
     # arrivals are already unique so the gate is a no-op here)

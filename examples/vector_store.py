@@ -35,6 +35,7 @@ import pyspark.sql.functions as F
 import wingfoil_spark as wf
 from wingfoil_spark.functions import selection as sel
 from wingfoil_spark.functions import similarity as sim
+from wingfoil_spark.session import materialize
 
 spark = wf.get_spark("vector_store", cpus=4)
 
@@ -50,18 +51,18 @@ corpus = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
 probes = corpus.where(F.col("vec_id") % 60 == 0)
 
 # 1. WRITE path — int8 + PQ codes (what a 100 TB store persists)
-q8 = sim.dequantize_embeddings(
+q8 = materialize(sim.dequantize_embeddings(
     sim.quantize_embeddings(corpus).select("vec_id", "q_embedding", "q_scale")
-).select("vec_id", "embedding").localCheckpoint(eager=True)
+).select("vec_id", "embedding"))
 books = sim.pq_train(corpus, m=4, k=16, fit="take")
-codes = sim.pq_encode(corpus, books).select("vec_id", "pq_code").localCheckpoint(eager=True)
+codes = materialize(sim.pq_encode(corpus, books).select("vec_id", "pq_code"))
 
 # 2. INDEX path — one coarse fit + ONE corpus assignment, shared by
 # every centroid consumer below (the r9 corpus_assign= pattern)
 cents = sim.ivf_centroids(corpus, n_centroids=4, fit="take")
-assign = sel.semdedup_assign(
+assign = materialize(sel.semdedup_assign(
     corpus, n_clusters=4, fit="take", centroids=cents
-).localCheckpoint(eager=True)
+))
 
 # 3. READ paths — same probe, five tiers
 exact = sim.cosine_topk(corpus, probes, k=3)
@@ -89,7 +90,7 @@ for name, df in [("ivf", ivf), ("pq", pq), ("ivfpq", ivfpq)]:
 # 4. SERVING path — arriving probes vs the frozen bucket index
 from wingfoil_spark.streaming import ingest
 
-index = ingest.build_ann_index(corpus).localCheckpoint(eager=True)
+index = materialize(ingest.build_ann_index(corpus))
 served = ingest.ann_topk_stream(probes, index, k=3)  # batch or streamed probes
 got = {(r.probe_id, r.rank): r.neighbor_id for r in served.collect()}
 assert got[(0, 1)] == 240, got

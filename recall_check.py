@@ -33,7 +33,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import __spark_entry__ as entry  # noqa: E402
-from wingfoil_spark.session import get_spark  # noqa: E402
+from wingfoil_spark.session import get_spark, materialize  # noqa: E402
 
 #: recall@5 floors asserted on the sf0.1 artifact run (measured r11
 #: values minus margin). The ABSOLUTE levels are a property of the
@@ -165,30 +165,26 @@ def compute_table(spark, sf_dir: str, k: int = 5, sweep: bool = False,
     if corpus_df is not None:
         # a generated corpus (the planted-cluster arm) re-plans its
         # createDataFrame rows on every tier action — pin it once
-        e = e.localCheckpoint(eager=True)
+        e = materialize(e)
     probes = e.where(F.col("vec_id") % 50 == 0)
 
     build: dict = {}
     t0 = time.perf_counter()
     books = sim.pq_train(e, m=8, k=16, fit="take")
-    cents = sim.ivf_centroids(e, 16, fit="take").localCheckpoint(eager=True)
-    asg = sel.semdedup_assign(
+    cents = materialize(sim.ivf_centroids(e, 16, fit="take"))
+    asg = materialize(sel.semdedup_assign(
         e, n_clusters=16, fit="take", centroids=cents
-    ).localCheckpoint(eager=True)
+    ))
     build["fit_assign_s"] = round(time.perf_counter() - t0, 3)
     # the graded k-means tier (decon_stream part='ivf_lloyd'): the
     # deterministic SQL-replayable Lloyd fit + its own full-corpus
     # assignment (lloyd cells differ from the take cells)
     t0 = time.perf_counter()
-    lcents = sim.ivf_centroids(e, 16, fit="lloyd").localCheckpoint(
-        eager=True
-    )
-    lasg = sim.ivf_assign(e, lcents, 1).localCheckpoint(eager=True)
+    lcents = materialize(sim.ivf_centroids(e, 16, fit="lloyd"))
+    lasg = materialize(sim.ivf_assign(e, lcents, 1))
     build["lloyd_fit_assign_s"] = round(time.perf_counter() - t0, 3)
     t0 = time.perf_counter()
-    codes = sim.pq_encode(e, books).select("vec_id", "pq_code").localCheckpoint(
-        eager=True
-    )
+    codes = materialize(sim.pq_encode(e, books).select("vec_id", "pq_code"))
     build["pq_encode_s"] = round(time.perf_counter() - t0, 3)
     # r14 (VERDICT r13 Next #3): the PRODUCTION PQ tier — deterministic
     # per-subspace L2 Lloyd codebooks at k=64 codewords/subspace (vs the
@@ -196,14 +192,14 @@ def compute_table(spark, sf_dir: str, k: int = 5, sweep: bool = False,
     # cost is the price of real codebooks; the search path is unchanged.
     t0 = time.perf_counter()
     lbooks = sim.pq_train(e, m=8, k=64, fit="lloyd")
-    lcodes = sim.pq_encode(e, lbooks).select(
+    lcodes = materialize(sim.pq_encode(e, lbooks).select(
         "vec_id", "pq_code"
-    ).localCheckpoint(eager=True)
+    ))
     build["pq_lloyd_fit_encode_s"] = round(time.perf_counter() - t0, 3)
     t0 = time.perf_counter()
-    q8 = sim.dequantize_embeddings(
+    q8 = materialize(sim.dequantize_embeddings(
         sim.quantize_embeddings(e).select("vec_id", "q_embedding", "q_scale")
-    ).select("vec_id", "embedding").localCheckpoint(eager=True)
+    ).select("vec_id", "embedding"))
     build["int8_reconstruct_s"] = round(time.perf_counter() - t0, 3)
 
     sf_tag = tag or os.path.basename(sf_dir.rstrip("/"))
@@ -232,7 +228,7 @@ def compute_table(spark, sf_dir: str, k: int = 5, sweep: bool = False,
     # the exact baseline both times the brute-force tier and feeds every
     # recall computation (checkpointed so graders don't re-run it)
     t_exact0 = time.perf_counter()
-    exact = sim.cosine_topk(e, probes, k=k).localCheckpoint(eager=True)
+    exact = materialize(sim.cosine_topk(e, probes, k=k))
     t_exact = round(time.perf_counter() - t_exact0, 3)
 
     searches = {
@@ -422,18 +418,18 @@ def drift_arm(spark, n: int = 2000, k: int = 5) -> dict:
 
     from wingfoil_spark.functions import similarity as sim
 
-    full = planted_corpus(spark, n).localCheckpoint(eager=True)
+    full = materialize(planted_corpus(spark, n))
     old = full.where(F.col("vec_id") % 16 < 12)
     drift = full.where(F.col("vec_id") % 16 >= 12)
     probes = drift.where(F.col("vec_id") % 10 == 2)
-    exact = sim.cosine_topk(full, probes, k=k).localCheckpoint(eager=True)
+    exact = materialize(sim.cosine_topk(full, probes, k=k))
     root = tempfile.mkdtemp(prefix="wf_recall_drift_")
     path = root + "/ivf"
     try:
         t0 = time.perf_counter()
-        cents_old = sim.write_ivf_store(
+        cents_old = materialize(sim.write_ivf_store(
             old, path, n_centroids=16, fit="lloyd"
-        ).localCheckpoint(eager=True)
+        ))
         sim.append_ivf_store(drift, path, cents_old)
         t_grow = round(time.perf_counter() - t0, 3)
 
@@ -485,9 +481,9 @@ def drift_arm(spark, n: int = 2000, k: int = 5) -> dict:
         # reconstruction quality; label permutation cannot fake it)
         qpath = root + "/ivfpq"
         books = sim.pq_train(old, m=8, k=16, fit="lloyd")
-        qc = sim.write_ivfpq_store(
+        qc = materialize(sim.write_ivfpq_store(
             old, qpath, books, n_centroids=16, fit="lloyd"
-        ).localCheckpoint(eager=True)
+        ))
         sim.append_ivfpq_store(drift, qpath, qc, books)
         rc = sim.refit_cell_store(
             spark, qpath, 16, fit="lloyd", codebooks=books
@@ -496,7 +492,7 @@ def drift_arm(spark, n: int = 2000, k: int = 5) -> dict:
         want = sim.ivf_assign(full, rc, 1).select(
             "vec_id", F.col("cid").alias("cid_true")
         )
-        j = got.join(want, "vec_id").localCheckpoint(eager=True)
+        j = materialize(got.join(want, "vec_id"))
         agreement = round(
             j.where(F.col("cid") == F.col("cid_true")).count() / j.count(),
             6,

@@ -34,7 +34,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import __spark_entry__ as entry  # noqa: E402
-from wingfoil_spark.session import get_spark  # noqa: E402
+from wingfoil_spark.session import get_spark, materialize  # noqa: E402
 
 SMALL = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 BIG = os.environ.get("SPARK_GRAFT_SCALE_DIR", "/tmp/wingfoil_scale_sf1eq")
@@ -252,9 +252,7 @@ def semdedup_cap_10x(spark):
     from wingfoil_spark.sources.tables import load_table
 
     e = load_table(spark, BIG, "embeddings")
-    asg = sel.semdedup_assign(e, n_clusters=16, fit="take").localCheckpoint(
-        eager=True
-    )
+    asg = materialize(sel.semdedup_assign(e, n_clusters=16, fit="take"))
     biggest = asg.groupBy("cid").count().agg(
         F.max("count").alias("m")
     ).collect()[0]["m"]
@@ -312,9 +310,7 @@ def semdedup_cap_100x(spark, cap: int = 64):
     from wingfoil_spark.sources.tables import load_table
 
     e = load_table(spark, BIG100, "embeddings")
-    asg = sel.semdedup_assign(e, n_clusters=16, fit="take").localCheckpoint(
-        eager=True
-    )
+    asg = materialize(sel.semdedup_assign(e, n_clusters=16, fit="take"))
     biggest = asg.groupBy("cid").count().agg(
         F.max("count").alias("m")
     ).collect()[0]["m"]
@@ -425,52 +421,46 @@ def decon_stream_scale(spark):
         ingest.build_fingerprint_store(
             docs11.where(F.col("doc_id") % 3 == 0), fp10p
         )
-        fp1 = spark.read.parquet(fp1p).localCheckpoint(eager=True)
-        fp10 = spark.read.parquet(fp10p).localCheckpoint(eager=True)
-        idx1 = ingest.build_ann_index(small_emb).localCheckpoint(eager=True)
-        idx10 = ingest.build_ann_index(big_emb).localCheckpoint(eager=True)
+        fp1 = materialize(spark.read.parquet(fp1p))
+        fp10 = materialize(spark.read.parquet(fp10p))
+        idx1 = materialize(ingest.build_ann_index(small_emb))
+        idx10 = materialize(ingest.build_ann_index(big_emb))
         # r11: the graded IVF-serving path's static side — take-fit
         # centroids + the store-shaped (id, emb, cid) assignment, per
         # corpus tier (what a persisted cell layout reads back to)
         from wingfoil_spark.functions import similarity as sim
 
-        cents1 = sim.ivf_centroids(small_emb, 16, fit="take").localCheckpoint(
-            eager=True
-        )
-        cents10 = sim.ivf_centroids(big_emb, 16, fit="take").localCheckpoint(
-            eager=True
-        )
-        asg1 = sim.ivf_assign(small_emb, cents1, 1).localCheckpoint(eager=True)
-        asg10 = sim.ivf_assign(big_emb, cents10, 1).localCheckpoint(eager=True)
+        cents1 = materialize(sim.ivf_centroids(small_emb, 16, fit="take"))
+        cents10 = materialize(sim.ivf_centroids(big_emb, 16, fit="take"))
+        asg1 = materialize(sim.ivf_assign(small_emb, cents1, 1))
+        asg10 = materialize(sim.ivf_assign(big_emb, cents10, 1))
         # r12: the codes-only serving leg (streamed ivfpq_topk) — the
         # last graded streamed path without a scale row; codebooks are
         # shared (index metadata, corpus-size-independent), codes
         # frames are per-tier
         books = sim.pq_train(small_emb, m=8, k=16, fit="take")
-        codes1 = (
+        codes1 = materialize(
             asg1.select("vec_id", "cid")
             .join(sim.pq_encode(small_emb, books).select("vec_id", "pq_code"),
                   "vec_id")
-            .localCheckpoint(eager=True)
         )
-        codes10 = (
+        codes10 = materialize(
             asg10.select("vec_id", "cid")
             .join(sim.pq_encode(big_emb, books).select("vec_id", "pq_code"),
                   "vec_id")
-            .localCheckpoint(eager=True)
         )
-        dec1 = ingest.build_decon_index(
+        dec1 = materialize(ingest.build_decon_index(
             small_docs.where(F.col("doc_id") % 97 == 0), n=4
-        ).localCheckpoint(eager=True)
-        dec10 = ingest.build_decon_index(
+        ))
+        dec10 = materialize(ingest.build_decon_index(
             docs11.where(F.col("doc_id") % 97 == 0), n=4
-        ).localCheckpoint(eager=True)
+        ))
         # r13: the streamed classifier's static side is ONE coefs row —
         # corpus-size-independent index metadata by construction (the
         # graded derived model; a trained row has the same shape), so
         # the same frame serves every tier and its corpus_ratio
         # measures pure engine cost
-        qcm = entry._derived_qc_model(spark).localCheckpoint(eager=True)
+        qcm = materialize(entry._derived_qc_model(spark))
         out["snapshot_build_s"] = round(time.perf_counter() - t0, 2)
 
         doc_schema = "doc_id long, text string"
@@ -614,13 +604,9 @@ def ivfpq_grow_scale(spark):
     try:
         small = load_table(spark, SMALL, "embeddings")
         big = load_table(spark, BIG, "embeddings")  # 10x replicas incl. originals
-        arrivals = small.where(F.col("vec_id") % 7 == 3).localCheckpoint(
-            eager=True
-        )
+        arrivals = materialize(small.where(F.col("vec_id") % 7 == 3))
         books = sim.pq_train(small, m=8, k=16, fit="take")
-        cents = sim.ivf_centroids(small, 16, fit="take").localCheckpoint(
-            eager=True
-        )
+        cents = materialize(sim.ivf_centroids(small, 16, fit="take"))
         base1 = small.where(F.col("vec_id") % 7 != 3)
         p1 = os.path.join(tmp, "store1")
         p11 = os.path.join(tmp, "store11")
@@ -696,9 +682,9 @@ def ann_fixed_probes(spark, sf_dir):
     probes = e.where((F.col("vec_id") % 50 == 0) & (F.col("vec_id") < 2000))
     exact = sim.cosine_topk(e, probes, k=5)
     ivf = sim.ivf_topk(e, probes, k=5, n_centroids=16, nprobe=4, fit="take")
-    q8 = sim.dequantize_embeddings(
+    q8 = materialize(sim.dequantize_embeddings(
         sim.quantize_embeddings(e).select("vec_id", "q_embedding", "q_scale")
-    ).select("vec_id", "embedding").localCheckpoint(eager=True)
+    ).select("vec_id", "embedding"))
     int8 = sim.cosine_topk(q8, probes, k=5)
     store = os.path.join(
         tempfile.gettempdir(),
@@ -952,20 +938,16 @@ def ivfpq_rerank_scale(spark):
     big11 = small.unionByName(
         load_table(spark, BIG, "embeddings")
     )  # originals + 10x replicas
-    probes = small.where(F.col("vec_id") % 50 == 0).localCheckpoint(
-        eager=True
-    )
+    probes = materialize(small.where(F.col("vec_id") % 50 == 0))
     out = {}
     for tag, corpus in (("base", small), ("corpus11x", big11)):
         books = sim.pq_train(corpus, m=8, k=16, fit="take")
-        cents = sim.ivf_centroids(corpus, 16, fit="take").localCheckpoint(
-            eager=True
-        )
+        cents = materialize(sim.ivf_centroids(corpus, 16, fit="take"))
         t0 = time.perf_counter()
-        asg = sim.ivf_assign(corpus, cents, 1).localCheckpoint(eager=True)
-        codes = sim.pq_encode(corpus, books).select(
+        asg = materialize(sim.ivf_assign(corpus, cents, 1))
+        codes = materialize(sim.pq_encode(corpus, books).select(
             "vec_id", "pq_code"
-        ).localCheckpoint(eager=True)
+        ))
         build = time.perf_counter() - t0
         best = None
         for _ in range(3):

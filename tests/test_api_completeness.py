@@ -188,3 +188,16 @@ def test_module_surface_complete(mod, names):
     m = importlib.import_module(mod)
     missing = [n for n in names if not callable(getattr(m, n, None))]
     assert not missing, f"{mod} missing documented ops: {missing}"
+
+
+#: session helpers: building a session, overlapping driver-side job
+#: chains, and pinning/freeing frames (kept apart from MODULE_SURFACES so
+#: that table's parameter ids stay put)
+SESSION_SURFACE = ["get_spark", "configure_session", "overlap", "materialize",
+                   "release"]
+
+
+def test_session_surface_complete():
+    m = importlib.import_module("wingfoil_spark.session")
+    missing = [n for n in SESSION_SURFACE if not callable(getattr(m, n, None))]
+    assert not missing, f"wingfoil_spark.session missing helpers: {missing}"

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
 from wingfoil_spark.functions.text import fingerprint, tokens
+from wingfoil_spark.session import materialize, release
 
 #: number of minhash permutations and LSH bands (rows-per-band = K // BANDS).
 #: Production shape: k=128 permutations, 16 bands x 8 rows — the catch
@@ -326,7 +327,10 @@ def dedup_components(
       join + one aggregation per pass on the PAIR table, never the
       corpus. Dup components are near-cliques, so a handful of passes
       converges even at the 100 TB posture where the pair table itself is
-      distributed. Convergence checks are aggregates, not collects.
+      distributed. Convergence checks are aggregates, not collects. A
+      label moves one hop per pass, so a component more than
+      ``max_iters`` hops across raises ``RuntimeError`` rather than
+      returning labels that are not the component minimum.
 
     ``"auto"`` (default) counts the (already-materialized) edge table —
     one cheap job — and picks packed below 2M edges, iterate above."""
@@ -340,13 +344,12 @@ def dedup_components(
         .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
         .distinct()
     )
-    # materialize ONCE before iterating: the pair table usually hangs off
-    # an expensive pipeline (minhash signatures → banding → Jaccard), and
-    # every fixpoint pass joins edges — without this the whole upstream
-    # pipeline re-executes per pass (measured 8× slowdown at sf0.1).
-    # localCheckpoint also truncates the lineage the loop would otherwise
-    # replay.
-    edges = edges.localCheckpoint(eager=True)
+    # the pair table usually hangs off an expensive pipeline (minhash
+    # signatures → banding → Jaccard), and every fixpoint pass joins
+    # edges — without the pin the whole upstream pipeline re-executes per
+    # pass (measured 8× slowdown at sf0.1), and the loop replays its
+    # lineage.
+    edges = materialize(edges)
     if strategy not in ("auto", "packed", "iterate"):
         raise ValueError(f"unknown components strategy {strategy!r}")
     if strategy == "auto":
@@ -375,10 +378,14 @@ def dedup_components(
             )
         )
 
-    return iterate_until_stable(
-        labels, step, key_cols=["id"], value_cols=["component"],
-        max_iters=max_iters,
-    )
+    try:
+        return iterate_until_stable(
+            labels, step, key_cols=["id"], value_cols=["component"],
+            max_iters=max_iters,
+        )
+    finally:
+        # the result is its own pinned frame: nothing reads edges again
+        release(edges)
 
 
 def _components_packed(edges: DataFrame) -> DataFrame:
@@ -617,7 +624,7 @@ def cosine_near_dups(
     # corpus twice (plans/r14/cosine_near_dups_before.txt). One
     # checkpoint runs it once (measured 1.085s -> 0.96s at sf0.1; at
     # data scale it removes a full corpus scan + two kernel passes).
-    n = n.localCheckpoint(eager=True)
+    n = materialize(n)
     a_side = hamming1_explode(n, bits) if probe_hamming else n
     a = a_side.select(
         F.col(id_col).alias("a"), F.col(emb_col).alias("ea"),

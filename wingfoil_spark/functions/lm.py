@@ -37,7 +37,7 @@ import math
 from pyspark.sql import DataFrame, functions as F, types as T
 
 from wingfoil_spark.functions.text import tokens
-from wingfoil_spark.session import overlap
+from wingfoil_spark.session import materialize, overlap
 
 #: the bigram positions ``struct(w1, w2)`` of the internal token array
 #: ``__t`` ([] below 2 tokens) — the one explode the count fit and the
@@ -91,20 +91,18 @@ def fit_bigram_counts(
     # per-frame work is unchanged, so the fitted counts are
     # bit-identical.
     def _fit_uni():
-        u = (
+        u = materialize(
             toks.select(F.explode("__t").alias("w1"))
             .groupBy("w1")
             .agg(F.count(F.lit(1)).alias("c1"))
-            .localCheckpoint(eager=True)
         )
         return u, u.count()
 
     def _fit_big():
-        b = (
+        b = materialize(
             _bigrams(toks)
             .groupBy("w1", "w2")
             .agg(F.count(F.lit(1)).alias("c12"))
-            .localCheckpoint(eager=True)
         )
         return b, b.count()
 

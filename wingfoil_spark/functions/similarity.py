@@ -36,6 +36,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql import types as T
 
+from wingfoil_spark.session import materialize
+
 
 #: THE canonical dot product as SQL text: a left-to-right double-cast
 #: fold over two array names — the exact accumulation every DuckDB
@@ -287,7 +289,7 @@ def hyperplane_signatures_multi(
     will get an analysis error rather than the dedup. Callers should
     therefore filter/join on the projected ``tbl``/``bucket`` columns
     (as every in-repo consumer does), or materialize the signed frame
-    via localCheckpoint at hot call sites (the cosine_near_dups pattern)
+    with ``session.materialize`` at hot call sites (the cosine_near_dups pattern)
     when that is not possible."""
     if int(n_tables) < 1:
         raise ValueError(
@@ -470,7 +472,7 @@ def ivf_assign(
     vector; ``ivf_centroids`` does not norm-filter): such a centroid has
     no direction and yields NaN similarities. An empty usable set fails
     the first action that assigns a row, with ``no usable centroids``.
-    Materialize a lazily-fit centroid frame first (localCheckpoint): its
+    Pin a lazily-fit centroid frame first (``session.materialize``): its
     plan is embedded in every assignment, and a streaming query re-runs
     a static side each micro-batch."""
     # SQL text over internal names throughout: every Column-API call is
@@ -716,7 +718,7 @@ def ivf_topk(
     corpus once (e.g. a checkpointed ``selection.semdedup_assign``), then
     feeds both here — this function then adds ZERO corpus-side fit or
     assignment scans of its own, only the probe assignment and the bucket
-    join. Materialize BOTH frames (localCheckpoint/persist): a lazy
+    join. Pin BOTH frames (``session.materialize``): a lazy
     take-fit centroid frame is a TakeOrdered whose full-corpus scan
     re-runs everywhere the plan embeds it, including the probe
     assignment here. ``corpus_assign`` needs ``(id_col, cid, emb_col)``; a ``__nrm``
@@ -881,7 +883,7 @@ def _require_store_centroids(spark, path: str, op: str) -> DataFrame:
             "persisted centroid values (written pre-r14 or by an "
             "external tool) — pass the centroid frame explicitly"
         )
-    return cents.localCheckpoint(eager=True)
+    return materialize(cents)
 
 
 def _require_store_codebooks(spark, path: str, op: str) -> list:
@@ -976,14 +978,14 @@ def write_ivf_store(
     if centroids is not None:
         cents = centroids
     else:
-        # materialize the internal fit: the returned frame is index
+        # pin the internal fit: the returned frame is index
         # METADATA (n_centroids rows) that every subsequent search
         # broadcasts — left lazy, a take-fit is a TakeOrdered whose
         # full-corpus scan re-runs inside every consumer (the write job,
         # then every from-store probe assignment)
-        cents = ivf_centroids(
+        cents = materialize(ivf_centroids(
             corpus, n_centroids, emb_col, id_col, fit=fit
-        ).localCheckpoint(eager=True)
+        ))
     if corpus_assign is not None:
         keep = [id_col, emb_col, "cid"]
         if "__nrm" in corpus_assign.columns:
@@ -1514,10 +1516,10 @@ def refit_cell_store(
     # Observation resolves after the first action that touches it, and
     # the fit's orderBy().limit() short-circuits the scan (a partial
     # count would poison the row-conservation check below)
-    cents = ivf_centroids(
+    cents = materialize(ivf_centroids(
         body, n_centroids, vec_col, id_col, fit=fit,
         sample_n=max(LLOYD_SAMPLE_N, 4 * n_centroids),
-    ).localCheckpoint(eager=True)
+    ))
     obs_in = Observation()
     # the appends legitimately carry duplicate ids (crawl state — the
     # compactor preserves them too); the row-local ivf_assign assigns
@@ -1593,9 +1595,9 @@ def write_ivfpq_store(
     else:
         # same materialization rationale as write_ivf_store: the return
         # is broadcast metadata, a lazy fit re-scans the corpus per use
-        cents = ivf_centroids(
+        cents = materialize(ivf_centroids(
             corpus, n_centroids, emb_col, id_col, fit=fit
-        ).localCheckpoint(eager=True)
+        ))
     asg = (
         corpus_assign.select(id_col, "cid")
         if corpus_assign is not None

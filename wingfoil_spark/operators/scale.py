@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import Column, Window
 from pyspark.sql import functions as F
 
+from wingfoil_spark.session import materialize, release
 from wingfoil_spark.stream import Stream
 
 def _bucketed(s: Stream, bucket_width: int):
@@ -205,23 +206,24 @@ def diagnose_skew(
     carries >10% of the table will serialize that fraction of the whole
     shuffle into one task. Driver returns a small dict (top_n rows), the
     scan stays distributed."""
-    # one shuffle over the data, materialized once (n_keys rows — small);
-    # without the checkpoint each of the three reads below would re-run
-    # the whole aggregation
-    per_key = (
+    # one shuffle over the data (n_keys rows — small); without the pin
+    # each of the two collects below would re-run the whole aggregation
+    per_key = materialize(
         df.groupBy(*keys)
         .agg(F.count(F.lit(1)).alias("__n"))
-        .localCheckpoint(eager=True)
     )
-    tot = per_key.agg(
-        F.sum("__n").alias("t"), F.count(F.lit(1)).alias("k")
-    ).collect()[0]
+    try:
+        tot = per_key.agg(
+            F.sum("__n").alias("t"), F.count(F.lit(1)).alias("k")
+        ).collect()[0]
+        top = (
+            per_key.orderBy(F.col("__n").desc())
+            .limit(top_n)
+            .collect()
+        )
+    finally:
+        release(per_key)
     total, n_keys = (tot["t"] or 0), tot["k"]
-    top = (
-        per_key.orderBy(F.col("__n").desc())
-        .limit(top_n)
-        .collect()
-    )
     hottest = top[0]["__n"] if top else 0
     suggested = 1
     if hottest > target_rows_per_task:

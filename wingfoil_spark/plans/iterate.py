@@ -8,11 +8,15 @@ iteration: one driver-side loop where each pass is a full distributed
 computation and the loop variable is re-fed — "next cycle" = next pass.
 
 Scale mechanics that matter at 100 TB:
-- **lineage truncation** every pass (``localCheckpoint``) — without it the
-  plan doubles per iteration and the driver dies planning iteration ~20;
+- **lineage truncation** every pass (``session.materialize``) — without it
+  the plan doubles per iteration and the driver dies planning iteration ~20;
 - convergence checks are aggregations (one scalar to the driver), never
   ``collect()`` of the data;
-- the previous pass's cache is released once the next is materialized.
+- the previous pass's pinned blocks are freed (``session.release``) once
+  the next pass is pinned and the convergence check has read both, so a
+  loop holds at most two passes, not one per iteration;
+- a loop with a convergence test that runs out of passes raises instead
+  of returning a state that is not the fixpoint.
 """
 
 from __future__ import annotations
@@ -21,30 +25,38 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 
+from wingfoil_spark.session import materialize, release
+
 
 def feedback_iterate(
     df: DataFrame,
     step: Callable[[DataFrame, int], DataFrame],
     max_iters: int = 20,
     converged: Callable[[DataFrame, DataFrame], bool] | None = None,
-    eager: bool = True,
 ) -> DataFrame:
     """Iterate ``step(state_df, i) -> state_df`` to a fixpoint.
 
     ``converged(prev, cur)`` (optional) stops early; it should compare via
-    aggregation (e.g. count of changed rows), not row collection. Returns
-    the final state DataFrame (checkpointed — safe to reuse without
-    re-running the loop).
+    aggregation (e.g. count of changed rows), not row collection. Without
+    it the loop runs exactly ``max_iters`` passes; with it, running out of
+    passes before it holds raises ``RuntimeError``. Returns the final state
+    DataFrame (pinned — safe to reuse without re-running the loop).
     """
-    cur = df.localCheckpoint(eager=eager)
+    cur = materialize(df)
     for i in range(max_iters):
-        nxt = step(cur, i).localCheckpoint(eager=eager)
-        if converged is not None and converged(cur, nxt):
-            cur.unpersist()
-            return nxt
-        cur.unpersist()
+        nxt = materialize(step(cur, i))
+        done = converged is not None and converged(cur, nxt)
+        release(cur)
         cur = nxt
-    return cur
+        if done:
+            return cur
+    if converged is None:
+        return cur
+    release(cur)
+    raise RuntimeError(
+        f"feedback_iterate did not converge within max_iters={max_iters} "
+        "passes; raise max_iters or check the step for a fixpoint"
+    )
 
 
 def iterate_until_stable(

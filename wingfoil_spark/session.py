@@ -47,13 +47,23 @@ The cache size is a static conf, read when the JVM's code generator first
 runs, so it cannot be one of the runtime confs: a driver-provided session
 keeps Spark's default, and its owner should set it in
 ``spark-defaults.conf`` (or ``--conf``) at launch.
+
+Pinned frames: every eager materialisation in the package, the entry file
+and the scripts goes through :func:`materialize`, and the few frames whose
+last reader runs in the same function are freed by :func:`release`. The
+mechanism (an eager local checkpoint), its failure contract under executor
+loss and the job tag are decided there and nowhere else: each pin's jobs
+carry ``spark.job.description`` = the caller's ``module.qualname:line``,
+so an event log or the Spark UI names the code that issued every eager
+side-job. ``spark.jobGroup.id`` is left to whoever owns it.
 """
 
 from __future__ import annotations
 
 import os
+import sys
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 #: the directory holding the ``wingfoil_spark`` package
 _PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -165,3 +175,77 @@ def overlap(*thunks):
     with ThreadPoolExecutor(max_workers=max(1, len(thunks))) as pool:
         futures = [pool.submit(t) for t in thunks]
         return [f.result() for f in futures]
+
+
+#: the local property naming the code that launched a job (event log
+#: ``Properties``, Spark UI job list)
+_JOB_DESCRIPTION = "spark.job.description"
+
+
+def materialize(df: DataFrame) -> DataFrame:
+    """Run ``df`` once now and return a frame that reads its pinned rows.
+
+    Pin a frame that several readers (branches of a union, passes of a
+    loop, a count and a collect) would otherwise each recompute, or whose
+    lineage a loop would otherwise replay: the returned frame's plan is one
+    ``LogicalRDD`` over the pinned blocks, so lineage is truncated too.
+
+    Mechanism: an eager local checkpoint at the default storage level,
+    one job (plus any AQE stage jobs of ``df``'s own plan). Its jobs are
+    tagged with ``spark.job.description`` = the caller's
+    ``module.qualname:line``; the previous description is restored
+    afterwards.
+
+    Contract under executor loss: the pinned blocks are not replicated and
+    the lineage behind them is cut. If an executor holding some of them is
+    lost, a later read of the frame fails with
+    ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``; it never returns different
+    rows. :func:`get_spark` builds ``local[N]``, where the only executor is
+    the driver, so there the blocks live exactly as long as the
+    application. A cluster deployment that must survive executor loss
+    needs a replicated or recomputable mechanism here (see ROADMAP), and
+    this function is the one place to change it.
+
+    Free the blocks with :func:`release` once the last reader has run;
+    never release a frame that is handed back to a caller."""
+    sc = df.sparkSession.sparkContext
+    prev = sc.getLocalProperty(_JOB_DESCRIPTION)
+    sc.setLocalProperty(_JOB_DESCRIPTION, _caller_tag())
+    try:
+        return df.localCheckpoint(eager=True)
+    finally:
+        # None clears the property again
+        sc.setLocalProperty(_JOB_DESCRIPTION, prev)
+
+
+def _caller_tag() -> str:
+    """``module.qualname:line`` of the code that called :func:`materialize`,
+    past any decorator wrapping it (``functools.wraps`` wrappers, tracers
+    that rebind the module global)."""
+    wrappers, fn = set(), materialize
+    while hasattr(fn, "__wrapped__"):
+        wrappers.add(fn.__code__)
+        fn = fn.__wrapped__
+    frame = sys._getframe(2)
+    while frame.f_back is not None and frame.f_code in wrappers:
+        frame = frame.f_back
+    module = frame.f_globals.get("__name__", "?")
+    return f"{module}.{frame.f_code.co_qualname}:{frame.f_lineno}"
+
+
+def release(df: DataFrame) -> None:
+    """Free the pinned blocks of a frame :func:`materialize` returned.
+
+    Call it only once nothing will read ``df`` again (a later read fails
+    with ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``). ``DataFrame.unpersist``
+    does not do this: it drops cache-manager entries, and a checkpoint is
+    not one. Raises ``ValueError`` when ``df``'s plan is not the single
+    ``LogicalRDD`` that :func:`materialize` returns (a projection or join
+    of a pinned frame, say)."""
+    plan = df._jdf.queryExecution().analyzed()
+    if plan.nodeName() != "LogicalRDD":
+        raise ValueError(
+            f"release() takes a frame materialize() returned; this plan's "
+            f"root is {plan.nodeName()}, not LogicalRDD"
+        )
+    plan.rdd().unpersist(False)
